@@ -4,13 +4,15 @@
 
 Workloads (see README.md; BENCHMARK.json lists the ones compared between
 commits): ``log_analytics`` and ``curation`` run registered queries over
-seeded generated tables; ``lakehouse_ingest`` drives generator → staged
-flush → commit → reads → compaction. Spark runs at ``local[N]``, N =
-``$SPARK_GRAFT_CPUS`` or the CPU count. The run builds its inputs from
-``--seed``, runs one steady pass per 2.5 s of ``--seconds`` (at least
-two), checks every answer against DuckDB, prints a report and, as the
-last line, one JSON object with ``correct``, ``attempted``, ``failed``
-and ``metrics``: the end-to-end metrics with ``--trace 0``, the
+the sf0.01 tables in ``data/``, rows ordered by the seed;
+``lakehouse_ingest`` drives generator → staged flush → commit → reads →
+compaction. Spark runs at ``local[N]``, N = ``$SPARK_GRAFT_CPUS`` or the
+CPU count. The run builds its inputs from ``--seed``, runs a cold pass,
+an untimed pass that checks every answer against DuckDB, and then one
+steady pass per 2.5 s of ``--seconds`` (at least two); ``lakehouse_ingest``
+checks its row counts and reads between its timed steps. It prints a
+report and, as the last line, one JSON object with ``correct``,
+``attempted``, ``failed`` and ``metrics``: the end-to-end metrics with ``--trace 0``, the
 per-layer metrics of a traced run with ``--trace 1``. All files it
 writes stay under ``.perfbench/`` in the repository root.
 """
@@ -91,17 +93,13 @@ def _session(work: str, cores: int, traced: bool):
     return build_session(app_name="perfbench", master=f"local[{cores}]", extra_conf=conf)
 
 
-def _warm_up(spark) -> None:
-    """The session's first job (JVM and codegen warm-up), paid in set-up."""
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-
-
-def _stop(spark) -> None:
+def _stop() -> None:
     """Stop Spark and wait for the JVM (and its Python workers) to exit."""
     from pyspark import SparkContext
 
-    gateway = SparkContext._gateway
-    spark.stop()
+    sc, gateway = SparkContext._active_spark_context, SparkContext._gateway
+    if sc is not None:
+        sc.stop()
     if gateway is not None:
         gateway.shutdown()
         gateway.proc.stdin.close()
@@ -114,33 +112,42 @@ def measure(args: argparse.Namespace, work: str) -> dict:
 
     cores = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
     cpu0 = _cpu_times()
-    t0 = time.perf_counter()
-    spark = _session(work, cores, bool(args.trace))
-    try:
+    tracer = spans.Tracer(bool(args.trace))
+    ingest = args.workload == "lakehouse_ingest"
+
+    def build():
+        spark = _session(work, cores, bool(args.trace))
         spark.sparkContext.setLogLevel("ERROR")
-        _warm_up(spark)
-        session_s = time.perf_counter() - t0
-        run = wl.Run(spark, spans.Tracer(spark, bool(args.trace)), work, args.seed, args.seconds)
+        return spark
+
+    t0 = time.perf_counter()
+    try:
+        spark, setups = wl.set_up(build, tracer, work, args.seed, ingest)
+        run = wl.Run(spark, tracer, work, args.seed, args.seconds)
         run.meta.update(
             workload=args.workload, seed=args.seed, trace=args.trace, cpus=cores,
-            master=spark.sparkContext.master, session_s=session_s,
+            master=spark.sparkContext.master, setups_s=setups,
         )
-        if args.workload == "lakehouse_ingest":
-            gen_s = wl.setup_ingest(run)
+        if ingest:
             wl.run_ingest(run)
         else:
             names = wl.LOG_ANALYTICS if args.workload == "log_analytics" else wl.CURATION
-            gen_s = wl.setup_queries(run)
+            wl.setup_queries(run)
             wl.run_queries(run, names)
-            wl.check_queries(run, names)
-        heap = run.tracer.peak_heap_mb()
-        run.tracer.collect()
+        heap = tracer.peak_heap_mb()
+        tracer.collect()
+        if args.trace and ingest:
+            run.check("trace.flush_jobs", lambda: [
+                f"{s['exec_id']}: ingest.flush span has no Spark jobs"
+                for s in tracer.spans if s["name"] == "ingest.flush" and not s.get("jobs")
+            ])
     finally:
-        _stop(spark)
+        _stop()
+    run.meta["wall_s"] = time.perf_counter() - t0
 
     e2e = end_to_end(run.samples)
     report = {
-        "setup_s": (session_s + gen_s, "s"),
+        "setup_s": (statistics.median(setups), "s"),
         "cold_total_s": (e2e["cold_total_s"], "s"),
         "steady_total_s": (e2e["steady_total_s"], "s"),
         "query_p50_s": (e2e["query_p50_s"], "s"),
@@ -158,7 +165,7 @@ def measure(args: argparse.Namespace, work: str) -> dict:
     # the host slowed down during the run by more than a compared metric may
     ratio = run.meta["calib_end_s"] / run.meta["calib_start_s"]
     bound = min(m["bound"] for m in spec()["end_to_end"] if m["name"] != "setup_s")
-    run.meta.update(gen_s=gen_s, calib_ratio=ratio, contended=ratio > 1 + bound)
+    run.meta.update(calib_ratio=ratio, contended=ratio > 1 + bound)
     layers = {}
     if args.trace:
         layers = spans.layer_metrics(run.tracer.spans, cores)
@@ -207,8 +214,8 @@ def main(argv: list[str] | None = None) -> int:
     print(f"perfbench {args.workload} seed={args.seed} trace={args.trace} master={meta['master']}")
     for key, (value, unit) in result["report"].items():
         print(f"  {key:24s} {value:14.4f} {unit}")
-    for key in ("calib_start_s", "calib_end_s", "calib_ratio", "contended", "loadavg_start",
-                "loadavg_end", "steal_frac"):
+    for key in ("setups_s", "wall_s", "calib_start_s", "calib_end_s", "calib_ratio", "contended",
+                "loadavg_start", "loadavg_end", "steal_frac"):
         print(f"  meta.{key:19s} {meta.get(key)}")
     values = result["layers"] if args.trace else {k: v for k, (v, _) in result["report"].items()}
     listed = spec()["per_layer" if args.trace else "end_to_end"]

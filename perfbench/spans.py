@@ -4,10 +4,14 @@ job, stage and task counters.
 A :class:`Tracer` built with ``enabled=False`` (the end-to-end runs) only
 times: ``span`` yields without touching Spark. Enabled, each span runs
 under its own Spark job group, and records name, start, end, parent span
-and the id of the query execution (or ingest phase) it belongs to. Spans
-stay in memory; :meth:`Tracer.collect` joins them with the local REST
-``/jobs`` and ``/stages`` endpoints once, after the timed work, and
-:meth:`Tracer.write` writes one JSON line per span.
+and the id of the query execution (or ingest phase) it belongs to. A
+streaming query runs its jobs in Spark's stream-execution thread, under
+the query's ``runId`` as job group, so a span that runs one records that
+id as ``attrs["stream_run_id"]`` and those jobs count as its own. Spans
+stay in memory; :meth:`Tracer.collect` joins the spans of the session the
+tracer is bound to with the local REST ``/jobs`` and ``/stages``
+endpoints once, after the timed work, and :meth:`Tracer.write` writes one
+JSON line per span.
 """
 
 from __future__ import annotations
@@ -38,11 +42,14 @@ STAGE_FIELDS = {
 class Tracer:
     """In-memory span recorder for one benchmark run."""
 
-    def __init__(self, spark, enabled: bool) -> None:
+    def __init__(self, enabled: bool) -> None:
         self.enabled = enabled
         self.spans: list[dict] = []
-        self._sc = spark.sparkContext
         self._stack: list[int] = []
+
+    def bind(self, spark) -> None:
+        """Record the spans that follow against ``spark``'s application."""
+        self._sc = spark.sparkContext
         self._rest = f"{self._sc.uiWebUrl}/api/v1/applications/{self._sc.applicationId}"
 
     @contextmanager
@@ -60,6 +67,7 @@ class Tracer:
             "exec_id": exec_id,
             "parent": self._stack[-1] if self._stack else None,
             "group": f"perfbench-{sid}",
+            "app": self._sc.applicationId,
             "attrs": {} if attrs is None else attrs,
         }
         self.spans.append(rec)
@@ -80,13 +88,22 @@ class Tracer:
             return json.loads(r.read())
 
     def collect(self) -> None:
-        """Attach each span's own Spark jobs, stages, tasks and counters.
+        """Attach to each span of the bound session its own Spark jobs,
+        stages, tasks and counters (spans of earlier sessions get none).
 
         Waits (bounded) for the status store to see every job end, since
         the REST view trails the actions by a listener-bus hop."""
-        if not self.enabled or not self.spans:
+        if not self.enabled:
             return
-        groups = {s["group"] for s in self.spans}
+        mine = [s for s in self.spans if s["app"] == self._sc.applicationId]
+        if not mine:
+            return
+
+        def groups_of(span: dict) -> list[str]:
+            run_id = span["attrs"].get("stream_run_id")
+            return [span["group"]] + ([run_id] if run_id else [])
+
+        groups = {g for s in mine for g in groups_of(s)}
         deadline = time.time() + 30
         while True:
             jobs = [j for j in self._get("jobs") if j.get("jobGroup") in groups]
@@ -100,8 +117,8 @@ class Tracer:
         by_group: dict[str, list[dict]] = {}
         for j in jobs:
             by_group.setdefault(j["jobGroup"], []).append(j)
-        for s in self.spans:
-            own = by_group.get(s["group"], [])
+        for s in mine:
+            own = [j for g in groups_of(s) for j in by_group.get(g, [])]
             ids = sorted({sid for j in own for sid in j["stageIds"] if sid in stages})
             s["jobs"] = len(own)
             s["failed_jobs"] = sum(j["status"] == "FAILED" for j in own)

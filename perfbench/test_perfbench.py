@@ -1,6 +1,6 @@
-"""The benchmark's own tests: metric arithmetic, seeded inputs, and the
-known commit-after-compaction row loss the ingest workload is ordered
-around.
+"""The benchmark's own tests: metric arithmetic, seeded inputs, flush
+spans that carry their streaming jobs, and the known
+commit-after-compaction row loss the ingest workload is ordered around.
 
     python3 -m pytest perfbench -q -p no:cacheprovider
 """
@@ -15,8 +15,9 @@ import pytest
 HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path[:0] = [HERE, os.path.dirname(HERE)]
 
-import datagen  # noqa: E402
+import inputs  # noqa: E402
 import run  # noqa: E402
+import spans  # noqa: E402
 
 
 def test_tail_keeps_ten_samples_beyond_the_percentile():
@@ -35,13 +36,42 @@ def test_end_to_end_splits_cold_from_steady():
     assert m["steady_n"] == 4
 
 
-def test_inputs_follow_the_seed():
-    a, b, c = datagen.tables(7, 0.001), datagen.tables(7, 0.001), datagen.tables(8, 0.001)
-    assert set(a) == {"region", "nation", "customer", "supplier", "part", "orders",
-                      "lineitem", "events", "documents", "embeddings"}
+def _read(directory) -> dict:
+    import pyarrow.parquet as pq
+
+    return {t: pq.read_table(os.path.join(directory, f"{t}.parquet")) for t in inputs.TABLES}
+
+
+def _sorted(table):
+    return table.sort_by([(c, "ascending") for c in table.column_names if c != "embedding"])
+
+
+def test_inputs_are_the_seeded_row_order_of_the_committed_tables(tmp_path):
+    import pyarrow.parquet as pq
+
+    for name, seed in (("a", 7), ("b", 7), ("c", 8)):
+        inputs.write_inputs(str(tmp_path / name), seed)
+    base, a, b, c = (_read(d) for d in (inputs.DATA, tmp_path / "a", tmp_path / "b", tmp_path / "c"))
     assert all(a[t].equals(b[t]) for t in a)
     assert not a["lineitem"].equals(c["lineitem"])
-    assert a["lineitem"].num_rows == 6000
+    for t in inputs.TABLES:
+        committed = pq.ParquetFile(os.path.join(inputs.DATA, f"{t}.parquet")).schema
+        assert pq.ParquetFile(tmp_path / "c" / f"{t}.parquet").schema.equals(committed), t
+        assert _sorted(c[t]).equals(_sorted(base[t])), t
+    assert base["lineitem"].num_rows == 60_000
+
+
+def test_committed_tables_are_the_repository_testdata():
+    import pyarrow.parquet as pq
+    from tests.conftest import SF001
+
+    if not os.path.isdir(SF001):
+        pytest.skip("the repository's sf0.01 testdata is not on this host")
+    for t in inputs.TABLES:
+        theirs = os.path.join(SF001, f"{t}.parquet")
+        ours = os.path.join(inputs.DATA, f"{t}.parquet")
+        assert pq.ParquetFile(ours).schema.equals(pq.ParquetFile(theirs).schema), t
+        assert pq.read_table(ours).equals(pq.read_table(theirs)), t
 
 
 @pytest.fixture(scope="module")
@@ -51,6 +81,29 @@ def spark():
     s = build_session(app_name="perfbench-tests", master="local[2]", shuffle_partitions=2)
     yield s
     s.stop()
+
+
+def test_flush_span_carries_the_streaming_jobs(spark, tmp_path):
+    from api_log_iceberg_test_spark.generator import generate_api_logs
+    from api_log_iceberg_test_spark.ingest import IngestConfig, start_staged_ingest
+    from api_log_iceberg_test_spark.schema import API_LOG_SCHEMA
+
+    src, target = str(tmp_path / "src"), str(tmp_path / "table" / "api")
+    generate_api_logs(spark, 200, seed=1, span_days=1, num_partitions=2).write.parquet(src)
+    tracer = spans.Tracer(True)
+    tracer.bind(spark)
+    attrs = {}
+    with tracer.span("ingest.flush", "round0", attrs):
+        stream = spark.readStream.schema(API_LOG_SCHEMA).parquet(src)
+        q = start_staged_ingest(
+            stream, target, IngestConfig(flush_count=50, checkpoint_dir=str(tmp_path / "ckpt")),
+            available_now=True,
+        )
+        attrs["stream_run_id"] = str(q.runId)
+        q.awaitTermination(120)
+    tracer.collect()
+    assert tracer.spans[0]["jobs"] > 0
+    assert tracer.spans[0]["tasks"] > 0
 
 
 @pytest.mark.xfail(

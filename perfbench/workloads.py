@@ -5,6 +5,10 @@ operation starts only after the previous one returned. Each operation is
 timed end to end (``time.perf_counter``) and recorded as a sample under
 its name; the first sample of a name is its cold execution, the rest are
 steady. Answers are checked after the timed region, against DuckDB.
+
+Set-up is timed apart from the workload: :func:`set_up` builds the
+session SETUP_REPEATS times (the first build also launches the JVM) and
+``setup_s`` is the median set-up.
 """
 
 from __future__ import annotations
@@ -16,7 +20,7 @@ import time
 import traceback
 from dataclasses import dataclass, field
 
-import datagen
+import inputs
 from spans import READ_SHAPES, Tracer
 
 #: Query workloads, pinned by name and resolved against
@@ -43,9 +47,6 @@ CURATION = [
     "q_label_propagation",
     "q_ann_cosine_topk_np",
 ]
-#: Scale factor of the generated query inputs (sf0.01: 60k lineitem rows,
-#: 10k events, 500 documents).
-QUERY_SF = 0.01
 
 #: lakehouse_ingest: rows per landing batch, batches (= rounds), flush
 #: count (the reference's small-file factory), the days the batches span,
@@ -56,6 +57,7 @@ FLUSH_COUNT = 1_000
 SPAN_DAYS = 4
 RANGE_LOWER = "2024-01-04 12:00:00"
 
+#: Set-ups per run; ``setup_s`` is their median.
 SETUP_REPEATS = 3
 #: Steady passes per ``--seconds``: the pass count follows from the run
 #: length alone, so every run of a workload does the same work.
@@ -145,24 +147,41 @@ def resolve(names: list[str]) -> dict:
 
 
 # ---------------------------------------------------------------------------
-# log_analytics and curation: registered queries over generated tables
+# Set-up: session build, warm-up job and, for lakehouse_ingest, the landing
+# batches
 # ---------------------------------------------------------------------------
 
 
-def setup_queries(run: Run) -> float:
-    """Generate the input tables SETUP_REPEATS times; median seconds."""
+def set_up(build, tracer: Tracer, work: str, seed: int, ingest: bool):
+    """Set up SETUP_REPEATS times; returns the last session and each set-up's
+    seconds. ``build()`` makes a session; every set-up but the last stops it."""
     times = []
     for k in range(SETUP_REPEATS):
         t0 = time.perf_counter()
-        rows = datagen.write_tables(os.path.join(run.work, f"data{k}"), run.seed, QUERY_SF)
+        spark = build()
+        tracer.bind(spark)
+        spark.range(1_000_000).selectExpr("sum(id)").collect()  # JVM and codegen warm-up
+        if ingest:
+            generate_landing(spark, tracer, os.path.join(work, f"landing{k}"), seed, k)
         times.append(time.perf_counter() - t0)
-    run.meta["input_rows"] = rows
-    return statistics.median(times)
+        if k < SETUP_REPEATS - 1:
+            spark.stop()
+    return spark, times
+
+
+# ---------------------------------------------------------------------------
+# log_analytics and curation: registered queries over the seeded sf0.01 tables
+# ---------------------------------------------------------------------------
+
+
+def setup_queries(run: Run) -> None:
+    """Write the seeded input tables (not timed: the program does not run here)."""
+    run.meta["input_rows"] = inputs.write_inputs(os.path.join(run.work, "data"), run.seed)
 
 
 def run_queries(run: Run, names: list[str]) -> None:
     builders = resolve(names)
-    sf_dir = os.path.join(run.work, f"data{SETUP_REPEATS - 1}")
+    sf_dir = os.path.join(run.work, "data")
     spark, tracer = run.spark, run.tracer
     order_rng = random.Random(run.seed)
     run.meta["orders"] = []
@@ -179,28 +198,32 @@ def run_queries(run: Run, names: list[str]) -> None:
 
         run.timed(name, body)
 
-    def one_pass(pass_no: int) -> None:
-        order = order_rng.sample(names, len(names))
-        run.meta["orders"].append(order)
-        for name in order:
-            execute(name, pass_no)
+    def order() -> list[str]:
+        names_in_order = order_rng.sample(names, len(names))
+        run.meta["orders"].append(names_in_order)
+        return names_in_order
 
-    one_pass(0)  # cold: first execution of each query in this session
+    for name in order():  # cold: first execution of each query in this session
+        execute(name, 0)
+    # The answers are checked in the pass after the cold one, which is not
+    # timed: the JIT is still compiling the queries' code paths then, and
+    # without this pass the first steady pass ran up to a third slower
+    # than the later ones.
+    check_queries(run, builders, sf_dir, order())
     run.calibrate("start", 3)
     for pass_no in range(1, run.passes + 1):
-        one_pass(pass_no)
+        for name in order():
+            execute(name, pass_no)
     run.calibrate("end", 2)
 
 
-def check_queries(run: Run, names: list[str]) -> None:
+def check_queries(run: Run, builders: dict, sf_dir: str, names: list[str]) -> None:
     """Each query once more, compared with its DuckDB oracle (or, without
     an oracle, required to return rows)."""
     import __spark_entry__ as em
     from tests.oracle import compare, duckdb_conn
 
-    builders = resolve(names)
     oracles = em.oracle_sql()
-    sf_dir = os.path.join(run.work, f"data{SETUP_REPEATS - 1}")
     con = duckdb_conn(sf_dir)
     try:
         for name in names:
@@ -229,25 +252,16 @@ def _parquet_files(root: str) -> list[str]:
     ]
 
 
-def setup_ingest(run: Run) -> float:
-    """Write ROUNDS seeded landing batches with the package's generator,
-    SETUP_REPEATS times; median seconds."""
+def generate_landing(spark, tracer: Tracer, out: str, seed: int, k: int) -> None:
+    """Write ROUNDS seeded landing batches with the package's generator."""
     from pyspark.sql import functions as F
 
     from api_log_iceberg_test_spark.generator import generate_api_logs
 
-    times = []
-    for k in range(SETUP_REPEATS):
-        out = os.path.join(run.work, f"landing{k}")
-        t0 = time.perf_counter()
-        with run.tracer.span("generator", f"setup{k}", {"rows": BATCH_ROWS * ROUNDS}):
-            df = generate_api_logs(
-                run.spark, BATCH_ROWS * ROUNDS, seed=run.seed, span_days=SPAN_DAYS, num_partitions=4
-            )
-            batch = F.pmod(F.xxhash64("requestId"), F.lit(ROUNDS))
-            df.withColumn("_batch", batch).write.partitionBy("_batch").parquet(out)
-        times.append(time.perf_counter() - t0)
-    return statistics.median(times)
+    with tracer.span("generator", f"setup{k}", {"rows": BATCH_ROWS * ROUNDS}):
+        df = generate_api_logs(spark, BATCH_ROWS * ROUNDS, seed=seed, span_days=SPAN_DAYS, num_partitions=4)
+        batch = F.pmod(F.xxhash64("requestId"), F.lit(ROUNDS))
+        df.withColumn("_batch", batch).write.partitionBy("_batch").parquet(out)
 
 
 def _duck_reads(table: str) -> dict[str, str]:
@@ -343,6 +357,7 @@ def run_ingest(run: Run) -> None:
             with tracer.span("ingest.flush", exec_id, flushed):
                 stream = spark.readStream.schema(API_LOG_SCHEMA).parquet(src)
                 q = start_staged_ingest(stream, target, config, available_now=True)
+                flushed["stream_run_id"] = str(q.runId)
                 q.awaitTermination(120)
                 if q.exception() is not None:
                     raise RuntimeError(str(q.exception()))
