@@ -8,17 +8,16 @@ signal — see the Common Crawl / CCNet lineage).
 
 All operators are pure DataFrame compositions — no Python UDFs, no RDDs:
 
-* :func:`pagerank` — fixed-iteration power method. Each iteration is one
-  shuffle (join ranks to edges on ``src``, re-aggregate on ``dst``);
-  lineage is cut with ``localCheckpoint`` every few iterations so the plan
-  does not grow exponentially with k. At cluster scale the edge list is
-  pre-partitioned on ``src`` once and every iteration reuses that exchange;
-  ranks (one row per node) are the only data re-shuffled per round.
+* :func:`pagerank` — fixed-iteration power method. Each iteration joins
+  the rank vector (one row per node) to the edge list, cached and
+  partitioned on ``src``, and re-aggregates the contributions on ``dst``
+  (one map-side-combined shuffle); lineage is cut with ``localCheckpoint``
+  every few iterations so the plan does not grow exponentially with k.
 * :func:`label_propagation` — synchronous weighted LPA (Raghavan, Albert &
   Kumara 2007) with a deterministic smallest-label tie-break in place of
-  the paper's random one. Each round is one join of the label vector to
-  the pre-partitioned edge list plus one (node, label) weight agg and a
-  per-node arg-max — community detection at near-linear cost per round,
+  the paper's random one. Each round looks source labels up in the
+  broadcast label vector and aggregates inside the ``dst`` partitions of the
+  cached edge list — community detection at near-linear cost per round,
   the standard choice at web scale where modularity methods don't shard.
 * :func:`triangle_counts` — degree-ordered edge orientation (each
   undirected edge directed from its lower-(degree, id) endpoint), then a
@@ -174,7 +173,7 @@ def pagerank(
         .cache()
     )
     n = n_nodes
-    ranks = nodes.select("node", F.lit(1.0 / n).alias("rank")).cache()
+    ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
     for i in range(k):
         contribs = (
             contrib_edges.join(ranks, contrib_edges.src == ranks.node)
@@ -194,6 +193,8 @@ def pagerank(
         if (i + 1) % checkpoint_every == 0 or i == k - 1:
             new_ranks = new_ranks.localCheckpoint(eager=True)
         ranks = new_ranks
+    nodes.unpersist()
+    contrib_edges.unpersist()
     return ranks
 
 
@@ -378,45 +379,43 @@ def label_propagation(
     result is well-defined whether or not the labeling has stabilized,
     and the SQL oracle unrolls the identical k rounds.
 
-    Scale: the edge list is hash-partitioned on ``src`` once and cached —
-    every round's label join reuses that exchange, shuffling only the
-    |V|-row label vector. The (dst, label) weight agg is map-side
-    combinable, and the per-node arg-max window shuffles at most one row
-    per distinct (node, incoming label) — bounded by |E|. Lineage is cut
-    with ``localCheckpoint`` every ``checkpoint_every`` rounds so the
-    plan stays flat in k (same discipline as :func:`pagerank`).
+    Scale: the edge list is cached hash-partitioned on ``dst``, so each
+    round's weight sum and arg-max run inside each partition, with no
+    exchange over the edges. Later rounds look each edge's label up as
+    ``coalesce(L[src], src)`` in the previous round's broadcast label
+    vector L, which holds exactly the nodes with in-edges: no join back to
+    the old labels; the others keep their own id and join after the last
+    round. ``localCheckpoint`` every ``checkpoint_every`` rounds keeps the
+    plan flat in k; the edge cache is released before returning.
     """
+    if k < 1:
+        raise ValueError(f"label_propagation needs k >= 1 rounds, got {k}")
     edges = edges.select("src", "dst", "w")
-    nodes = (
-        edges.select(F.explode(F.array("src", "dst")).alias("node"))
-        .distinct()
-        .cache()
-    )
     par = edges.sparkSession.sparkContext.defaultParallelism
-    ed = edges.repartition(par, "src").cache()
-    labels = nodes.select("node", F.col("node").alias("label"))
+    ed = edges.repartition(par, "dst").cache()
+    prev = None
     for i in range(k):
-        incoming = (
-            ed.join(labels, ed.src == labels.node)
-            .select("dst", "label", "w")
-            .groupBy("dst", "label")
+        votes = ed if prev is None else ed.join(prev, ed.src == prev.node, "left")
+        label = F.col("src") if prev is None else F.coalesce("label", "src")
+        # arg-max, ties to the smallest label, in hash aggregates only (a
+        # struct min sorts): weight per label, min label per weight, top weight
+        labels = (
+            votes.groupBy("dst", label.alias("label"))
             .agg(F.sum("w").alias("c"))
+            .groupBy("dst", "c")
+            .agg(F.min("label").alias("label"))
+            .groupBy(F.col("dst").alias("node"))
+            .agg(F.max_by("label", "c").alias("label"))
         )
-        # r15: per-node argmax as ONE hash aggregate instead of a
-        # row_number window — min(struct(-c, label)) is exactly
-        # (greatest weight, ties to smallest label): minimal -c = maximal
-        # c, then struct comparison falls through to the label. The window
-        # version sorted every (node, incoming-label) row per round; the
-        # aggregate gets map-side partial agg and no sort (guide §2.3
-        # "aggregate before you shuffle"). c = SUM(w) over integer edge
-        # weights — exact, so the argmax is partitioning-independent.
-        winner = incoming.groupBy("dst").agg(
-            F.min(F.struct((-F.col("c")).alias("nc"), F.col("label"))).alias("_m")
-        ).select(F.col("dst").alias("node"), F.col("_m.label").alias("new_label"))
-        new_labels = labels.join(winner, "node", "left").select(
-            "node", F.coalesce("new_label", "label").alias("label")
-        )
+        if i == k - 1:  # add the nodes without in-edges, labelled by themselves
+            src_only = (  # the lookup misses exactly them: no second broadcast
+                votes.filter(F.col("label").isNull())
+                if prev is not None
+                else ed.join(labels, ed.src == labels.node, "left_anti")
+            ).select("src")
+            labels = labels.union(src_only.distinct().select("src", "src"))
         if (i + 1) % checkpoint_every == 0 or i == k - 1:
-            new_labels = new_labels.localCheckpoint(eager=True)
-        labels = new_labels
-    return labels
+            labels = labels.localCheckpoint(eager=True)
+        prev = labels
+    ed.unpersist()
+    return prev

@@ -288,10 +288,28 @@ def test_lpa_weight_beats_count(spark):
     assert labels["v"] == "h"
 
 
+def _random_digraph(seed, ids):
+    """Seeded asymmetric random multigraph: nodes 0-3 only send, 4-7 only
+    receive, one edge in five repeats an earlier one, and some weigh 0."""
+    import random
+
+    rng = random.Random(seed)
+    n = 24
+    senders = [v for v in range(n) if v not in range(4, 8)]
+    receivers = list(range(4, n))
+    rows = [(s, rng.choice(receivers)) for s in range(4)]  # each one sends
+    rows += [(rng.choice(senders), d) for d in range(4, 8)]  # each one receives
+    rows += [(rng.choice(senders), rng.choice(receivers)) for _ in range(60)]
+    rows += rng.sample(rows, len(rows) // 5)
+    return [(ids(a), ids(b), rng.choice([0, 1, 1, 2, 3])) for a, b in rows if a != b]
+
+
 def test_lpa_matches_python_reference_random_graphs(spark):
-    """Full k-round label trajectory matches a Python reference on seeded
-    random undirected graphs — pins argmax + tie-break + keep-label
-    semantics, not just the community summary."""
+    """Full k-round label trajectory matches a Python reference, on seeded
+    random undirected graphs and on asymmetric multigraphs with src-only
+    and dst-only nodes, duplicate edges and zero weights — pins argmax +
+    tie-break + keep-label semantics for every round count and checkpoint
+    cadence, with long and with string node ids."""
     import random
 
     for seed in (5, 23):
@@ -311,3 +329,87 @@ def test_lpa_matches_python_reference_random_graphs(spark):
         }
         want = _lpa_ref(edges, k=4)
         assert got == want, f"seed {seed}"
+
+    for k in (1, 2, 3, 4):
+        for every in (1, 2, 3):
+            # alternate the id type so each k and each cadence sees both
+            ids, typ = (int, "bigint") if (k + every) % 2 else (str, "string")
+            edges = _random_digraph(10 * k + every, ids)
+            e = spark.createDataFrame(edges, f"src {typ}, dst {typ}, w bigint")
+            got = {
+                r["node"]: r["label"]
+                for r in graph.label_propagation(e, k=k, checkpoint_every=every)
+                .collect()
+            }
+            assert got == _lpa_ref(edges, k=k), (k, every, typ)
+
+
+def _cache_is_empty(spark):
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_lpa_job_count_pinned(spark):
+    """label_propagation(k=3) launches at most 8 Spark jobs: the edges' dst
+    exchange, two cache-stage jobs, the round-1 broadcast, the round-2
+    checkpoint, the round-2 labels' broadcast, the src-only distinct, and
+    the round-3 checkpoint. A re-introduced exchange over the edges, label
+    join or cache adds jobs and fails here. The graph comes from
+    ``spark.range``, so the planner knows its size, as it does for a
+    file-backed input, and broadcasts the label vector."""
+    sc = spark.sparkContext
+    e = spark.range(120).select(
+        (F.col("id") % 40).alias("src"),
+        ((F.col("id") * 7 + 1) % 40 + 2).alias("dst"),
+        (F.col("id") % 3).alias("w"),
+    )
+    group = "test-lpa-job-count"
+    sc.setJobGroup(group, group)
+    try:
+        graph.label_propagation(e, k=3)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 8
+    assert _cache_is_empty(spark)
+
+
+def test_graph_loops_answer_rewritten_inputs(spark, tmp_path):
+    """Re-running the graph loops in one session after an input file is
+    rewritten in place answers for the new file. Spark matches cached plans
+    by input path, so a cache left by the first run would answer the second
+    with the old rows: the loops must leave no cache behind."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as em
+    from api_log_iceberg_test_spark.schema import load_table
+    from tests.conftest import SF0001
+    from tests.oracle import TABLES, compare, duckdb_conn
+
+    sf = str(tmp_path)
+    for t in TABLES:
+        shutil.copy(f"{SF0001}/{t}.parquet", sf)
+    qs, osql = em.queries(), em.oracle_sql()
+    spark.catalog.clearCache()
+
+    def run():
+        con = duckdb_conn(sf)
+        for name in ("q_label_propagation", "q_pagerank_parts"):
+            df = qs[name](spark, sf)
+            assert _cache_is_empty(spark), name
+            assert not compare(df, con.execute(osql[name]).fetchdf(), name)
+        und = graph.cooccurrence_edges(load_table(spark, sf, "lineitem"))
+        edges = und.select(F.col("a").alias("src"), F.col("b").alias("dst")).union(
+            und.select("b", "a")
+        ).withColumn("w", F.lit(1))
+        loop = graph.pagerank(edges, k=5, driver_max_nodes=None)
+        assert _cache_is_empty(spark)
+        driver = graph.pagerank(edges, k=5, driver_max_nodes=1 << 30)
+        want = {r.node: round(r.rank, 9) for r in driver.collect()}
+        assert {r.node: round(r.rank, 9) for r in loop.collect()} == want
+
+    run()
+    path = tmp_path / "lineitem.parquet"
+    li = pq.read_table(path)
+    pq.write_table(li.slice(0, li.num_rows // 2), path)
+    run()
