@@ -5,10 +5,8 @@ each ``queries()[name]`` at sf=0.01 and compares it against the
 matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
 order-insensitive value-hash → CORRECTNESS_r{N}.json).
 
-Query registry lives in ``api_log_iceberg_test_spark.queries`` (reference
-SQL surface + analytic extensions) and ``.operators`` (LLM-data-pipeline
-extension ops). Each module exports ``QUERIES`` and ``ORACLE`` dicts that
-are merged here.
+The query catalog lives in ``api_log_iceberg_test_spark.queries``
+(``QUERIES`` / ``ORACLE``); this module only orders it for the driver.
 """
 
 from __future__ import annotations
@@ -17,17 +15,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from api_log_iceberg_test_spark.queries import analytics, api_logs, sql_surface
-
-try:  # extension operators land incrementally; keep the contract importable
-    from api_log_iceberg_test_spark.operators import registry as _ops_registry
-
-    _OPS_QUERIES = _ops_registry.QUERIES
-    _OPS_ORACLE = _ops_registry.ORACLE
-    _OPS_TAIL = getattr(_ops_registry, "QUERIES_TAIL", {})
-    _OPS_LATE = getattr(_ops_registry, "QUERIES_LATE", {})
-except ImportError:  # pragma: no cover
-    _OPS_QUERIES, _OPS_ORACLE, _OPS_TAIL, _OPS_LATE = {}, {}, {}, {}
+from api_log_iceberg_test_spark.queries import ORACLE, QUERIES
 
 SF0001 = "/root/testdata/sf0.001"
 
@@ -47,15 +35,14 @@ def entry(spark: SparkSession) -> DataFrame:
     )
 
 
-# The driver verifies only the FIRST 50 queries() entries per round (merge =
-# dict insertion order), so the head of queries() is a ROTATING verification
-# window. Round 5 makes the rotation SELF-MAINTAINING: the window is computed
-# at import time from the CORRECTNESS_r*.json evidence on disk —
+# The driver verifies only the FIRST 50 queries() entries per round (dict
+# insertion order), so the head of queries() is a ROTATING verification
+# window, computed at import time from the CORRECTNESS_r*.json evidence on
+# disk:
 #   1. the 9 pinned sentinels (reference §2 surface + the round-1-red
 #      analytics trio) are verified every round;
 #   2. every remaining slot goes to entries with NO driver evidence yet
-#      (never verified, or only ever errored), in _DARK_PRIORITY order
-#      (VERDICT r04 #1's highest-complexity-first list) then registry order;
+#      (never verified, or only ever errored), in registry order;
 #   3. spare capacity re-certifies the STALEST greens (oldest evidence round
 #      first), so long-verified entries cycle back through over time.
 # The moment a new CORRECTNESS file lands, the next import rotates — no
@@ -77,80 +64,6 @@ _PINNED = [
     "q_sessionize",
     "q_tumbling_window_batch",
 ]
-
-# Preferred ordering for never-verified picks: the canonicalizer-fixed
-# q_sql_* rows (r04 driver-red), then VERDICT r04 #1's priority list, then
-# the remaining round-4 operators complexity-first. Entries not listed here
-# fall back to registry order after these.
-_DARK_PRIORITY = [
-    "q_sql_array_agg",
-    "q_sql_map_functions",
-    "q_dup_clusters_star",
-    "q_label_propagation",
-    "q_pagerank_parts",
-    "q_ivm_join_delta",
-    "q_table_checksum",
-    "q_table_diff",
-    "q_bloom_semi_join",
-    "q_rolling_median",
-    "q_ks_drift",
-    "q_dense_ids",
-    "q_auc_eval",
-    "q_salted_join",
-    "q_containment_pairs",
-    "q_table_profile",
-    "q_bm25_topk",
-    "q_hybrid_rrf",
-    "q_inverted_index",
-    "q_compaction_plan",
-    "q_pruning_efficiency",
-    "q_salted_agg",
-    "q_skyline_frontier",
-    "q_stratified_kfold",
-    "q_weighted_reservoir",
-    "q_neyman_allocation",
-    "q_benford_audit",
-    "q_audience_overlap",
-    "q_fuzzy_match_names",
-    "q_chunk_embed_pool",
-    "q_quality_calibration",
-    "q_negative_sampling",
-    "q_oov_rate",
-    "q_token_entropy",
-    "q_chisq_lang_source",
-    "q_cross_source_dups",
-    "q_dedup_cluster_stats",
-    "q_psi_drift",
-    "q_term_pmi",
-    "q_source_similarity",
-    "q_temperature_mix",
-]
-
-
-# Evidence floors: a CORRECTNESS row from a round BEFORE the floor is not
-# usable evidence for that entry — the entry re-enters the window as dark
-# and gets re-certified ahead of the stale refill. Two legitimate causes
-# (COVERAGE.md round 8):
-#   * the query's OUTPUT changed at driver SF, so prior rows certify the
-#     OLD semantics (q_bootstrap_ci: the ADVICE r07 grid-moment + n_events
-#     fixes changed the sf0.01 hash — floor 8);
-#   * the ORACLE was upgraded after the entry's last driver row
-#     (q_cms_event_counts: its graduated hash oracle landed in r05 but the
-#     only driver row is the r04 rows-only check — floor 5).
-# Fixes whose output is bit-identical at driver SF (r08: q_ece_calibration,
-# q_ngram_novelty, q_seasonality_strength, q_hourofweek_profile, the seven
-# grid-accumulation moves) are NOT floored — a driver re-run would
-# reproduce the same hash and add zero information; their assurance tier
-# is the sf0.1/sf1.0 sweep where the outputs DO differ.
-# q_value_histogram's empty-bin fix DOES change the sf0.01 output (3 of
-# 12 buckets were silently dropped at that SF) — floored at 8, accepting
-# one r03-cohort straggler this round (budget note in
-# tests/test_oracle_parity.py::test_window_budget_respects_drain).
-_EVIDENCE_FLOOR = {
-    "q_bootstrap_ci": 8,
-    "q_cms_event_counts": 5,
-    "q_value_histogram": 8,
-}
 
 
 def _usable_evidence_row(row: dict) -> bool:
@@ -186,21 +99,15 @@ def _driver_evidence() -> dict[str, int]:
         for name, row in rows.items():
             if _usable_evidence_row(row):
                 latest[name] = max(latest.get(name, 0), rnd)
-    return {
-        n: r for n, r in latest.items() if r >= _EVIDENCE_FLOOR.get(n, 0)
-    }
+    return latest
 
 
 def _select_window(names: list[str], evidence: dict[str, int]) -> list[str]:
     """Pure window-selection policy (unit-tested in test_oracle_parity):
-    pinned, then never-verified by priority, then stalest-evidence refill."""
+    pinned, then never-verified in registry order, then stalest-evidence
+    refill."""
     window = [n for n in _PINNED if n in names]
-    candidates = _DARK_PRIORITY + [n for n in names if n not in _DARK_PRIORITY]
-    dark = [
-        n
-        for n in candidates
-        if n in names and n not in evidence and n not in window
-    ]
+    dark = [n for n in names if n not in evidence and n not in window]
     window += dark[: _WINDOW_SIZE - len(window)]
     if len(window) < _WINDOW_SIZE:
         pos = {n: i for i, n in enumerate(names)}
@@ -213,38 +120,15 @@ def _select_window(names: list[str], evidence: dict[str, int]) -> list[str]:
     return window
 
 
-def _merged(attr: str) -> dict:
-    api = getattr(api_logs, attr)
-    ana = getattr(analytics, attr)
-    sql = getattr(sql_surface, attr)
-    ops = _OPS_QUERIES if attr == "QUERIES" else _OPS_ORACLE
-    full: dict = {}
-    full.update(api)
-    full.update(ops)
-    if attr == "QUERIES":
-        full.update(_OPS_LATE)
-    full.update(sql)
-    full.update(ana)
-    if attr == "QUERIES":
-        full.update(_OPS_TAIL)
-    if attr != "QUERIES":
-        return full  # oracle dict order is irrelevant to the driver
-    out: dict = {}
-    for k in _select_window(list(full), _driver_evidence()):
-        out[k] = full[k]  # window entries first, in window order
-    for k, v in full.items():  # then everything already proven, stable order
-        if k not in out:
-            out[k] = v
-    return out
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2 (+ extensions).
 
     Each callable takes (spark, sf_dir) and returns a DataFrame.
     Every computed/aggregate column is aliased to match ``oracle_sql``.
     """
-    return _merged("QUERIES")
+    window = _select_window(list(QUERIES), _driver_evidence())
+    # window entries first, in window order; then the rest in registry order
+    return {n: QUERIES[n] for n in dict.fromkeys(window + list(QUERIES))}
 
 
 def oracle_sql() -> dict[str, str]:
@@ -252,4 +136,4 @@ def oracle_sql() -> dict[str, str]:
     customer supplier part orders lineitem events documents embeddings are
     pre-registered views). Keys without an oracle get a rows-only check.
     """
-    return _merged("ORACLE")
+    return dict(ORACLE)

@@ -368,7 +368,7 @@ def commit_staged(target: str, retain_seconds: float = 60.0) -> int:
     import shutil
     import uuid
 
-    from api_log_iceberg_test_spark.maintenance import publish_version
+    from .maintenance import publish_version
 
     stage_root = staging_dir(target)
 

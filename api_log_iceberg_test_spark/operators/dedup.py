@@ -1098,73 +1098,6 @@ def shared_span_stats(
     )
 
 
-def containment_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    n_blocking: int = 3,
-    threshold: float = 0.8,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """Near-subset pairs by n-gram containment C(A→B) = |A∩B| / |A|.
-
-    Jaccard misses excerpt/quote relationships: a 50-token doc fully
-    contained in a 5000-token doc has J ≈ 0.01 but containment 1.0. Output
-    is asymmetric — ``doc_a`` is the (near-)contained document, ``doc_b``
-    the container.
-
-    Candidates: A keys on its ``n_blocking`` smallest shingles; B keys on
-    ALL its shingles (an inverted index — for high containment, A's
-    smallest shingle is in B with probability ≥ threshold, so recall
-    degrades gracefully, and the blocking is deterministic so the DuckDB
-    oracle replicates it exactly). Scale: the index explode is |shingles|
-    rows/doc of (id, short string); posting-list skew (a stopword-only
-    shingle) is the same s·|A-side| fanout as LSH buckets —
-    ``max_bucket_size`` caps it via :func:`cap_buckets`. Verification
-    intersects xxhash64'd arrays, ids-only through the candidate join.
-    """
-    docs = (
-        _docs_fanned(df, id_col, text_col)  # parallel shingle pass (r15)
-        .select("id", word_shingles("_t", n).alias("sh"))
-        .select(
-            "id",
-            F.slice(F.array_sort("sh"), 1, n_blocking).alias("bkeys"),
-            F.transform("sh", lambda s: F.xxhash64(s)).alias("hv"),
-        )
-        .repartition(F.col("id"))
-    )
-    left = docs.select("id", F.explode("bkeys").alias("bkey"))
-    index = cap_buckets(
-        docs.select("id", F.explode(F.array_distinct(F.col("bkeys")) if False else F.col("bkeys")).alias("bkey")),
-        ["bkey"],
-        max_bucket_size,
-    )
-    cands = (
-        left.alias("a")
-        .join(index.alias("b"), "bkey")
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .filter(F.col("id_a") != F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    hashed = docs.select("id", "hv")
-    pairs = cands.join(
-        hashed.select(F.col("id").alias("id_a"), F.col("hv").alias("sh_a")), "id_a"
-    ).join(hashed.select(F.col("id").alias("id_b"), F.col("hv").alias("sh_b")), "id_b")
-    sa = F.size(F.col("sh_a")).cast("double")
-    # size prefilter: C ≤ min(|A|,|B|)/|A| ⇒ |B| < t·|A| can't pass. Implied
-    # by the final filter ⇒ oracle unchanged.
-    return (
-        pairs.filter(F.size(F.col("sh_b")).cast("double") >= F.lit(threshold) * sa)
-        .withColumn(
-            "containment",
-            F.round(F.size(F.array_intersect("sh_a", "sh_b")).cast("double") / sa, 6),
-        )
-        .filter(F.col("containment") >= threshold)
-        .select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"), "containment")
-    )
-
-
 def fuzzy_levenshtein_pairs(
     df: DataFrame,
     text_col: str = "text",

@@ -1816,53 +1816,6 @@ ORACLE["q_source_mix_weights"] = f"""
     FROM tot ORDER BY source
 """
 
-QUERIES = {
-    "q_dedup_exact": q_dedup_exact,
-    "q_dedup_normalized": q_dedup_normalized,
-    "q_dedup_ngram_jaccard": q_dedup_ngram_jaccard,
-    "q_dedup_minhash_lsh": q_dedup_minhash_lsh,
-    "q_dup_clusters": q_dup_clusters,
-    "q_dedup_canonical": q_dedup_canonical,
-    "q_dedup_simhash": q_dedup_simhash,
-    "q_ann_cosine_topk": q_ann_cosine_topk,
-    "q_ann_cosine_topk_ivf": q_ann_cosine_topk_ivf,
-    "q_ann_cosine_topk_np": q_ann_cosine_topk_np,
-    "q_embedding_neardup": q_embedding_neardup,
-    "q_embedding_neardup_lsh": q_embedding_neardup_lsh,
-    "q_text_analyze": q_text_analyze,
-    "q_lineterm_tokens": q_lineterm_tokens,
-    "q_unicode_case_tokens": q_unicode_case_tokens,
-    "q_lang_composition": q_lang_composition,
-    "q_train_sample": q_train_sample,
-    "q_grouped_sample": q_grouped_sample,
-    "q_curated_topk_per_lang": q_curated_topk_per_lang,
-    "q_multimodal_features": q_multimodal_features,
-    "q_array_ops": q_array_ops,
-    "q_udtf_token_stats": q_udtf_token_stats,
-    "q_tfidf_top_terms": q_tfidf_top_terms,
-    "q_range_join_nearby_events": q_range_join_nearby_events,
-    "q_range_join_nearby_counts": q_range_join_nearby_counts,
-    "q_udf_sigmoid": q_udf_sigmoid,
-    "q_udaf_median": q_udaf_median,
-    "q_pivot_counts": q_pivot_counts,
-    "q_merge_upsert": q_merge_upsert,
-    "q_pii_scrub": q_pii_scrub,
-    "q_vocab_top_terms": q_vocab_top_terms,
-    "q_embedding_quantize": q_embedding_quantize,
-    "q_dedup_fingerprint": q_dedup_fingerprint,
-    "q_scd2_history": q_scd2_history,
-    "q_latest_by_key": q_latest_by_key,
-    "q_embed_documents": q_embed_documents,
-    "q_corpus_datacard": q_corpus_datacard,
-    "q_leakage_safe_split": q_leakage_safe_split,
-    "q_repetition_signals": q_repetition_signals,
-    "q_decontaminate": q_decontaminate,
-    "q_source_mix_weights": q_source_mix_weights,
-    "q_chunk_documents": q_chunk_documents,
-    "q_pack_sequences": q_pack_sequences,
-}
-
-
 def q_hll_daily_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mergeable daily HLL user-distinct rollup + merged total.
 
@@ -4947,81 +4900,12 @@ ORACLE["q_interarrival_stats"] = """
     FROM agg ORDER BY event_type
 """
 
-
-#: Oracled entries registered after the driver's 50-query verification
-#: window filled: merged AFTER the round-1-red analytics trio (which must
-#: re-verify green) but before the SQL/analytic breadth; see
-#: __spark_entry__._merged.
-QUERIES_LATE: dict = {
-    "q_value_histogram": q_value_histogram,
-    "q_corr_stats": q_corr_stats,
-    "q_dedup_spans": q_dedup_spans,
-    "q_lm_quality": q_lm_quality,
-    "q_bpe_pair_counts": q_bpe_pair_counts,
-    "q_zorder_stats": q_zorder_stats,
-    "q_dedup_incremental": q_dedup_incremental,
-    "q_curation_pipeline": q_curation_pipeline,
-    "q_weighted_sample": q_weighted_sample,
-    "q_pagerank": q_pagerank,
-    "q_triangle_counts": q_triangle_counts,
-    "q_label_propagation": q_label_propagation,
-    "q_table_diff": q_table_diff,
-    "q_dense_ids": q_dense_ids,
-    "q_bm25_topk": q_bm25_topk,
-    "q_temperature_mix": q_temperature_mix,
-    "q_hybrid_rrf": q_hybrid_rrf,
-    "q_compaction_plan": q_compaction_plan,
-    "q_weighted_reservoir": q_weighted_reservoir,
-    "q_auc_eval": q_auc_eval,
-    "q_table_checksum": q_table_checksum,
-    "q_bloom_semi_join": q_bloom_semi_join,
-    "q_rolling_median": q_rolling_median,
-    "q_neyman_allocation": q_neyman_allocation,
-    "q_ivm_join_delta": q_ivm_join_delta,
-    "q_pruning_efficiency": q_pruning_efficiency,
-    "q_salted_join": q_salted_join,
-    "q_source_similarity": q_source_similarity,
-    "q_ks_drift": q_ks_drift,
-    "q_audience_overlap": q_audience_overlap,
-    "q_benford_audit": q_benford_audit,
-    "q_table_profile": q_table_profile,
-    "q_fuzzy_match_names": q_fuzzy_match_names,
-    "q_inverted_index": q_inverted_index,
-    "q_chunk_embed_pool": q_chunk_embed_pool,
-    "q_quality_calibration": q_quality_calibration,
-    "q_negative_sampling": q_negative_sampling,
-    "q_oov_rate": q_oov_rate,
-    "q_dup_clusters_star": q_dup_clusters_star,
-    "q_token_entropy": q_token_entropy,
-    "q_salted_agg": q_salted_agg,
-    "q_containment_pairs": q_containment_pairs,
-    "q_chisq_lang_source": q_chisq_lang_source,
-    "q_pagerank_parts": q_pagerank_parts,
-    "q_cross_source_dups": q_cross_source_dups,
-    "q_dedup_cluster_stats": q_dedup_cluster_stats,
-    "q_hourofweek_profile": q_hourofweek_profile,
-    "q_data_quality": q_data_quality,
-    "q_psi_drift": q_psi_drift,
-    "q_event_transitions": q_event_transitions,
-    "q_term_pmi": q_term_pmi,
-    "q_attribution": q_attribution,
-    "q_target_encoding": q_target_encoding,
-    "q_feature_hashing": q_feature_hashing,
-    "q_assoc_rules": q_assoc_rules,
-    "q_event_trigrams": q_event_trigrams,
-    "q_interarrival_stats": q_interarrival_stats,
-    # round 6 (registry unfrozen per VERDICT r05 #4)
-    "q_pack_batches": q_pack_batches,
-}
-
 # identical labeling contract, so the star variant reuses the min-label
 # oracle verbatim — the driver row then certifies the O(log² n) algorithm
 # exact against the recursive-CTE fixpoint
 ORACLE["q_dup_clusters_star"] = ORACLE["q_dup_clusters"]
 
-#: Rows-only entries intentionally merged LAST in __spark_entry__ so they
-#: never displace a hash-verifiable query from the driver's verification
-#: window (they'd only earn a weaker rows-only row there anyway).
+
 def q_kll_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Range-query quantiles from merged daily KLL sketches.
 
@@ -5240,11 +5124,6 @@ ORACLE["q_token_budget_sample"] = """
     GROUP BY source
     ORDER BY source
 """
-
-
-# oracled round-6 entries defined below the dict literal
-QUERIES_LATE["q_epoch_shuffle"] = q_epoch_shuffle
-QUERIES_LATE["q_token_budget_sample"] = q_token_budget_sample
 
 
 def q_kll_window_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6949,41 +6828,144 @@ ORACLE["q_maintenance_audit"] = """
 """
 
 
+#: The operator queries, in registration order. The catalog
+#: (``api_log_iceberg_test_spark.queries``) lists QUERIES after the reference
+#: surface and QUERIES_TAIL (the sketch/approximate entries and the last
+#: additions) after the SQL-surface and analytics modules.
+QUERIES = {
+    "q_dedup_exact": q_dedup_exact,
+    "q_dedup_normalized": q_dedup_normalized,
+    "q_dedup_ngram_jaccard": q_dedup_ngram_jaccard,
+    "q_dedup_minhash_lsh": q_dedup_minhash_lsh,
+    "q_dup_clusters": q_dup_clusters,
+    "q_dedup_canonical": q_dedup_canonical,
+    "q_dedup_simhash": q_dedup_simhash,
+    "q_ann_cosine_topk": q_ann_cosine_topk,
+    "q_ann_cosine_topk_ivf": q_ann_cosine_topk_ivf,
+    "q_ann_cosine_topk_np": q_ann_cosine_topk_np,
+    "q_embedding_neardup": q_embedding_neardup,
+    "q_embedding_neardup_lsh": q_embedding_neardup_lsh,
+    "q_text_analyze": q_text_analyze,
+    "q_lineterm_tokens": q_lineterm_tokens,
+    "q_unicode_case_tokens": q_unicode_case_tokens,
+    "q_lang_composition": q_lang_composition,
+    "q_train_sample": q_train_sample,
+    "q_grouped_sample": q_grouped_sample,
+    "q_curated_topk_per_lang": q_curated_topk_per_lang,
+    "q_multimodal_features": q_multimodal_features,
+    "q_array_ops": q_array_ops,
+    "q_udtf_token_stats": q_udtf_token_stats,
+    "q_tfidf_top_terms": q_tfidf_top_terms,
+    "q_range_join_nearby_events": q_range_join_nearby_events,
+    "q_range_join_nearby_counts": q_range_join_nearby_counts,
+    "q_udf_sigmoid": q_udf_sigmoid,
+    "q_udaf_median": q_udaf_median,
+    "q_pivot_counts": q_pivot_counts,
+    "q_merge_upsert": q_merge_upsert,
+    "q_pii_scrub": q_pii_scrub,
+    "q_vocab_top_terms": q_vocab_top_terms,
+    "q_embedding_quantize": q_embedding_quantize,
+    "q_dedup_fingerprint": q_dedup_fingerprint,
+    "q_scd2_history": q_scd2_history,
+    "q_latest_by_key": q_latest_by_key,
+    "q_embed_documents": q_embed_documents,
+    "q_corpus_datacard": q_corpus_datacard,
+    "q_leakage_safe_split": q_leakage_safe_split,
+    "q_repetition_signals": q_repetition_signals,
+    "q_decontaminate": q_decontaminate,
+    "q_source_mix_weights": q_source_mix_weights,
+    "q_chunk_documents": q_chunk_documents,
+    "q_pack_sequences": q_pack_sequences,
+    "q_value_histogram": q_value_histogram,
+    "q_corr_stats": q_corr_stats,
+    "q_dedup_spans": q_dedup_spans,
+    "q_lm_quality": q_lm_quality,
+    "q_bpe_pair_counts": q_bpe_pair_counts,
+    "q_zorder_stats": q_zorder_stats,
+    "q_dedup_incremental": q_dedup_incremental,
+    "q_curation_pipeline": q_curation_pipeline,
+    "q_weighted_sample": q_weighted_sample,
+    "q_pagerank": q_pagerank,
+    "q_triangle_counts": q_triangle_counts,
+    "q_label_propagation": q_label_propagation,
+    "q_table_diff": q_table_diff,
+    "q_dense_ids": q_dense_ids,
+    "q_bm25_topk": q_bm25_topk,
+    "q_temperature_mix": q_temperature_mix,
+    "q_hybrid_rrf": q_hybrid_rrf,
+    "q_compaction_plan": q_compaction_plan,
+    "q_weighted_reservoir": q_weighted_reservoir,
+    "q_auc_eval": q_auc_eval,
+    "q_table_checksum": q_table_checksum,
+    "q_bloom_semi_join": q_bloom_semi_join,
+    "q_rolling_median": q_rolling_median,
+    "q_neyman_allocation": q_neyman_allocation,
+    "q_ivm_join_delta": q_ivm_join_delta,
+    "q_pruning_efficiency": q_pruning_efficiency,
+    "q_salted_join": q_salted_join,
+    "q_source_similarity": q_source_similarity,
+    "q_ks_drift": q_ks_drift,
+    "q_audience_overlap": q_audience_overlap,
+    "q_benford_audit": q_benford_audit,
+    "q_table_profile": q_table_profile,
+    "q_fuzzy_match_names": q_fuzzy_match_names,
+    "q_inverted_index": q_inverted_index,
+    "q_chunk_embed_pool": q_chunk_embed_pool,
+    "q_quality_calibration": q_quality_calibration,
+    "q_negative_sampling": q_negative_sampling,
+    "q_oov_rate": q_oov_rate,
+    "q_dup_clusters_star": q_dup_clusters_star,
+    "q_token_entropy": q_token_entropy,
+    "q_salted_agg": q_salted_agg,
+    "q_containment_pairs": q_containment_pairs,
+    "q_chisq_lang_source": q_chisq_lang_source,
+    "q_pagerank_parts": q_pagerank_parts,
+    "q_cross_source_dups": q_cross_source_dups,
+    "q_dedup_cluster_stats": q_dedup_cluster_stats,
+    "q_hourofweek_profile": q_hourofweek_profile,
+    "q_data_quality": q_data_quality,
+    "q_psi_drift": q_psi_drift,
+    "q_event_transitions": q_event_transitions,
+    "q_term_pmi": q_term_pmi,
+    "q_attribution": q_attribution,
+    "q_target_encoding": q_target_encoding,
+    "q_feature_hashing": q_feature_hashing,
+    "q_assoc_rules": q_assoc_rules,
+    "q_event_trigrams": q_event_trigrams,
+    "q_interarrival_stats": q_interarrival_stats,
+    "q_pack_batches": q_pack_batches,
+    "q_epoch_shuffle": q_epoch_shuffle,
+    "q_token_budget_sample": q_token_budget_sample,
+    "q_bootstrap_ci": q_bootstrap_ci,
+    "q_woe_iv": q_woe_iv,
+    "q_kappa_agreement": q_kappa_agreement,
+    "q_padding_waste": q_padding_waste,
+    "q_seasonality_strength": q_seasonality_strength,
+    "q_curriculum_pacing": q_curriculum_pacing,
+    "q_ngram_novelty": q_ngram_novelty,
+    "q_hard_negatives": q_hard_negatives,
+    "q_ece_calibration": q_ece_calibration,
+    "q_ab_ttest": q_ab_ttest,
+    "q_join_skew_probe": q_join_skew_probe,
+    "q_rank_biased_overlap": q_rank_biased_overlap,
+    "q_source_balance": q_source_balance,
+    "q_mi_feature_label": q_mi_feature_label,
+    "q_survivorship_golden": q_survivorship_golden,
+    "q_power_analysis": q_power_analysis,
+}
+
 QUERIES_TAIL = {
     "q_hll_daily_users": q_hll_daily_users,
     "q_kmeans_clusters": q_kmeans_clusters,
     "q_kll_value_quantiles": q_kll_value_quantiles,
     "q_ann_pq_topk": q_ann_pq_topk,
     "q_cms_event_counts": q_cms_event_counts,
-    # round 6 (registry unfrozen per VERDICT r05 #4)
     "q_kll_window_drift": q_kll_window_drift,
     "q_lsh_param_sweep": q_lsh_param_sweep,
-    # round 12 (VERDICT r11 #7: one new entry, hash-oracled, within the
-    # <=3-entry window budget — 9 pinned + 1 dark + 40 stale slots still
-    # covers the whole 38-entry r07 drain cohort)
     "q_watermark_accounting": q_watermark_accounting,
-    # round 13 (VERDICT r12 #5: the last un-queried reference surface —
-    # table-maintenance accounting over the staged commit log; one new
-    # entry, hash-oracled, within the ≤3-entry window budget)
     "q_maintenance_audit": q_maintenance_audit,
 }
 
-QUERIES_LATE["q_bootstrap_ci"] = q_bootstrap_ci
-QUERIES_LATE["q_woe_iv"] = q_woe_iv
-QUERIES_LATE["q_kappa_agreement"] = q_kappa_agreement
-QUERIES_LATE["q_padding_waste"] = q_padding_waste
-QUERIES_LATE["q_seasonality_strength"] = q_seasonality_strength
-QUERIES_LATE["q_curriculum_pacing"] = q_curriculum_pacing
-QUERIES_LATE["q_ngram_novelty"] = q_ngram_novelty
-QUERIES_LATE["q_hard_negatives"] = q_hard_negatives
-QUERIES_LATE["q_ece_calibration"] = q_ece_calibration
-QUERIES_LATE["q_ab_ttest"] = q_ab_ttest
-QUERIES_LATE["q_join_skew_probe"] = q_join_skew_probe
-QUERIES_LATE["q_rank_biased_overlap"] = q_rank_biased_overlap
-QUERIES_LATE["q_source_balance"] = q_source_balance
-QUERIES_LATE["q_mi_feature_label"] = q_mi_feature_label
-QUERIES_LATE["q_survivorship_golden"] = q_survivorship_golden
-QUERIES_LATE["q_power_analysis"] = q_power_analysis
 
 # --- Java-equivalent lowercase in every oracle (r14) ------------------------
 # Spark's lower() (JDK full Unicode casing: final-sigma rule, İ → i + U+0307,

@@ -70,34 +70,13 @@ TESTDATA_TABLES = [
 ]
 
 
-from functools import lru_cache
-
-
 def _nanos_timestamp_columns(path: str) -> tuple[str, ...]:
     """Column names stored as parquet TIMESTAMP(NANOS) in `path`.
 
     Spark 4 can't map nanos to TimestampType; with
     ``spark.sql.legacy.parquet.nanosAsLong=true`` they surface as LongType
     (ns since epoch) and we convert to microsecond timestamps on read. One
-    driver-side footer read per path — O(1) regardless of data size.
-    The cache keys on the file's (mtime, size) as well as its path, so a
-    rewritten file is re-inspected instead of served a stale footer schema
-    (review finding: a bare lru_cache silently mis-converted after
-    overwrite)."""
-    import os
-
-    try:
-        st = os.stat(path)
-        sig = (st.st_mtime_ns, st.st_size)
-    except OSError:  # globs/directories: stat the path string only
-        sig = (0, 0)
-    return _nanos_timestamp_columns_cached(path, sig)
-
-
-@lru_cache(maxsize=256)
-def _nanos_timestamp_columns_cached(
-    path: str, sig: tuple[int, int]
-) -> tuple[str, ...]:
+    driver-side footer read per path — O(1) regardless of data size."""
     import glob
     import os
 
@@ -117,6 +96,29 @@ def _nanos_timestamp_columns_cached(
         if str(t).startswith("timestamp[ns"):
             out.append(field.name)
     return tuple(out)
+
+
+def _file_signature(path: str) -> tuple | None:
+    """What a rewrite of ``path`` changes: a file's (mtime_ns, size); for a
+    directory, the (relative name, mtime_ns, size) of every file under it
+    (an in-place part-file rewrite leaves the directory's own stat alone).
+    None when the path can't be listed (a glob, a remote URI)."""
+    import os
+
+    try:
+        if not os.path.isdir(path):
+            st = os.stat(path)
+            return (st.st_mtime_ns, st.st_size)
+        sig = []
+        for dirpath, dirnames, filenames in os.walk(path):
+            dirnames.sort()
+            for name in sorted(filenames):
+                full = os.path.join(dirpath, name)
+                st = os.stat(full)
+                sig.append((os.path.relpath(full, path), st.st_mtime_ns, st.st_size))
+        return tuple(sig)
+    except OSError:
+        return None
 
 
 def load_table_time_range(
@@ -145,8 +147,7 @@ def load_table_time_range(
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = f"{sf_dir}/{name}.parquet"
-    df = _read_parquet_cached_schema(spark, path)
-    ns_cols = _nanos_timestamp_columns(path)
+    df, ns_cols = _read_parquet(spark, path)
 
     def to_ns(ts_str: str) -> int:
         d = dt.datetime.fromisoformat(ts_str).replace(tzinfo=dt.timezone.utc)
@@ -216,33 +217,32 @@ def local_rows_df(spark, rows, schema):
     return spark.createDataFrame(rows, schema)
 
 
-#: Spark read-schema per (path, mtime, size) — metadata only, never data.
-#: spark.read.parquet() runs a one-task schema-inference job at DataFrame
-#: CONSTRUCTION time; a 6-table join query paid six such jobs (~0.3-0.5 s
-#: of pure scheduling at bench scale, and six driver round-trips on a real
-#: cluster) before any computation started. Passing the cached StructType
-#: via .schema(...) skips inference; the cache key includes the file's
-#: (mtime_ns, size) so a rewritten file is re-inferred, mirroring
-#: _nanos_timestamp_columns_cached. The cached object is exactly what
-#: inference returned, so plans are byte-identical (guide §1.2: remove
-#: redundant passes — here, redundant metadata jobs).
-_read_schema_cache: dict = {}
+#: path → (file signature, Spark read schema, nanos column names) —
+#: metadata only, never data. spark.read.parquet() runs a one-task
+#: schema-inference job at DataFrame CONSTRUCTION time; a 6-table join
+#: query paid six such jobs (~0.3-0.5 s of pure scheduling at bench scale,
+#: and six driver round-trips on a real cluster) before any computation
+#: started. Passing the cached StructType via .schema(...) skips inference,
+#: and the footer read for nanos columns is skipped with it. An entry is
+#: used only while the path's signature (_file_signature) is unchanged, so
+#: a rewritten file or part file is re-inferred; a path without a signature
+#: is never cached. The cached schema is exactly what inference returned,
+#: so plans are byte-identical (guide §1.2: remove redundant passes — here,
+#: redundant metadata jobs).
+_table_meta: dict[str, tuple] = {}
 
 
-def _read_parquet_cached_schema(spark, path: str):
-    import os
-
-    try:
-        st = os.stat(path)
-        key = (path, st.st_mtime_ns, st.st_size)
-    except OSError:
-        key = (path, 0, 0)
-    schema = _read_schema_cache.get(key)
-    if schema is None:
-        df = spark.read.parquet(path)
-        _read_schema_cache[key] = df.schema
-        return df
-    return spark.read.schema(schema).parquet(path)
+def _read_parquet(spark, path: str):
+    """(DataFrame over ``path``, its nanos timestamp column names)."""
+    sig = _file_signature(path)
+    hit = _table_meta.get(path)
+    if sig is not None and hit is not None and hit[0] == sig:
+        return spark.read.schema(hit[1]).parquet(path), hit[2]
+    df = spark.read.parquet(path)
+    ns_cols = _nanos_timestamp_columns(path)
+    if sig is not None:
+        _table_meta[path] = (sig, df.schema, ns_cols)
+    return df, ns_cols
 
 
 def load_table(spark, sf_dir: str, name: str):
@@ -262,8 +262,8 @@ def load_table(spark, sf_dir: str, name: str):
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
     path = f"{sf_dir}/{name}.parquet"
-    df = _read_parquet_cached_schema(spark, path)
-    for col in _nanos_timestamp_columns(path):
+    df, ns_cols = _read_parquet(spark, path)
+    for col in ns_cols:
         # Only convert if the scan actually surfaced the column as a long
         # (TIMESTAMP(NANOS) + nanosAsLong). INT96 timestamps also read as
         # timestamp[ns] in the pyarrow footer but Spark maps them to

@@ -226,6 +226,51 @@ ROUND14 = [
 ]
 
 
+#: Printed total → the frozen basket it sums (steady medians). Each query
+#: is timed once per run; a query listed in several baskets (the TPC-H
+#: shapes) feeds each of their totals. headline_total_sec is also printed
+#: as ``value``.
+BASKETS = {
+    "headline_total_sec": HEADLINE,
+    "total_ext_basket": EXTENSION,
+    "total_r4_basket": ROUND4,
+    "total_r6_basket": ROUND6,
+    "total_r7_basket": ROUND7,
+    "total_tpch_basket": TPCH,
+    "total_r10_basket": ROUND10,
+    "total_r12_basket": ROUND12,
+    "total_r13_basket": ROUND13,
+    "total_r14_basket": ROUND14,
+}
+
+#: Timing order: the headline, the expression-path ANN twin, then every
+#: basket's queries not yet timed.
+TIMED = list(
+    dict.fromkeys(
+        HEADLINE + ["q_ann_cosine_topk"] + [n for b in BASKETS.values() for n in b]
+    )
+)
+
+
+def basket_totals(results: dict[str, float], cold: dict[str, float]) -> dict:
+    """Every printed basket total from the per-query steady medians
+    (``results``) and cold times (``cold``)."""
+    # r01 basket = same 17 slots but with the expression-path ANN entry,
+    # so the round-over-round comparison stays apples-to-apples
+    out = {
+        "total_r01_basket": round(
+            sum(results[n] for n in HEADLINE)
+            - results["q_ann_cosine_topk_np"]
+            + results["q_ann_cosine_topk"],
+            3,
+        )
+    }
+    for field, names in BASKETS.items():
+        out[field] = round(sum(results[n] for n in names), 3)
+    out["headline_total_cold_sec"] = round(sum(cold[n] for n in HEADLINE), 3)
+    return out
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else 0.0
@@ -321,18 +366,7 @@ def main() -> None:
     cold: dict[str, float] = {}
     samples: dict[str, list[float]] = {}
     exec_ms: dict[str, int] = {}
-    total = 0.0
-    ext_total = 0.0
-    r4_total = 0.0
-    r6_total = 0.0
-    r7_total = 0.0
-    timed = HEADLINE + ["q_ann_cosine_topk"] + EXTENSION + ROUND4 + ROUND6 + ROUND7
-    timed += [n for n in TPCH if n not in timed]
-    timed += [n for n in ROUND10 if n not in timed]
-    timed += [n for n in ROUND12 if n not in timed]
-    timed += [n for n in ROUND13 if n not in timed]
-    timed += [n for n in ROUND14 if n not in timed]
-    for name in timed:
+    for name in TIMED:
         t0 = time.time()
         qs[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
         cold[name] = round(time.time() - t0, 3)
@@ -346,22 +380,9 @@ def main() -> None:
         ms1 = total_task_ms()
         if ms0 is not None and ms1 is not None:
             exec_ms[name] = round((ms1 - ms0) / repeats)
-        dt = statistics.median(runs)
-        results[name] = dt
-        if name in HEADLINE:
-            total += dt
-        elif name in EXTENSION:
-            ext_total += dt
-        elif name in ROUND4:
-            r4_total += dt
-        elif name in ROUND6:
-            r6_total += dt
-        elif name in ROUND7:
-            r7_total += dt
+        results[name] = statistics.median(runs)
 
-    # r01 basket = same 17 slots but with the expression-path ANN entry,
-    # so the round-over-round comparison stays apples-to-apples
-    total_r01 = total - results["q_ann_cosine_topk_np"] + results["q_ann_cosine_topk"]
+    totals = basket_totals(results, cold)
     # r16 (VERDICT r15 #1): the PRINTED line is now COMPACT so the
     # driver's front-truncating capture can't destroy it again — r14's
     # line lost its opening brace to truncation and the whole
@@ -378,7 +399,7 @@ def main() -> None:
     # where wall clocks are stage-latency-bound.
     compact = {
         "metric": "headline_total_sec",
-        "value": round(total, 3),
+        "value": totals["headline_total_sec"],
         "unit": "sec",
         "sf": sf,
         # r12: the bare sf number is ambiguous across derivations
@@ -398,21 +419,12 @@ def main() -> None:
         # run's query times by its probe to normalize out host contention
         "calib_probe_sec": calib_start,
         "calib_probe_end_sec": calib_probe(),
-        "headline_total_cold_sec": round(sum(cold[n] for n in HEADLINE), 3),
+        "headline_total_cold_sec": totals["headline_total_cold_sec"],
         "queries": results,
         "queries_exec_ms": exec_ms,
         "repeats": repeats,
-        "total_r01_basket": round(total_r01, 3),
-        "total_ext_basket": round(ext_total, 3),
-        "total_r4_basket": round(r4_total, 3),
-        "total_r6_basket": round(r6_total, 3),
-        "total_r7_basket": round(r7_total, 3),
-        "total_tpch_basket": round(sum(results[n] for n in TPCH), 3),
-        "total_r10_basket": round(sum(results[n] for n in ROUND10), 3),
-        "total_r12_basket": round(sum(results[n] for n in ROUND12), 3),
-        "total_r13_basket": round(sum(results[n] for n in ROUND13), 3),
-        "total_r14_basket": round(sum(results[n] for n in ROUND14), 3),
-        "headline_total_sec": round(total, 3),
+        **{k: v for k, v in totals.items() if k.startswith("total_")},
+        "headline_total_sec": totals["headline_total_sec"],
     }
     # Durable copy the driver can't truncate (VERDICT r04 #8): latest run
     # overwritten in BENCH_LOCAL.json, full history appended as JSONL —

@@ -245,3 +245,33 @@ def test_partition_compaction_keeps_whole_root_reads_clean(spark, sf_dir, tmp_pa
     ) == [0, 1]
     per_key = got.groupBy("event_id").count().filter(F.col("count") > 1).count()
     assert per_key == 0
+
+
+def test_load_table_rereads_rewritten_part_file(spark, tmp_path):
+    """A directory table whose part file is rewritten in place with a new
+    schema loads with the new schema. The directory's own stat does not
+    change on such a rewrite, so load_table's metadata cache must key on
+    the part files."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    part = tmp_path / "t.parquet" / "part-00000.parquet"
+    part.parent.mkdir()
+    pq.write_table(pa.table({"a": [1, 2], "b": ["x", "y"]}), part)
+    before = load_table(spark, str(tmp_path), "t")
+    assert before.columns == ["a", "b"]
+    assert before.count() == 2
+
+    dir_stat = part.parent.stat()
+    ts = pa.array([dt.datetime(2024, 1, 2, 3, 4, 5)] * 3, pa.timestamp("ns"))
+    pq.write_table(pa.table({"a": [1, 2, 3], "c": [0.5, 1.5, 2.5], "ts": ts}), part)
+    assert part.parent.stat().st_mtime_ns == dir_stat.st_mtime_ns
+
+    after = load_table(spark, str(tmp_path), "t")
+    assert after.columns == ["a", "c", "ts"]
+    assert after.schema["ts"].dataType.typeName() == "timestamp"
+    rows = after.orderBy("a").collect()
+    assert [r.c for r in rows] == [0.5, 1.5, 2.5]
+    assert rows[0].ts == dt.datetime(2024, 1, 2, 3, 4, 5)

@@ -1,0 +1,120 @@
+"""Checks on the code base and the measurement tools rather than on query
+answers: duplicate definitions, package-relative imports, bench.py's basket
+totals and tools/ab.py's renamed-package loader."""
+
+from __future__ import annotations
+
+import ast
+import collections
+import json
+import os
+import pathlib
+import shutil
+import subprocess
+import sys
+
+ROOT = pathlib.Path(__file__).resolve().parent.parent
+PACKAGE = ROOT / "api_log_iceberg_test_spark"
+
+
+def _modules():
+    for path in sorted(PACKAGE.rglob("*.py")):
+        yield path.relative_to(ROOT), ast.parse(path.read_text())
+
+
+def test_no_module_defines_a_top_level_name_twice():
+    """A second ``def``/``class``/assignment of the same module-level name
+    silently replaces the first, which is then dead code."""
+    dups = []
+    for rel, tree in _modules():
+        names = collections.Counter()
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                names[node.name] += 1
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                names.update(t.id for t in targets if isinstance(t, ast.Name))
+        dups += [f"{rel}: {n}" for n, c in names.items() if c > 1]
+    assert not dups, dups
+
+
+def _absolute_imports(node) -> list[str]:
+    if isinstance(node, ast.ImportFrom) and node.level == 0:
+        return [node.module or ""]
+    if isinstance(node, ast.Import):
+        return [alias.name for alias in node.names]
+    return []
+
+
+def test_package_imports_itself_only_relatively():
+    """tools/ab.py loads another revision's package under a new name; an
+    absolute self-import there would reach the working tree instead."""
+    absolute = [
+        f"{rel}:{node.lineno}"
+        for rel, tree in _modules()
+        for node in ast.walk(tree)
+        if any(m.split(".")[0] == PACKAGE.name for m in _absolute_imports(node))
+    ]
+    assert not absolute, absolute
+
+
+def test_bench_basket_totals_reproduce_committed_run():
+    """Every basket total in the committed BENCH_LOCAL.json is a pure
+    function of its per-query steady medians and cold times."""
+    import bench
+
+    with open(ROOT / "BENCH_LOCAL.json") as f:
+        run = json.load(f)
+    totals = bench.basket_totals(run["queries"], run["queries_cold"])
+    assert set(totals) == {k for k in run if k.startswith("total_")} | {
+        "headline_total_sec",
+        "headline_total_cold_sec",
+    }
+    assert {k: run[k] for k in totals} == totals
+    assert run["value"] == totals["headline_total_sec"]
+    assert list(run["queries"]) == bench.TIMED
+
+
+_AB_PROBE = """
+import sys
+sys.path.insert(0, {root!r})
+from tools import ab
+ab.add_path({copy_dir!r})
+from api_log_iceberg_test_spark.session import build_session
+spark = build_session(app_name="ab-smoke", master="local[2]", shuffle_partitions=4)
+old, new = ab.load_catalog("ab_copy"), ab.load_catalog(ab.PACKAGE)
+assert old["q_count"].__module__.startswith("ab_copy."), old["q_count"].__module__
+sf = {sf_dir!r}
+assert old["q_count"](spark, sf).collect() == new["q_count"](spark, sf).collect()
+def pairs(fn):
+    rows = fn(spark, sf).collect()
+    return len(rows), {{(r["query_id"], r["neighbor_id"]) for r in rows}}
+o, n = pairs(old["q_ann_cosine_topk_np"]), pairs(new["q_ann_cosine_topk_np"])
+assert o[0] > 0 and o == n, (o[0], n[0])
+# its pandas UDF is pickled by reference: the Python workers import ab_copy
+assert sorted(old["q_udf_sigmoid"](spark, sf).collect()) == sorted(
+    new["q_udf_sigmoid"](spark, sf).collect()
+)
+print("AB_OK")
+"""
+
+
+def test_ab_loader_runs_a_renamed_package_copy(tmp_path):
+    """tools/ab.py's loader on a renamed copy of the package: both arms
+    answer alike on q_count, the mapInPandas query q_ann_cosine_topk_np
+    (its closure ships by value) and q_udf_sigmoid, whose module-level
+    pandas UDF ships by reference, so it runs only if the Python workers
+    can import the copy."""
+    copy_dir = tmp_path / "pkgs"
+    shutil.copytree(
+        PACKAGE, copy_dir / "ab_copy", ignore=shutil.ignore_patterns("__pycache__")
+    )
+    script = _AB_PROBE.format(
+        root=str(ROOT), copy_dir=str(copy_dir), sf_dir="/root/testdata/sf0.001"
+    )
+    env = dict(os.environ, SPARK_DRIVER_MEMORY="1g")
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0 and "AB_OK" in out.stdout, out.stderr[-3000:]
