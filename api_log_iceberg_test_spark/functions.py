@@ -52,10 +52,3 @@ def ms_to_duration(col: Column | str) -> Column:
         F.when(c >= 1000.0, F.concat(F.round(c / 1000.0, 2).cast("string"), F.lit("s")))
         .otherwise(F.concat(F.round(c, 2).cast("string"), F.lit("ms")))
     )
-
-
-def is_error_status(col: Column | str) -> Column:
-    """HTTP status >= 400 (the reference's error-analysis predicate,
-    README.md:163-167)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return c >= F.lit(400)

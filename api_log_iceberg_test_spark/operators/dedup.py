@@ -11,9 +11,13 @@ Four tiers, increasing recall for near-duplicates, all designed for 100 TB:
    pairs found by deterministic prefix-shingle blocking. Hash-free and
    SQL-expressible, so it doubles as the differential oracle for tier 4.
 4. :func:`minhash_lsh_pairs` — MinHash signatures + banded LSH, the scale
-   path: signature computation is a narrow per-row projection built from
-   higher-order array functions (no explode, no shuffle); the only shuffle
-   is the band-bucket self-join whose buckets are bounded by band width.
+   path: signatures are per-permutation MIN aggregates over the exploded
+   shingle hashes (map-side combinable), and candidates come from one
+   set aggregate per band bucket.
+
+Every exact-Jaccard tier ends in the same verify stage
+(:func:`_verify_jaccard`), and near-dup pairs become clusters through one
+operator, :func:`connected_components`.
 
 SimHash (:func:`simhash_signatures`, :func:`simhash_pairs`) covers the
 bit-sampling family: 64-bit signatures packed into a long, candidates via
@@ -50,6 +54,7 @@ def _docs_fanned(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_t"))
     )
 
+
 def _pairs_from_buckets(
     keyed: DataFrame,
     key_cols: list[str],
@@ -58,9 +63,9 @@ def _pairs_from_buckets(
 ) -> DataFrame:
     """Distinct candidate id pairs (id_a < id_b) sharing a blocking key —
     via ONE per-key set aggregate + in-row i<j combinations instead of the
-    bucket SELF-JOIN (r16, guide §2.3 "aggregate before you shuffle"; the
-    same rewrite that took graph.cooccurrence_edges from 2.9 s to 1.7 s in
-    r15).
+    bucket SELF-JOIN (r16, guide §2.3 "aggregate before you shuffle").
+    Also the pair generator of ``graph.cooccurrence_edges``, where the same
+    rewrite took 2.9 s to 1.7 s in r15.
 
     The self-join shape shuffled the keyed explode, sorted/probed it
     against itself, emitted s² rows per bucket BEFORE the id_a < id_b
@@ -102,10 +107,9 @@ _MERSENNE31 = (1 << 31) - 1
 
 
 def minhash_ab(seed: int, num_perm: int) -> list[tuple[int, int]]:
-    """The (a_i, b_i) permutation-constant family shared by EVERY MinHash
-    site (signature HOF, LSH pipeline, parameter sweep) — one definition,
-    so a seed-mixing tweak cannot silently diverge the variants that tests
-    assert produce identical signatures."""
+    """The (a_i, b_i) permutation-constant family shared by every MinHash
+    site (:func:`_minhash_mins` and the replay tools) — one
+    definition, so a seed-mixing tweak cannot silently diverge them."""
     return [
         (
             (((seed + 2 * i + 1) * 0x9E3779B1) % _MERSENNE31) + 1,
@@ -133,6 +137,22 @@ def band_key_structs(bands: int, rows_per_band: int):
             for b in range(bands)
         ]
     )
+
+
+def _minhash_mins(per: DataFrame, seed: int, num_perm: int) -> DataFrame:
+    """``(id, sig)`` MinHash signatures from exploded ``(id, h64)``
+    shingle-hash rows: one codegen'd MIN aggregate per permutation of the
+    :func:`minhash_ab` family, reducing h64 mod p INSIDE each aggregate so
+    the input subtree stays exactly ``(id, h64)`` (see minhash_lsh_pairs
+    on exchange reuse). a·h < 2^62, so the arithmetic is ANSI-safe."""
+    p = F.lit(_MERSENNE31)
+    hp = F.pmod(F.col("h64"), p)
+    return per.groupBy("id").agg(
+        *[
+            F.min(F.pmod(F.lit(a) * hp + F.lit(b), p)).alias(f"_m{i}")
+            for i, (a, b) in enumerate(minhash_ab(seed, num_perm))
+        ]
+    ).select("id", F.array(*[F.col(f"_m{i}") for i in range(num_perm)]).alias("sig"))
 
 
 # ---------------------------------------------------------------------------
@@ -218,6 +238,34 @@ def jaccard(a: Column, b: Column) -> Column:
     return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
 
 
+def _verify_jaccard(cands: DataFrame, hashed: DataFrame, threshold: float) -> DataFrame:
+    """The verify stage of every exact-Jaccard tier: join the ``(id, hv)``
+    shingle-hash arrays back onto the ``(id_a, id_b)`` candidates and keep
+    the pairs with Jaccard ≥ ``threshold`` as ``(doc_a, doc_b, jaccard)``.
+
+    Candidates carry only ids through their blocking shuffles; the arrays
+    join back here. Verification runs on xxhash64'd arrays: long
+    intersects are far cheaper than string intersects and the value is
+    identical absent a 64-bit collision inside one pair (~1e-13/pair).
+    """
+    pairs = cands.join(
+        hashed.select(F.col("id").alias("id_a"), F.col("hv").alias("sh_a")), "id_a"
+    ).join(hashed.select(F.col("id").alias("id_b"), F.col("hv").alias("sh_b")), "id_b")
+    # size-ratio pre-filter: J = |∩|/|∪| ≤ min(|A|,|B|)/max(|A|,|B|), so any
+    # pair failing the ratio can't reach the threshold — skips the O(|A|+|B|)
+    # array_intersect for ~25% of blocked candidates with two cheap size()
+    # reads. Purely implied by the final jaccard filter ⇒ oracle unchanged.
+    sa, sb = F.size(F.col("sh_a")), F.size(F.col("sh_b"))
+    return (
+        pairs.filter(
+            F.least(sa, sb).cast("double") >= F.lit(threshold) * F.greatest(sa, sb)
+        )
+        .withColumn("jaccard", F.round(jaccard(F.col("sh_a"), F.col("sh_b")), 6))
+        .filter(F.col("jaccard") >= threshold)
+        .select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"), "jaccard")
+    )
+
+
 # ---------------------------------------------------------------------------
 # Tier 3: exact n-gram Jaccard with deterministic blocking
 # ---------------------------------------------------------------------------
@@ -265,11 +313,6 @@ def ngram_jaccard_pairs(
     # checkpointed (3 short strings + ~50 longs) — guide §2.3 "shuffle
     # keys and metadata instead of payloads". Measured 1.26 → 1.14 s
     # interleaved at sf0.1 with bit-identical pairs.
-    # Candidates carry only ids through the join + distinct; the hash
-    # arrays join back afterwards. Jaccard verification runs on
-    # xxhash64'd arrays: long intersects are far cheaper than string
-    # intersects and the value is identical absent a 64-bit collision
-    # inside one pair (~1e-13/pair).
     # r15: the shingle regex runs AFTER fan_out so a narrow scan doesn't
     # serialize it on one core (see _docs_fanned; no-op on wide scans).
     # Checkpoint lifetime trade (ADVICE r15): localCheckpoint(eager=False)
@@ -300,28 +343,7 @@ def ngram_jaccard_pairs(
     # r16: per-bucket set aggregate + in-row combinations replaces the
     # bucket self-join (see _pairs_from_buckets — identical pair set).
     cands = _pairs_from_buckets(keyed, ["bkey"])
-    hashed = frame.select("id", "hv")
-    pairs = (
-        cands.join(hashed.select(F.col("id").alias("id_a"), F.col("hv").alias("sh_a")), "id_a")
-        .join(hashed.select(F.col("id").alias("id_b"), F.col("hv").alias("sh_b")), "id_b")
-    )
-    # size-ratio pre-filter: J = |∩|/|∪| ≤ min(|A|,|B|)/max(|A|,|B|), so any
-    # pair failing the ratio can't reach the threshold — skips the O(|A|+|B|)
-    # array_intersect for ~25% of candidates with two cheap size() reads.
-    # Purely implied by the final jaccard filter ⇒ oracle unchanged.
-    sa, sb = F.size(F.col("sh_a")), F.size(F.col("sh_b"))
-    return (
-        pairs.filter(
-            F.least(sa, sb).cast("double") >= F.lit(threshold) * F.greatest(sa, sb)
-        )
-        .withColumn("jaccard", F.round(jaccard(F.col("sh_a"), F.col("sh_b")), 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select(
-            F.col("id_a").alias("doc_a"),
-            F.col("id_b").alias("doc_b"),
-            "jaccard",
-        )
-    )
+    return _verify_jaccard(cands, frame.select("id", "hv"), threshold)
 
 
 def exhaustive_jaccard_pairs(
@@ -483,27 +505,14 @@ def _exhaustive_pairs_from_hashed(hashed: DataFrame, threshold: float) -> DataFr
         )
         .select("id_a", "id_b")
     )
-    pairs = (
-        cands.join(hashed.select(F.col("id").alias("id_a"), F.col("hv").alias("sh_a")), "id_a")
-        .join(hashed.select(F.col("id").alias("id_b"), F.col("hv").alias("sh_b")), "id_b")
-    )
-    return (
-        pairs
-        .withColumn("jaccard", F.round(jaccard(F.col("sh_a"), F.col("sh_b")), 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select(
-            F.col("id_a").alias("doc_a"),
-            F.col("id_b").alias("doc_b"),
-            "jaccard",
-        )
-    )
+    return _verify_jaccard(cands, hashed, threshold)
 
 
-def _components_driver(e: DataFrame, id_name: str = "doc_id") -> DataFrame:
+def _components_driver(e: DataFrame) -> DataFrame:
     """Union-find over a COLLECTED edge list: (doc_id, component) with
-    component = min reachable id — bit-identical to the iterative
-    min-label fixpoint, computed in microseconds instead of ~10 Spark
-    jobs.
+    component = min reachable id — the labels the star rounds of
+    :func:`connected_components` reach, computed in microseconds instead of
+    ~10 Spark jobs.
 
     Only ever called under an explicit row-count gate (the caller counts
     the materialized edge checkpoint first), so the collect is bounded by
@@ -545,7 +554,7 @@ def _components_driver(e: DataFrame, id_name: str = "doc_id") -> DataFrame:
     node_t = e.schema[0].dataType
     schema = T.StructType(
         [
-            T.StructField(id_name, node_t, False),
+            T.StructField("doc_id", node_t, False),
             T.StructField("component", node_t, False),
         ]
     )
@@ -558,72 +567,104 @@ def _components_driver(e: DataFrame, id_name: str = "doc_id") -> DataFrame:
     return local_rows_df(e.sparkSession, data, schema)
 
 
+#: Edge rows (symmetric edges plus one self-loop per node) up to which
+#: :func:`connected_components` collects the edge list for a driver
+#: union-find. Near-dup pair lists are answer-sized, so every registered
+#: query stays under it; the star rounds take over past it.
+_DRIVER_EDGE_LIMIT = 500_000
+
+#: Star rounds :func:`connected_components` runs before it fails loudly.
+#: The rounds converge in O(log² n) on any topology, far inside the cap.
+_STAR_ROUND_CAP = 50
+
+
 def connected_components(
-    pairs: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    max_iter: int = 50,
-    check_every: int = 2,
-    driver_max_edges: int | None = 500_000,
+    pairs: DataFrame, a_col: str = "doc_a", b_col: str = "doc_b"
 ) -> DataFrame:
     """Duplicate clusters from a near-dup pair list: (doc_id, component)
     where component = the smallest doc id reachable through pairs.
 
-    Iterative min-label propagation — each round every node takes the min
-    of its own label and its neighbors' labels; converges in diameter(G)
-    rounds (near-dup clusters are shallow, so typically ≤5). Each round is
-    one join + one partial-aggregated groupBy on the (small) edge list, and
-    ``localCheckpoint`` truncates the growing lineage so round N doesn't
-    re-execute rounds 1..N-1. At web scale swap the one-hop propagation for
-    the alternating large-star/small-star doubling of Kiveris et al. — the
-    join/agg shapes are identical, only the update rule changes.
+    The pairs are symmetrized, with a self-loop per endpoint so every
+    node's neighbor set N(u) contains u, and checkpointed. Then:
 
-    The convergence test is a driver-side ``count`` action — a full extra
-    job per check — so it runs only every ``check_every`` rounds (label
-    propagation is monotone: extra rounds after convergence are no-op
-    fixed-point applications, so the result is unchanged; at most
-    ``check_every - 1`` redundant rounds run). ``check_every=1`` restores a
-    check per round.
+    * up to ``_DRIVER_EDGE_LIMIT`` edge rows, a union-find over the
+      collected edge list (:func:`_components_driver`) replaces the
+      rounds' join/agg/checkpoint jobs with one collect;
+    * past it, alternating large-star/small-star rounds (Kiveris et al.,
+      "Connected Components in MapReduce and Beyond"), which contract paths
+      roughly geometrically and so converge in O(log² n) rounds on ANY
+      topology — a long chain included, where one-hop min-label
+      propagation needs diameter(G) rounds.
+
+    Star round = large-star then small-star over the neighbor list:
+
+    * large-star: every neighbor v > u re-links to m(u) = min(N(u));
+    * small-star: every neighbor v ≤ u re-links to m(u).
+
+    Each operation is one groupBy(u) min-agg (map-side combinable) + one
+    join of the edge list to the |V|-row min table, then a distinct on
+    compact (node, node) pairs; lineage is cut per round with
+    localCheckpoint. The edge list is at a fixed point when a round leaves
+    it unchanged; every node's neighborhood min is then its component.
+    A round cap reached without a fixed point raises ``RuntimeError``
+    rather than return a partial labeling.
     """
-    e = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
+    a, b = F.col(a_col), F.col(b_col)
     e = (
-        e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+        pairs.select(
+            F.explode(
+                F.array(
+                    F.struct(a.alias("u"), b.alias("v")),
+                    F.struct(b.alias("u"), a.alias("v")),
+                    F.struct(a.alias("u"), a.alias("v")),
+                    F.struct(b.alias("u"), b.alias("v")),
+                )
+            ).alias("e")
+        )
+        .select("e.u", "e.v")
         .distinct()
-        .localCheckpoint()  # reused by every round
+        .localCheckpoint()
     )
-    # r15 small-graph gate: the checkpoint is materialized, so this count
-    # reads cached blocks. Near-dup pair lists are answer-sized; when the
-    # whole edge list fits the bound, a driver union-find replaces ~10
-    # join/agg/checkpoint jobs with one collect (identical labels — see
-    # _components_driver). Pass driver_max_edges=None to force the
-    # distributed loop (tests assert parity between the two paths).
-    if driver_max_edges is not None and e.count() <= driver_max_edges:
+    # the checkpoint is materialized, so this count reads cached blocks
+    if e.count() <= _DRIVER_EDGE_LIMIT:
         return _components_driver(e)
-    labels = (
-        e.select(F.col("src").alias("id")).distinct().withColumn("comp", F.col("id"))
+
+    def star(edges: DataFrame, large: bool) -> DataFrame:
+        mins = edges.groupBy("u").agg(F.min("v").alias("m"))
+        keep = F.col("v") > F.col("u") if large else F.col("v") <= F.col("u")
+        relinked = (
+            edges.filter(keep)
+            .join(mins, "u")
+            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+        )
+        # parent links (u, m) persist so the star stays connected;
+        # symmetrize so the next operation's neighbor lists see both ends
+        out = relinked.union(mins.select(F.col("u"), F.col("m").alias("v")))
+        return (
+            out.union(out.select(F.col("v").alias("u"), F.col("u").alias("v")))
+            .distinct()
+        )
+
+    for _ in range(_STAR_ROUND_CAP):
+        nxt = star(star(e, large=True), large=False).localCheckpoint()
+        # fixed point: the symmetric edge multiset is unchanged
+        fixed = (
+            nxt.exceptAll(e).limit(1).count() == 0
+            and e.exceptAll(nxt).limit(1).count() == 0
+        )
+        e = nxt
+        if fixed:
+            break
+    else:
+        raise RuntimeError(
+            f"connected_components: no fixed point after {_STAR_ROUND_CAP} "
+            "star rounds"
+        )
+    return (
+        e.groupBy("u")
+        .agg(F.min("v").alias("component"))
+        .select(F.col("u").alias("doc_id"), "component")
     )
-    for i in range(max_iter):
-        nbr = e.join(labels, e["dst"] == labels["id"]).select(
-            F.col("src").alias("id"), F.col("comp")
-        )
-        new = (
-            labels.union(nbr)
-            .groupBy("id")
-            .agg(F.min("comp").alias("comp"))
-            .localCheckpoint()
-        )
-        if (i + 1) % check_every == 0 or i + 1 == max_iter:
-            changed = (
-                new.alias("n")
-                .join(labels.alias("o"), "id")
-                .filter(F.col("n.comp") != F.col("o.comp"))
-                .count()
-            )
-            if changed == 0:
-                labels = new
-                break
-        labels = new
-    return labels.select(F.col("id").alias("doc_id"), F.col("comp").alias("component"))
 
 
 def cap_buckets(
@@ -655,31 +696,6 @@ def cap_buckets(
 # ---------------------------------------------------------------------------
 # Tier 4: MinHash + banded LSH
 # ---------------------------------------------------------------------------
-
-
-def minhash_signature(hash_col: Column, num_perm: int = 32, seed: int = 7) -> Column:
-    """MinHash signature as array<bigint> of length ``num_perm``.
-
-    ``hash_col`` must be a *materialized* array<bigint> column of shingle
-    hashes in [0, 2^31-1) — pass a real column, not an inline expression:
-    the signature references its input once per aggregate step, and an
-    inline shingle+hash subtree would otherwise be re-evaluated per
-    permutation (a 32× blowup caught by bench).
-
-    One aggregate pass over the hashes: the accumulator is the running
-    32-wide minimum, updated per hash with zip_with(least). Permutation
-    constants a_i, b_i are Python-computed literals (a·h < 2^62, ANSI-safe).
-    """
-    p = F.lit(_MERSENNE31)
-    ab = minhash_ab(seed, num_perm)
-    a_consts = F.array(*[F.lit(a) for a, _ in ab])
-    b_consts = F.array(*[F.lit(b) for _, b in ab])
-
-    def step(acc: Column, h: Column) -> Column:
-        permuted = F.zip_with(a_consts, b_consts, lambda a, b: F.pmod(a * h + b, p))
-        return F.zip_with(acc, permuted, lambda x, y: F.least(x, y))
-
-    return F.aggregate(hash_col, F.array_repeat(p.cast("long"), num_perm), step)
 
 
 def minhash_lsh_pairs(
@@ -715,16 +731,11 @@ def minhash_lsh_pairs(
             "silently computed then ignored)"
         )
     rows_per_band = num_perm // bands
-    # Signature via explode + num_perm codegen'd MIN aggregates (same
-    # permutation family as :func:`minhash_signature`, identical values).
-    # Compared to the narrow higher-order aggregate (CodegenFallback,
-    # interpreted per shingle), the explode path stays in whole-stage
-    # codegen, gets map-side partial aggregation (the shuffle carries one
-    # 32-long row per doc per partition), and its groupBy(id) exchange is
-    # REUSED by the banding branch and both verification joins.
-    p = F.lit(_MERSENNE31)
-    ab = minhash_ab(seed, num_perm)
-    # The exploded shingle-hash rows shuffle ONCE on id (ReuseExchange: both
+    # Signature via explode + num_perm codegen'd MIN aggregates
+    # (_minhash_mins): the explode path stays in whole-stage codegen,
+    # gets map-side partial aggregation (the shuffle carries one 32-long
+    # row per doc per partition), and its groupBy(id) exchange is REUSED by
+    # the banding branch and both verification joins. The exploded shingle-hash rows shuffle ONCE on id (ReuseExchange: both
     # aggregates below hang off this same repartition subtree, so the scan +
     # shingle regex + explode compute once). Splitting the signature MIN-agg
     # from the collect_list verification branch keeps the 32-MIN aggregate in
@@ -763,23 +774,9 @@ def minhash_lsh_pairs(
         .select("id", F.xxhash64("s").alias("h64"))
         .repartition(F.col("id"))
     )
-    hp = F.pmod(F.col("h64"), p)
-    docs = (
-        per.groupBy("id")
-        .agg(
-            *[
-                F.min(F.pmod(F.lit(a) * hp + F.lit(b), p)).alias(f"_m{i}")
-                for i, (a, b) in enumerate(ab)
-            ]
-        )
-        .select(
-            "id",
-            F.array(*[F.col(f"_m{i}") for i in range(num_perm)]).alias("sig"),
-        )
-    )
+    docs = _minhash_mins(per, seed, num_perm)
     # verification arrays: only candidate ids ever join against this branch
-    # verification arrays: only candidate ids ever join against this branch
-    hv_docs = per.groupBy("id").agg(F.collect_list("h64").alias("hv64"))
+    hv_docs = per.groupBy("id").agg(F.collect_list("h64").alias("hv"))
 
     banded = docs.select(
         "id",
@@ -792,23 +789,7 @@ def minhash_lsh_pairs(
     # — identical pair set, one shuffle of the band keys instead of two
     # join-side exchanges + the s²-row pre-filter blow-up).
     cands = _pairs_from_buckets(banded, ["band", "bhash"])
-    # hashed-shingle verification (see ngram_jaccard_pairs)
-    shs = hv_docs.select("id", F.col("hv64").alias("hv"))
-    pairs = (
-        cands.join(shs.select(F.col("id").alias("id_a"), F.col("hv").alias("sh_a")), "id_a")
-        .join(shs.select(F.col("id").alias("id_b"), F.col("hv").alias("sh_b")), "id_b")
-    )
-    # same size-ratio pre-filter as ngram_jaccard_pairs (implied by the
-    # jaccard threshold, skips the expensive intersect for size-mismatches)
-    sa, sb = F.size(F.col("sh_a")), F.size(F.col("sh_b"))
-    return (
-        pairs.filter(
-            F.least(sa, sb).cast("double") >= F.lit(threshold) * F.greatest(sa, sb)
-        )
-        .withColumn("jaccard", F.round(jaccard(F.col("sh_a"), F.col("sh_b")), 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"), "jaccard")
-    )
+    return _verify_jaccard(cands, hv_docs, threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -1040,134 +1021,6 @@ def leakage_safe_split(
     )
 
 
-def shared_span_stats(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 8,
-) -> DataFrame:
-    """Cross-document boilerplate detection: per document, the fraction of
-    its distinct word ``n``-grams that also occur in at least one OTHER
-    document (the span-level dup signal behind substring-dedup pipelines —
-    Lee et al. 2022 run it at suffix-array granularity; word-8-gram
-    granularity is the cheap distributed approximation).
-
-    Returns ``(id_col, n_spans, n_shared_spans, shared_frac)`` per doc —
-    feed ``shared_frac`` into a quality gate to drop template-heavy docs
-    that whole-document Jaccard misses (they repeat a header, not the body).
-
-    Scale: shingles leave the scan as xxhash64 longs — no text shuffles.
-    Two aggregations, both map-side combinable: distinct-doc count per
-    shingle hash, then matched-span count per doc. The shared-shingle set
-    joins back against the exploded corpus on the hash; duplication is rare
-    so AQE turns that into a broadcast at runtime. A corpus-wide template
-    shingle inflates its *count row* only (one long), never a join fanout —
-    each (doc, shingle) row matches at most one shared row, so there is no
-    s² blowup and no skew cap is needed.
-    """
-    base = (
-        _docs_fanned(df, id_col, text_col)  # parallel shingle pass (r15)
-        .select("id", word_shingles("_t", n).alias("sh"))
-        .repartition(F.col("id"))
-    )
-    exploded = base.select("id", F.explode("sh").alias("_s")).select(
-        "id", F.xxhash64("_s").alias("_h")
-    )
-    shared = (
-        exploded.groupBy("_h")
-        .agg(F.count(F.lit(1)).alias("_nd"))
-        .filter(F.col("_nd") >= 2)
-        .select("_h")
-    )
-    per_doc = exploded.join(shared, "_h").groupBy("id").agg(
-        F.count(F.lit(1)).alias("n_shared_spans")
-    )
-    n_spans = F.size(F.col("sh"))
-    return (
-        base.join(per_doc, "id", "left")
-        .select(
-            F.col("id").alias(id_col),
-            n_spans.alias("n_spans"),
-            F.coalesce(F.col("n_shared_spans"), F.lit(0)).alias("n_shared_spans"),
-            F.round(
-                F.coalesce(F.col("n_shared_spans"), F.lit(0)).cast("double")
-                / n_spans.cast("double"),
-                6,
-            ).alias("shared_frac"),
-        )
-    )
-
-
-def fuzzy_levenshtein_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    lang_col: str = "lang",
-    max_dist: int = 20,
-    bucket_width: int = 64,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """Edit-distance near-match pairs: docs in the same language whose
-    normalized texts are within ``max_dist`` Levenshtein edits (the
-    character-level dedup tier — catches OCR noise and small in-place edits
-    that shingle-based tiers score poorly because every touched n-gram
-    breaks).
-
-    Blocking is (lang, first token, length bucket): an edit budget of
-    ``max_dist`` chars can't change the length by more than ``max_dist``,
-    so with ``bucket_width > max_dist`` the index side emits its bucket ±1
-    and the band join is LOSSLESS over the length dimension. The
-    first-token key is the deliberate recall tradeoff that makes the join
-    key selective at corpus scale (an edit inside token 0 escapes this
-    tier; the shingle tiers still see it) — without it, (lang, length-band)
-    buckets approach corpus size at 100 TB and the s² verify explodes.
-    ``max_bucket_size`` additionally caps template-prefix hot keys.
-
-    Verification: ``levenshtein(a, b, threshold)`` — Spark's thresholded
-    form runs the banded O(len·threshold) DP and bails early, not the full
-    O(len²) matrix. Candidate texts shuffle once on the block key (edit
-    distance needs the characters — there is no hash proxy), which is why
-    the blocking must be selective *before* the shuffle.
-    """
-    norm = normalize_text(text_col)
-    base = df.select(
-        F.col(id_col).alias("id"),
-        F.col(lang_col).alias("_lang"),
-        norm.alias("_t"),
-        F.substring_index(norm, " ", 1).alias("_tok0"),
-        F.floor(F.length(norm) / F.lit(bucket_width)).alias("_bkt"),
-    )
-    probe = base.select("id", "_lang", "_t", "_tok0", F.col("_bkt").alias("_jb"))
-    index = base.select(
-        "id",
-        "_lang",
-        "_t",
-        "_tok0",
-        F.explode(
-            F.array(F.col("_bkt") - 1, F.col("_bkt"), F.col("_bkt") + 1)
-        ).alias("_jb"),
-    )
-    index = cap_buckets(index, ["_lang", "_tok0", "_jb"], max_bucket_size)
-    j = (
-        probe.alias("a")
-        .join(index.alias("b"), ["_lang", "_tok0", "_jb"])
-        .filter(F.col("a.id") < F.col("b.id"))
-        .filter(
-            F.abs(F.length(F.col("a._t")) - F.length(F.col("b._t"))) <= max_dist
-        )
-        .withColumn(
-            "edit_distance",
-            F.levenshtein(F.col("a._t"), F.col("b._t"), max_dist),
-        )
-        .filter(F.col("edit_distance") >= 0)
-    )
-    return j.select(
-        F.col("a.id").alias("doc_a"),
-        F.col("b.id").alias("doc_b"),
-        F.col("edit_distance").cast("long").alias("edit_distance"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # Tier 6: duplicated-span statistics (C4/Dolma-style span-level dedup)
 # ---------------------------------------------------------------------------
@@ -1317,85 +1170,6 @@ def fuzzy_name_pairs(
     )
 
 
-def connected_components_star(
-    pairs: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    max_iter: int = 50,
-    driver_max_edges: int | None = 500_000,
-) -> DataFrame:
-    """Connected components via alternating large-star/small-star (Kiveris
-    et al., "Connected Components in MapReduce and Beyond") — the web-scale
-    path :func:`connected_components` defers to.
-
-    Min-label propagation converges in O(diameter) rounds: fine for the
-    shallow clusters near-dup graphs produce, quadratic-wall-clock on a
-    long-chain pathology (a crawl ring of 10^6 pages = 10^6 rounds). The
-    star operations contract paths roughly geometrically, converging in
-    O(log² n) rounds on ANY topology, with each round the same edge-list
-    join/agg shapes. Output is identical: (doc_id, component) with
-    component = min reachable id.
-
-    Round = large-star then small-star over the undirected neighbor list
-    (self-loops included so isolated endpoints keep a row):
-
-    * large-star: every neighbor v > u re-links to m(u) = min(N(u) ∪ u);
-    * small-star: every neighbor v ≤ u re-links to m(u).
-
-    Both emit (v, m) edges — each round is per-operation one groupBy(u)
-    min-agg (map-side combinable) + one join of the edge list to the
-    |V|-row min table, then a distinct on compact (node, node) pairs.
-    Lineage is cut per round with localCheckpoint. Convergence: the edge
-    list is a fixed point when every node's min equals its own partner set
-    — checked as "no edge changed", a count over the round's diff.
-    """
-    e = pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-    # symmetrize + self-loops: N(u) always contains u so min() is total
-    e = (
-        e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .union(e.select(F.col("u"), F.col("u").alias("v")))
-        .union(e.select(F.col("v").alias("u"), F.col("v")))
-        .distinct()
-        .localCheckpoint()
-    )
-    # r15 small-graph gate — same contract as connected_components: labels
-    # are identical by construction, the star rounds remain the path taken
-    # the moment the edge list outgrows the bound (and under
-    # driver_max_edges=None, which the parity tests pin).
-    if driver_max_edges is not None and e.count() <= driver_max_edges:
-        return _components_driver(e)
-
-    def star(edges: DataFrame, large: bool) -> DataFrame:
-        mins = edges.groupBy("u").agg(F.min("v").alias("m"))
-        keep = F.col("v") > F.col("u") if large else F.col("v") <= F.col("u")
-        relinked = (
-            edges.filter(keep)
-            .join(mins, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        )
-        # parent links (u, m) persist so the star stays connected;
-        # symmetrize so the next operation's neighbor lists see both ends
-        out = relinked.union(mins.select(F.col("u"), F.col("m").alias("v")))
-        return (
-            out.union(out.select(F.col("v").alias("u"), F.col("u").alias("v")))
-            .distinct()
-        )
-
-    for _ in range(max_iter):
-        nxt = star(star(e, large=True), large=False).localCheckpoint()
-        # fixed point: the symmetric edge multiset is unchanged
-        if nxt.exceptAll(e).limit(1).count() == 0 and e.exceptAll(nxt).limit(1).count() == 0:
-            e = nxt
-            break
-        e = nxt
-    # at the fixed point every node's neighborhood min IS its component
-    return (
-        e.groupBy("u")
-        .agg(F.min("v").alias("component"))
-        .select(F.col("u").alias("doc_id"), "component")
-    )
-
-
 def containment_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -1529,8 +1303,6 @@ def lsh_param_sweep(
                 )
                 < F.lit(int(sample_fraction * 1_000_003))
             )
-    p = F.lit(_MERSENNE31)
-    ab = minhash_ab(seed, num_perm)
     # r15 restructure (guide §1.2/§2.4): ONE materialized shingle+hash
     # pass feeds every tier. The signature branch and the truth tier live
     # in separately COMPILED plans (the localCheckpoint boundaries below),
@@ -1560,19 +1332,8 @@ def lsh_param_sweep(
 
     def build_sig() -> DataFrame:
         per = hashed.select("id", F.explode("hv").alias("h64"))
-        hp = F.pmod(F.col("h64"), p)
         return (
-            per.groupBy("id")
-            .agg(
-                *[
-                    F.min(F.pmod(F.lit(a) * hp + F.lit(b), p)).alias(f"_m{i}")
-                    for i, (a, b) in enumerate(ab)
-                ]
-            )
-            .select(
-                "id",
-                F.array(*[F.col(f"_m{i}") for i in range(num_perm)]).alias("sig"),
-            )
+            _minhash_mins(per, seed, num_perm)
             # every config's band explode re-slices this one frame — the
             # lazy checkpoint materializes the signature pass ONCE (|docs|
             # rows of 32 longs, far smaller than the shingled corpus)

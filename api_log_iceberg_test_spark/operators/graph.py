@@ -1,31 +1,38 @@
 """Iterative graph operators: PageRank, triangle counting, label propagation.
 
 Completes the graph-primitive family next to connected components
-(``dedup.connected_components``): a data-curation pipeline uses these for
-link analysis over duplicate graphs, co-occurrence graphs, and reference
-graphs (PageRank-style quality priors are a standard web-corpus curation
-signal — see the Common Crawl / CCNet lineage).
+(``dedup.connected_components``: a driver union-find under an edge-count
+gate, large-star/small-star rounds above it): a data-curation pipeline
+uses these for link analysis over duplicate graphs, co-occurrence graphs,
+and reference graphs (PageRank-style quality priors are a standard
+web-corpus curation signal — see the Common Crawl / CCNet lineage).
 
-All operators are pure DataFrame compositions — no Python UDFs, no RDDs:
+All operators are DataFrame compositions — no Python UDFs, no RDDs. Each
+one picks its execution path from the size of its input, never from a
+caller's flag; the gates and checkpoint cadences are module constants:
 
-* :func:`pagerank` — fixed-iteration power method. Each iteration joins
+* :func:`pagerank` — fixed-iteration power method. Up to
+  ``_PAGERANK_DRIVER_NODE_LIMIT`` nodes the graph is metadata-sized and
+  the driver iterates a collected edge list; above it each iteration joins
   the rank vector (one row per node) to the edge list, cached and
   partitioned on ``src``, and re-aggregates the contributions on ``dst``
-  (one map-side-combined shuffle); lineage is cut with ``localCheckpoint``
-  every few iterations so the plan does not grow exponentially with k.
+  (one map-side-combined shuffle), with lineage cut by ``localCheckpoint``
+  every ``_PAGERANK_CHECKPOINT_ROUNDS`` iterations.
 * :func:`label_propagation` — synchronous weighted LPA (Raghavan, Albert &
   Kumara 2007) with a deterministic smallest-label tie-break in place of
   the paper's random one. Each round looks source labels up in the
   broadcast label vector and aggregates inside the ``dst`` partitions of the
   cached edge list — community detection at near-linear cost per round,
   the standard choice at web scale where modularity methods don't shard.
+  Labels are checkpointed every ``_LPA_CHECKPOINT_ROUNDS`` rounds.
 * :func:`triangle_counts` — degree-ordered edge orientation (each
   undirected edge directed from its lower-(degree, id) endpoint), then a
-  wedge self-join closed against the edge set. Orientation bounds each
-  node's out-degree by O(sqrt(m)), which bounds the wedge join's fan-out —
-  the standard trick that makes distributed triangle counting survive
-  power-law degree skew (a celebrity node with 10M neighbors would
-  otherwise emit 10M² wedges).
+  neighbor-array intersection per oriented edge. Orientation bounds each
+  node's out-degree by O(sqrt(m)), the standard trick that makes
+  distributed triangle counting survive power-law degree skew (a
+  celebrity node with 10M neighbors would otherwise emit 10M² wedges).
+  Its joins broadcast up to ``_TRIANGLE_BROADCAST_ROW_LIMIT`` edges and
+  shuffle past it.
 
 Oracle strategy: PageRank with FIXED k unrolls to a k-step CTE chain in
 ANSI SQL (no recursive CTE needed — see ``registry._pagerank_oracle``);
@@ -37,6 +44,19 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .dedup import _pairs_from_buckets
+
+#: Node count up to which :func:`pagerank` iterates on the driver.
+_PAGERANK_DRIVER_NODE_LIMIT = 256
+#: :func:`pagerank` checkpoints its rank vector every this many iterations.
+_PAGERANK_CHECKPOINT_ROUNDS = 4
+#: :func:`label_propagation` checkpoints its labels every this many rounds.
+_LPA_CHECKPOINT_ROUNDS = 2
+#: Edge count up to which :func:`triangle_counts` broadcasts its degree
+#: table and adjacency (4M elements ≈ 64 MB serialized, inside a 1-2 GB
+#: broadcast budget with room for the 2x both-sides copy).
+_TRIANGLE_BROADCAST_ROW_LIMIT = 4_000_000
 
 
 def transition_edges(
@@ -76,11 +96,12 @@ def _pagerank_driver(
     distributed loop pays k joins + aggregates + eager checkpoints —
     ~15 Spark jobs to multiply a ≤256-node matrix ten times. Guide §5:
     the driver should do no DATA work, but this is METADATA-sized (the
-    gate bounds the collect at driver_max_nodes², 64 KB-class), like the
-    repo's sketch blobs and boundary samples. Identical recurrence, same
-    double arithmetic order per node (contributions accumulate in sorted
-    (src, dst) order; every registered consumer rounds to 6dp, and the
-    differential oracle pins equality at each SF).
+    gate bounds the collect at ``_PAGERANK_DRIVER_NODE_LIMIT``², 64
+    KB-class), like the repo's sketch blobs and boundary samples.
+    Identical recurrence, same double arithmetic order per node
+    (contributions accumulate in sorted (src, dst) order; every registered
+    consumer rounds to 6dp, and the differential oracle pins equality at
+    each SF).
     """
     from pyspark.sql import types as T
 
@@ -114,13 +135,7 @@ def _pagerank_driver(
     return local_rows_df(edges.sparkSession, list(rank.items()), schema)
 
 
-def pagerank(
-    edges: DataFrame,
-    k: int = 10,
-    damping: float = 0.85,
-    checkpoint_every: int = 4,
-    driver_max_nodes: int | None = 256,
-) -> DataFrame:
+def pagerank(edges: DataFrame, k: int = 10, damping: float = 0.85) -> DataFrame:
     """k-iteration power-method PageRank over a weighted edge list.
 
     ``edges`` must have columns (src, dst, w). Returns (node, rank).
@@ -132,13 +147,15 @@ def pagerank(
     plan and the SQL oracle implement the identical recurrence, and the
     transition graphs this repo builds have no dangling nodes.
 
-    Scale: nodes/out-weights are computed once. Each iteration joins the
-    rank vector (|V| rows) to the edge list on ``src`` and re-aggregates on
-    ``dst`` — one shuffle of |V| rows plus one of |E| partial sums; the
-    edge list itself is cached and its ``src`` partitioning reused across
-    all k iterations. ``localCheckpoint`` every ``checkpoint_every``
-    rounds truncates lineage so the optimizer never sees a k-deep plan
-    (the classic iterative-algorithm failure mode on Spark).
+    Scale: graphs of at most ``_PAGERANK_DRIVER_NODE_LIMIT`` nodes run on
+    the driver (:func:`_pagerank_driver`). Above it, nodes/out-weights are
+    computed once. Each iteration joins the rank vector (|V| rows) to the
+    edge list on ``src`` and re-aggregates on ``dst`` — one shuffle of |V|
+    rows plus one of |E| partial sums; the edge list itself is cached and
+    its ``src`` partitioning reused across all k iterations.
+    ``localCheckpoint`` every ``_PAGERANK_CHECKPOINT_ROUNDS`` rounds
+    truncates lineage so the optimizer never sees a k-deep plan (the
+    classic iterative-algorithm failure mode on Spark).
     """
     edges = edges.select("src", "dst", "w")
     # cached: referenced in every iteration's left join — without the cache
@@ -150,11 +167,10 @@ def pagerank(
         .cache()
     )
     n_nodes = nodes.count()  # driver-side scalar: |V| (bounded — node table)
-    # r15 small-graph gate: |V| ≤ driver_max_nodes bounds |E| at |V|² —
-    # metadata-sized. One collect replaces the k-round join/agg/checkpoint
-    # loop (see _pagerank_driver). None forces the distributed loop
-    # (parity pinned in tests).
-    if driver_max_nodes is not None and n_nodes <= driver_max_nodes:
+    # r15 small-graph gate: |V| bounds |E| at |V|² — metadata-sized. One
+    # collect replaces the k-round join/agg/checkpoint loop (see
+    # _pagerank_driver; parity with the loop pinned in tests).
+    if n_nodes <= _PAGERANK_DRIVER_NODE_LIMIT:
         nodes.unpersist()
         return _pagerank_driver(edges, n_nodes, k, damping)
     out_w = edges.groupBy("src").agg(F.sum("w").alias("out_total"))
@@ -190,7 +206,7 @@ def pagerank(
                 + F.lit(damping) * F.coalesce(F.col("in_sum"), F.lit(0.0))
             ).alias("rank"),
         )
-        if (i + 1) % checkpoint_every == 0 or i == k - 1:
+        if (i + 1) % _PAGERANK_CHECKPOINT_ROUNDS == 0 or i == k - 1:
             new_ranks = new_ranks.localCheckpoint(eager=True)
         ranks = new_ranks
     nodes.unpersist()
@@ -206,43 +222,24 @@ def cooccurrence_edges(
     """Distinct item co-occurrence edges (a < b) from a basket table.
 
     Market-basket graph: two parts are linked iff they appear in the same
-    order. The self-join is on the basket key, so fan-out is bounded by
-    basket size (≤7 lineitems per order in TPC-H), not table size; the
-    DISTINCT collapses repeat co-purchases to one undirected edge.
+    order. Pairs are generated per basket, so fan-out is bounded by basket
+    size (≤7 lineitems per order in TPC-H), not table size; repeat
+    co-purchases collapse to one undirected edge.
     """
     items = lineitem.select(
         F.col(basket_col).alias("basket"), F.col(item_col).alias("item")
     )
     # r15 (guide §1.2): pairs come from ONE per-basket set aggregate +
-    # in-row combination expansion instead of a basket self-join — the
-    # join sorted/shuffled both sides and emitted n² rows per basket
-    # before the a<b filter; this shuffles each item once (map-side
-    # partial collect_set), then slices the sorted in-basket array for
-    # the i<j combinations. Same edge set (verified row-for-row at sf0.1:
-    # 1,196,000 edges both ways); measured 2.9 s → 1.7 s interleaved.
-    # Per-basket state is bounded by basket size (≤7 items in the TPC-H
-    # shape), so the collect_set group is O(1) — the same bound that
-    # already capped the join fan-out.
-    sets = items.groupBy("basket").agg(
-        F.sort_array(F.collect_set("item")).alias("arr")
-    )
-    return (
-        sets.select("arr", F.posexplode("arr").alias("i", "a"))
-        .select(
-            "a",
-            F.explode(
-                F.slice("arr", F.col("i") + F.lit(2), F.size("arr"))
-            ).alias("b"),
-        )
-        .distinct()
+    # in-row combination expansion (_pairs_from_buckets, the dedup
+    # candidate generator) instead of a basket self-join — measured
+    # 2.9 s → 1.7 s interleaved at sf0.1, same 1,196,000 edges. Per-basket
+    # state is bounded by basket size (≤7 items in the TPC-H shape).
+    return _pairs_from_buckets(items, ["basket"], id_col="item").select(
+        F.col("id_a").alias("a"), F.col("id_b").alias("b")
     )
 
 
-def triangle_counts(
-    edges: DataFrame,
-    broadcast_adjacency: bool | None = None,
-    broadcast_budget_rows: int = 4_000_000,
-) -> DataFrame:
+def triangle_counts(edges: DataFrame) -> DataFrame:
     """Per-node triangle participation counts over undirected edges (a<b).
 
     Plan (degree-ordered orientation, the distributed-standard algorithm):
@@ -258,25 +255,20 @@ def triangle_counts(
     Shuffles: degree agg, orientation join (broadcast — degree table is
     |V| rows, tiny vs |E|), wedge join on src, closure join on (a,b).
 
-    ``broadcast_adjacency`` gates every broadcast hint in this operator
-    (VERDICT r04 #4) — the |V|-row degree table on the orientation joins
-    and the adjacency on the closure joins, both of which scale with the
-    graph: the adjacency holds exactly |E| total elements and the degree
-    table |V| ≤ 2|E| rows. ``None`` (auto) counts the checkpointed edge
-    list — an action the plan pays anyway to materialize the checkpoint —
-    and broadcasts only when |E| ≤ ``broadcast_budget_rows`` (default 4M
-    elements ≈ 64 MB serialized, inside a 1-2 GB driver/executor broadcast
-    budget with room for the 2x both-sides copy). Past the budget the SAME
-    plan runs without hints and the joins shuffle on their keys.
+    One size gate covers every broadcast hint in this operator (VERDICT
+    r04 #4) — the |V|-row degree table on the orientation joins and the
+    adjacency on the closure joins, both of which scale with the graph:
+    the adjacency holds exactly |E| total elements and the degree table
+    |V| ≤ 2|E| rows. The operator counts the checkpointed edge list and
+    broadcasts only when |E| ≤ ``_TRIANGLE_BROADCAST_ROW_LIMIT``. Past the
+    limit the SAME plan runs without hints and the joins shuffle on their
+    keys.
 
-    NOTE (ADVICE r05): auto mode (``broadcast_adjacency=None``) runs the
-    edge count EAGERLY at DataFrame-construction time — building or
-    explaining the plan triggers one edge-derivation job before any action
-    on the result. Execution pays that job anyway (it materializes the
-    lazy checkpoint both paths reuse), so the cost is only visible in
-    plan-only contexts; callers that need a fully lazy plan (explain
-    fixtures, smoke checks) should pass an explicit ``broadcast_adjacency``
-    flag.
+    NOTE (ADVICE r05): the edge count runs EAGERLY at DataFrame-
+    construction time — building or explaining the plan triggers one
+    edge-derivation job before any action on the result. Execution pays
+    that job anyway (it materializes the lazy checkpoint both paths
+    reuse), so the cost is only visible in plan-only contexts.
     """
     # The edge list feeds four plan branches (degrees, orientation, closure);
     # without lineage truncation Catalyst inlines the derivation subtree
@@ -289,9 +281,8 @@ def triangle_counts(
     # |E| elements, so one edge count (an action the lazy checkpoint pays
     # anyway) decides both. Past the budget every hint drops and the same
     # plan shuffles on its join keys.
-    if broadcast_adjacency is None:
-        broadcast_adjacency = edges.count() <= broadcast_budget_rows
-    hint = F.broadcast if broadcast_adjacency else (lambda df: df)
+    small = edges.count() <= _TRIANGLE_BROADCAST_ROW_LIMIT
+    hint = F.broadcast if small else (lambda df: df)
     deg = (
         edges.select(F.explode(F.array("a", "b")).alias("node"))
         .groupBy("node")
@@ -359,11 +350,7 @@ def triangle_counts(
     return corners.groupBy("node").agg(F.count(F.lit(1)).alias("n_triangles"))
 
 
-def label_propagation(
-    edges: DataFrame,
-    k: int = 3,
-    checkpoint_every: int = 2,
-) -> DataFrame:
+def label_propagation(edges: DataFrame, k: int = 3) -> DataFrame:
     """k rounds of synchronous weighted label propagation over directed
     edges (src, dst, w); symmetrize first for undirected graphs. Returns
     (node, label).
@@ -385,8 +372,8 @@ def label_propagation(
     ``coalesce(L[src], src)`` in the previous round's broadcast label
     vector L, which holds exactly the nodes with in-edges: no join back to
     the old labels; the others keep their own id and join after the last
-    round. ``localCheckpoint`` every ``checkpoint_every`` rounds keeps the
-    plan flat in k; the edge cache is released before returning.
+    round. ``localCheckpoint`` every ``_LPA_CHECKPOINT_ROUNDS`` rounds
+    keeps the plan flat in k; the edge cache is released before returning.
     """
     if k < 1:
         raise ValueError(f"label_propagation needs k >= 1 rounds, got {k}")
@@ -414,7 +401,7 @@ def label_propagation(
                 else ed.join(labels, ed.src == labels.node, "left_anti")
             ).select("src")
             labels = labels.union(src_only.distinct().select("src", "src"))
-        if (i + 1) % checkpoint_every == 0 or i == k - 1:
+        if (i + 1) % _LPA_CHECKPOINT_ROUNDS == 0 or i == k - 1:
             labels = labels.localCheckpoint(eager=True)
         prev = labels
     ed.unpersist()

@@ -161,14 +161,6 @@ def sample_video_frames(df: DataFrame, every_ms: int = 1000, id_col: str = "doc_
     return df.select(id_col, "media_payload").mapInPandas(run, FRAME_SAMPLE_SCHEMA)
 
 
-def decode_real_media(payload: bytes) -> None:  # pragma: no cover
-    """Placeholder for a real decoder — not available in this container."""
-    raise NotImplementedError(
-        "media decoding requires an image/audio library not present in this "
-        "environment; plug a real kernel into _decode_image_batch"
-    )
-
-
 RESIZED_IMAGE_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),

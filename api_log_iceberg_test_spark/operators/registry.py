@@ -60,9 +60,10 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate clusters: exact-Jaccard near-dup pairs → connected
-    components (iterative min-label propagation; DuckDB oracle replays the
-    same fixpoint with a recursive CTE). Component label = smallest doc_id
-    in the cluster, so downstream dedup keeps exactly one doc per cluster."""
+    components (driver union-find under the edge gate, large-star/small-star
+    rounds above it; the DuckDB oracle reaches the same labels with a
+    recursive walk). Component label = smallest doc_id in the cluster, so
+    downstream dedup keeps exactly one doc per cluster."""
     pairs = dedup.ngram_jaccard_pairs(
         load_table(spark, sf_dir, "documents"), threshold=0.5
     )
@@ -637,6 +638,21 @@ _JACCARD_CTES = f"""sh AS (
             SELECT doc_a, doc_b, jaccard FROM scored WHERE jaccard >= 0.5
         )"""
 
+#: Recursive CTE chain labelling every `jpairs` endpoint with the smallest
+#: doc id reachable through the pairs: `comp(doc_id, component)`. Follows
+#: `_JACCARD_CTES` under `WITH RECURSIVE`.
+_COMPONENT_CTES = """edges AS (
+            SELECT doc_a AS src, doc_b AS dst FROM jpairs
+            UNION
+            SELECT doc_b, doc_a FROM jpairs
+        ), walk(id, comp) AS (
+            SELECT src, src FROM edges
+            UNION
+            SELECT e.src, w.comp FROM edges e JOIN walk w ON e.dst = w.id
+        ), comp AS (
+            SELECT id AS doc_id, MIN(comp) AS component FROM walk GROUP BY id
+        )"""
+
 _LANG_SCORE = {
     code: "len(list_filter(toks, t -> list_contains(["
     + ", ".join(f"'{w}'" for w in words)
@@ -671,37 +687,13 @@ ORACLE: dict[str, str] = {
         SELECT doc_a, doc_b, jaccard FROM jpairs ORDER BY doc_a, doc_b
     """,
     "q_dup_clusters": f"""
-        WITH RECURSIVE {_JACCARD_CTES},
-        edges AS (
-            SELECT doc_a AS src, doc_b AS dst FROM jpairs
-            UNION
-            SELECT doc_b, doc_a FROM jpairs
-        ),
-        walk(id, comp) AS (
-            SELECT src, src FROM edges
-            UNION
-            SELECT e.src, w.comp FROM edges e JOIN walk w ON e.dst = w.id
-        )
-        SELECT id AS doc_id, MIN(comp) AS component
-        FROM walk GROUP BY id ORDER BY doc_id
+        WITH RECURSIVE {_JACCARD_CTES}, {_COMPONENT_CTES}
+        SELECT doc_id, component FROM comp ORDER BY doc_id
     """,
     "q_dedup_canonical": f"""
-        WITH RECURSIVE {_JACCARD_CTES},
-        edges AS (
-            SELECT doc_a AS src, doc_b AS dst FROM jpairs
-            UNION
-            SELECT doc_b, doc_a FROM jpairs
-        ),
-        walk(id, comp) AS (
-            SELECT src, src FROM edges
-            UNION
-            SELECT e.src, w.comp FROM edges e JOIN walk w ON e.dst = w.id
-        ),
-        dupes AS (
-            SELECT id FROM walk GROUP BY id HAVING id <> MIN(comp)
-        )
+        WITH RECURSIVE {_JACCARD_CTES}, {_COMPONENT_CTES}
         SELECT doc_id, lang FROM documents
-        WHERE doc_id NOT IN (SELECT id FROM dupes)
+        WHERE doc_id NOT IN (SELECT doc_id FROM comp WHERE doc_id <> component)
         ORDER BY doc_id
     """,
     "q_ann_cosine_topk": """
@@ -1398,18 +1390,7 @@ ORACLE["q_pack_batches"] = f"""
 """
 
 ORACLE["q_corpus_datacard"] = f"""
-    WITH RECURSIVE {_JACCARD_CTES},
-    edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM jpairs
-        UNION
-        SELECT doc_b, doc_a FROM jpairs
-    ),
-    walk(id, comp) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.src, w.comp FROM edges e JOIN walk w ON e.dst = w.id
-    ),
-    comp AS (SELECT id AS doc_id, MIN(comp) AS component FROM walk GROUP BY id),
+    WITH RECURSIVE {_JACCARD_CTES}, {_COMPONENT_CTES},
     tq AS (SELECT doc_id, text, {_TOKENS} AS toks FROM documents),
     m AS (
         SELECT doc_id,
@@ -1594,18 +1575,7 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE["q_curation_pipeline"] = f"""
-    WITH RECURSIVE {_JACCARD_CTES},
-    edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM jpairs
-        UNION
-        SELECT doc_b, doc_a FROM jpairs
-    ),
-    walk(id, comp) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.src, w.comp FROM edges e JOIN walk w ON e.dst = w.id
-    ),
-    comp AS (SELECT id AS doc_id, MIN(comp) AS component FROM walk GROUP BY id),
+    WITH RECURSIVE {_JACCARD_CTES}, {_COMPONENT_CTES},
     tq AS (SELECT doc_id, text, {_TOKENS} AS toks FROM documents),
     m AS (
         SELECT doc_id,
@@ -1652,18 +1622,7 @@ ORACLE["q_curation_pipeline"] = f"""
 
 
 ORACLE["q_leakage_safe_split"] = f"""
-    WITH RECURSIVE {_JACCARD_CTES},
-    edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM jpairs
-        UNION
-        SELECT doc_b, doc_a FROM jpairs
-    ),
-    walk(id, comp) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.src, w.comp FROM edges e JOIN walk w ON e.dst = w.id
-    ),
-    comp AS (SELECT id AS doc_id, MIN(comp) AS component FROM walk GROUP BY id)
+    WITH RECURSIVE {_JACCARD_CTES}, {_COMPONENT_CTES}
     SELECT d.doc_id,
            COALESCE(c.component, d.doc_id)::BIGINT AS rep,
            CASE WHEN (COALESCE(c.component, d.doc_id) * 2654435761) % 1000 < 800
@@ -3713,15 +3672,14 @@ ORACLE["q_quality_calibration"] = f"""
 
 
 def q_dup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duplicate clusters via alternating large-star/small-star — the
-    O(log² n)-round web-scale algorithm the min-label operator's scale
-    notes defer to, now executable and driver-verified against the SAME
-    oracle as q_dup_clusters (the component labeling is identical:
-    component = min reachable doc_id)."""
+    """Duplicate clusters through ``dedup.connected_components``, the one
+    components operator, whose large-star/small-star rounds take over past
+    its driver edge gate. Kept as a registered entry with the SAME oracle
+    as q_dup_clusters (component = min reachable doc_id)."""
     pairs = dedup.ngram_jaccard_pairs(
         load_table(spark, sf_dir, "documents"), threshold=0.5
     )
-    return dedup.connected_components_star(pairs).orderBy("doc_id")
+    return dedup.connected_components(pairs).orderBy("doc_id")
 
 
 def q_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4096,23 +4054,12 @@ def q_dedup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE["q_dedup_cluster_stats"] = f"""
-    WITH RECURSIVE {_JACCARD_CTES},
-    edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM jpairs
-        UNION
-        SELECT doc_b, doc_a FROM jpairs
-    ),
-    walk(id, comp) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.src, w.comp FROM edges e JOIN walk w ON e.dst = w.id
-    ),
-    labels AS (SELECT id, MIN(comp) AS component FROM walk GROUP BY id),
-    sizes AS (SELECT component, COUNT(*) AS cluster_size FROM labels GROUP BY component),
+    WITH RECURSIVE {_JACCARD_CTES}, {_COMPONENT_CTES},
+    sizes AS (SELECT component, COUNT(*) AS cluster_size FROM comp GROUP BY component),
     dist AS (SELECT cluster_size, COUNT(*) AS n_clusters FROM sizes GROUP BY cluster_size),
     singles AS (
         SELECT 1::BIGINT AS cluster_size,
-               ((SELECT COUNT(*) FROM documents) - (SELECT COUNT(*) FROM labels))::BIGINT
+               ((SELECT COUNT(*) FROM documents) - (SELECT COUNT(*) FROM comp))::BIGINT
                    AS n_clusters
     )
     SELECT cluster_size, SUM(n_clusters)::BIGINT AS n_clusters FROM (
@@ -4900,9 +4847,7 @@ ORACLE["q_interarrival_stats"] = """
     FROM agg ORDER BY event_type
 """
 
-# identical labeling contract, so the star variant reuses the min-label
-# oracle verbatim — the driver row then certifies the O(log² n) algorithm
-# exact against the recursive-CTE fixpoint
+# same operator, same labeling contract: the oracle is reused verbatim
 ORACLE["q_dup_clusters_star"] = ORACLE["q_dup_clusters"]
 
 

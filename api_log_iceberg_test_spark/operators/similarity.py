@@ -185,13 +185,16 @@ def cosine_topk_numpy(
     )
 
 
+#: :func:`kmeans_assign` tests for convergence every this many iterations.
+_KMEANS_CHECK_ROUNDS = 2
+
+
 def kmeans_assign(
     corpus: DataFrame,
     k: int = 8,
     max_iter: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    check_every: int = 2,
 ) -> DataFrame:
     """Deterministic Lloyd's k-means over an embedding column: (id, cluster).
 
@@ -207,8 +210,10 @@ def kmeans_assign(
     2. update: per-(cluster, dim) mean via posexplode + partial-aggregated
        groupBy — the only shuffle, carrying k·dim partials per partition;
     3. convergence: assignments compared to the previous round every
-       ``check_every`` iterations (same monotone-fixed-point argument as
-       ``dedup.connected_components``).
+       ``_KMEANS_CHECK_ROUNDS`` iterations — a driver-side count, one extra
+       job per check. Once an assignment repeats, the centroids and so
+       every later assignment repeat too, so the extra rounds a sparser
+       check runs leave the result unchanged.
     ``localCheckpoint`` truncates lineage between rounds.
     """
     vecs = corpus.select(
@@ -243,7 +248,7 @@ def kmeans_assign(
             .localCheckpoint()
         )
         if assign is not None and (
-            (i + 1) % check_every == 0 or i + 1 == max_iter
+            (i + 1) % _KMEANS_CHECK_ROUNDS == 0 or i + 1 == max_iter
         ):
             moved = (
                 new_assign.alias("n")

@@ -39,12 +39,6 @@ DEFAULT_NAMESPACE = "logs"
 DEFAULT_TABLE = "api"
 
 
-def iceberg_available() -> bool:
-    """True if an iceberg-spark-runtime jar is plausibly on the classpath."""
-    cp = os.environ.get("SPARK_CLASSPATH", "") + os.environ.get("SPARK_SUBMIT_OPTS", "")
-    return "iceberg-spark-runtime" in cp
-
-
 def iceberg_conf(
     catalog: str,
     warehouse: str | None = None,
@@ -144,11 +138,6 @@ def build_session(
         builder = builder.config(k, v)
 
     return builder.getOrCreate()
-
-
-def get_test_session(app_name: str = "api-log-iceberg-test-spark-tests") -> SparkSession:
-    """Session for local tests: local[*] unless SPARK_GRAFT_CPUS is set."""
-    return build_session(app_name=app_name)
 
 
 def cluster_conf(

@@ -105,24 +105,6 @@ def test_jaccard_blocking_cap_drops_hot_key(spark):
     assert (200, 201) not in capped
 
 
-def test_connected_components_check_cadence_equivalent(spark):
-    """check_every > 1 must not change the fixed point — only how often the
-    driver-side convergence count runs (a deep chain forces many rounds)."""
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, 9)] + [(20, 21)], ["doc_a", "doc_b"]
-    )
-    every_round = {
-        (r["doc_id"], r["component"])
-        for r in dedup.connected_components(chain, check_every=1).collect()
-    }
-    every_third = {
-        (r["doc_id"], r["component"])
-        for r in dedup.connected_components(chain, check_every=3).collect()
-    }
-    assert every_round == every_third
-    assert {c for _, c in every_round} == {1, 20}
-
-
 def test_connected_components_transitive(spark):
     """1-2, 2-3 chain merges into one cluster labeled by its min id;
     disjoint pair stays separate."""
@@ -277,43 +259,47 @@ def test_incremental_dedup_planted(spark):
     assert out[13]["n_copies"] == 1
 
 
-# --- large-star/small-star connected components -----------------------------
+# --- large-star/small-star rounds of connected_components ------------------
+# The driver edge gate is set to 0 so the distributed rounds run.
 
 
 def _labels(df):
     return {r["doc_id"]: r["component"] for r in df.collect()}
 
 
-def test_star_cc_matches_minlabel_on_testdata(spark, sf_dir):
-    """The O(log² n) star algorithm must produce the identical labeling as
-    min-label propagation on the real near-dup pair graph."""
-    from api_log_iceberg_test_spark.schema import load_table
-
-    pairs = dedup.ngram_jaccard_pairs(
-        load_table(spark, sf_dir, "documents"), threshold=0.5
-    ).localCheckpoint()
-    assert _labels(dedup.connected_components_star(pairs)) == _labels(
-        dedup.connected_components(pairs)
-    )
-
-
-def test_star_cc_long_chain(spark):
-    """A 60-node path — the diameter pathology min-label needs 60 rounds
-    for; the star contraction must label it with the chain head well
-    inside max_iter (O(log² n) rounds)."""
+def test_star_cc_long_chain(spark, monkeypatch):
+    """A 60-node path — the diameter pathology one-hop min-label
+    propagation needs 60 rounds for; the star contraction must label it
+    with the chain head within 12 rounds (O(log² n))."""
+    monkeypatch.setattr(dedup, "_DRIVER_EDGE_LIMIT", 0)
+    monkeypatch.setattr(dedup, "_STAR_ROUND_CAP", 12)
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(60)], ["doc_a", "doc_b"]
     )
-    got = _labels(dedup.connected_components_star(pairs, max_iter=12))
+    got = _labels(dedup.connected_components(pairs))
     assert got == {i: 0 for i in range(61)}
 
 
-def test_star_cc_disjoint_components(spark):
+def test_star_cc_disjoint_components(spark, monkeypatch):
+    monkeypatch.setattr(dedup, "_DRIVER_EDGE_LIMIT", 0)
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (20, 21), (21, 20)], ["doc_a", "doc_b"]
     )
-    got = _labels(dedup.connected_components_star(pairs))
+    got = _labels(dedup.connected_components(pairs))
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 20, 21: 20}
+
+
+def test_star_cc_round_cap_raises(spark, monkeypatch):
+    """Hitting the round cap before the fixed point fails loudly instead of
+    returning a partial labeling: a 40-node chain needs more than one
+    round."""
+    monkeypatch.setattr(dedup, "_DRIVER_EDGE_LIMIT", 0)
+    monkeypatch.setattr(dedup, "_STAR_ROUND_CAP", 1)
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(40)], ["doc_a", "doc_b"]
+    )
+    with pytest.raises(RuntimeError, match="no fixed point after 1 star rounds"):
+        dedup.connected_components(pairs)
 
 
 def test_containment_planted_excerpt(spark):

@@ -102,18 +102,20 @@ def test_triangle_counts_skewed_star_plus_one(spark):
     assert {r["node"]: r["n_triangles"] for r in rows} == {0: 1, 1: 1, 2: 1}
 
 
-def test_triangle_adjacency_broadcast_is_size_gated(spark):
+def test_triangle_adjacency_broadcast_is_size_gated(spark, monkeypatch):
     """VERDICT r04 #4: the closure-join adjacency broadcast must be a
-    size-gated branch, not an unconditional hint — both shapes produce the
-    identical triangle counts, and the shuffle shape really drops the
-    adjacency BroadcastExchanges."""
+    size-gated branch, not an unconditional hint — |E| = 6 is under the
+    default edge limit and broadcasts; a limit of 0 takes the shuffle
+    shape. Both produce the identical triangle counts, and the shuffle
+    shape really drops the adjacency BroadcastExchanges."""
     k4 = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)]
     expect = {1: 3, 2: 3, 3: 3, 4: 3}
     plans = {}
-    for flag in (True, False):
-        df = graph.triangle_counts(_edges(spark, k4), broadcast_adjacency=flag)
+    for hinted, limit in ((True, graph._TRIANGLE_BROADCAST_ROW_LIMIT), (False, 0)):
+        monkeypatch.setattr(graph, "_TRIANGLE_BROADCAST_ROW_LIMIT", limit)
+        df = graph.triangle_counts(_edges(spark, k4))
         assert {r["node"]: r["n_triangles"] for r in df.collect()} == expect
-        plans[flag] = df._jdf.queryExecution().explainString(
+        plans[hinted] = df._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
         )
     # hinted shape: the two adjacency sides are broadcast
@@ -123,12 +125,6 @@ def test_triangle_adjacency_broadcast_is_size_gated(spark):
     assert plans[False].count("BroadcastExchange") < plans[True].count(
         "BroadcastExchange"
     )
-    # auto mode: |E| = 6 is far under any budget → broadcasts; a 1-row
-    # budget forces the shuffle branch
-    auto = graph.triangle_counts(_edges(spark, k4))
-    assert {r["node"]: r["n_triangles"] for r in auto.collect()} == expect
-    forced = graph.triangle_counts(_edges(spark, k4), broadcast_budget_rows=1)
-    assert {r["node"]: r["n_triangles"] for r in forced.collect()} == expect
 
 
 def test_cooccurrence_edges_distinct_and_canonical(spark):
@@ -304,7 +300,7 @@ def _random_digraph(seed, ids):
     return [(ids(a), ids(b), rng.choice([0, 1, 1, 2, 3])) for a, b in rows if a != b]
 
 
-def test_lpa_matches_python_reference_random_graphs(spark):
+def test_lpa_matches_python_reference_random_graphs(spark, monkeypatch):
     """Full k-round label trajectory matches a Python reference, on seeded
     random undirected graphs and on asymmetric multigraphs with src-only
     and dst-only nodes, duplicate edges and zero weights — pins argmax +
@@ -336,10 +332,10 @@ def test_lpa_matches_python_reference_random_graphs(spark):
             ids, typ = (int, "bigint") if (k + every) % 2 else (str, "string")
             edges = _random_digraph(10 * k + every, ids)
             e = spark.createDataFrame(edges, f"src {typ}, dst {typ}, w bigint")
+            monkeypatch.setattr(graph, "_LPA_CHECKPOINT_ROUNDS", every)
             got = {
                 r["node"]: r["label"]
-                for r in graph.label_propagation(e, k=k, checkpoint_every=every)
-                .collect()
+                for r in graph.label_propagation(e, k=k).collect()
             }
             assert got == _lpa_ref(edges, k=k), (k, every, typ)
 
@@ -372,7 +368,7 @@ def test_lpa_job_count_pinned(spark):
     assert _cache_is_empty(spark)
 
 
-def test_graph_loops_answer_rewritten_inputs(spark, tmp_path):
+def test_graph_loops_answer_rewritten_inputs(spark, tmp_path, monkeypatch):
     """Re-running the graph loops in one session after an input file is
     rewritten in place answers for the new file. Spark matches cached plans
     by input path, so a cache left by the first run would answer the second
@@ -402,9 +398,11 @@ def test_graph_loops_answer_rewritten_inputs(spark, tmp_path):
         edges = und.select(F.col("a").alias("src"), F.col("b").alias("dst")).union(
             und.select("b", "a")
         ).withColumn("w", F.lit(1))
-        loop = graph.pagerank(edges, k=5, driver_max_nodes=None)
+        monkeypatch.setattr(graph, "_PAGERANK_DRIVER_NODE_LIMIT", 0)
+        loop = graph.pagerank(edges, k=5)
         assert _cache_is_empty(spark)
-        driver = graph.pagerank(edges, k=5, driver_max_nodes=1 << 30)
+        monkeypatch.setattr(graph, "_PAGERANK_DRIVER_NODE_LIMIT", 1 << 30)
+        driver = graph.pagerank(edges, k=5)
         want = {r.node: round(r.rank, 9) for r in driver.collect()}
         assert {r.node: round(r.rank, 9) for r in loop.collect()} == want
 

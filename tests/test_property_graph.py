@@ -13,6 +13,7 @@ miss.
 from __future__ import annotations
 
 from itertools import combinations
+from unittest import mock
 
 import numpy as np
 from hypothesis import given, settings
@@ -65,18 +66,30 @@ def _union_find_components(edge_list):
     return out
 
 
+def _components_both_paths(pairs):
+    """connected_components' labels at the default edge gate (driver
+    union-find) and with the gate at 0 (large-star/small-star rounds)."""
+    out = {}
+    for gate in (dedup._DRIVER_EDGE_LIMIT, 0):
+        with mock.patch.object(dedup, "_DRIVER_EDGE_LIMIT", gate):
+            out[gate] = {
+                r["doc_id"]: r["component"]
+                for r in dedup.connected_components(pairs).collect()
+            }
+    return out
+
+
 @settings(max_examples=8, deadline=None, derandomize=True)
 @given(_undirected_edges)
-def test_cc_minlabel_and_star_match_union_find(spark, edge_list):
-    """Both CC implementations — O(diameter) min-label propagation and the
-    O(log² n) large-star/small-star contraction — must produce the exact
-    union-find partition on arbitrary topologies (rings and chains are the
+def test_cc_driver_and_star_match_union_find(spark, edge_list):
+    """Both CC paths — the driver union-find and the O(log² n)
+    large-star/small-star contraction — must produce the exact union-find
+    partition on arbitrary topologies (rings and chains are the
     convergence stress cases the fixed fixtures don't generate)."""
     pairs = spark.createDataFrame(edge_list, "doc_a bigint, doc_b bigint")
     expect = _union_find_components(edge_list)
-    for fn in (dedup.connected_components, dedup.connected_components_star):
-        got = {r["doc_id"]: r["component"] for r in fn(pairs).collect()}
-        assert got == expect, (fn.__name__, edge_list)
+    for gate, got in _components_both_paths(pairs).items():
+        assert got == expect, (gate, edge_list)
 
 
 @settings(max_examples=8, deadline=None, derandomize=True)
@@ -141,24 +154,27 @@ def _numpy_pagerank(edge_list, k=5, damping=0.85):
 @settings(max_examples=8, deadline=None, derandomize=True)
 @given(_directed_edges.map(_close_dangling))
 def test_pagerank_matches_dense_power_iteration(spark, edge_list):
-    """The exchange-reusing distributed loop must reproduce the dense
-    power iteration exactly (same recurrence, same k) — catches silent
-    divergence in the join/agg update rule or the checkpoint cadence."""
+    """Both pagerank paths — the driver power iteration at the default node
+    gate and the exchange-reusing distributed loop with the gate at 0 —
+    must reproduce the dense power iteration exactly (same recurrence,
+    same k): catches silent divergence in the join/agg update rule or the
+    checkpoint cadence."""
     if not edge_list:
         return
     e = spark.createDataFrame(edge_list, "src bigint, dst bigint, w double")
-    got = {r["node"]: r["rank"] for r in graph.pagerank(e, k=5).collect()}
     expect = _numpy_pagerank(edge_list, k=5)
-    assert set(got) == set(expect), edge_list
-    for node, r in expect.items():
-        assert abs(got[node] - r) < 1e-9, (node, got[node], r, edge_list)
+    for gate in (graph._PAGERANK_DRIVER_NODE_LIMIT, 0):
+        with mock.patch.object(graph, "_PAGERANK_DRIVER_NODE_LIMIT", gate):
+            got = {r["node"]: r["rank"] for r in graph.pagerank(e, k=5).collect()}
+        assert set(got) == set(expect), (gate, edge_list)
+        for node, r in expect.items():
+            assert abs(got[node] - r) < 1e-9, (gate, node, got[node], r, edge_list)
 
 
 def test_cc_long_chain_converges(spark):
     """A 40-node chain: the diameter pathology the star contraction exists
-    for — both algorithms must still agree (min-label within max_iter)."""
+    for — both CC paths must label it with the chain head."""
     chain = [(i, i + 1) for i in range(40)]
     pairs = spark.createDataFrame(chain, "doc_a bigint, doc_b bigint")
-    for fn in (dedup.connected_components, dedup.connected_components_star):
-        got = {r["doc_id"]: r["component"] for r in fn(pairs).collect()}
-        assert got == {i: 0 for i in range(41)}, fn.__name__
+    for gate, got in _components_both_paths(pairs).items():
+        assert got == {i: 0 for i in range(41)}, gate

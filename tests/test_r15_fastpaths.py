@@ -1,9 +1,9 @@
 """Round-15 optimization parity tests.
 
 Each r15 change keeps a declared query's output identical; these tests pin
-the NEW internal path against the OLD one (still reachable via the gate
-parameters) or against a python reference, so a future edit can't silently
-diverge the fast path from the distributed semantics.
+the NEW internal path against the OLD one (reached by setting the module's
+gate constant to 0) or against a python reference, so a future edit can't
+silently diverge the fast path from the distributed semantics.
 """
 
 from __future__ import annotations
@@ -25,7 +25,7 @@ def _rand_pairs(seed: int, n_nodes: int, n_edges: int) -> list[tuple[int, int]]:
     return sorted(out)
 
 
-def test_components_driver_gate_matches_distributed(spark):
+def test_components_driver_gate_matches_distributed(spark, monkeypatch):
     pairs = spark.createDataFrame(
         _rand_pairs(7, 40, 55), "doc_a long, doc_b long"
     )
@@ -33,26 +33,10 @@ def test_components_driver_gate_matches_distributed(spark):
         (r.doc_id, r.component)
         for r in dedup.connected_components(pairs).collect()
     }
+    monkeypatch.setattr(dedup, "_DRIVER_EDGE_LIMIT", 0)
     slow = {
         (r.doc_id, r.component)
-        for r in dedup.connected_components(pairs, driver_max_edges=None).collect()
-    }
-    assert fast == slow and fast
-
-
-def test_components_star_driver_gate_matches_distributed(spark):
-    pairs = spark.createDataFrame(
-        _rand_pairs(11, 30, 40), "doc_a long, doc_b long"
-    )
-    fast = {
-        (r.doc_id, r.component)
-        for r in dedup.connected_components_star(pairs).collect()
-    }
-    slow = {
-        (r.doc_id, r.component)
-        for r in dedup.connected_components_star(
-            pairs, driver_max_edges=None
-        ).collect()
+        for r in dedup.connected_components(pairs).collect()
     }
     assert fast == slow and fast
 
@@ -70,7 +54,7 @@ def test_components_driver_gate_string_ids(spark):
     }
 
 
-def test_pagerank_driver_gate_matches_distributed(spark):
+def test_pagerank_driver_gate_matches_distributed(spark, monkeypatch):
     edges = spark.createDataFrame(
         [(a, b, 1 + (a + b) % 3) for a, b in _rand_pairs(3, 25, 60)]
         + [(b, a, 1) for a, b in _rand_pairs(5, 25, 30)],
@@ -80,9 +64,10 @@ def test_pagerank_driver_gate_matches_distributed(spark):
         r.node: round(r.rank, 9)
         for r in graph.pagerank(edges, k=6).collect()
     }
+    monkeypatch.setattr(graph, "_PAGERANK_DRIVER_NODE_LIMIT", 0)
     slow = {
         r.node: round(r.rank, 9)
-        for r in graph.pagerank(edges, k=6, driver_max_nodes=None).collect()
+        for r in graph.pagerank(edges, k=6).collect()
     }
     assert fast.keys() == slow.keys()
     for node, rank in fast.items():

@@ -1,6 +1,7 @@
 """Checks on the code base and the measurement tools rather than on query
-answers: duplicate definitions, package-relative imports, bench.py's basket
-totals and tools/ab.py's renamed-package loader."""
+answers: duplicate definitions, package-relative imports, unused operator
+functions, bench.py's basket totals and tools/ab.py's renamed-package
+loader."""
 
 from __future__ import annotations
 
@@ -56,6 +57,49 @@ def test_package_imports_itself_only_relatively():
         if any(m.split(".")[0] == PACKAGE.name for m in _absolute_imports(node))
     ]
     assert not absolute, absolute
+
+
+def _name_uses(tree):
+    """Names a module uses: names, attribute reads and imported names.
+    A top-level function's uses of its own name (recursion) do not count."""
+    for top in tree.body:
+        own = top.name if isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef)) else None
+        for node in ast.walk(top):
+            if isinstance(node, ast.Name):
+                name = node.id
+            elif isinstance(node, ast.Attribute):
+                name = node.attr
+            elif isinstance(node, ast.alias):
+                name = node.name.rsplit(".", 1)[-1]
+            else:
+                continue
+            if name != own:
+                yield name
+
+
+def test_every_public_operator_function_is_used():
+    """A public top-level function in operators/*.py that nothing in the
+    package, tests/, tools/, bench.py or __spark_entry__.py names is dead
+    code: it drifts from the code that runs while looking maintained."""
+    sources = [
+        *PACKAGE.rglob("*.py"),
+        *(ROOT / "tests").rglob("*.py"),
+        *(ROOT / "tools").rglob("*.py"),
+        ROOT / "bench.py",
+        ROOT / "__spark_entry__.py",
+    ]
+    used = set()
+    for path in sources:
+        used.update(_name_uses(ast.parse(path.read_text())))
+    unused = [
+        f"{path.name}: {node.name}"
+        for path in sorted((PACKAGE / "operators").glob("*.py"))
+        for node in ast.parse(path.read_text()).body
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+        and not node.name.startswith("_")
+        and node.name not in used
+    ]
+    assert not unused, unused
 
 
 def test_bench_basket_totals_reproduce_committed_run():

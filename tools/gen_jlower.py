@@ -1,4 +1,4 @@
-"""Derive and freeze the Java/Spark-equivalent lowercase tables for the
+r"""Derive and freeze the Java/Spark-equivalent lowercase tables for the
 DuckDB oracles (emits api_log_iceberg_test_spark/operators/_casing_tables.py).
 
 Why this exists (r14): Spark's ``lower()`` is the JDK's Unicode FULL default
