@@ -24,8 +24,11 @@ atomic-per-task-commit, which is what the tests exercise; the Iceberg path
 is the same code with ``use_iceberg_table`` set.
 
 Config knobs mirror the reference env vars (docker-compose.yaml:31-36):
-flush_count ↔ PARQUET_FLUSH_COUNT, flush_interval ↔ PARQUET_FLUSH_INTERVAL,
-commit_interval ↔ ICEBERG_COMMIT_INTERVAL.
+``IngestConfig.flush_count`` ↔ PARQUET_FLUSH_COUNT,
+``IngestConfig.flush_interval`` ↔ PARQUET_FLUSH_INTERVAL, and the
+staged mode's ``StagedCommitter(interval=...)`` ↔ ICEBERG_COMMIT_INTERVAL.
+Parquet targets are always partitioned by a ``_day`` column derived from
+``time`` (the plain-Parquet stand-in for Iceberg's hidden ``days(time)``).
 
 The reference's DUAL-cadence shape — flush every minute, leader commits
 every three (README.md:200-212: staged Parquet + 0-byte index markers,
@@ -33,18 +36,20 @@ then a scheduled atomic publish) — is reproduced by the staged mode
 (r10, closing the SURVEY §2.1 S5/S6 staging gap at the parquet level):
 
 - :func:`start_staged_ingest` flushes each micro-batch to
-  ``<target>__staging/batch-<epoch>/`` on the FLUSH cadence; the batch
+  ``<target>__staging/batch-<run>-<epoch>/`` on the FLUSH cadence; the batch
   directory's ``_SUCCESS`` file is the index-marker analogue (a flushed
   batch is commit-eligible iff it exists), and checkpoint + per-epoch
   overwrite make replayed flushes idempotent;
 - :func:`commit_staged` runs on the COMMIT cadence (or from
-  :class:`StagedCommitter`): it builds a new table VERSION — hardlinks
-  of the current version's files plus the staged batches' files (names
-  prefixed per-batch, so a crash between publish and staging cleanup
-  re-links to already-present names and skips: exactly-once) — and
-  publishes it with ``maintenance.publish_version``'s atomic symlink
-  swap. Readers pin a version via ``maintenance.read_compacted_table``
-  and never observe a partial commit; between commits, flushed-but-
+  :class:`StagedCommitter`): it builds a new table VERSION with
+  ``maintenance.build_version`` — hardlinks of the current version's
+  files plus the staged batches' files under ``b<run>-<epoch>-`` names,
+  so a crash between publish and staging cleanup finds the batch's key
+  already live and skips it: exactly-once — and publishes it with
+  ``maintenance.publish_version``'s atomic symlink swap, the same
+  version layout ``maintenance.compact_parquet_table`` publishes.
+  Readers pin a version via ``maintenance.read_compacted_table`` and
+  never observe a partial commit; between commits, flushed-but-
   uncommitted data is invisible, exactly like the reference's staged
   files before the leader's Iceberg commit.
 
@@ -70,28 +75,26 @@ from pyspark.sql.streaming import StreamingQuery
 #: producing keys the manifest regex cannot match (ADVICE r11).
 _RUN_ID_HEX_LEN = 8
 _RUN_ID_RE = re.compile(rf"[0-9a-f]{{{_RUN_ID_HEX_LEN}}}")
-#: Commit-eligible staging dirs: "batch-<run>-<epoch>" (legacy: bare
-#: "batch-<epoch>"). Anything else under the staging root (a stray
-#: "batch-tmp", an operator's scratch dir) is IGNORED by commit_staged
-#: rather than wedging the committer tick with a ValueError (ADVICE r11).
-_BATCH_DIR_RE = re.compile(rf"batch-(?:[0-9a-f]{{{_RUN_ID_HEX_LEN}}}-)?\d+")
-#: Committed keys carried by live file names: "b<run>-<epoch>-..." or
-#: legacy "b<epoch>-...".
-_COMMITTED_KEY_RE = re.compile(rf"^b([0-9a-f]{{{_RUN_ID_HEX_LEN}}}-\d+|\d+)-")
+#: Commit-eligible staging dirs: "batch-<run>-<epoch>". Anything else
+#: under the staging root (a stray "batch-tmp", a bare "batch-7", an
+#: operator's scratch dir) is IGNORED by commit_staged rather than
+#: wedging the committer tick with a ValueError (ADVICE r11).
+_BATCH_DIR_RE = re.compile(rf"batch-[0-9a-f]{{{_RUN_ID_HEX_LEN}}}-\d+")
+#: Committed keys carried by live file names: "b<run>-<epoch>-...".
+_COMMITTED_KEY_RE = re.compile(rf"^b([0-9a-f]{{{_RUN_ID_HEX_LEN}}}-\d+)-")
 
 
 @dataclass
 class IngestConfig:
-    """Mirrors the reference's three cadence knobs (README.md:104-118)."""
+    """Mirrors the reference's flush knobs (README.md:104-118); the
+    commit cadence is :class:`StagedCommitter`'s ``interval``."""
 
     flush_count: int = 50_000  # PARQUET_FLUSH_COUNT production default
     flush_interval: str = "60 seconds"  # PARQUET_FLUSH_INTERVAL (test: 1m)
-    commit_interval: str = "180 seconds"  # ICEBERG_COMMIT_INTERVAL (staged mode)
     #: None (default) derives a PER-TARGET checkpoint; a fixed shared
     #: default would make two default-config queries share streaming
     #: offsets — the second would silently write nothing (review finding).
     checkpoint_dir: str | None = None
-    partition_by_day: bool = True  # hidden days(time) partitioning, §1.3
 
     def checkpoint_for(self, target: str) -> str:
         if self.checkpoint_dir is not None:
@@ -100,6 +103,15 @@ class IngestConfig:
 
         tag = hashlib.md5(target.encode()).hexdigest()[:12]
         return f"/tmp/api-log-ingest-checkpoint-{tag}"
+
+
+def _with_day(df: DataFrame) -> DataFrame:
+    """``df`` plus the ``_day`` partition column of the parquet layout
+    (the stand-in for Iceberg's hidden days(time) transform, SURVEY
+    §1.3), when it has a ``time`` column."""
+    from pyspark.sql import functions as F
+
+    return df.withColumn("_day", F.to_date("time")) if "time" in df.columns else df
 
 
 def start_ingest(
@@ -119,16 +131,11 @@ def start_ingest(
     idempotent parquet append keyed on batchId).
     """
     config = config or IngestConfig()
-
-    from pyspark.sql import functions as F
-
-    df = stream_df
     # the _day helper column is for the PARQUET layout only; the Iceberg
     # table partitions via its hidden days(time) transform and must receive
     # the 14-column schema unchanged (review finding: _day previously
     # leaked into toTable under the default config)
-    if config.partition_by_day and not use_iceberg_table and "time" in df.columns:
-        df = df.withColumn("_day", F.to_date("time"))
+    df = stream_df if use_iceberg_table else _with_day(stream_df)
 
     writer = (
         df.writeStream.outputMode("append")
@@ -145,7 +152,7 @@ def start_ingest(
         # Spark-native equivalent of the reference's marker+leader commit.
         return writer.toTable(target)
 
-    if config.partition_by_day and "_day" in df.columns:
+    if "_day" in df.columns:
         writer = writer.partitionBy("_day")
     return writer.format("parquet").option("path", target).start()
 
@@ -277,7 +284,7 @@ def start_staged_ingest(
     on_flush=None,
 ) -> StreamingQuery:
     """FLUSH half of the dual-cadence shape: micro-batches land in
-    ``<target>__staging/batch-<epoch>/`` and stay INVISIBLE to table
+    ``<target>__staging/batch-<run>-<epoch>/`` and stay INVISIBLE to table
     readers until :func:`commit_staged` publishes them.
 
     Exactly-once staging: the checkpoint pins epoch ids, and a replayed
@@ -293,11 +300,7 @@ def start_staged_ingest(
     restart must replay the already-staged epoch (VERDICT r11 #3).
     """
     config = config or IngestConfig()
-    from pyspark.sql import functions as F
-
-    df = stream_df
-    if config.partition_by_day and "time" in df.columns:
-        df = df.withColumn("_day", F.to_date("time"))
+    df = _with_day(stream_df)
     stage_root = staging_dir(target)
     checkpoint = config.checkpoint_for(target)
     run_id = _ingest_run_id(checkpoint)
@@ -306,7 +309,7 @@ def start_staged_ingest(
         w = batch_df.write.mode("overwrite").option(
             "maxRecordsPerFile", config.flush_count
         )
-        if config.partition_by_day and "_day" in batch_df.columns:
+        if "_day" in batch_df.columns:
             w = w.partitionBy("_day")
         w.parquet(f"{stage_root}/batch-{run_id}-{epoch_id}")
         if on_flush is not None:
@@ -328,13 +331,13 @@ def commit_staged(target: str, retain_seconds: float = 60.0) -> int:
     """COMMIT half of the dual-cadence shape: atomically publish every
     commit-eligible staged batch into the versioned table at ``target``.
 
-    Builds the next table version as HARDLINKS — the current version's
-    files under their existing names plus each staged batch's parquet
-    files under ``b<epoch>-``-prefixed names (partition subdirs
-    preserved) — then swaps the table symlink via
-    ``maintenance.publish_version`` and clears the published staging
-    dirs. Hardlinking makes a version O(#files) metadata, not a data
-    copy — the manifest-less analogue of an Iceberg snapshot.
+    Builds the next table version with ``maintenance.build_version`` —
+    hardlinks of the current version's files under their existing names
+    plus each staged batch's parquet files under ``b<run>-<epoch>-``
+    prefixed names (partition subdirs preserved) — then swaps the table
+    symlink via ``maintenance.publish_version`` and clears the published
+    staging dirs. A partition that ``maintenance.compact_parquet_table``
+    rewrote is plain files of the live version, carried like any other.
 
     Idempotent across crashes at (RUN, EPOCH) granularity: a staged
     ``batch-<run>-<epoch>`` whose key already has ``b<run>-<epoch>-``
@@ -349,31 +352,29 @@ def commit_staged(target: str, retain_seconds: float = 60.0) -> int:
     against an existing target restarts at epoch 0 and an epoch-only
     key would silently drop its genuinely new batches as "replays"
     (review r11); the per-checkpoint run id from
-    :func:`_ingest_run_id` disambiguates. The name-level skip in
-    ``_link_tree`` remains as a third layer for the copy-preserving
-    replay path. The committed-key manifest comes from ONE walk of the
-    live tree, which also collects the carry-forward file list — so an
-    all-replay drain (post-crash recovery) early-outs after the scan
-    without building, then discarding, a full speculative version tree
-    (ADVICE r11); the version dir is only ever created once at least
-    one fresh batch is known. A crash between that creation and
-    ``publish_version`` can still orphan an unpublished ``__v`` dir —
-    the next successful publish's retention sweep removes it (it
-    matches the version-family prefix, is not the live/just-replaced
-    version, and ages past ``retain_seconds``; proven in
-    tests/test_ingest.py). Returns the number of staged batches
-    drained (0 = nothing eligible).
+    :func:`_ingest_run_id` disambiguates. The keys live only in file
+    names: a compaction rewrites the files of the partitions it
+    compacts under new names, so a batch replayed after its partitions
+    were compacted is published again.
+
+    The committed keys come from ONE walk of the live tree
+    (``maintenance.live_files``), which is also the carry-forward list —
+    so an all-replay drain (post-crash recovery) early-outs after the
+    scan without building, then discarding, a speculative version tree
+    (ADVICE r11). A crash between building a version and publishing it
+    orphans an unpublished ``__v`` dir, which the next publish's
+    retention sweep removes (proven in tests/test_ingest.py). Returns
+    the number of staged batches drained (0 = nothing eligible).
     """
     import os
     import shutil
-    import uuid
 
-    from .maintenance import publish_version
+    from .maintenance import build_version, live_files, publish_version
 
     stage_root = staging_dir(target)
 
     def _batch_key(d: str) -> str:
-        return d.split("-", 1)[1]  # "<run>-<epoch>" (legacy: bare "<epoch>")
+        return d.split("-", 1)[1]  # "<run>-<epoch>"
 
     def _epoch(d: str) -> int:
         return int(d.rsplit("-", 1)[-1])
@@ -390,49 +391,16 @@ def commit_staged(target: str, retain_seconds: float = 60.0) -> int:
     if not batches:
         return 0
 
-    # ONE walk over the live tree: the committed-key manifest for replay
-    # dedup plus the carry-forward file list for the (maybe) new version
-    committed: set[str] = set()
-    live_files: list[tuple[str, str, str]] = []  # (src_dir, rel_dir, name)
-    if os.path.exists(target):
-        live_root = os.path.realpath(target)
-        for dp, _, fs in os.walk(live_root):
-            rel = os.path.relpath(dp, live_root)
-            for f in fs:
-                if not f.endswith(".parquet"):
-                    continue
-                m = _COMMITTED_KEY_RE.match(f)
-                if m:
-                    committed.add(m.group(1))
-                live_files.append((dp, rel, f))
-
+    live = live_files(target)
+    committed = {
+        m.group(1)
+        for _, rel in live
+        if (m := _COMMITTED_KEY_RE.match(os.path.basename(rel)))
+    }
     fresh = [b for b in batches if _batch_key(b) not in committed]
     if fresh:
-        def _link_tree(src_root: str, dst_root: str, prefix: str) -> None:
-            for dp, _, fs in os.walk(src_root):
-                rel = os.path.relpath(dp, src_root)
-                for f in fs:
-                    if f.endswith(".parquet"):
-                        _link_one(dp, rel, f, dst_root, prefix)
-
-        def _link_one(src_dir: str, rel: str, f: str, dst_root: str, prefix: str) -> None:
-            dst_dir = os.path.join(dst_root, rel) if rel != "." else dst_root
-            os.makedirs(dst_dir, exist_ok=True)
-            dst = os.path.join(dst_dir, prefix + f)
-            if not os.path.exists(dst):
-                os.link(os.path.join(src_dir, f), dst)
-
-        new_version = f"{target.rstrip('/')}__v{uuid.uuid4().hex[:8]}"
-        os.makedirs(new_version)
-        for dp, rel, f in live_files:
-            _link_one(dp, rel, f, new_version, "")
-        for b in fresh:
-            _link_tree(
-                os.path.join(stage_root, b),
-                new_version,
-                prefix=f"b{_batch_key(b)}-",
-            )
-        publish_version(target, new_version, retain_seconds)
+        staged = [(os.path.join(stage_root, b), f"b{_batch_key(b)}-") for b in fresh]
+        publish_version(target, build_version(target, live, staged), retain_seconds)
     for b in batches:
         shutil.rmtree(os.path.join(stage_root, b))
     return len(batches)
@@ -498,14 +466,8 @@ class StagedCommitter:
 def ingest_batch(df: DataFrame, target: str, config: IngestConfig | None = None) -> None:
     """Batch append (the generator's batch mode → table), same layout rules."""
     config = config or IngestConfig()
-    from pyspark.sql import functions as F
-
-    out = df
-    writer_cols = []
-    if config.partition_by_day and "time" in df.columns:
-        out = out.withColumn("_day", F.to_date("time"))
-        writer_cols = ["_day"]
+    out = _with_day(df)
     w = out.write.mode("append").option("maxRecordsPerFile", config.flush_count)
-    if writer_cols:
-        w = w.partitionBy(*writer_cols)
+    if "_day" in out.columns:
+        w = w.partitionBy("_day")
     w.parquet(target)

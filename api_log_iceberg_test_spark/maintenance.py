@@ -9,7 +9,17 @@ engine schedules it (BASELINE.json names compaction explicitly):
   issued via ``CALL`` — metadata-transactional, safe under concurrent
   writers.
 - Plain-Parquet table (test environment) → :func:`compact_parquet_table`
-  rewrites a directory to target-sized files with an atomic directory swap.
+  rewrites the table, or one partition of it, to target-sized files.
+
+A plain-Parquet table has one layout. ``<root>`` is a symlink to one
+immutable version dir ``<root>__v<uuid>`` next to it. Every change is a
+whole new version: :func:`build_version` hardlinks the live files that
+stay, the writer adds its new files, and :func:`publish_version` swaps
+the symlink and expires old versions. ``ingest.commit_staged`` publishes
+staged batches this way and :func:`compact_parquet_table` publishes
+rewritten files this way, so a commit and a compaction are both one
+snapshot, as in Iceberg. Readers pin a version with
+:func:`read_compacted_table`.
 
 Scale notes: compaction at 100 TB must be incremental — pass a partition
 predicate (``where``) so each run rewrites only recent partitions (e.g.
@@ -55,24 +65,58 @@ def remove_orphan_files(spark: SparkSession, table: str) -> None:
     spark.sql(f"CALL {catalog}.system.remove_orphan_files(table => '{table}')")
 
 
-def publish_version(
-    root: str,
-    new_version: str,
-    retain_seconds: float = 60.0,
-    versions_dir: str | None = None,
-) -> None:
-    """Atomically publish ``new_version`` as the live contents of ``root``.
+def live_files(root: str) -> list[tuple[str, str]]:
+    """(path, path relative to the version dir) of each parquet file of
+    the version live at ``root``; [] when ``root`` does not exist. One
+    walk, reused for the carry-forward list, replay keys and sizes."""
+    if not os.path.exists(root):
+        return []
+    live = os.path.realpath(root)
+    return [
+        (os.path.join(dp, f), os.path.relpath(os.path.join(dp, f), live))
+        for dp, _, fs in os.walk(live)
+        for f in fs
+        if f.endswith(".parquet")
+    ]
 
-    The commit primitive shared by :func:`compact_parquet_table` and
-    ``ingest.commit_staged`` (the dual-cadence staged-commit path): data
-    lives in versioned directories (siblings ``<root>__v<uuid>`` by
-    default, or inside ``versions_dir`` when the caller must keep them
-    out of an enclosing table root — per-partition compaction), ``root``
-    is a symlink, and the commit is ``os.rename`` of a prepared symlink
-    over the live one — a single atomic syscall. Handles the three root
-    states: absent (first publish just links), plain directory (one-time
-    migration to the versioned layout — rename+symlink, the only
-    non-atomic step this layout ever performs), symlink (atomic swap).
+
+def build_version(root: str, carried, staged=()) -> str:
+    """Hardlink ``carried`` (pairs from :func:`live_files`) and every
+    parquet file of each staged ``(tree, prefix)`` pair, under its
+    relative dir as ``prefix + name``, into a fresh ``<root>__v<uuid>``
+    dir, and return that dir. A partition compaction carries all but the
+    partition it rewrites, a whole-table compaction nothing, and
+    ``commit_staged`` everything plus its batches under
+    ``b<run>-<epoch>-``. A version is O(#files) metadata, the
+    manifest-less analogue of an Iceberg snapshot: the caller adds its
+    new files and publishes it with :func:`publish_version`, after which
+    it is never modified."""
+    new_version = f"{root.rstrip('/')}__v{uuid.uuid4().hex[:8]}"
+    links = list(carried) + [
+        (os.path.join(dp, f), os.path.join(os.path.relpath(dp, tree), prefix + f))
+        for tree, prefix in staged
+        for dp, _, fs in os.walk(tree)
+        for f in fs
+        if f.endswith(".parquet")
+    ]
+    os.makedirs(new_version)
+    for src, rel in links:
+        dst = os.path.normpath(os.path.join(new_version, rel))
+        os.makedirs(os.path.dirname(dst), exist_ok=True)
+        os.link(src, dst)
+    return new_version
+
+
+def publish_version(root: str, new_version: str, retain_seconds: float = 60.0) -> None:
+    """Atomically publish ``new_version`` (from :func:`build_version`) as
+    the live contents of ``root``.
+
+    ``root`` is a symlink to one ``<root>__v<uuid>`` sibling, and the
+    commit is ``os.rename`` of a prepared symlink over the live one — a
+    single atomic syscall. Handles the three root states: absent (first
+    publish just links), plain directory (one-time migration to the
+    versioned layout — rename+symlink, the only non-atomic step this
+    layout ever performs), symlink (atomic swap).
 
     Superseded versions survive at least ``retain_seconds`` AFTER THE
     SWAP THAT REPLACED THEM (and the just-replaced version always
@@ -83,22 +127,21 @@ def publish_version(
     (a version dir is immutable once published, so its natural mtime
     would mean "created at" — under back-to-back swaps that would expire
     a version almost immediately after it was replaced, rug-pulling a
-    reader that pinned it within the window; ADVICE r10).
+    reader that pinned it within the window; ADVICE r10). The sweep also
+    removes an unpublished ``__v`` dir left by a crash before its
+    publish, once it is older than ``retain_seconds``.
     """
     import time
 
+    root = root.rstrip("/")
     parent = os.path.dirname(root) or "."
-    vdir = versions_dir or parent
-    # the version-family prefix is derived from the version NAME, not from
-    # root: versions_dir layouts name versions after the flattened subdir
-    prefix = os.path.basename(new_version).rsplit("__v", 1)[0] + "__v"
+    prefix = os.path.basename(root) + "__v"
     current = None
     if os.path.islink(root):
         current = os.path.realpath(root)
     elif os.path.exists(root):
         # one-time migration: plain dir → versioned layout
-        os.makedirs(vdir, exist_ok=True)
-        current = os.path.join(vdir, f"{prefix}{uuid.uuid4().hex[:8]}")
+        current = os.path.join(parent, f"{prefix}{uuid.uuid4().hex[:8]}")
         os.rename(root, current)
         os.symlink(os.path.relpath(current, parent), root)
     if current is None:
@@ -116,8 +159,8 @@ def publish_version(
     # retain_seconds ago; drop the rest
     keep = {os.path.realpath(current), os.path.realpath(new_version)}
     cutoff = time.time() - retain_seconds
-    for entry in os.listdir(vdir):
-        full = os.path.join(vdir, entry)
+    for entry in os.listdir(parent):
+        full = os.path.join(parent, entry)
         if (
             entry.startswith(prefix)
             and os.path.realpath(full) not in keep
@@ -128,17 +171,18 @@ def publish_version(
 
 
 def read_compacted_table(spark: SparkSession, path: str):
-    """Open a (possibly version-symlinked) parquet table PINNED to the
-    version live at call time.
+    """Open a version-symlinked parquet table PINNED to the version live
+    at call time.
 
-    This is the reader half of :func:`compact_parquet_table`'s commit
-    protocol — the parquet-fallback analogue of a table format's snapshot
-    pin. Resolving the symlink BEFORE listing means the scan's file paths
-    go through the immutable versioned directory, so a swap that lands
-    mid-query repoints ``path`` without touching the files this reader
-    already listed (they survive for ``retain_seconds``). Reading through
-    the un-resolved symlink instead would re-resolve per file open and
-    rug-pull the scan — the failure mode the concurrency test provokes.
+    This is the reader half of :func:`publish_version`'s commit protocol
+    — the parquet-fallback analogue of a table format's snapshot pin.
+    Resolving the symlink BEFORE listing means the scan's file paths go
+    through the immutable version directory, so a commit or compaction
+    that lands mid-query repoints ``path`` without touching the files
+    this reader already listed (they survive for ``retain_seconds``).
+    Reading through the un-resolved symlink instead would re-resolve per
+    file open and rug-pull the scan — the failure mode the concurrency
+    test provokes.
     """
     return spark.read.parquet(os.path.realpath(path))
 
@@ -150,69 +194,51 @@ def compact_parquet_table(
     partition_subdir: str | None = None,
     retain_seconds: float = 60.0,
 ) -> int:
-    """Compact a Parquet directory to ~target-sized files, atomically
-    under concurrent readers.
+    """Compact a Parquet table, or one partition of it, to ~target-sized
+    files, atomically under concurrent readers.
 
-    Reads the (sub)directory, coalesces to ceil(bytes/target) files, and
-    commits by SYMLINK SWAP: data lives in versioned sibling directories
-    (``<root>__v<uuid>``) and ``root`` is a symlink whose replacement —
-    ``os.rename`` of one symlink over another — is a single atomic
-    syscall. The pre-r10 form renamed the directory itself, which left a
-    window where ``root`` did not exist (reader: path-not-found) and
-    deleted the old files immediately (reader that had already listed
-    them: file-not-found mid-scan). Now a reader that pins the version at
-    open time (:func:`read_compacted_table`) sees the OLD version or the
-    NEW version, never a gap — proven under a concurrent reader/compactor
-    loop in tests/test_storage.py.
+    A compaction is one more table version, like a ``commit_staged``
+    commit (and like a ``rewrite_data_files`` snapshot in Iceberg):
+    :func:`build_version` links every live file outside the compacted
+    scope into a fresh version, the scope's rows are read from the live
+    version and coalesced to ceil(bytes/target) files written into the
+    same place in the new version (``<new_version>/<partition_subdir>``,
+    or the whole version), and :func:`publish_version` swaps the table
+    symlink. A reader pinned at open time (:func:`read_compacted_table`)
+    sees the OLD version or the NEW version, never a gap — proven under
+    a concurrent reader/compactor loop in tests/test_storage.py — and
+    whole-root reads never see a version dir or symlink inside the table.
 
     Retention is TIME-based, like ``expire_snapshots``'s ``older_than``:
     a superseded version survives at least ``retain_seconds`` after the
-    swap that replaced it (``publish_version`` re-stamps mtime at
-    supersede time; ADVICE r10) plus the just-replaced version always
-    survives this call, so any reader shorter than ``retain_seconds`` is
-    safe no matter how many swaps land mid-scan. Pass
-    ``retain_seconds=0`` during a read quiesce to shrink to the live +
-    just-replaced pair.
+    swap that replaced it, plus the just-replaced version always survives
+    this call, so any reader shorter than ``retain_seconds`` is safe no
+    matter how many swaps land mid-scan. Pass ``retain_seconds=0``
+    during a read quiesce to shrink to the live + just-replaced pair.
 
-    With ``partition_subdir`` the version directories live OUTSIDE the
-    table root, in ``<path>__versions/`` (ADVICE r10: siblings inside the
-    root would surface in whole-table reads as duplicate rows or bogus
-    partition values like ``_day=...__v1a2b``); the partition subdir
-    itself becomes a symlink pointing out, whose NAME still carries the
-    partition key — whole-root partition-discovery reads stay clean,
-    proven in tests/test_storage.py.
+    Compacting renames the files it rewrites, so the ``b<run>-<epoch>-``
+    names that ``commit_staged``'s replay dedup keys on are gone from
+    the compacted scope: compact only partitions whose staged batches
+    can no longer be replayed.
 
     First call on a plain directory migrates it to the versioned layout —
     that one-time step is rename+symlink (two syscalls, not atomic; run
     it before opening the table to readers). Concurrent WRITERS are out
-    of scope (files appended between the read and the swap would be
-    dropped) — that is what the Iceberg path's metadata-transactional
-    ``rewrite_data_files`` is for; on plain parquet, compact closed
-    partitions only (``partition_subdir``).
+    of scope (a commit between the read and the swap would be dropped)
+    — that is what the Iceberg path's metadata-transactional
+    ``rewrite_data_files`` is for.
 
     Returns the new file count.
     """
-    root = os.path.join(path, partition_subdir) if partition_subdir else path
-    df = spark.read.parquet(os.path.realpath(root))
-    size = sum(
-        os.path.getsize(os.path.join(dp, f))
-        for dp, _, fs in os.walk(root, followlinks=True)
-        for f in fs
-        if f.endswith(".parquet")
-    )
+    sub = os.path.join((partition_subdir or "").strip("/"), "")  # "": whole table
+    files = live_files(path)
+    size = sum(os.path.getsize(src) for src, rel in files if rel.startswith(sub))
     n_files = max(1, -(-size // target_file_size_bytes))
-    if partition_subdir:
-        # versions must NOT be siblings of the partition dir — they would
-        # sit inside the table root and pollute whole-table reads
-        versions_dir = path.rstrip("/") + "__versions"
-        os.makedirs(versions_dir, exist_ok=True)
-        flat = partition_subdir.strip("/").replace("/", "__")
-        new_version = os.path.join(versions_dir, f"{flat}__v{uuid.uuid4().hex[:8]}")
-    else:
-        versions_dir = None
-        new_version = f"{root}__v{uuid.uuid4().hex[:8]}"
-    df.coalesce(n_files).write.mode("overwrite").parquet(new_version)
-    publish_version(root, new_version, retain_seconds, versions_dir=versions_dir)
+    df = spark.read.parquet(os.path.join(os.path.realpath(path), sub))
+    carried = [(src, rel) for src, rel in files if not rel.startswith(sub)]
+    new_version = build_version(path, carried)
+    df.coalesce(n_files).write.mode("overwrite").parquet(os.path.join(new_version, sub))
+    publish_version(path, new_version, retain_seconds)
     return n_files
 
 

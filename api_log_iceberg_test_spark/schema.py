@@ -144,10 +144,7 @@ def load_table_time_range(
 
     from pyspark.sql import functions as F
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    path = f"{sf_dir}/{name}.parquet"
-    df, ns_cols = _read_parquet(spark, path)
+    df, ns_cols = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
     def to_ns(ts_str: str) -> int:
         d = dt.datetime.fromisoformat(ts_str).replace(tzinfo=dt.timezone.utc)
@@ -163,9 +160,7 @@ def load_table_time_range(
             df = df.filter(F.col(time_col) > F.to_timestamp(F.lit(lower)))
         if upper is not None:
             df = df.filter(F.col(time_col) <= F.to_timestamp(F.lit(upper)))
-    for col in ns_cols:
-        df = df.withColumn(col, F.timestamp_micros(F.expr(f"`{col}` div 1000")))
-    return df
+    return _nanos_to_micros(df, ns_cols)
 
 
 def fan_out(df, min_parallelism: int | None = None):
@@ -233,13 +228,29 @@ _table_meta: dict[str, tuple] = {}
 
 
 def _read_parquet(spark, path: str):
-    """(DataFrame over ``path``, its nanos timestamp column names)."""
+    """(DataFrame over ``path``, the TIMESTAMP(NANOS) columns it surfaces
+    as int64 nanoseconds).
+
+    The caller may hand us a stock SparkSession (the driver does). Both
+    confs are runtime-settable SQL confs and required for correct reads:
+    nanos parquet timestamps otherwise abort the scan (PARQUET_TYPE_ILLEGAL)
+    and non-UTC session timezones skew timestamp comparisons vs the oracle.
+    """
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
     sig = _file_signature(path)
     hit = _table_meta.get(path)
     if sig is not None and hit is not None and hit[0] == sig:
         return spark.read.schema(hit[1]).parquet(path), hit[2]
     df = spark.read.parquet(path)
-    ns_cols = _nanos_timestamp_columns(path)
+    # INT96 timestamps also read as timestamp[ns] in the pyarrow footer,
+    # but Spark maps them to TimestampType directly: only the columns the
+    # scan surfaces as long are nanos
+    ns_cols = tuple(
+        c
+        for c in _nanos_timestamp_columns(path)
+        if df.schema[c].dataType.typeName() == "long"
+    )
     if sig is not None:
         _table_meta[path] = (sig, df.schema, ns_cols)
     return df, ns_cols
@@ -252,22 +263,14 @@ def load_table(spark, sf_dir: str, name: str):
     (microseconds, truncating) so event-time semantics match the DuckDB
     oracle, which also compares at µs after canonicalization.
     """
+    return _nanos_to_micros(*_read_parquet(spark, f"{sf_dir}/{name}.parquet"))
+
+
+def _nanos_to_micros(df, ns_cols):
+    """``df`` with each int64-nanos column of ``_read_parquet`` converted
+    to a microsecond TimestampType (truncating)."""
     from pyspark.sql import functions as F
 
-    # The caller may hand us a stock SparkSession (the driver does). Both
-    # confs are runtime-settable SQL confs and required for correct reads:
-    # nanos parquet timestamps otherwise abort the scan (PARQUET_TYPE_ILLEGAL)
-    # and non-UTC session timezones skew timestamp comparisons vs the oracle.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-
-    path = f"{sf_dir}/{name}.parquet"
-    df, ns_cols = _read_parquet(spark, path)
     for col in ns_cols:
-        # Only convert if the scan actually surfaced the column as a long
-        # (TIMESTAMP(NANOS) + nanosAsLong). INT96 timestamps also read as
-        # timestamp[ns] in the pyarrow footer but Spark maps them to
-        # TimestampType directly — converting those would be a type error.
-        if df.schema[col].dataType.typeName() == "long":
-            df = df.withColumn(col, F.timestamp_micros(F.expr(f"`{col}` div 1000")))
+        df = df.withColumn(col, F.timestamp_micros(F.expr(f"`{col}` div 1000")))
     return df

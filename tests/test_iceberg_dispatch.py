@@ -101,7 +101,7 @@ def test_start_ingest_totable_dispatch(spark, tmp_path):
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     try:
         stream = spark.readStream.schema(API_LOG_SCHEMA).parquet(src)
-        # DEFAULT config (partition_by_day=True): the table side must still
+        # DEFAULT config (parquet targets get _day): the table side must still
         # receive the unmodified 14-column schema — the _day helper is a
         # parquet-layout concern only (regression: it used to leak in)
         q = start_ingest(

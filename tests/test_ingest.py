@@ -354,7 +354,8 @@ def test_run_id_sidecar_exclusive_and_validated(tmp_path):
 def test_commit_staged_skips_stray_batch_dirs(spark, tmp_path):
     """ADVICE r11: a non-conforming dir under staging (e.g. 'batch-tmp'
     with a _SUCCESS) must be ignored, not wedge the committer tick with
-    a ValueError from int()."""
+    a ValueError from int(). A bare 'batch-<epoch>' dir (no run id) is
+    non-conforming too."""
     from api_log_iceberg_test_spark.ingest import commit_staged, start_staged_ingest
     from api_log_iceberg_test_spark.ingest import staging_dir as _staging
     from api_log_iceberg_test_spark.maintenance import read_compacted_table
@@ -372,13 +373,45 @@ def test_commit_staged_skips_stray_batch_dirs(spark, tmp_path):
     q.awaitTermination(120)
     stage = _staging(tgt)
     real = [d for d in os.listdir(stage) if d.startswith("batch-")]
-    stray = os.path.join(stage, "batch-tmp")
-    os.makedirs(stray)
-    open(os.path.join(stray, "_SUCCESS"), "w").close()
+    strays = [os.path.join(stage, d) for d in ("batch-tmp", "batch-7")]
+    for stray in strays:
+        os.makedirs(stray)
+        open(os.path.join(stray, "_SUCCESS"), "w").close()
 
-    assert commit_staged(tgt) == len(real)  # stray neither counted nor fatal
+    assert commit_staged(tgt) == len(real)  # strays neither counted nor fatal
     assert read_compacted_table(spark, tgt).count() == n
-    assert os.path.isdir(stray), "stray dir must be left alone, not deleted"
+    for stray in strays:
+        assert os.path.isdir(stray), "stray dir must be left alone, not deleted"
+
+
+def test_commit_after_partition_compaction_keeps_rows(spark, tmp_path):
+    """A commit after a per-day compaction carries the compacted day
+    forward: compaction publishes a whole table version, so the next
+    commit_staged links its files like any other live files."""
+    from api_log_iceberg_test_spark.ingest import commit_staged, start_staged_ingest
+    from api_log_iceberg_test_spark.maintenance import (
+        compact_parquet_table,
+        read_compacted_table,
+    )
+
+    src, tgt = str(tmp_path / "src"), str(tmp_path / "table" / "api")
+    config = IngestConfig(flush_count=50, checkpoint_dir=str(tmp_path / "ckpt"))
+
+    def ingest(batch: int) -> None:
+        generate_api_logs(
+            spark, 300, seed=batch, span_days=2, num_partitions=2
+        ).write.parquet(f"{src}/b{batch}")
+        stream = spark.readStream.schema(API_LOG_SCHEMA).parquet(f"{src}/*")
+        start_staged_ingest(stream, tgt, config, available_now=True).awaitTermination(120)
+        assert commit_staged(tgt) == 1
+
+    ingest(0)
+    days = sorted(d for d in os.listdir(tgt) if d.startswith("_day="))
+    compact_parquet_table(spark, tgt, partition_subdir=days[0])
+    assert read_compacted_table(spark, tgt).count() == 300
+    ingest(1)
+    assert read_compacted_table(spark, tgt).count() == 600
+    assert spark.read.parquet(tgt).count() == 600
 
 
 def test_all_replay_drain_creates_no_version_dir(spark, tmp_path):

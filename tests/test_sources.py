@@ -77,7 +77,7 @@ def test_streaming_jsonl_to_ingest(spark, tmp_path):
     q.awaitTermination(120)
     got = spark.read.parquet(tgt)
     assert got.count() == 200
-    # event-time values survive the format hop (partition_by_day derived col)
+    # event-time values survive the format hop (_day is derived from time)
     assert got.filter(F.col("time").isNull()).count() == 0
 
 

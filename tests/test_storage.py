@@ -208,22 +208,28 @@ def test_publish_version_retains_just_superseded(tmp_path):
     assert os.path.realpath(root) == os.path.realpath(vb)
 
 
+def _bucketed_events(spark, sf_dir, tgt):
+    """events (event_id, event_type) written under tgt partitioned by
+    _bucket = event_id mod 2, 8 small files; returns the row count."""
+    ev = load_table(spark, sf_dir, "events").select("event_id", "event_type")
+    ev.withColumn("_bucket", F.pmod(F.col("event_id"), F.lit(2))).repartition(
+        8
+    ).write.partitionBy("_bucket").parquet(tgt)
+    return ev.count()
+
+
 def test_partition_compaction_keeps_whole_root_reads_clean(spark, sf_dir, tmp_path):
     """ADVICE r10: per-partition compaction must not leave version dirs
     INSIDE the table root — a whole-table read would see duplicate rows
-    or parse '<part>__v1a2b' as a bogus partition value. Versions now
-    live in <path>__versions/ with the partition symlink pointing out."""
-    import glob
+    or parse '<part>__v1a2b' as a bogus partition value. A partition
+    compaction publishes a whole table version like any other commit, so
+    the live version holds only plain partition dirs and files."""
     import os
 
     from api_log_iceberg_test_spark.maintenance import compact_parquet_table
 
     tgt = str(tmp_path / "events_part")
-    ev = load_table(spark, sf_dir, "events").select("event_id", "event_type")
-    n_rows = ev.count()
-    ev.withColumn("_bucket", F.pmod(F.col("event_id"), F.lit(2))).repartition(
-        8
-    ).write.partitionBy("_bucket").parquet(tgt)
+    n_rows = _bucketed_events(spark, sf_dir, tgt)
 
     # compact one partition twice (second swap exercises retention too)
     compact_parquet_table(spark, tgt, target_file_size_bytes=1 << 16,
@@ -231,11 +237,12 @@ def test_partition_compaction_keeps_whole_root_reads_clean(spark, sf_dir, tmp_pa
     compact_parquet_table(spark, tgt, target_file_size_bytes=1 << 30,
                           partition_subdir="_bucket=0")
 
-    # no version dirs inside the table root; versions live outside
-    inside = [e for e in os.listdir(tgt) if "__v" in e or "__swap" in e]
-    assert not inside, inside
-    assert glob.glob(tgt + "__versions/_bucket=0__v*")
-    assert os.path.islink(os.path.join(tgt, "_bucket=0"))
+    # no symlink and no version or swap entry below the live version
+    live = os.path.realpath(tgt)
+    for dp, dirs, fs in os.walk(live):
+        for e in dirs + fs:
+            assert not os.path.islink(os.path.join(dp, e)), (dp, e)
+            assert "__v" not in e and "__swap" not in e, (dp, e)
 
     # whole-root read: full row count, correct partition values, no dupes
     got = spark.read.parquet(tgt)
@@ -245,6 +252,58 @@ def test_partition_compaction_keeps_whole_root_reads_clean(spark, sf_dir, tmp_pa
     ) == [0, 1]
     per_key = got.groupBy("event_id").count().filter(F.col("count") > 1).count()
     assert per_key == 0
+
+
+def test_pinned_reader_survives_partition_compaction(spark, sf_dir, tmp_path):
+    """A reader pinned by read_compacted_table keeps its rows when a
+    partition compaction lands between open and scan, on the first and
+    on a later compaction of the partition: the version it pinned is
+    immutable and retained."""
+    import os
+
+    from api_log_iceberg_test_spark.maintenance import (
+        compact_parquet_table,
+        read_compacted_table,
+    )
+
+    # a versioned table, as commit_staged leaves it: the root is a
+    # symlink to its one version dir
+    tgt = str(tmp_path / "events_pinned")
+    n_rows = _bucketed_events(spark, sf_dir, tgt + "__v00000000")
+    os.symlink("events_pinned__v00000000", tgt)
+    for target_size in (1 << 16, 1 << 30):
+        pinned = read_compacted_table(spark, tgt)
+        compact_parquet_table(spark, tgt, target_file_size_bytes=target_size,
+                              partition_subdir="_bucket=0")
+        assert pinned.count() == n_rows
+        assert read_compacted_table(spark, tgt).count() == n_rows
+
+
+def test_load_table_time_range_int96(spark, tmp_path):
+    """INT96 timestamps read as timestamp[ns] in the pyarrow footer but as
+    TimestampType in Spark: the time-range loader must filter them as
+    timestamps, like a micros column, and leave them unconverted."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from api_log_iceberg_test_spark.schema import load_table_time_range
+
+    ts = [dt.datetime(2024, 1, d, 12) for d in (1, 2, 3, 4)]
+    path = tmp_path / "t.parquet" / "part-00000.parquet"
+    path.parent.mkdir()
+    pq.write_table(
+        pa.table({"a": [1, 2, 3, 4], "ts": pa.array(ts, pa.timestamp("ns"))}),
+        path,
+        use_deprecated_int96_timestamps=True,
+    )
+    got = load_table_time_range(
+        spark, str(tmp_path), "t", "ts", lower="2024-01-01 12:00:00",
+        upper="2024-01-03 12:00:00",
+    )
+    assert got.schema["ts"].dataType.typeName() == "timestamp"
+    assert sorted(r.a for r in got.collect()) == [2, 3]
+    assert load_table(spark, str(tmp_path), "t").count() == 4
 
 
 def test_load_table_rereads_rewritten_part_file(spark, tmp_path):
