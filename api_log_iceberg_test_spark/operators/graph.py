@@ -13,18 +13,15 @@ caller's flag; the gates and checkpoint cadences are module constants:
 
 * :func:`pagerank` — fixed-iteration power method. Up to
   ``_PAGERANK_DRIVER_NODE_LIMIT`` nodes the graph is metadata-sized and
-  the driver iterates a collected edge list; above it each iteration joins
-  the rank vector (one row per node) to the edge list, cached and
-  partitioned on ``src``, and re-aggregates the contributions on ``dst``
-  (one map-side-combined shuffle), with lineage cut by ``localCheckpoint``
-  every ``_PAGERANK_CHECKPOINT_ROUNDS`` iterations.
+  the driver iterates a collected edge list; above it the iterations run
+  as lean rounds (below), checkpointed every
+  ``_PAGERANK_CHECKPOINT_ROUNDS`` rounds.
 * :func:`label_propagation` — synchronous weighted LPA (Raghavan, Albert &
   Kumara 2007) with a deterministic smallest-label tie-break in place of
-  the paper's random one. Each round looks source labels up in the
-  broadcast label vector and aggregates inside the ``dst`` partitions of the
-  cached edge list — community detection at near-linear cost per round,
-  the standard choice at web scale where modularity methods don't shard.
-  Labels are checkpointed every ``_LPA_CHECKPOINT_ROUNDS`` rounds.
+  the paper's random one, in lean rounds checkpointed every
+  ``_LPA_CHECKPOINT_ROUNDS`` rounds — community detection at near-linear
+  cost per round, the standard choice at web scale where modularity
+  methods don't shard.
 * :func:`triangle_counts` — degree-ordered edge orientation (each
   undirected edge directed from its lower-(degree, id) endpoint), then a
   neighbor-array intersection per oriented edge. Orientation bounds each
@@ -33,6 +30,13 @@ caller's flag; the gates and checkpoint cadences are module constants:
   celebrity node with 10M neighbors would otherwise emit 10M² wedges).
   Its joins broadcast up to ``_TRIANGLE_BROADCAST_ROW_LIMIT`` edges and
   shuffle past it.
+
+Both iterative operators compute a recurrence in which a node's next value
+is an aggregate over its in-edges of the sources' current values, and both
+run it through one loop, :func:`_lean_rounds`: the edges are cached
+hash-partitioned on ``dst``, and a round looks each source's value up in
+the previous round's broadcast |V|-row vector and aggregates inside the
+partitions, so no edge row crosses an exchange.
 
 Oracle strategy: PageRank with FIXED k unrolls to a k-step CTE chain in
 ANSI SQL (no recursive CTE needed — see ``registry._pagerank_oracle``);
@@ -93,15 +97,14 @@ def _pagerank_driver(
 
     The event-type transition graph is |types|²-bounded at ANY corpus
     scale (its nodes are schema values, not data rows), yet the
-    distributed loop pays k joins + aggregates + eager checkpoints —
-    ~15 Spark jobs to multiply a ≤256-node matrix ten times. Guide §5:
-    the driver should do no DATA work, but this is METADATA-sized (the
-    gate bounds the collect at ``_PAGERANK_DRIVER_NODE_LIMIT``², 64
-    KB-class), like the repo's sketch blobs and boundary samples.
-    Identical recurrence, same double arithmetic order per node
-    (contributions accumulate in sorted (src, dst) order; every registered
-    consumer rounds to 6dp, and the differential oracle pins equality at
-    each SF).
+    distributed loop pays a Spark job per broadcast and checkpoint to
+    multiply a ≤256-node matrix. Guide §5: the driver should do no DATA
+    work, but this is METADATA-sized (the gate bounds the collect at
+    ``_PAGERANK_DRIVER_NODE_LIMIT``², 64 KB-class), like the repo's sketch
+    blobs and boundary samples. Identical recurrence, same double
+    arithmetic order per node (contributions accumulate in sorted (src,
+    dst) order; every registered consumer rounds to 6dp, and the
+    differential oracle pins equality at each SF).
     """
     from pyspark.sql import types as T
 
@@ -148,70 +151,35 @@ def pagerank(edges: DataFrame, k: int = 10, damping: float = 0.85) -> DataFrame:
     transition graphs this repo builds have no dangling nodes.
 
     Scale: graphs of at most ``_PAGERANK_DRIVER_NODE_LIMIT`` nodes run on
-    the driver (:func:`_pagerank_driver`). Above it, nodes/out-weights are
-    computed once. Each iteration joins the rank vector (|V| rows) to the
-    edge list on ``src`` and re-aggregates on ``dst`` — one shuffle of |V|
-    rows plus one of |E| partial sums; the edge list itself is cached and
-    its ``src`` partitioning reused across all k iterations.
-    ``localCheckpoint`` every ``_PAGERANK_CHECKPOINT_ROUNDS`` rounds
-    truncates lineage so the optimizer never sees a k-deep plan (the
-    classic iterative-algorithm failure mode on Spark).
+    the driver (:func:`_pagerank_driver`). Above it each edge carries
+    ``frac = w/out(src)`` and a :func:`_lean_rounds` round sums
+    ``rank[src]·frac`` per ``dst``; nodes without in-edges hold ``(1-d)/N``.
     """
+    if k < 1:
+        raise ValueError(f"pagerank needs k >= 1 iterations, got {k}")
     edges = edges.select("src", "dst", "w")
-    # cached: referenced in every iteration's left join — without the cache
-    # each round would re-derive the distinct (and the caller's edge
-    # extraction under it) from scratch
-    nodes = (
-        edges.select(F.explode(F.array("src", "dst")).alias("node"))
-        .distinct()
-        .cache()
-    )
-    n_nodes = nodes.count()  # driver-side scalar: |V| (bounded — node table)
+    # driver-side scalar: |V| (bounded — node table)
+    n = edges.select(F.explode(F.array("src", "dst"))).distinct().count()
     # r15 small-graph gate: |V| bounds |E| at |V|² — metadata-sized. One
-    # collect replaces the k-round join/agg/checkpoint loop (see
-    # _pagerank_driver; parity with the loop pinned in tests).
-    if n_nodes <= _PAGERANK_DRIVER_NODE_LIMIT:
-        nodes.unpersist()
-        return _pagerank_driver(edges, n_nodes, k, damping)
+    # collect replaces the k-round loop (see _pagerank_driver; parity with
+    # the loop pinned in tests).
+    if n <= _PAGERANK_DRIVER_NODE_LIMIT:
+        return _pagerank_driver(edges, n, k, damping)
     out_w = edges.groupBy("src").agg(F.sum("w").alias("out_total"))
-    # contribution edge: src -> dst carrying w/out(src); cached + hash-
-    # partitioned on src once so every iteration's join reuses the exchange.
-    # Partition count pinned to cluster parallelism, NOT
-    # spark.sql.shuffle.partitions: an iterative loop multiplies the
-    # per-stage task overhead by k, and a stock 200-partition session
-    # measured 8x slower on a 230k-edge graph purely from empty-task
-    # scheduling (AQE coalescing doesn't apply to the cached layout).
-    par = edges.sparkSession.sparkContext.defaultParallelism
-    contrib_edges = (
-        edges.join(out_w, "src")
-        .select("src", "dst", (F.col("w") / F.col("out_total")).alias("frac"))
-        .repartition(par, "src")
-        .cache()
+    frac = edges.join(out_w, "src").select(
+        "src", "dst", (F.col("w") / F.col("out_total")).alias("frac")
     )
-    n = n_nodes
-    ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
-    for i in range(k):
-        contribs = (
-            contrib_edges.join(ranks, contrib_edges.src == ranks.node)
-            .select("dst", (F.col("rank") * F.col("frac")).alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("in_sum"))
+    base = F.lit((1.0 - damping) / n)
+
+    def step(votes, rank):
+        in_sum = F.sum(rank * F.col("frac"))
+        return votes.groupBy(F.col("dst").alias("node")).agg(
+            (base + F.lit(damping) * in_sum).alias("rank")
         )
-        new_ranks = nodes.join(
-            contribs, nodes.node == contribs.dst, "left"
-        ).select(
-            "node",
-            (
-                F.lit((1.0 - damping) / n)
-                + F.lit(damping) * F.coalesce(F.col("in_sum"), F.lit(0.0))
-            ).alias("rank"),
-        )
-        if (i + 1) % _PAGERANK_CHECKPOINT_ROUNDS == 0 or i == k - 1:
-            new_ranks = new_ranks.localCheckpoint(eager=True)
-        ranks = new_ranks
-    nodes.unpersist()
-    contrib_edges.unpersist()
-    return ranks
+
+    return _lean_rounds(
+        frac, k, _PAGERANK_CHECKPOINT_ROUNDS, F.lit(1.0 / n), base, step
+    )
 
 
 def cooccurrence_edges(
@@ -350,6 +318,46 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     return corners.groupBy("node").agg(F.count(F.lit(1)).alias("n_triangles"))
 
 
+def _lean_rounds(edges, k, every, first, missing, aggregate) -> DataFrame:
+    """k lean rounds of a node-vector recurrence over ``edges`` (src, dst, …).
+
+    Round 0 gives each edge the source value ``first``; later rounds look
+    it up as ``coalesce(V[src], missing)`` in the previous round's vector
+    V, which holds exactly the nodes with in-edges. ``aggregate(votes,
+    value)`` maps the edges with their source values to the next vector
+    (node, value), grouped on ``dst``. After the last round the nodes
+    without in-edges join with ``missing``: the lookup misses exactly them
+    (an anti-join finds them when k = 1). The edges are cached on ``dst``
+    at cluster parallelism, not ``spark.sql.shuffle.partitions`` (a stock
+    200-partition session would pay k times for empty tasks); the vector
+    is checkpointed every ``every`` rounds and in the last one, and the
+    cache is released before returning.
+    """
+    par = edges.sparkSession.sparkContext.defaultParallelism
+    ed = edges.repartition(par, "dst").cache()
+    prev = None
+    for i in range(k):
+        if prev is None:
+            votes, value = ed, first
+        else:
+            looked_up = F.col(prev.columns[1])
+            votes = ed.join(prev, ed.src == prev.node, "left")
+            value = F.coalesce(looked_up, missing)
+        vec = aggregate(votes, value)
+        if i == k - 1:
+            src_only = (
+                votes.filter(looked_up.isNull())
+                if prev is not None
+                else ed.join(vec, ed.src == vec.node, "left_anti")
+            ).select("src")
+            vec = vec.union(src_only.distinct().select("src", missing))
+        if (i + 1) % every == 0 or i == k - 1:
+            vec = vec.localCheckpoint(eager=True)
+        prev = vec
+    ed.unpersist()
+    return prev
+
+
 def label_propagation(edges: DataFrame, k: int = 3) -> DataFrame:
     """k rounds of synchronous weighted label propagation over directed
     edges (src, dst, w); symmetrize first for undirected graphs. Returns
@@ -366,27 +374,16 @@ def label_propagation(edges: DataFrame, k: int = 3) -> DataFrame:
     result is well-defined whether or not the labeling has stabilized,
     and the SQL oracle unrolls the identical k rounds.
 
-    Scale: the edge list is cached hash-partitioned on ``dst``, so each
-    round's weight sum and arg-max run inside each partition, with no
-    exchange over the edges. Later rounds look each edge's label up as
-    ``coalesce(L[src], src)`` in the previous round's broadcast label
-    vector L, which holds exactly the nodes with in-edges: no join back to
-    the old labels; the others keep their own id and join after the last
-    round. ``localCheckpoint`` every ``_LPA_CHECKPOINT_ROUNDS`` rounds
-    keeps the plan flat in k; the edge cache is released before returning.
+    Scale: :func:`_lean_rounds` runs the rounds; an edge's label is
+    ``coalesce(L[src], src)`` in the previous label vector L.
     """
     if k < 1:
         raise ValueError(f"label_propagation needs k >= 1 rounds, got {k}")
-    edges = edges.select("src", "dst", "w")
-    par = edges.sparkSession.sparkContext.defaultParallelism
-    ed = edges.repartition(par, "dst").cache()
-    prev = None
-    for i in range(k):
-        votes = ed if prev is None else ed.join(prev, ed.src == prev.node, "left")
-        label = F.col("src") if prev is None else F.coalesce("label", "src")
+
+    def vote(votes, label):
         # arg-max, ties to the smallest label, in hash aggregates only (a
         # struct min sorts): weight per label, min label per weight, top weight
-        labels = (
+        return (
             votes.groupBy("dst", label.alias("label"))
             .agg(F.sum("w").alias("c"))
             .groupBy("dst", "c")
@@ -394,15 +391,8 @@ def label_propagation(edges: DataFrame, k: int = 3) -> DataFrame:
             .groupBy(F.col("dst").alias("node"))
             .agg(F.max_by("label", "c").alias("label"))
         )
-        if i == k - 1:  # add the nodes without in-edges, labelled by themselves
-            src_only = (  # the lookup misses exactly them: no second broadcast
-                votes.filter(F.col("label").isNull())
-                if prev is not None
-                else ed.join(labels, ed.src == labels.node, "left_anti")
-            ).select("src")
-            labels = labels.union(src_only.distinct().select("src", "src"))
-        if (i + 1) % _LPA_CHECKPOINT_ROUNDS == 0 or i == k - 1:
-            labels = labels.localCheckpoint(eager=True)
-        prev = labels
-    ed.unpersist()
-    return prev
+
+    src = F.col("src")
+    return _lean_rounds(
+        edges.select("src", "dst", "w"), k, _LPA_CHECKPOINT_ROUNDS, src, src, vote
+    )

@@ -3320,6 +3320,29 @@ def _pagerank_oracle(
 ORACLE["q_pagerank"] = _pagerank_oracle(k=10, damping=0.85)
 
 
+def _part_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The part co-occurrence graph walked in both directions: directed
+    edges (src, dst, w = 1), the Spark side of ``_COOCCUR_EDGES_CTE``.
+
+    r16: both directions are exploded IN-ROW, not a union of two
+    projections of the undirected edges — the union carried the whole
+    co-occurrence derivation twice per consumer subtree (AQE's
+    ReusedExchange recovers the heavy exchange but re-runs every
+    post-exchange operator per branch). Interleaved A/B at sf0.1: pagerank
+    shape 2.79 → 1.78 s, LPA shape 3.16 → 2.38 s, rows equal."""
+    from . import graph
+
+    und = graph.cooccurrence_edges(load_table(spark, sf_dir, "lineitem"))
+    return und.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("a").alias("src"), F.col("b").alias("dst")),
+                F.struct(F.col("b").alias("src"), F.col("a").alias("dst")),
+            )
+        ).alias("e")
+    ).select("e.src", "e.dst", F.lit(1).alias("w"))
+
+
 def q_pagerank_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank at graph scale: top-20 parts by rank over the symmetrized
     order co-occurrence graph (2k nodes / 230k directed edges at sf0.01,
@@ -3328,35 +3351,11 @@ def q_pagerank_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     DataFrame loop holds beyond the |types|-node transition graph.
 
     k=5 iterations (the oracle unrolls per iteration, so the CTE chain
-    stays bounded); undirected walk → no dangling nodes by construction.
-    2.75s steady at sf0.1 under the repo session (8 shuffle partitions);
-    a stock 200-partition session pays ~5x in per-iteration empty-task
-    scheduling — iterative loops amplify shuffle-partition oversizing,
-    which is exactly why cluster_conf sizes partitions to cores."""
+    stays bounded); undirected walk → no dangling nodes by construction."""
     from . import graph
 
-    und = graph.cooccurrence_edges(load_table(spark, sf_dir, "lineitem"))
-    # r16: symmetrize by exploding both directions IN-ROW instead of a
-    # union of two projections of `und` — the union carried the whole
-    # co-occurrence derivation twice per consumer subtree (AQE's
-    # ReusedExchange recovers the heavy exchange but re-runs every
-    # post-exchange operator per branch, at plan sizes doubled); the
-    # explode emits the identical directed edge set from ONE subtree.
-    # Interleaved A/B at sf0.1: pagerank shape 2.79 → 1.78 s, rows equal.
-    edges = (
-        und.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("a").alias("src"), F.col("b").alias("dst")),
-                    F.struct(F.col("b").alias("src"), F.col("a").alias("dst")),
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
-        .withColumn("w", F.lit(1))
-    )
     return (
-        graph.pagerank(edges, k=5, damping=0.85)
+        graph.pagerank(_part_graph(spark, sf_dir), k=5, damping=0.85)
         .select("node", F.round("rank", 6).alias("rank"))
         .orderBy(F.desc("rank"), "node")
         .limit(20)
@@ -3405,25 +3404,8 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     trajectory — not just the summary — is engine-independent."""
     from . import graph
 
-    und = graph.cooccurrence_edges(load_table(spark, sf_dir, "lineitem"))
-    # r16: in-row explode symmetrization — same rationale and measured win
-    # as q_pagerank_parts (union of two `und` projections doubled every
-    # post-exchange operator; identical directed edge set from one
-    # subtree). Interleaved A/B at sf0.1: LPA shape 3.16 → 2.38 s.
-    edges = (
-        und.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("a").alias("src"), F.col("b").alias("dst")),
-                    F.struct(F.col("b").alias("src"), F.col("a").alias("dst")),
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
-        .withColumn("w", F.lit(1))
-    )
     return (
-        graph.label_propagation(edges, k=3)
+        graph.label_propagation(_part_graph(spark, sf_dir), k=3)
         .groupBy(F.col("label").alias("community"))
         .agg(F.count(F.lit(1)).alias("n_members"))
         .orderBy(F.desc("n_members"), "community")

@@ -107,10 +107,7 @@ def build_session(
         # parallelism x 1 MB the floor is inert, so cluster-scale plans are
         # unchanged — measured at sf0.1: q_dedup_ngram_jaccard 1.78→0.85 s,
         # q_sessionize 0.59→0.38 s, sub-0.1 s reference queries unchanged.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION", "16k"),
-        )
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "16k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")

@@ -20,40 +20,53 @@ def _wedges(spark, rows):
 # --- pagerank ---------------------------------------------------------------
 
 
-def test_pagerank_sums_to_one_without_dangling(spark):
+def _pagerank_both_paths(monkeypatch, edges, k):
+    """(node -> rank) from the driver path and from the distributed loop
+    (gate 0), which also reaches the src-only nodes and the k = 1 branch."""
+    runs = []
+    for gate in (graph._PAGERANK_DRIVER_NODE_LIMIT, 0):
+        monkeypatch.setattr(graph, "_PAGERANK_DRIVER_NODE_LIMIT", gate)
+        rows = graph.pagerank(edges, k=k).collect()
+        runs.append({r["node"]: r["rank"] for r in rows})
+    return runs
+
+
+def test_pagerank_sums_to_one_without_dangling(spark, monkeypatch):
     """On a graph with no dangling nodes, total rank mass is conserved."""
     e = _wedges(spark, [("a", "b", 1), ("b", "c", 1), ("c", "a", 1)])
-    total = graph.pagerank(e, k=10).agg(F.sum("rank")).collect()[0][0]
-    assert total == pytest.approx(1.0, abs=1e-9)
+    for ranks in _pagerank_both_paths(monkeypatch, e, k=10):
+        assert sum(ranks.values()) == pytest.approx(1.0, abs=1e-9)
 
 
-def test_pagerank_cycle_is_uniform(spark):
+def test_pagerank_cycle_is_uniform(spark, monkeypatch):
     """A directed cycle is symmetric: every node gets rank 1/N exactly."""
     e = _wedges(spark, [("a", "b", 1), ("b", "c", 1), ("c", "d", 1), ("d", "a", 1)])
-    rows = graph.pagerank(e, k=15).collect()
-    for r in rows:
-        assert r["rank"] == pytest.approx(0.25, abs=1e-12)
+    for ranks in _pagerank_both_paths(monkeypatch, e, k=15):
+        assert len(ranks) == 4
+        for rank in ranks.values():
+            assert rank == pytest.approx(0.25, abs=1e-12)
 
 
-def test_pagerank_sink_hub_ordering(spark):
+def test_pagerank_sink_hub_ordering(spark, monkeypatch):
     """A node every other node points at must out-rank its pointers."""
     e = _wedges(
         spark,
         [("a", "hub", 1), ("b", "hub", 1), ("c", "hub", 1), ("hub", "a", 1)],
     )
-    ranks = {r["node"]: r["rank"] for r in graph.pagerank(e, k=20).collect()}
-    assert ranks["hub"] > ranks["a"] > ranks["b"]  # a also gets hub's mass
-    assert ranks["b"] == pytest.approx(ranks["c"], abs=1e-12)
+    for ranks in _pagerank_both_paths(monkeypatch, e, k=20):
+        assert ranks["hub"] > ranks["a"] > ranks["b"]  # a also gets hub's mass
+        assert ranks["b"] == pytest.approx(ranks["c"], abs=1e-12)
 
 
-def test_pagerank_weights_split_proportionally(spark):
+def test_pagerank_weights_split_proportionally(spark, monkeypatch):
     """Out-mass splits by edge weight: a 3:1 weighted fork sends 3x the
     contribution to the heavy branch (checked after one iteration)."""
     e = _wedges(spark, [("s", "x", 3), ("s", "y", 1)])
-    ranks = {r["node"]: r["rank"] for r in graph.pagerank(e, k=1).collect()}
     base = (1 - 0.85) / 3
-    assert ranks["x"] == pytest.approx(base + 0.85 * (1 / 3) * 0.75, abs=1e-12)
-    assert ranks["y"] == pytest.approx(base + 0.85 * (1 / 3) * 0.25, abs=1e-12)
+    for ranks in _pagerank_both_paths(monkeypatch, e, k=1):
+        assert ranks["x"] == pytest.approx(base + 0.85 * (1 / 3) * 0.75, abs=1e-12)
+        assert ranks["y"] == pytest.approx(base + 0.85 * (1 / 3) * 0.25, abs=1e-12)
+        assert ranks["s"] == pytest.approx(base, abs=1e-12)
 
 
 def test_transition_edges_orders_by_time_and_id(spark):
@@ -196,7 +209,7 @@ def test_triangle_counts_random_graphs_match_naive(spark):
         assert per_node == want, f"seed {seed}"
 
 
-def test_pagerank_mass_conserved_random_graph(spark):
+def test_pagerank_mass_conserved_random_graph(spark, monkeypatch):
     """On a random graph with no dangling nodes, total rank mass stays 1."""
     import random
 
@@ -207,8 +220,8 @@ def test_pagerank_mass_conserved_random_graph(spark):
         for v in rng.sample([x for x in range(n) if x != u], 3):
             rows.append((str(u), str(v), rng.randint(1, 5)))
     e = _wedges(spark, rows)
-    total = graph.pagerank(e, k=12).agg(F.sum("rank")).collect()[0][0]
-    assert total == pytest.approx(1.0, abs=1e-9)
+    for ranks in _pagerank_both_paths(monkeypatch, e, k=12):
+        assert sum(ranks.values()) == pytest.approx(1.0, abs=1e-9)
 
 
 # --- label propagation ------------------------------------------------------
@@ -344,28 +357,59 @@ def _cache_is_empty(spark):
     return spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
+def _construction_jobs(spark, group, build, *args, **kwargs):
+    """Spark jobs launched, in job group ``group``, while ``build(*args,
+    **kwargs)`` constructs its DataFrame."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        build(*args, **kwargs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _range_graph(spark):
+    """120 edges over 42 nodes from ``spark.range``, so the planner knows
+    the graph's size, as it does for a file-backed input, and broadcasts
+    the round vectors."""
+    return spark.range(120).select(
+        (F.col("id") % 40).alias("src"),
+        ((F.col("id") * 7 + 1) % 40 + 2).alias("dst"),
+        (F.col("id") % 3).alias("w"),
+    )
+
+
 def test_lpa_job_count_pinned(spark):
     """label_propagation(k=3) launches at most 8 Spark jobs: the edges' dst
     exchange, two cache-stage jobs, the round-1 broadcast, the round-2
     checkpoint, the round-2 labels' broadcast, the src-only distinct, and
     the round-3 checkpoint. A re-introduced exchange over the edges, label
-    join or cache adds jobs and fails here. The graph comes from
-    ``spark.range``, so the planner knows its size, as it does for a
-    file-backed input, and broadcasts the label vector."""
-    sc = spark.sparkContext
-    e = spark.range(120).select(
-        (F.col("id") % 40).alias("src"),
-        ((F.col("id") * 7 + 1) % 40 + 2).alias("dst"),
-        (F.col("id") % 3).alias("w"),
-    )
-    group = "test-lpa-job-count"
-    sc.setJobGroup(group, group)
-    try:
-        graph.label_propagation(e, k=3)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 8
+    join or cache adds jobs and fails here."""
+    e = _range_graph(spark)
+    assert _construction_jobs(spark, "lpa", graph.label_propagation, e, k=3) <= 8
     assert _cache_is_empty(spark)
+
+
+def test_pagerank_job_count_pinned(spark, monkeypatch):
+    """The distributed pagerank(k=5) launches at most 17 Spark jobs: the |V|
+    count, the out-weight join and dst exchange under the edge cache, one
+    broadcast per looked-up rank vector, the src-only distinct and the
+    round-4 and round-5 checkpoints. A per-round exchange over the edges
+    or a re-introduced node cache adds jobs and fails here."""
+    monkeypatch.setattr(graph, "_PAGERANK_DRIVER_NODE_LIMIT", 0)
+    e = _range_graph(spark)
+    assert _construction_jobs(spark, "pagerank", graph.pagerank, e, k=5) <= 17
+    assert _cache_is_empty(spark)
+
+
+def test_graph_loops_reject_zero_rounds(spark):
+    """k = 0 is an error in both loops, before any Spark job runs."""
+    e = _wedges(spark, [("a", "b", 1)])
+    with pytest.raises(ValueError, match="k >= 1"):
+        graph.pagerank(e, k=0)
+    with pytest.raises(ValueError, match="k >= 1"):
+        graph.label_propagation(e, k=0)
 
 
 def test_graph_loops_answer_rewritten_inputs(spark, tmp_path, monkeypatch):
@@ -378,7 +422,7 @@ def test_graph_loops_answer_rewritten_inputs(spark, tmp_path, monkeypatch):
     import pyarrow.parquet as pq
 
     import __spark_entry__ as em
-    from api_log_iceberg_test_spark.schema import load_table
+    from api_log_iceberg_test_spark.operators import registry
     from tests.conftest import SF0001
     from tests.oracle import TABLES, compare, duckdb_conn
 
@@ -394,10 +438,7 @@ def test_graph_loops_answer_rewritten_inputs(spark, tmp_path, monkeypatch):
             df = qs[name](spark, sf)
             assert _cache_is_empty(spark), name
             assert not compare(df, con.execute(osql[name]).fetchdf(), name)
-        und = graph.cooccurrence_edges(load_table(spark, sf, "lineitem"))
-        edges = und.select(F.col("a").alias("src"), F.col("b").alias("dst")).union(
-            und.select("b", "a")
-        ).withColumn("w", F.lit(1))
+        edges = registry._part_graph(spark, sf)
         monkeypatch.setattr(graph, "_PAGERANK_DRIVER_NODE_LIMIT", 0)
         loop = graph.pagerank(edges, k=5)
         assert _cache_is_empty(spark)

@@ -155,7 +155,7 @@ def _numpy_pagerank(edge_list, k=5, damping=0.85):
 @given(_directed_edges.map(_close_dangling))
 def test_pagerank_matches_dense_power_iteration(spark, edge_list):
     """Both pagerank paths — the driver power iteration at the default node
-    gate and the exchange-reusing distributed loop with the gate at 0 —
+    gate and the lean-round distributed loop with the gate at 0 —
     must reproduce the dense power iteration exactly (same recurrence,
     same k): catches silent divergence in the join/agg update rule or the
     checkpoint cadence."""
