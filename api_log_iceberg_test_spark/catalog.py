@@ -6,9 +6,8 @@ it with ``SHOW CATALOGS / SHOW SCHEMAS / SHOW TABLES / USE`` (README.md:
 130-139). Spark equivalents:
 
 - attachment = session conf (``spark.sql.catalog.<name>.*`` — see
-  :func:`api_log_iceberg_test_spark.session.build_session`); there is no
-  CREATE CATALOG DDL in Spark, so :func:`attach_iceberg_catalog` documents
-  the mapping and applies the runtime-settable subset.
+  :func:`api_log_iceberg_test_spark.session.build_session`'s ``iceberg_*``
+  settings); there is no CREATE CATALOG DDL in Spark.
 - introspection = ``SHOW NAMESPACES / SHOW TABLES / SHOW VIEWS`` SQL plus
   the ``spark.catalog`` API, wrapped here with stable output schemas.
 """
@@ -19,38 +18,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .schema import TESTDATA_TABLES, load_table
-
-
-def attach_iceberg_catalog(
-    spark: SparkSession,
-    name: str = "aistor",
-    warehouse: str | None = None,
-    rest_uri: str | None = None,
-) -> bool:
-    """Best-effort runtime attachment of an Iceberg catalog.
-
-    Catalog implementations are resolved lazily, so setting the conf at
-    runtime works for catalogs not yet accessed. Returns False (no-op)
-    when the Iceberg runtime jar is absent — callers fall back to
-    ``spark_catalog`` parquet tables, which every query in this engine
-    supports.
-    """
-    try:
-        spark.conf.set(
-            f"spark.sql.catalog.{name}", "org.apache.iceberg.spark.SparkCatalog"
-        )
-        if rest_uri:
-            spark.conf.set(f"spark.sql.catalog.{name}.type", "rest")
-            spark.conf.set(f"spark.sql.catalog.{name}.uri", rest_uri)
-        else:
-            spark.conf.set(f"spark.sql.catalog.{name}.type", "hadoop")
-            spark.conf.set(
-                f"spark.sql.catalog.{name}.warehouse", warehouse or "/tmp/iceberg-wh"
-            )
-        spark.sql(f"SHOW NAMESPACES IN {name}").collect()
-        return True
-    except Exception:
-        return False
 
 
 def register_testdata_views(spark: SparkSession, sf_dir: str) -> list[str]:
@@ -71,12 +38,3 @@ def show_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("table_name").isin(*TESTDATA_TABLES))
         .orderBy("table_name")
     )
-
-
-def describe_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    """S8: column inventory of one table (``DESCRIBE``-shaped, stable cols)."""
-    df = load_table(spark, sf_dir, table)
-    rows = [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
-    from .schema import local_rows_df
-
-    return local_rows_df(spark, rows, ["col_name", "data_type"])

@@ -118,30 +118,26 @@ def generate_api_logs(
     spark: SparkSession,
     n_rows: int,
     seed: int = 42,
-    start_ts: str = "2024-01-01 00:00:00",
     span_days: int = 7,
     num_partitions: int | None = None,
 ) -> DataFrame:
     """Batch generator (reference G1): n weighted random api-log rows.
 
-    Event time is monotonic-ish across ``span_days`` with per-row jitter, so
+    Event time is monotonic-ish across ``span_days`` from 2024-01-01
+    00:00:00 UTC with per-row jitter, so
     ``days(time)`` partitioning yields >1 partition and time-range predicates
     prune (FIXTURES.md §1). Deterministic per (n_rows, seed).
     """
     df = spark.range(0, n_rows, numPartitions=num_partitions)
     span_secs = span_days * 86400
-    # start_ts is defined as UTC: resolve it to an epoch DRIVER-side so the
+    # the start is defined as UTC: resolve it to an epoch DRIVER-side so the
     # result never depends on spark.sql.session.timeZone (a string→timestamp
     # cast in the plan would shift by the stock session's zone offset —
     # review finding; load_table pins UTC for reads, the generator must be
     # equally session-independent for writes)
     from datetime import datetime, timezone
 
-    start_epoch = int(
-        datetime.strptime(start_ts, "%Y-%m-%d %H:%M:%S")
-        .replace(tzinfo=timezone.utc)
-        .timestamp()
-    )
+    start_epoch = int(datetime(2024, 1, 1, tzinfo=timezone.utc).timestamp())
     # monotonic base + up to ±30 s jitter → a few out-of-order rows for
     # late-data tests, like real multi-node log arrival.
     offset = (F.col("id") / F.lit(max(n_rows - 1, 1))) * F.lit(span_secs)
@@ -150,11 +146,7 @@ def generate_api_logs(
     return _with_log_columns(df, "id", time_col, seed)
 
 
-def generate_api_logs_stream(
-    spark: SparkSession,
-    rows_per_second: int = 4,
-    seed: int = 42,
-) -> DataFrame:
+def generate_api_logs_stream(spark: SparkSession, rows_per_second: int = 4) -> DataFrame:
     """Streaming generator (reference G2: 20 ops / 5 s ≈ 4 ops/s).
 
     ``rate`` source → same column derivation; plug into
@@ -166,4 +158,4 @@ def generate_api_logs_stream(
         .load()
         .withColumnRenamed("value", "id")
     )
-    return _with_log_columns(df, "id", F.col("timestamp"), seed)
+    return _with_log_columns(df, "id", F.col("timestamp"), 42)

@@ -35,18 +35,13 @@ import uuid
 from pyspark.sql import SparkSession
 
 
-def rewrite_data_files(
-    spark: SparkSession,
-    table: str,
-    where: str | None = None,
-    target_file_size_bytes: int = 512 * 1024 * 1024,
-) -> None:
-    """Iceberg small-file compaction via the stock procedure."""
+def rewrite_data_files(spark: SparkSession, table: str, where: str | None = None) -> None:
+    """Iceberg small-file compaction via the stock procedure, to 512 MiB files."""
     catalog = table.split(".")[0]
     pred = f", where => '{where}'" if where else ""
     spark.sql(
         f"CALL {catalog}.system.rewrite_data_files(table => '{table}'"
-        f", options => map('target-file-size-bytes', '{target_file_size_bytes}')"
+        ", options => map('target-file-size-bytes', '536870912')"
         f"{pred})"
     )
 
@@ -246,7 +241,6 @@ def plan_compaction_bins(
     files,
     partition_cols: list[str],
     order_col: str,
-    size_col: str = "size_bytes",
     target_bytes: int = 128 * 1024 * 1024,
 ):
     """Distributed compaction PLANNING: assign each small file to an output
@@ -274,7 +268,7 @@ def plan_compaction_bins(
         .orderBy(order_col)
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    prev_cum = F.coalesce(F.sum(size_col).over(w), F.lit(0))
+    prev_cum = F.coalesce(F.sum("size_bytes").over(w), F.lit(0))
     return files.withColumn(
         "bin", F.floor(prev_cum / F.lit(float(target_bytes))).cast("int")
     )

@@ -57,12 +57,9 @@ class RateListener(StreamingQueryListener):
         return sum(rates) / len(rates) if rates else 0.0
 
 
-def measure_batch(df, action=None) -> ThroughputReport:
-    """Rows ÷ wall time for a batch action (default: noop-sink write)."""
+def measure_batch(df) -> ThroughputReport:
+    """Rows ÷ wall time for a noop-sink write of ``df``."""
     t0 = time.time()
-    if action is None:
-        df.write.mode("overwrite").format("noop").save()
-    else:
-        action(df)
+    df.write.mode("overwrite").format("noop").save()
     elapsed = time.time() - t0
     return ThroughputReport(total_rows=df.count(), elapsed_sec=elapsed)

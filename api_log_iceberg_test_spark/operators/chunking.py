@@ -24,12 +24,11 @@ def chunk_documents(
     df: DataFrame,
     max_tokens: int = 32,
     text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Split each document into consecutive chunks of ``max_tokens``
     whitespace tokens (last chunk may be short).
 
-    Returns ``(id_col, chunk_idx, chunk_text, n_chunk_tokens)`` — one row
+    Returns ``(doc_id, chunk_idx, chunk_text, n_chunk_tokens)`` — one row
     per chunk, ``chunk_idx`` 0-based within the document.
 
     Scale: narrow per-row explode (a doc yields ceil(n/max) rows — bounded
@@ -40,40 +39,34 @@ def chunk_documents(
     """
     # blank/whitespace-only docs produce ZERO chunks (split('') would
     # otherwise yield a phantom 1-token empty chunk)
-    nrm_df = df.select(F.col(id_col), norm_text(text_col).alias("_norm")).where(
+    nrm_df = df.select(F.col("doc_id"), norm_text(text_col).alias("_norm")).where(
         F.length("_norm") > 0
     )
     toks = F.split(F.col("_norm"), " ")
     n_chunks = F.ceil(F.size(toks) / F.lit(max_tokens)).cast("int")
     ex = nrm_df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         toks.alias("_toks"),
         F.posexplode(F.sequence(F.lit(0), n_chunks - 1)).alias("chunk_idx", "_i"),
     )
     chunk = F.slice(F.col("_toks"), F.col("_i") * max_tokens + 1, max_tokens)
     return ex.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("chunk_idx"),
         F.concat_ws(" ", chunk).alias("chunk_text"),
         F.size(chunk).alias("n_chunk_tokens"),
     )
 
 
-def pack_sequences(
-    df: DataFrame,
-    budget: int = 512,
-    num_buckets: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def pack_sequences(df: DataFrame, budget: int = 512, num_buckets: int = 8) -> DataFrame:
     """Greedy contiguous packing of documents into fixed-token training
     bins: within each of ``num_buckets`` hash buckets, documents are laid
-    end-to-end in ``id_col`` order and a document belongs to the bin its
+    end-to-end in ``doc_id`` order and a document belongs to the bin its
     START offset falls in (``bin_id = start_offset div budget``) — the
     deterministic streaming approximation of bin packing (docs may straddle
     a boundary; exact first-fit is inherently sequential).
 
-    Returns ``(bucket, id_col, n_tokens, bin_id, cum_tokens)``.
+    Returns ``(bucket, doc_id, n_tokens, bin_id, cum_tokens)``.
 
     Scale: the running sum is windowed PER BUCKET, so parallelism =
     ``num_buckets`` (set it to O(cluster cores) at scale) and no global
@@ -81,18 +74,18 @@ def pack_sequences(
     key; skew-free because bucket = id mod N over unique ids.
     """
     base = df.select(
-        F.col(id_col),
-        (F.col(id_col) % num_buckets).alias("bucket"),
-        token_count(text_col).cast("long").alias("n_tokens"),
+        F.col("doc_id"),
+        (F.col("doc_id") % num_buckets).alias("bucket"),
+        token_count("text").cast("long").alias("n_tokens"),
     )
     w = (
         Window.partitionBy("bucket")
-        .orderBy(id_col)
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return base.withColumn("cum_tokens", F.sum("n_tokens").over(w)).select(
         "bucket",
-        F.col(id_col),
+        F.col("doc_id"),
         "n_tokens",
         # integer DIV keeps the bin arithmetic exact (no double rounding)
         F.expr(f"(cum_tokens - n_tokens) DIV {budget}").alias("bin_id"),
@@ -100,19 +93,13 @@ def pack_sequences(
     )
 
 
-def pack_batches(
-    df: DataFrame,
-    budget: int = 512,
-    num_buckets: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def pack_batches(df: DataFrame, budget: int = 512, num_buckets: int = 8) -> DataFrame:
     """Concat-and-chunk packing v2: emit the BATCHES, not just offsets.
 
     :func:`pack_sequences` assigns each document to the bin its start
     offset falls in; this operator completes the pipeline the way LLM
     pre-training actually packs data ("concat then chunk"): per hash
-    bucket, documents are laid end-to-end in ``id_col`` order and the
+    bucket, documents are laid end-to-end in ``doc_id`` order and the
     token stream is cut into exact ``budget``-token batches — a document
     straddling a boundary contributes a SEGMENT to each bin it overlaps.
     One output row per (bucket, bin) describes the emitted batch:
@@ -132,18 +119,18 @@ def pack_batches(
     offset unchanged). The whole plan is codegen expressions — no UDFs.
     """
     base = df.select(
-        F.col(id_col),
-        (F.col(id_col) % num_buckets).alias("bucket"),
-        token_count(text_col).cast("long").alias("n_tokens"),
+        F.col("doc_id"),
+        (F.col("doc_id") % num_buckets).alias("bucket"),
+        token_count("text").cast("long").alias("n_tokens"),
     ).where(F.col("n_tokens") > 0)
     w = (
         Window.partitionBy("bucket")
-        .orderBy(id_col)
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     spans = base.withColumn("end_off", F.sum("n_tokens").over(w)).select(
         "bucket",
-        F.col(id_col),
+        F.col("doc_id"),
         "n_tokens",
         (F.col("end_off") - F.col("n_tokens")).alias("start_off"),
         "end_off",
@@ -151,7 +138,7 @@ def pack_batches(
     b = F.lit(budget)
     seg = spans.select(
         "bucket",
-        F.col(id_col),
+        F.col("doc_id"),
         "start_off",
         "end_off",
         F.explode(
@@ -171,7 +158,7 @@ def pack_batches(
         seg.select(
             "bucket",
             "bin_id",
-            F.col(id_col),
+            F.col("doc_id"),
             seg_tokens.alias("seg_tokens"),
             is_full.cast("int").alias("is_full"),
         )
@@ -181,7 +168,7 @@ def pack_batches(
             F.sum("seg_tokens").alias("n_tokens_bin"),
             F.sum("is_full").alias("n_full_docs"),
             (F.count(F.lit(1)) - F.sum("is_full")).alias("n_partial_docs"),
-            F.min(id_col).alias("first_doc"),
-            F.max(id_col).alias("last_doc"),
+            F.min("doc_id").alias("first_doc"),
+            F.max("doc_id").alias("last_doc"),
         )
     )

@@ -35,8 +35,9 @@ from pyspark.sql import functions as F
 from ..schema import fan_out
 
 
-def _docs_fanned(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, _t) projection widened to cluster parallelism.
+def _docs_fanned(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """(id, _t) projection of the ``text`` column widened to cluster
+    parallelism.
 
     The shingle/tokenize regex passes below are the dominant per-row cost
     of every dedup tier, and they run in the map stage FEEDING the first
@@ -51,7 +52,7 @@ def _docs_fanned(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     a per-row projection (asserted by the oracle hash checks).
     """
     return fan_out(
-        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_t"))
+        df.select(F.col(id_col).alias("id"), F.col("text").alias("_t"))
     )
 
 
@@ -104,6 +105,13 @@ def _pairs_from_buckets(
 # product < 2^62). A 31-bit minhash space adds ~|shingles|/2^31 collision
 # noise per permutation — immaterial for dedup banding.
 _MERSENNE31 = (1 << 31) - 1
+
+
+#: MinHash-LSH parameters of :func:`minhash_lsh_pairs` and
+#: :func:`lsh_param_sweep`, shared with their replay oracles in tools/.
+_NUM_PERM, _BANDS, _SEED = 32, 8, 7
+#: The bands values :func:`lsh_param_sweep` reports, each dividing _NUM_PERM.
+_SWEEP_GRID = (4, 8, 16, 32)
 
 
 def minhash_ab(seed: int, num_perm: int) -> list[tuple[int, int]]:
@@ -160,15 +168,15 @@ def _minhash_mins(per: DataFrame, seed: int, num_perm: int) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def exact_dedup(df: DataFrame, key: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Keep one representative (min id) per exactly-identical key.
+def exact_dedup(df: DataFrame) -> DataFrame:
+    """Keep one representative (min ``doc_id``) per exactly-identical ``text``.
 
-    Plan: partial agg → shuffle on `key` → final agg. At 100 TB, shuffling
+    Plan: partial agg → shuffle on ``text`` → final agg. At 100 TB, shuffling
     long text values is wasteful — prefer :func:`normalized_dedup` which
     shuffles a 128-bit hash instead.
     """
-    return df.groupBy(key).agg(
-        F.min(id_col).alias(id_col),
+    return df.groupBy("text").agg(
+        F.min("doc_id").alias("doc_id"),
         F.count(F.lit(1)).alias("n_copies"),
     )
 
@@ -179,7 +187,7 @@ def normalize_text(col: Column | str) -> Column:
     return F.trim(F.regexp_replace(F.lower(c), r"\s+", " "))
 
 
-def normalized_dedup(df: DataFrame, key: str = "text", id_col: str = "doc_id") -> DataFrame:
+def normalized_dedup(df: DataFrame) -> DataFrame:
     """Dedup on md5 of normalized text — the hash, not the text, shuffles.
 
     The normalize+md5 projection runs after ``fan_out`` so a narrow scan
@@ -187,9 +195,9 @@ def normalized_dedup(df: DataFrame, key: str = "text", id_col: str = "doc_id") -
     wide scans (r15, guide §2)."""
     return (
         fan_out(df)
-        .withColumn("text_hash", F.md5(normalize_text(key)))
+        .withColumn("text_hash", F.md5(normalize_text("text")))
         .groupBy("text_hash")
-        .agg(F.min(id_col).alias(id_col), F.count(F.lit(1)).alias("n_copies"))
+        .agg(F.min("doc_id").alias("doc_id"), F.count(F.lit(1)).alias("n_copies"))
     )
 
 
@@ -273,33 +281,30 @@ def _verify_jaccard(cands: DataFrame, hashed: DataFrame, threshold: float) -> Da
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    text_col: str = "text",
     id_col: str = "doc_id",
-    n: int = 3,
-    n_blocking: int = 3,
     threshold: float = 0.5,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
-    """Near-duplicate pairs by exact word-n-gram Jaccard.
+    """Near-duplicate pairs by exact word-3-gram Jaccard.
 
-    Candidate blocking: each doc keys on its ``n_blocking`` lexicographically
+    Candidate blocking: each doc keys on its 3 lexicographically
     smallest shingles; any pair sharing one becomes a candidate (for J ≥ 0.5
     the smallest shingle of the union is very likely shared — recall is high
     while candidate count stays near-linear). Deterministic and hash-free, so
     the DuckDB oracle replicates it exactly.
 
-    Scale: the explode is ``n_blocking`` rows/doc (not |shingles|); the join
+    Scale: the explode is 3 rows/doc (not |shingles|); the join
     shuffles on short shingle strings; the post-join Jaccard is an array
     intersect on pre-deduped shingle arrays. Skew guard: a blocking key hit
     by s docs yields s² candidates, so one pathological key (a stopword-only
     shingle shared corpus-wide) dominates the join at 100 TB —
     ``max_bucket_size`` drops such keys before the self-join via
     :func:`cap_buckets` (window count on the key the join shuffles on
-    anyway). Docs keep their other ``n_blocking - 1`` keys, so recall
+    anyway). Docs keep their other 2 keys, so recall
     degrades gracefully. ``None`` (default) disables, keeping the operator
     byte-exact with its SQL oracle.
     """
-    # ONE pass computes everything any consumer needs — the n_blocking
+    # ONE pass computes everything any consumer needs — the 3
     # smallest shingles (lexicographic STRINGS, the oracle-replayable
     # blocking keys) and the xxhash64'd shingle array for verification —
     # and a lazy localCheckpoint materializes that NARROW frame once for
@@ -325,12 +330,12 @@ def ngram_jaccard_pairs(
     # executor loss is the normal failure mode. Callers that embed this
     # operator in a long-lived session and need the storage back can
     # unpersist via the returned plan's RDD after their terminal action.
-    sh = word_shingles("_t", n)
+    sh = word_shingles("_t")
     frame = (
-        _docs_fanned(df, id_col, text_col)
+        _docs_fanned(df, id_col)
         .select(
             "id",
-            F.slice(F.array_sort(sh), 1, n_blocking).alias("bkeys"),
+            F.slice(F.array_sort(sh), 1, 3).alias("bkeys"),
             F.transform(sh, lambda s: F.xxhash64(s)).alias("hv"),
         )
         .localCheckpoint(eager=False)
@@ -346,14 +351,8 @@ def ngram_jaccard_pairs(
     return _verify_jaccard(cands, frame.select("id", "hv"), threshold)
 
 
-def exhaustive_jaccard_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """EXHAUSTIVE exact word-n-gram Jaccard pairs via prefix filtering
+def exhaustive_jaccard_pairs(df: DataFrame, threshold: float = 0.5) -> DataFrame:
+    """EXHAUSTIVE exact word-3-gram Jaccard pairs via prefix filtering
     (the AllPairs bound of Bayardo/Ma/Srikant, WWW'07; Chaudhuri et al.'s
     SSJoin prefix filter) — recall 1 by construction, unlike
     :func:`ngram_jaccard_pairs`' 3-smallest-shingle blocking heuristic.
@@ -420,8 +419,8 @@ def exhaustive_jaccard_pairs(
         # whole array (a full O(n^2) cross join). Fail at call time.
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
     docs = (
-        _docs_fanned(df, id_col, text_col)  # parallel shingle pass (r15)
-        .select("id", word_shingles("_t", n).alias("sh"))
+        _docs_fanned(df)  # parallel shingle pass (r15)
+        .select("id", word_shingles("_t").alias("sh"))
         .repartition(F.col("id"))
     )
     hashed = docs.select(
@@ -578,11 +577,10 @@ _DRIVER_EDGE_LIMIT = 500_000
 _STAR_ROUND_CAP = 50
 
 
-def connected_components(
-    pairs: DataFrame, a_col: str = "doc_a", b_col: str = "doc_b"
-) -> DataFrame:
-    """Duplicate clusters from a near-dup pair list: (doc_id, component)
-    where component = the smallest doc id reachable through pairs.
+def connected_components(pairs: DataFrame) -> DataFrame:
+    """Duplicate clusters from a near-dup (doc_a, doc_b) pair list:
+    (doc_id, component) where component = the smallest doc id reachable
+    through pairs.
 
     The pairs are symmetrized, with a self-loop per endpoint so every
     node's neighbor set N(u) contains u, and checkpointed. Then:
@@ -609,7 +607,7 @@ def connected_components(
     A round cap reached without a fixed point raises ``RuntimeError``
     rather than return a partial labeling.
     """
-    a, b = F.col(a_col), F.col(b_col)
+    a, b = F.col("doc_a"), F.col("doc_b")
     e = (
         pairs.select(
             F.explode(
@@ -700,13 +698,9 @@ def cap_buckets(
 
 def minhash_lsh_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    num_perm: int = 32,
-    bands: int = 8,
+    num_perm: int = _NUM_PERM,
+    bands: int = _BANDS,
     threshold: float = 0.5,
-    seed: int = 7,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Near-dup pairs via MinHash-LSH, verified with exact Jaccard.
@@ -768,13 +762,13 @@ def minhash_lsh_pairs(
     # can never reach the output on any path (collect_set skips nulls; the
     # join keys rejected them before), so the filter is a no-op on results.
     per = (
-        _docs_fanned(df, id_col, text_col)  # parallel shingle pass (r15)
+        _docs_fanned(df)  # parallel shingle pass (r15)
         .filter(F.col("id").isNotNull())
-        .select("id", F.explode(word_shingles("_t", n)).alias("s"))
+        .select("id", F.explode(word_shingles("_t")).alias("s"))
         .select("id", F.xxhash64("s").alias("h64"))
         .repartition(F.col("id"))
     )
-    docs = _minhash_mins(per, seed, num_perm)
+    docs = _minhash_mins(per, _SEED, num_perm)
     # verification arrays: only candidate ids ever join against this branch
     hv_docs = per.groupBy("id").agg(F.collect_list("h64").alias("hv"))
 
@@ -797,7 +791,11 @@ def minhash_lsh_pairs(
 # ---------------------------------------------------------------------------
 
 
-def simhash_signature(col: Column | str, seed: int = 11) -> Column:
+#: xxhash64 seed of the SimHash token hashes.
+_SIMHASH_SEED = 11
+
+
+def simhash_signature(col: Column | str) -> Column:
     """64-bit SimHash packed into a bigint.
 
     Token hashes vote per bit position; bit b of the signature is 1 when the
@@ -808,7 +806,7 @@ def simhash_signature(col: Column | str, seed: int = 11) -> Column:
     tokens = F.array_distinct(
         F.split(F.regexp_replace(F.lower(c), r"^\s+|\s+\z", ""), r"\s+")
     )
-    hashes = F.transform(tokens, lambda t: F.xxhash64(t, F.lit(seed)))
+    hashes = F.transform(tokens, lambda t: F.xxhash64(t, F.lit(_SIMHASH_SEED)))
 
     # Single pass over the token hashes: accumulate a 64-slot ones-count
     # array (bit positions are static Python ints — shiftright requires
@@ -836,12 +834,7 @@ def simhash_signature(col: Column | str, seed: int = 11) -> Column:
     return sig
 
 
-def simhash_signatures_df(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    seed: int = 11,
-) -> DataFrame:
+def simhash_signatures_df(df: DataFrame) -> DataFrame:
     """Per-doc 64-bit SimHash as a DataFrame: (id, sig).
 
     Same values as :func:`simhash_signature`, different execution: distinct
@@ -852,7 +845,7 @@ def simhash_signatures_df(
     slower on a 54-token-average corpus.
     """
     one = F.lit(1).cast("long")
-    per = _docs_fanned(df, id_col, text_col).select(  # parallel tokenize (r15)
+    per = _docs_fanned(df).select(  # parallel tokenize (r15)
         "id",
         F.explode(
             F.array_distinct(
@@ -861,7 +854,7 @@ def simhash_signatures_df(
                 )
             )
         ).alias("t"),
-    ).select("id", F.xxhash64("t", F.lit(seed)).alias("h"))
+    ).select("id", F.xxhash64("t", F.lit(_SIMHASH_SEED)).alias("h"))
     g = per.groupBy("id").agg(
         *[
             F.sum(F.shiftright(F.col("h"), b).bitwiseAND(one)).alias(f"_o{b}")
@@ -879,12 +872,7 @@ def simhash_signatures_df(
 
 
 def simhash_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    seed: int = 11,
-    max_bucket_size: int | None = None,
+    df: DataFrame, max_hamming: int = 3, max_bucket_size: int | None = None
 ) -> DataFrame:
     """Candidate near-dup pairs by SimHash banding + Hamming verification.
 
@@ -895,7 +883,7 @@ def simhash_pairs(
     """
     # NOTE: the two sides of the band self-join are byte-identical subtrees,
     # so Spark's ReuseExchange computes the signature aggregate once.
-    sigs = simhash_signatures_df(df, text_col, id_col, seed)
+    sigs = simhash_signatures_df(df)
     # band index is a static Python int (shiftright needs a literal shift)
     banded = sigs.select(
         "id",
@@ -937,20 +925,14 @@ def simhash_pairs(
 # ---------------------------------------------------------------------------
 
 
-def ngram_contamination(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    n: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def ngram_contamination(corpus: DataFrame, benchmark: DataFrame, n: int = 5) -> DataFrame:
     """Flag corpus documents that share any word ``n``-gram with a
     benchmark/eval set — the standard training-data decontamination pass
     (GPT-3 appendix C / PaLM-style n-gram overlap, public heuristics
     independently expressed).
 
     Returns one row per contaminated corpus document:
-    ``(id_col, n_shared_ngrams)`` where ``n_shared_ngrams`` counts the
+    ``(doc_id, n_shared_ngrams)`` where ``n_shared_ngrams`` counts the
     document's DISTINCT shingles that occur anywhere in the benchmark.
 
     Scale: the benchmark side (an eval suite) is tiny relative to a 100 TB
@@ -963,31 +945,33 @@ def ngram_contamination(
     scale doubles as a collision check).
     """
     corpus_h = (
-        _docs_fanned(corpus, id_col, text_col)  # parallel shingle pass (r15)
-        .select(F.col("id").alias(id_col), F.explode(word_shingles("_t", n)).alias("_s"))
-        .select(id_col, F.xxhash64("_s").alias("_h"))
+        _docs_fanned(corpus)  # parallel shingle pass (r15)
+        .select(F.col("id").alias("doc_id"), F.explode(word_shingles("_t", n)).alias("_s"))
+        .select("doc_id", F.xxhash64("_s").alias("_h"))
     )
     bench_h = (
-        _docs_fanned(benchmark, id_col, text_col)
+        _docs_fanned(benchmark)
         .select(F.explode(word_shingles("_t", n)).alias("_s"))
         .select(F.xxhash64("_s").alias("_h"))
         .distinct()
     )
     return (
         corpus_h.join(F.broadcast(bench_h), "_h")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_shared_ngrams"))
     )
 
 
+#: Per-mille split-hash cut points of :func:`leakage_safe_split`
+#: (train below the first, val below the second, test above), shared with
+#: the q_leakage_safe_split oracle.
+_TRAIN_PER_MILLE, _VAL_PER_MILLE = 800, 900
+
+
 def leakage_safe_split(
-    docs: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    train_pct: int = 80,
-    val_pct: int = 10,
+    docs: DataFrame, pairs: DataFrame, id_col: str = "doc_id"
 ) -> DataFrame:
-    """Train/val/test assignment that cannot leak near-duplicates across
+    """80/10/10 train/val/test assignment that cannot leak near-duplicates across
     splits: the split hash runs over the near-dup CLUSTER representative
     (connected-components label), not the document id, so every member of
     a duplicate cluster lands in the same split (the public
@@ -1012,8 +996,8 @@ def leakage_safe_split(
     # exactly the 100 TB corpus this targets
     h = F.pmod(F.pmod(rep, F.lit(1000)) * F.lit(2654435761), F.lit(1000))
     split = (
-        F.when(h < train_pct * 10, F.lit("train"))
-        .when(h < (train_pct + val_pct) * 10, F.lit("val"))
+        F.when(h < _TRAIN_PER_MILLE, F.lit("train"))
+        .when(h < _VAL_PER_MILLE, F.lit("val"))
         .otherwise(F.lit("test"))
     )
     return docs.join(comp, id_col, "left").select(
@@ -1026,12 +1010,7 @@ def leakage_safe_split(
 # ---------------------------------------------------------------------------
 
 
-def span_dup_stats(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    span_tokens: int = 10,
-) -> DataFrame:
+def span_dup_stats(df: DataFrame, span_tokens: int = 10) -> DataFrame:
     """Per-document duplicated-span statistics over fixed-size token spans.
 
     Doc-level dedup misses the common contamination mode where *parts* of a
@@ -1043,7 +1022,7 @@ def span_dup_stats(
     and a span is *duplicated* when its text occurs more than once in the
     corpus (counting multiplicity, so an in-document repeat counts too).
 
-    Returns ``(id_col, n_spans, n_dup_spans, dup_span_ratio)`` — the ratio
+    Returns ``(doc_id, n_spans, n_dup_spans, dup_span_ratio)`` — the ratio
     is the downstream filter knob (e.g. drop docs with ratio > 0.5).
 
     Scale: spans shuffle as 32-char md5 digests, never as span text — the
@@ -1068,18 +1047,17 @@ def span_dup_stats(
     spans = (
         chunk_documents(
             # parallel normalize+chunk pass on narrow scans (r15)
-            _docs_fanned(df, id_col, text_col).withColumnRenamed("id", id_col),
+            _docs_fanned(df).withColumnRenamed("id", "doc_id"),
             max_tokens=span_tokens,
             text_col="_t",
-            id_col=id_col,
         )
-        .select(F.col(id_col), F.md5("chunk_text").alias("h"))
+        .select(F.col("doc_id"), F.md5("chunk_text").alias("h"))
         .repartition(F.col("h"))
     )
-    counts = spans.groupBy("h").agg(F.count(F.col(id_col)).alias("occ"))
+    counts = spans.groupBy("h").agg(F.count(F.col("doc_id")).alias("occ"))
     return (
         spans.join(counts, "h")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_spans"),
             F.count(F.when(F.col("occ") > 1, True)).alias("n_dup_spans"),
@@ -1096,12 +1074,7 @@ def span_dup_stats(
 # ---------------------------------------------------------------------------
 
 
-def incremental_dedup(
-    corpus: DataFrame,
-    batch: DataFrame,
-    key: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def incremental_dedup(corpus: DataFrame, batch: DataFrame) -> DataFrame:
     """Admit only new-batch docs that are novel vs the historical corpus
     AND unique within the batch.
 
@@ -1110,7 +1083,7 @@ def incremental_dedup(
     persisted *hash index* — the corpus side reduces to 16-byte md5 digests
     (a distinct projection any engine can maintain incrementally as an
     aggregate table), and the batch anti-joins against it. Returns the
-    surviving batch rows as ``(id_col, text_hash, n_copies)`` with
+    surviving batch rows as ``(doc_id, text_hash, n_copies)`` with
     ``n_copies`` counting the batch-internal multiplicity.
 
     Scale: the anti-join shuffles digests, never text; with the hash index
@@ -1118,34 +1091,34 @@ def incremental_dedup(
     shuffles. Within-batch dedup reuses the same digest exchange.
     """
     idx = (
-        fan_out(corpus.select(F.col(key)))  # parallel normalize+md5 (r15)
-        .select(F.md5(normalize_text(key)).alias("text_hash"))
+        fan_out(corpus.select(F.col("text")))  # parallel normalize+md5 (r15)
+        .select(F.md5(normalize_text("text")).alias("text_hash"))
         .distinct()
     )
-    hashed = fan_out(batch).withColumn("text_hash", F.md5(normalize_text(key)))
+    hashed = fan_out(batch).withColumn("text_hash", F.md5(normalize_text("text")))
     fresh = hashed.join(idx, "text_hash", "left_anti").drop("text_hash")
     # within-batch dedup IS normalized_dedup — one canonical implementation
     # of the md5(normalize)/min-id/count convention
-    return normalized_dedup(fresh, key=key, id_col=id_col).select(
-        id_col, "text_hash", "n_copies"
-    )
+    return normalized_dedup(fresh).select("doc_id", "text_hash", "n_copies")
+
+
+#: Blocking key of :func:`fuzzy_name_pairs` (a name's final token), shared
+#: with the q_fuzzy_match_names oracle.
+_NAME_BLOCK_SQL = "split_part(name, ' ', -1)"
 
 
 def fuzzy_name_pairs(
-    df: DataFrame,
-    name_col: str = "p_name",
-    block_expr: str = "split_part({name}, ' ', -1)",
-    max_dist: int = 2,
+    df: DataFrame, name_col: str = "p_name", max_dist: int = 2
 ) -> DataFrame:
     """Typo-level near-duplicate names: distinct name pairs within edit
-    distance ``max_dist``, candidates restricted by a blocking key.
+    distance ``max_dist``, candidates restricted to names sharing their
+    final token.
 
     The character-level member of the dedup family (n-gram Jaccard and
     MinHash operate on token sets and miss single-character typos; edit
     distance catches them). A full levenshtein self-join is O(n²·L²) —
-    unplannable at scale — so candidates are blocked on a cheap key (here
-    the final token; for free text, a phonetic code or length+prefix band)
-    and only in-block pairs pay the levenshtein. The block key shuffles as
+    unplannable at scale — so candidates are blocked on a cheap key (the
+    final token) and only in-block pairs pay the levenshtein. The block key shuffles as
     a short string; ``levenshtein`` is a codegen JVM builtin.
 
     Returns (name_a, name_b, dist) with name_a < name_b — every pair
@@ -1155,7 +1128,7 @@ def fuzzy_name_pairs(
         df.select(F.col(name_col).alias("name"))
         .filter(F.col("name").isNotNull())
         .distinct()
-        .withColumn("block", F.expr(block_expr.format(name="name")))
+        .withColumn("block", F.expr(_NAME_BLOCK_SQL))
     )
     right = names.select(F.col("name").alias("name_b"), F.col("block"))
     return (
@@ -1170,14 +1143,7 @@ def fuzzy_name_pairs(
     )
 
 
-def containment_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    n_blocking: int = 3,
-    threshold: float = 0.7,
-) -> DataFrame:
+def containment_pairs(df: DataFrame, threshold: float = 0.7) -> DataFrame:
     """Asymmetric near-duplication: shingle containment C(A→B) = |A∩B|/|A|.
 
     Jaccard misses the quote/excerpt pattern — a short document wholly
@@ -1190,17 +1156,17 @@ def containment_pairs(
     directions' containment, keeping pairs where either side ≥ threshold.
     """
     docs = (
-        _docs_fanned(df, id_col, text_col)  # parallel shingle pass (r15)
-        .select("id", word_shingles("_t", n).alias("sh"))
+        _docs_fanned(df)  # parallel shingle pass (r15)
+        .select("id", word_shingles("_t").alias("sh"))
         .repartition(F.col("id"))
     )
     keyed = docs.select(
-        "id", F.explode(F.slice(F.array_sort("sh"), 1, n_blocking)).alias("bkey")
+        "id", F.explode(F.slice(F.array_sort("sh"), 1, 3)).alias("bkey")
     )
     # r16 note: the _pairs_from_buckets set-aggregate rewrite was measured
     # HERE and reverted — interleaved A/B at sf0.1 under the widened AQE
     # coalescing read 0.703 → 0.831 s (+18%): this operator's keyed
-    # explode is the n_blocking-smallest keys only (no inverted index), so
+    # explode is the 3 smallest keys only (no inverted index), so
     # the self-join is small and its two SMJ sides parallelize better than
     # the non-codegen ObjectHashAggregate the rewrite trades them for.
     cands = (
@@ -1232,19 +1198,12 @@ def containment_pairs(
 
 
 def lsh_param_sweep(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    num_perm: int = 32,
-    band_grid: tuple[int, ...] = (4, 8, 16, 32),
-    threshold: float = 0.5,
-    seed: int = 7,
-    sample_fraction: float | None = 0.5,
+    df: DataFrame, threshold: float = 0.5, sample_fraction: float = 0.5
 ) -> DataFrame:
     """Band/row tradeoff report for MinHash-LSH: measured recall and
-    candidate cost per (bands, rows_per_band) config, against the exact
-    Jaccard tier as ground truth — the tuning artifact you produce BEFORE
+    candidate cost per (bands, rows_per_band) config of ``_SWEEP_GRID``
+    over ``_NUM_PERM`` permutations, against the exhaustive exact Jaccard
+    tier as ground truth — the tuning artifact you produce BEFORE
     committing a 100 TB dedup run to one parameter choice.
 
     One row per config:
@@ -1254,15 +1213,11 @@ def lsh_param_sweep(
 
     - ``expected_recall_at_t`` = 1-(1-t^r)^b, the S-curve capture
       probability AT the threshold (pairs above t capture more often);
-    - ``n_true`` / ``recall``: in sampled mode (``sample_fraction`` set
-      — the default) the ground truth is :func:`exhaustive_jaccard_pairs`,
-      the prefix-filtered EXHAUSTIVE exact tier (recall 1 by
-      construction), so the reported recall is ABSOLUTE — affordable
-      precisely because the sweep runs on a bounded sample. Only the
-      explicit full-corpus opt-in (``sample_fraction=None``) falls back
-      to :func:`ngram_jaccard_pairs`' 3-smallest-shingle blocking, where
-      ``n_true`` can undercount true J≥t pairs and recall is measured
-      RELATIVE to the blocking-recalled tier;
+    - ``n_true`` / ``recall``: the ground truth is
+      :func:`exhaustive_jaccard_pairs`, the prefix-filtered EXHAUSTIVE
+      exact tier (recall 1 by construction), so the reported recall is
+      ABSOLUTE — affordable precisely because the sweep runs on a bounded
+      sample;
     - ``precision`` = share of a config's candidate pairs that verify at
       the threshold — the wasted-verification cost signal. Every config
       gets its row even with zero candidates (n_candidates=0,
@@ -1272,12 +1227,12 @@ def lsh_param_sweep(
     tier is O(corpus blocking join), so tuning runs on a bounded sample,
     picks the knee of the recall/cost curve, then the CHOSEN config runs
     at full scale. ``sample_fraction`` (default 0.5) makes that contract
-    executable: a deterministic multiplicative-hash filter on ``id_col``
+    executable: a deterministic multiplicative-hash filter on ``doc_id``
     (the q_token_budget_sample idiom, xxhash64-prefixed so any id type
     works) keeps ~that fraction of documents BEFORE the shingle explode,
     so every downstream tier — signatures, banding, truth — sees only the
-    sample. Pass ``sample_fraction=None`` to opt in to the full corpus
-    (small corpora, tests, or when the truth tier is affordable).
+    sample. ``sample_fraction=1.0`` takes the full corpus (small corpora
+    and tests).
 
     Scale: signatures are computed ONCE (same explode + per-permutation
     MIN aggregates as :func:`minhash_lsh_pairs`, whole-stage codegen, one
@@ -1286,23 +1241,20 @@ def lsh_param_sweep(
     shuffle on (bands, band, bhash). The 1-row truth-count frame joins
     back via broadcast.
     """
-    if any(num_perm % b for b in band_grid):
-        raise ValueError(f"every bands value in {band_grid} must divide {num_perm}")
-    if sample_fraction is not None:
-        if not 0.0 < sample_fraction <= 1.0:
-            raise ValueError(f"sample_fraction must be in (0, 1]: {sample_fraction}")
-        if sample_fraction < 1.0:
-            # deterministic hash-sample BELOW the shingle explode (plan-
-            # guarded in tests/test_plans.py): cheap codegen filter adjacent
-            # to the scan, identical doc subset in every tier and every run
-            df = df.filter(
-                F.pmod(
-                    F.pmod(F.xxhash64(F.col(id_col)), F.lit(1_000_003))
-                    * F.lit(2654435761),
-                    F.lit(1_000_003),
-                )
-                < F.lit(int(sample_fraction * 1_000_003))
+    if not 0.0 < sample_fraction <= 1.0:
+        raise ValueError(f"sample_fraction must be in (0, 1]: {sample_fraction}")
+    if sample_fraction < 1.0:
+        # deterministic hash-sample BELOW the shingle explode (plan-
+        # guarded in tests/test_plans.py): cheap codegen filter adjacent
+        # to the scan, identical doc subset in every tier and every run
+        df = df.filter(
+            F.pmod(
+                F.pmod(F.xxhash64(F.col("doc_id")), F.lit(1_000_003))
+                * F.lit(2654435761),
+                F.lit(1_000_003),
             )
+            < F.lit(int(sample_fraction * 1_000_003))
+        )
     # r15 restructure (guide §1.2/§2.4): ONE materialized shingle+hash
     # pass feeds every tier. The signature branch and the truth tier live
     # in separately COMPILED plans (the localCheckpoint boundaries below),
@@ -1320,11 +1272,11 @@ def lsh_param_sweep(
     # same partitions (duplicate shingle work); materializing once up
     # front costs the same job the first consumer paid anyway.
     hashed = (
-        _docs_fanned(df, id_col, text_col)  # parallel shingle pass (r15)
+        _docs_fanned(df)  # parallel shingle pass (r15)
         .select(
             "id",
             F.array_sort(
-                F.transform(word_shingles("_t", n), lambda s: F.xxhash64(s))
+                F.transform(word_shingles("_t"), lambda s: F.xxhash64(s))
             ).alias("hv"),
         )
         .localCheckpoint(eager=True)
@@ -1333,7 +1285,7 @@ def lsh_param_sweep(
     def build_sig() -> DataFrame:
         per = hashed.select("id", F.explode("hv").alias("h64"))
         return (
-            _minhash_mins(per, seed, num_perm)
+            _minhash_mins(per, _SEED, _NUM_PERM)
             # every config's band explode re-slices this one frame — the
             # lazy checkpoint materializes the signature pass ONCE (|docs|
             # rows of 32 longs, far smaller than the shingled corpus)
@@ -1342,28 +1294,11 @@ def lsh_param_sweep(
         )
 
     def build_truth() -> DataFrame:
-        # sampled mode (the contract default): absolute ground truth from
-        # the exhaustive prefix-filtered tier, fed from the SAME
-        # checkpointed hash frame as the signatures (r15 — no second
-        # corpus pass); full-corpus opt-in keeps the near-linear blocking
-        # heuristic (documented relative recall), which needs the string
-        # shingles for its lexicographic blocking keys and so derives its
-        # own pass. Known cost of that opt-in (ADVICE r15): the corpus is
-        # shingled twice — once for `hashed` above, once inside
-        # ngram_jaccard_pairs, whose one-frame checkpoint bundles the
-        # string blocking keys WITH its hash arrays. Removing the second
-        # pass would mean teaching ngram_jaccard_pairs to accept a
-        # precomputed hash frame; not worth the API split for an explicit
-        # opt-in path no registered query takes.
-        truth_src = (
-            _exhaustive_pairs_from_hashed(hashed, threshold)
-            if sample_fraction is not None
-            else ngram_jaccard_pairs(
-                df, text_col=text_col, id_col=id_col, n=n, threshold=threshold
-            )
-        )
+        # absolute ground truth from the exhaustive prefix-filtered tier,
+        # fed from the SAME checkpointed hash frame as the signatures
+        # (r15 — no second corpus pass)
         return (
-            truth_src.select(
+            _exhaustive_pairs_from_hashed(hashed, threshold).select(
                 F.col("doc_a").alias("id_a"), F.col("doc_b").alias("id_b")
             )
             # two consumers (capture join + 1-row count): materialize the
@@ -1408,13 +1343,13 @@ def lsh_param_sweep(
         return docs_sig.select(
             F.lit(bands).alias("bands"),
             "id",
-            F.explode(band_key_structs(bands, num_perm // bands)).alias("bk"),
+            F.explode(band_key_structs(bands, _NUM_PERM // bands)).alias("bk"),
         ).select(
             "bands", "id", F.col("bk.band").alias("band"), F.col("bk.bhash").alias("bhash")
         )
 
-    banded = banded_for(band_grid[0])
-    for b in band_grid[1:]:
+    banded = banded_for(_SWEEP_GRID[0])
+    for b in _SWEEP_GRID[1:]:
         banded = banded.unionByName(banded_for(b))
     # r16: per-bucket set aggregate + in-row combinations replaces the
     # bucket self-join (see _pairs_from_buckets — identical pair set per
@@ -1446,10 +1381,10 @@ def lsh_param_sweep(
     expected = F.create_map(
         *[
             c
-            for b in band_grid
+            for b in _SWEEP_GRID
             for c in (
                 F.lit(b),
-                F.lit(round(1 - (1 - threshold ** (num_perm // b)) ** b, 6)),
+                F.lit(round(1 - (1 - threshold ** (_NUM_PERM // b)) ** b, 6)),
             )
         ]
     )
@@ -1457,7 +1392,7 @@ def lsh_param_sweep(
         per_cfg.join(F.broadcast(n_true))
         .select(
             "bands",
-            (F.lit(num_perm) / F.col("bands")).cast("int").alias("rows_per_band"),
+            (F.lit(_NUM_PERM) / F.col("bands")).cast("int").alias("rows_per_band"),
             expected[F.col("bands")].alias("expected_recall_at_t"),
             "n_candidates",
             "n_captured",

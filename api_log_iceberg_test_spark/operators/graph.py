@@ -63,26 +63,20 @@ _LPA_CHECKPOINT_ROUNDS = 2
 _TRIANGLE_BROADCAST_ROW_LIMIT = 4_000_000
 
 
-def transition_edges(
-    events: DataFrame,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    time_col: str = "ts",
-    id_col: str = "event_id",
-) -> DataFrame:
+def transition_edges(events: DataFrame) -> DataFrame:
     """Weighted event-type transition graph from per-user event timelines.
 
-    One window shuffle on ``user_col`` (lag over the user's timeline —
-    ``id_col`` tie-breaks equal timestamps deterministically), then a
+    One window shuffle on ``user_id`` (lag over the user's ``ts`` timeline —
+    ``event_id`` tie-breaks equal timestamps deterministically), then a
     map-side-combinable count per (src, dst). Output is |types|² rows max —
     tiny regardless of input scale.
     """
     from pyspark.sql import Window
 
-    w = Window.partitionBy(user_col).orderBy(time_col, id_col)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = (
-        events.filter(F.col(type_col).isNotNull())
-        .select(user_col, time_col, id_col, F.col(type_col).alias("dst"))
+        events.filter(F.col("event_type").isNotNull())
+        .select("user_id", "ts", "event_id", F.col("event_type").alias("dst"))
         .withColumn("src", F.lag("dst").over(w))
         .filter(F.col("src").isNotNull())
     )
@@ -165,10 +159,12 @@ def pagerank(edges: DataFrame, k: int = 10, damping: float = 0.85) -> DataFrame:
     # the loop pinned in tests).
     if n <= _PAGERANK_DRIVER_NODE_LIMIT:
         return _pagerank_driver(edges, n, k, damping)
-    out_w = edges.groupBy("src").agg(F.sum("w").alias("out_total"))
-    frac = edges.join(out_w, "src").select(
-        "src", "dst", (F.col("w") / F.col("out_total")).alias("frac")
-    )
+    # out(src) as a window over the edges: an out-weight aggregate joined
+    # back would derive the edges twice under the edge cache
+    from pyspark.sql import Window
+
+    out_total = F.sum("w").over(Window.partitionBy("src"))
+    frac = edges.select("src", "dst", (F.col("w") / out_total).alias("frac"))
     base = F.lit((1.0 - damping) / n)
 
     def step(votes, rank):
@@ -182,20 +178,17 @@ def pagerank(edges: DataFrame, k: int = 10, damping: float = 0.85) -> DataFrame:
     )
 
 
-def cooccurrence_edges(
-    lineitem: DataFrame,
-    basket_col: str = "l_orderkey",
-    item_col: str = "l_partkey",
-) -> DataFrame:
+def cooccurrence_edges(lineitem: DataFrame) -> DataFrame:
     """Distinct item co-occurrence edges (a < b) from a basket table.
 
-    Market-basket graph: two parts are linked iff they appear in the same
-    order. Pairs are generated per basket, so fan-out is bounded by basket
-    size (≤7 lineitems per order in TPC-H), not table size; repeat
-    co-purchases collapse to one undirected edge.
+    Market-basket graph: two parts (``l_partkey``) are linked iff they
+    appear in the same order (``l_orderkey``). Pairs are generated per
+    basket, so fan-out is bounded by basket size (≤7 lineitems per order
+    in TPC-H), not table size; repeat co-purchases collapse to one
+    undirected edge.
     """
     items = lineitem.select(
-        F.col(basket_col).alias("basket"), F.col(item_col).alias("item")
+        F.col("l_orderkey").alias("basket"), F.col("l_partkey").alias("item")
     )
     # r15 (guide §1.2): pairs come from ONE per-basket set aggregate +
     # in-row combination expansion (_pairs_from_buckets, the dedup

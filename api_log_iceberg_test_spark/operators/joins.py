@@ -95,7 +95,6 @@ def auto_bucket_seconds(
     time_col: str,
     within_seconds: int,
     target_rows_per_task: int = 2_000_000,
-    max_factor: int = 12,
     peak_cell_rows: int | None = None,
 ) -> int:
     """Derive :func:`nearby_stats_within`'s ``bucket_seconds`` from a cheap
@@ -109,7 +108,7 @@ def auto_bucket_seconds(
     since ``bucket_seconds ≥ within`` is required for strip coverage.
     With peak cell density ``m``, a bucket of ``k`` cells bounds the task
     at ``(k + 2) · m`` rows (its ``k`` cells plus one boundary-strip cell
-    each side), so we pick the largest ``k ≤ max_factor`` with
+    each side), so we pick the largest ``k ≤ 12`` with
     ``(k + 2) · m ≤ target_rows_per_task``, floored at ``k = 1``
     (= ``bucket_seconds = within``, the operator's hard floor: below it
     the strips cannot cover the ±window). The bound is conservative —
@@ -148,8 +147,8 @@ def auto_bucket_seconds(
             )
         peak = peak_cell_density(df, time_col, within_seconds)
     if not peak:
-        return max_factor * within_seconds
-    k = min(max_factor, max(1, target_rows_per_task // peak - 2))
+        return 12 * within_seconds
+    k = min(12, max(1, target_rows_per_task // peak - 2))
     return int(k) * within_seconds
 
 
@@ -299,22 +298,20 @@ def bloom_semi_join(
     keys: DataFrame,
     fact_key: str,
     keys_key: str,
-    bits_log2: int = 16,
-    n_hashes: int = 3,
 ) -> DataFrame:
     """Semi join with a Bloom-filter prefilter, entirely in DataFrame ops.
 
     The gap this fills: a key set too large to broadcast as a hash
     relation forces a full shuffle of the fact table for a plain semi
     join. A Bloom filter compresses ANY key-set size to a fixed
-    2^bits_log2-bit bitmap (here 2^16 bits = 1024 64-bit words), so the
+    2^16-bit bitmap (1024 64-bit words), so the
     membership test runs map-side and only candidates reach the exact
     residual join. Spark's own runtime bloom pruning
     (``spark.sql.optimizer.runtime.bloomFilter.enabled``) applies the same
     idea inside the optimizer; ``bloom_filter_agg`` is not exposed to SQL,
     so this is the declarative-API form.
 
-    Build: each key sets ``n_hashes`` bits (md5-derived positions, portable
+    Build: each key sets 3 bits (md5-derived positions, portable
     across engines); a ``bit_or`` aggregate folds them into ≤1024 (word,
     bits) rows — fixed size regardless of |keys|. Probe: the fact side
     derives the same positions and broadcast-joins the word table once per
@@ -323,7 +320,7 @@ def bloom_semi_join(
     false positives, so the RESULT equals the plain semi join — the bloom
     stage only changes how many rows pay the final shuffle.
     """
-    mask = (1 << bits_log2) - 1
+    mask = (1 << 16) - 1
 
     def positions(col: Column) -> list[Column]:
         s = col.cast("string")
@@ -331,7 +328,7 @@ def bloom_semi_join(
             F.conv(F.substring(F.md5(s), 1 + 8 * i, 8), 16, 10)
             .cast("bigint")
             .bitwiseAND(F.lit(mask))
-            for i in range(n_hashes)
+            for i in range(3)
         ]
 
     # shiftleft's bit count must be a literal in the Python API — the

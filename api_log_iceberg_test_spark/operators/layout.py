@@ -143,22 +143,16 @@ _BOUNDS_MEMO_BY_SESSION: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictiona
 _BOUNDS_MEMO_CAP = 128
 
 
-def range_boundaries(
-    df: DataFrame,
-    order_col: str,
-    num_buckets: int | None = None,
-    sample_per_bucket: int = 20,
-) -> list:
+def range_boundaries(df: DataFrame, order_col: str) -> list:
     """Eagerly compute ascending literal cut points that split ``order_col``
-    into ~``num_buckets`` balanced ranges (default: the session's
-    ``spark.sql.shuffle.partitions``).
+    into ~k balanced ranges, k = the session's ``spark.sql.shuffle.partitions``.
 
     ONE bounded pass: a hash-ordered top-K (``orderBy(xxhash64(key))
-    .limit(num_buckets × sample_per_bucket)``) is a uniform frequency-
-    weighted sample taken without a prior count — TakeOrderedAndProject
-    keeps a per-partition heap, never a full sort — and the driver-side
-    collect is capped at ``num_buckets × sample_per_bucket`` single-column
-    rows (20 K keys for 1000 buckets) regardless of table size. Evenly
+    .limit(k × 20)``) is a uniform frequency-weighted sample taken without
+    a prior count — TakeOrderedAndProject keeps a per-partition heap,
+    never a full sort — and the driver-side collect is capped at ``k × 20``
+    single-column rows (20 K keys for 1000 buckets) regardless of table
+    size. Evenly
     spaced order statistics of the sorted sample become the cut points,
     deduplicated to strictly increasing (heavy keys collapse cuts — skewed
     data simply yields fewer, never wrong, buckets). This is what Spark's
@@ -174,38 +168,32 @@ def range_boundaries(
     ``boundaries=`` of the family members.
     """
     sess = df.sparkSession
-    if num_buckets is not None:
-        k = num_buckets
-    else:
-        # the conf value is not always an integer (some platforms set e.g.
-        # "auto") — fall back to the context's parallelism, then a fixed
-        # default, instead of an opaque ValueError (ADVICE r13)
-        raw = sess.conf.get("spark.sql.shuffle.partitions", None)
+    # the conf value is not always an integer (some platforms set e.g.
+    # "auto") — fall back to the context's parallelism, then a fixed
+    # default, instead of an opaque ValueError (ADVICE r13)
+    raw = sess.conf.get("spark.sql.shuffle.partitions", None)
+    try:
+        k = int(raw)
+    except (TypeError, ValueError):
         try:
-            k = int(raw)
-        except (TypeError, ValueError):
-            try:
-                k = int(sess.sparkContext.defaultParallelism)
-            except Exception:  # pragma: no cover — no usable context
-                k = 200
-            # the substitution changes bucket counts — make it visible
-            # instead of silently degrading balance (ADVICE r14)
-            import warnings
+            k = int(sess.sparkContext.defaultParallelism)
+        except Exception:  # pragma: no cover — no usable context
+            k = 200
+        # the substitution changes bucket counts — make it visible
+        # instead of silently degrading balance (ADVICE r14)
+        import warnings
 
-            warnings.warn(
-                "range_boundaries: spark.sql.shuffle.partitions="
-                f"{raw!r} is not an integer; using {k} buckets instead",
-                stacklevel=2,
-            )
-    if k < 1:
-        raise ValueError(f"num_buckets must be >= 1, got {k}")
+        warnings.warn(
+            "range_boundaries: spark.sql.shuffle.partitions="
+            f"{raw!r} is not an integer; using {k} buckets instead",
+            stacklevel=2,
+        )
     try:
         memo = _BOUNDS_MEMO_BY_SESSION.setdefault(sess, _OrderedDict())
         memo_key = (
             df._jdf.queryExecution().analyzed().semanticHash(),
             order_col,
             k,
-            sample_per_bucket,
         )
     except Exception:  # pragma: no cover — plan hash unavailable
         memo, memo_key = None, None
@@ -218,7 +206,7 @@ def range_boundaries(
         for r in df.select(key)
         .where(key.isNotNull())
         .orderBy(F.xxhash64(key))
-        .limit(k * sample_per_bucket)
+        .limit(k * 20)
         .collect()
     )
     cuts: list = []
@@ -268,7 +256,6 @@ def range_bucket_ids(
     df: DataFrame,
     order_col: str,
     boundaries: list | None = None,
-    num_buckets: int | None = None,
     bucket_col: str = "__rb_bucket",
 ) -> DataFrame:
     """Assign each row an ascending range-bucket ordinal (0-based int) from
@@ -304,7 +291,7 @@ def range_bucket_ids(
     cuts = (
         boundaries
         if boundaries is not None
-        else range_boundaries(df, order_col, num_buckets)
+        else range_boundaries(df, order_col)
     )
     # cast every cut to the column's exact type: a bare F.lit picks the
     # tightest Python mapping (e.g. IntegerType for small ints) and a
@@ -316,7 +303,6 @@ def range_bucket_ids(
 def dense_ids(
     df: DataFrame,
     sort_col: str,
-    id_col: str = "dense_id",
     boundaries: list | None = None,
 ) -> DataFrame:
     """Contiguous 0-based ids in ``sort_col`` order WITHOUT a global window.
@@ -363,7 +349,7 @@ def dense_ids(
     return (
         arranged.withColumn(rn, F.row_number().over(per_part))
         .join(F.broadcast(offsets), pid)
-        .withColumn(id_col, (F.col(off) + F.col(rn) - 1).cast("long"))
+        .withColumn("dense_id", (F.col(off) + F.col(rn) - 1).cast("long"))
         .drop(pid, rn, off)
     )
 
@@ -436,7 +422,6 @@ def exclusive_prefix_sum(
     order_col: str,
     val_col: str,
     out_col: str = "prefix_sum",
-    boundaries: list | None = None,
 ) -> DataFrame:
     """Exclusive running Σ``val_col`` in ``order_col`` order WITHOUT a
     global window — third member of the partition-offset family
@@ -449,7 +434,7 @@ def exclusive_prefix_sum(
     (:func:`range_bucket_ids`) + a window BY bucket id; the only
     unpartitioned window runs over the |buckets|-row per-bucket totals."""
     pid, loc, off = "__pfx_pid", "__pfx_loc", "__pfx_off"
-    arranged = range_bucket_ids(df, order_col, boundaries, bucket_col=pid)
+    arranged = range_bucket_ids(df, order_col, bucket_col=pid)
     per = arranged.groupBy(pid).agg(F.sum(val_col).alias("_ps"))
     w = Window.orderBy(pid).rowsBetween(Window.unboundedPreceding, -1)
     offs = per.select(pid, F.coalesce(F.sum("_ps").over(w), F.lit(0)).alias(off))
@@ -471,7 +456,6 @@ def exclusive_prefix_max(
     order_col: str,
     val_col: str,
     out_col: str = "prefix_max",
-    boundaries: list | None = None,
 ) -> DataFrame:
     """Exclusive running MAX of ``val_col`` in ``order_col`` order WITHOUT
     a global window — fourth member of the partition-offset family
@@ -488,7 +472,7 @@ def exclusive_prefix_max(
     (``F.greatest`` skips NULLs, so the first bucket's missing offset and
     a first-in-bucket row's missing local prefix combine correctly)."""
     pid, loc, off = "__pmx_pid", "__pmx_loc", "__pmx_off"
-    arranged = range_bucket_ids(df, order_col, boundaries, bucket_col=pid)
+    arranged = range_bucket_ids(df, order_col, bucket_col=pid)
     per = arranged.groupBy(pid).agg(F.max(val_col).alias("_pm"))
     w = Window.orderBy(pid).rowsBetween(Window.unboundedPreceding, -1)
     offs = per.select(pid, F.max("_pm").over(w).alias(off))

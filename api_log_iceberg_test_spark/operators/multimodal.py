@@ -61,17 +61,17 @@ FRAME_SAMPLE_SCHEMA = T.StructType(
 )
 
 
-def synthesize_media(df: DataFrame, id_col: str = "doc_id", payload_bytes: int = 256) -> DataFrame:
+def synthesize_media(df: DataFrame) -> DataFrame:
     """Attach a deterministic fake binary payload + metadata to each row.
 
     Stands in for reading real media; payload = repeated md5 bytes of the id
-    (deterministic, compressible, schema-correct).
+    (deterministic, compressible, schema-correct), ~256 bytes per row.
     """
-    rep = (payload_bytes // 16) + 1
+    rep = (256 // 16) + 1
     # deterministic pseudo-bytes: concat of md5(id||k) digests (binary concat)
     payload = F.concat(
         *[
-            F.unhex(F.md5(F.concat(F.col(id_col).cast("string"), F.lit(f"|{k}"))))
+            F.unhex(F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(f"|{k}"))))
             for k in range(rep)
         ]
     )
@@ -80,8 +80,8 @@ def synthesize_media(df: DataFrame, id_col: str = "doc_id", payload_bytes: int =
         F.struct(
             F.lit("image").alias("media_type"),
             F.lit("png").alias("format"),
-            (F.pmod(F.xxhash64(F.col(id_col)), F.lit(640)) + 32).cast("int").alias("width"),
-            (F.pmod(F.xxhash64(F.col(id_col) + 1), F.lit(480)) + 32).cast("int").alias("height"),
+            (F.pmod(F.xxhash64(F.col("doc_id")), F.lit(640)) + 32).cast("int").alias("width"),
+            (F.pmod(F.xxhash64(F.col("doc_id") + 1), F.lit(480)) + 32).cast("int").alias("height"),
             F.lit(0).cast("long").alias("duration_ms"),
             F.length(payload).cast("long").alias("size_bytes"),
         ),
@@ -117,28 +117,28 @@ def _decode_image_batch(payloads: pd.Series) -> pd.DataFrame:
     return pd.DataFrame(rows)
 
 
-def extract_image_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def extract_image_features(df: DataFrame) -> DataFrame:
     """Arrow-batched image feature extraction via ``mapInPandas``.
 
-    Input needs (id_col, media_payload). Output: IMAGE_FEATURES_SCHEMA.
+    Input needs (doc_id, media_payload). Output: IMAGE_FEATURES_SCHEMA.
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             feats = _decode_image_batch(pdf["media_payload"])
-            feats.insert(0, "doc_id", pdf[id_col].values)
+            feats.insert(0, "doc_id", pdf["doc_id"].values)
             yield feats.astype(
                 {"doc_id": "int64", "width": "Int32", "height": "Int32"}
             )
 
-    return df.select(id_col, "media_payload").mapInPandas(run, IMAGE_FEATURES_SCHEMA)
+    return df.select("doc_id", "media_payload").mapInPandas(run, IMAGE_FEATURES_SCHEMA)
 
 
-def sample_video_frames(df: DataFrame, every_ms: int = 1000, id_col: str = "doc_id") -> DataFrame:
+def sample_video_frames(df: DataFrame) -> DataFrame:
     """Frame sampling plumbing for video payloads (STUB decode).
 
     Real implementation: ``av.open`` → demux/decode → keyframe-nearest
-    sampling at ``every_ms``. Raises NotImplementedError in the kernel when
+    sampling every 1000 ms. Raises NotImplementedError in the kernel when
     a real decode is requested; the deterministic fake emits 3 fake frames
     per doc so partitioning/row-expansion behavior is testable.
     """
@@ -150,15 +150,15 @@ def sample_video_frames(df: DataFrame, every_ms: int = 1000, id_col: str = "doc_
                 for i in range(3):  # fake: 3 frames per payload
                     out.append(
                         {
-                            "doc_id": row[id_col],
+                            "doc_id": row["doc_id"],
                             "frame_idx": i,
-                            "frame_ts_ms": i * every_ms,
+                            "frame_ts_ms": i * 1000,
                             "frame_png": bytes(row["media_payload"][:16]),
                         }
                     )
             yield pd.DataFrame(out)
 
-    return df.select(id_col, "media_payload").mapInPandas(run, FRAME_SAMPLE_SCHEMA)
+    return df.select("doc_id", "media_payload").mapInPandas(run, FRAME_SAMPLE_SCHEMA)
 
 
 RESIZED_IMAGE_SCHEMA = T.StructType(
@@ -183,7 +183,7 @@ AUDIO_FEATURES_SCHEMA = T.StructType(
 
 
 def resize_images(
-    df: DataFrame, max_width: int = 224, max_height: int = 224, id_col: str = "doc_id"
+    df: DataFrame, max_width: int = 224, max_height: int = 224
 ) -> DataFrame:
     """Bounded-box image resize plumbing (STUB decode/encode).
 
@@ -203,7 +203,7 @@ def resize_images(
             dims = _decode_image_batch(pdf["media_payload"])
             rows: list[dict[str, Any]] = []
             for did, b, w0, h0 in zip(
-                pdf[id_col].values, pdf["media_payload"], dims["width"], dims["height"]
+                pdf["doc_id"].values, pdf["media_payload"], dims["width"], dims["height"]
             ):
                 scale = min(max_width / w0, max_height / h0, 1.0)
                 w1, h1 = max(int(w0 * scale), 1), max(int(h0 * scale), 1)
@@ -228,10 +228,10 @@ def resize_images(
                 }
             )
 
-    return df.select(id_col, "media_payload").mapInPandas(run, RESIZED_IMAGE_SCHEMA)
+    return df.select("doc_id", "media_payload").mapInPandas(run, RESIZED_IMAGE_SCHEMA)
 
 
-def extract_audio_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def extract_audio_features(df: DataFrame) -> DataFrame:
     """Audio feature extraction plumbing (STUB decode).
 
     Real implementation: ``librosa.load(io.BytesIO(b))`` → duration, rms,
@@ -244,7 +244,7 @@ def extract_audio_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
         for pdf in batches:
             rows: list[dict[str, Any]] = []
-            for did, b in zip(pdf[id_col].values, pdf["media_payload"]):
+            for did, b in zip(pdf["doc_id"].values, pdf["media_payload"]):
                 h = hashlib.md5(bytes(b).hex().encode()).digest()
                 rows.append(
                     {
@@ -258,4 +258,4 @@ def extract_audio_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 {"doc_id": "int64", "duration_ms": "int64", "sample_rate": "Int32"}
             )
 
-    return df.select(id_col, "media_payload").mapInPandas(run, AUDIO_FEATURES_SCHEMA)
+    return df.select("doc_id", "media_payload").mapInPandas(run, AUDIO_FEATURES_SCHEMA)

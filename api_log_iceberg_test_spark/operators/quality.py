@@ -33,9 +33,9 @@ def check_rows(df: DataFrame, rules: dict[str, Column]) -> DataFrame:
     ).select("rule", "n_violations", (F.col("n_violations") == 0).alias("passed"))
 
 
-def check_unique(df: DataFrame, key: str, rule: str | None = None) -> DataFrame:
+def check_unique(df: DataFrame, key: str) -> DataFrame:
     """Duplicate-key count as a report row (COUNT − COUNT DISTINCT)."""
-    name = rule or f"unique_{key}"
+    name = f"unique_{key}"
     return df.agg(
         (F.count(key) - F.count_distinct(F.col(key))).alias("n_violations")
     ).select(
@@ -50,10 +50,9 @@ def check_referential(
     child_key: str,
     parent: DataFrame,
     parent_key: str,
-    rule: str | None = None,
 ) -> DataFrame:
     """Orphaned-foreign-key count via anti-join (keys only shuffle)."""
-    name = rule or f"fk_{child_key}"
+    name = f"fk_{child_key}"
     orphans = child.select(F.col(child_key).alias("_k")).join(
         parent.select(F.col(parent_key).alias("_k")), "_k", "left_anti"
     )

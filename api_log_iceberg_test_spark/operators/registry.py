@@ -1625,9 +1625,9 @@ ORACLE["q_leakage_safe_split"] = f"""
     WITH RECURSIVE {_JACCARD_CTES}, {_COMPONENT_CTES}
     SELECT d.doc_id,
            COALESCE(c.component, d.doc_id)::BIGINT AS rep,
-           CASE WHEN (COALESCE(c.component, d.doc_id) * 2654435761) % 1000 < 800
+           CASE WHEN (COALESCE(c.component, d.doc_id) * 2654435761) % 1000 < {dedup._TRAIN_PER_MILLE}
                 THEN 'train'
-                WHEN (COALESCE(c.component, d.doc_id) * 2654435761) % 1000 < 900
+                WHEN (COALESCE(c.component, d.doc_id) * 2654435761) % 1000 < {dedup._VAL_PER_MILLE}
                 THEN 'val'
                 ELSE 'test' END AS split
     FROM documents d LEFT JOIN comp c USING (doc_id)
@@ -2098,8 +2098,8 @@ _BM25_CTES = f"""bm_d AS (
     bm_scored AS (
         SELECT bm_tf.doc_id,
                ln(1.0 + (s.n_docs - bm_dfq.df + 0.5) / (bm_dfq.df + 0.5))
-               * (bm_tf.tf * 2.2)
-               / (bm_tf.tf + 1.2 * (1.0 - 0.75 + 0.75 * bm_tf.dl / s.avgdl)) AS sc
+               * (bm_tf.tf * {tfidf._BM25_K1 + 1.0})
+               / (bm_tf.tf + {tfidf._BM25_K1} * (1.0 - {tfidf._BM25_B} + {tfidf._BM25_B} * bm_tf.dl / s.avgdl)) AS sc
         FROM bm_tf JOIN bm_dfq USING (term) CROSS JOIN bm_stats s
     ),
     bm25 AS (
@@ -3048,15 +3048,17 @@ ORACLE["q_table_profile"] = """
 """
 
 
-def table_checksum(
-    df: DataFrame, canon, slice_col: str, p: int = 1_000_000_007
-) -> DataFrame:
+#: Modulus of :func:`table_checksum` and of its DuckDB oracle.
+_CHECKSUM_MOD = 1_000_000_007
+
+
+def table_checksum(df: DataFrame, canon, slice_col: str) -> DataFrame:
     """Order-independent table checksum — the migration-validation primitive:
     after copying/rewriting a 100 TB table (engine swap, compaction,
-    format change), both sides compute Σ md5(canonical row string) mod p
-    per ``slice_col`` slice WITHOUT any global sort, and equal checksums
-    certify the copy row-for-row. Modular SUM is commutative, so the
-    result is invariant to row order and partitioning by construction
+    format change), both sides compute Σ md5(canonical row string) mod
+    ``_CHECKSUM_MOD`` per ``slice_col`` slice WITHOUT any global sort, and
+    equal checksums certify the copy row-for-row. Modular SUM is
+    commutative, so the result is invariant to row order and partitioning by construction
     (property-tested on random frames). The per-row residues (each < 1e9)
     accumulate in DECIMAL(38,0) — SUM over BIGINT would overflow a slice
     at ~9.2e9 rows, below 100 TB row counts (ADVICE r05) — so the
@@ -3069,7 +3071,7 @@ def table_checksum(
     Output: one row per slice + row count + checksum, so a mismatch also
     LOCATES the divergent slice."""
     h = F.conv(F.substring(F.md5(canon), 1, 15), 16, 10).cast("bigint")
-    pl = F.lit(p)
+    pl = F.lit(_CHECKSUM_MOD)
     return (
         df.groupBy(slice_col)
         .agg(
@@ -3100,7 +3102,7 @@ def q_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     return table_checksum(o, canon, "o_orderstatus")
 
 
-ORACLE["q_table_checksum"] = """
+ORACLE["q_table_checksum"] = f"""
     WITH canon AS (
         SELECT o_orderstatus,
                o_orderkey::VARCHAR || '|' || o_custkey::VARCHAR || '|' ||
@@ -3112,8 +3114,8 @@ ORACLE["q_table_checksum"] = """
     )
     SELECT o_orderstatus,
            COUNT(*) AS n_rows,
-           (SUM(('0x' || substring(md5(row_str), 1, 15))::BIGINT % 1000000007)
-            % 1000000007)::BIGINT AS checksum
+           (SUM(('0x' || substring(md5(row_str), 1, 15))::BIGINT % {_CHECKSUM_MOD})
+            % {_CHECKSUM_MOD})::BIGINT AS checksum
     FROM canon GROUP BY o_orderstatus ORDER BY o_orderstatus
 """
 
@@ -3464,11 +3466,11 @@ def q_fuzzy_match_names(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("name_a", "name_b")
 
 
-ORACLE["q_fuzzy_match_names"] = """
+ORACLE["q_fuzzy_match_names"] = f"""
     WITH n AS (
         SELECT DISTINCT p_name AS name FROM part WHERE p_name IS NOT NULL
     ),
-    b AS (SELECT name, split_part(name, ' ', -1) AS block FROM n)
+    b AS (SELECT name, {dedup._NAME_BLOCK_SQL} AS block FROM n)
     SELECT x.name AS name_a, y.name AS name_b,
            levenshtein(x.name, y.name)::INTEGER AS dist
     FROM b x JOIN b y ON x.block = y.block AND x.name < y.name
@@ -4843,6 +4845,22 @@ def q_kll_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sketches.kll_merge_quantiles(daily, [0.5, 0.9, 0.99])
 
 
+#: Rows per day a query may collect to the driver (ten years of days).
+_MAX_COLLECTED_DAYS = 3_660
+
+
+def _collect_days(df: DataFrame, what: str) -> list:
+    """Collect ``df``, at most one row per day, to the driver. More than
+    ``_MAX_COLLECTED_DAYS`` rows raise instead of filling driver memory."""
+    rows = df.limit(_MAX_COLLECTED_DAYS + 1).collect()
+    if len(rows) > _MAX_COLLECTED_DAYS:
+        raise RuntimeError(
+            f"{what}: more than _MAX_COLLECTED_DAYS={_MAX_COLLECTED_DAYS} "
+            "day rows to collect"
+        )
+    return rows
+
+
 def q_cms_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event-type frequencies from merged daily count-min sketches.
 
@@ -4862,7 +4880,9 @@ def q_cms_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     need no special-casing: collect_set drops NULLs, and NULL frequency is
     a COUNT(*) FILTER, not a sketch probe."""
     ev = load_table(spark, sf_dir, "events")
-    rows = sketches.cms_daily_sketches(ev, collect_keys=True).collect()
+    rows = _collect_days(
+        sketches.cms_daily_sketches(ev, collect_keys=True), "q_cms_event_counts"
+    )
     keys = sorted({k for r in rows for k in (r["keys"] or [])})
     merged = sketches.cms_merge_blobs(spark, [r["sketch"] for r in rows])
     return sketches.cms_estimate_counts(spark, merged, keys).orderBy("key")
@@ -6600,8 +6620,9 @@ def q_maintenance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``files_live``/``rows_total`` and fail the hash.
 
     Scale: the audit is a METADATA query — collects one row per day
-    (≤30) and one (files, rows) pair per commit (≤3); the row counts
-    run distributed through the pinned reader. At 100 TB the same audit
+    (≤30 here, an error past ``_MAX_COLLECTED_DAYS``) and one (files,
+    rows) pair per commit (≤3); the row counts run distributed through
+    the pinned reader. At 100 TB the same audit
     reads Iceberg's ``.snapshots``/``.files`` metadata tables instead of
     walking a directory; the staged-parquet version family is this
     container's executable analogue (ingest.py module docstring).
@@ -6619,7 +6640,10 @@ def q_maintenance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events")
     days = sorted(
-        r["d"] for r in ev.select(F.to_date("ts").alias("d")).distinct().collect()
+        r["d"]
+        for r in _collect_days(
+            ev.select(F.to_date("ts").alias("d")).distinct(), "q_maintenance_audit"
+        )
     )
     if not days:
         return spark.createDataFrame(

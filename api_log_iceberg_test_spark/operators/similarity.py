@@ -58,8 +58,6 @@ def cosine_topk_bruteforce(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector.
 
@@ -72,17 +70,17 @@ def cosine_topk_bruteforce(
     # norms precomputed per side: the pair projection then does ONE array
     # pass (the dot product) instead of three
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        norm(F.col(vec_col)).alias("q_norm"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_vec"),
+        norm(F.col("embedding")).alias("q_norm"),
     )
     # r15: the per-pair dot products evaluate map-side; fan_out keeps a
     # narrow scan from pinning them to one core (no-op on wide scans;
     # exact expressions — result is partitioning-independent)
-    c = fan_out(corpus.select(id_col, vec_col)).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        norm(F.col(vec_col)).alias("c_norm"),
+    c = fan_out(corpus.select("vec_id", "embedding")).select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("c_vec"),
+        norm(F.col("embedding")).alias("c_norm"),
     )
     scored = (
         c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
@@ -110,13 +108,7 @@ def cosine_topk_bruteforce(
     )
 
 
-def cosine_topk_numpy(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def cosine_topk_numpy(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """Exact top-k cosine neighbors via Arrow-batched numpy matmul.
 
     Same semantics/output as :func:`cosine_topk_bruteforce`, different
@@ -136,7 +128,7 @@ def cosine_topk_numpy(
     import numpy as np
     import pandas as pd
 
-    rows = queries.select(id_col, vec_col).collect()  # driver-small by contract
+    rows = queries.select("vec_id", "embedding").collect()  # driver-small by contract
     if not rows:  # empty query set: empty result, same schema as bruteforce
         return corpus.sparkSession.createDataFrame(
             [], "query_id long, neighbor_id long, cosine double, rank int"
@@ -153,8 +145,8 @@ def cosine_topk_numpy(
         for pdf in batches:
             if not len(pdf):
                 continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            m = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+            m = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
             norms = np.linalg.norm(m, axis=1)
             norms = np.where(norms == 0.0, 1.0, norms)  # zero corpus vector → 0
             cos = (m @ qm.T) / np.outer(norms, qn)  # batch × nq
@@ -189,13 +181,7 @@ def cosine_topk_numpy(
 _KMEANS_CHECK_ROUNDS = 2
 
 
-def kmeans_assign(
-    corpus: DataFrame,
-    k: int = 8,
-    max_iter: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def kmeans_assign(corpus: DataFrame, k: int = 8, max_iter: int = 10) -> DataFrame:
     """Deterministic Lloyd's k-means over an embedding column: (id, cluster).
 
     The index-training step for :func:`cosine_topk_ivf` (whose centroids
@@ -217,8 +203,8 @@ def kmeans_assign(
     ``localCheckpoint`` truncates lineage between rounds.
     """
     vecs = corpus.select(
-        F.col(id_col).alias("id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
+        F.col("vec_id").alias("id"),
+        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("v"),
     ).localCheckpoint()
 
     init_w = Window.orderBy("id")  # k rows only — the global window is fine
@@ -273,14 +259,10 @@ def kmeans_assign(
                 ).alias("centroid")
             )
         )
-    return assign.select(F.col("id").alias(id_col), "cluster")
+    return assign.select(F.col("id").alias("vec_id"), "cluster")
 
 
-def compute_centroids(
-    corpus: DataFrame,
-    label_col: str = "label",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def compute_centroids(corpus: DataFrame) -> DataFrame:
     """Coarse centroids as the element-wise mean per label/cluster id.
 
     Deterministic (no k-means iterations): posexplode → avg per (label,
@@ -288,8 +270,8 @@ def compute_centroids(
     aggregation shape is the same.
     """
     exploded = corpus.select(
-        F.col(label_col).alias("centroid_id"),
-        F.posexplode(F.col(vec_col)).alias("dim", "v"),
+        F.col("label").alias("centroid_id"),
+        F.posexplode(F.col("embedding")).alias("dim", "v"),
     )
     return (
         exploded.groupBy("centroid_id", "dim")
@@ -312,8 +294,6 @@ def cosine_topk_ivf(
     centroids: DataFrame,
     k: int = 5,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k: probe only the ``nprobe`` nearest centroid cells.
 
@@ -343,10 +323,10 @@ def cosine_topk_ivf(
 
     # r15: fan_out so the per-row centroid scoring runs at cluster
     # parallelism on narrow scans (exact expressions; no-op on wide scans)
-    c = fan_out(corpus.select(id_col, vec_col)).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
+    c = fan_out(corpus.select("vec_id", "embedding")).select(
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec")
     )
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
+    q = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec"))
 
     c_cells = best_cells(c, "c_vec", "cell", 1)
     q_cells = best_cells(q, "q_vec", "cell", nprobe)
@@ -364,51 +344,49 @@ def cosine_topk_ivf(
     )
 
 
-def hyperplane_lsh_pairs(
-    corpus: DataFrame,
-    threshold: float = 0.9,
-    nbits: int = 48,
-    bands: int = 8,
-    seed: int = 13,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+#: Hyperplane-LSH parameters of :func:`hyperplane_lsh_pairs`, shared with
+#: its replay oracle in tools/: 48 sign bits in 8 bands of 6, and the seed
+#: of the hyperplane matrix each executor regenerates.
+_HYPER_NBITS, _HYPER_BANDS, _HYPER_SEED = 48, 8, 13
+
+
+def hyperplane_lsh_pairs(corpus: DataFrame, threshold: float = 0.9) -> DataFrame:
     """Embedding near-dup pairs via random-hyperplane LSH + exact verify.
 
     The 100 TB path for :func:`embedding_neardup_pairs` (which is exact but
     all-pairs O(n²)):
 
-    1. signatures: each Arrow batch is projected against ``nbits`` random
+    1. signatures: each Arrow batch is projected against 48 random
        hyperplanes in ONE numpy matmul; sign bits pack into a single long
        (sign-of-dot agreement probability is 1 - θ/π, the SimHash bound).
-    2. banding: ``bands`` chunks of ``nbits/bands`` bits; any shared chunk
+    2. banding: 8 chunks of 6 bits; any shared chunk
        → candidate. Only (band, chunk) keys shuffle.
     3. exact cosine verification on candidates — results are always a
        SUBSET of the exact operator's pairs (precision 1.0); recall is the
        banding capture probability, asserted in tests.
 
-    The hyperplane matrix is regenerated per executor from ``seed`` —
-    deterministic, nothing shipped but two ints.
+    The hyperplane matrix is regenerated per executor from
+    ``_HYPER_SEED`` — deterministic, nothing shipped.
     """
     import numpy as np
     import pandas as pd
 
-    if nbits % bands:
-        raise ValueError("nbits must divide evenly into bands")
-    chunk_bits = nbits // bands
+    chunk_bits = _HYPER_NBITS // _HYPER_BANDS
 
     def sigs(batches):
         R = None
         for pdf in batches:
             if not len(pdf):
                 continue
-            m = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+            m = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
             if R is None:
-                R = np.random.default_rng(seed).standard_normal((nbits, m.shape[1]))
+                R = np.random.default_rng(_HYPER_SEED).standard_normal(
+                    (_HYPER_NBITS, m.shape[1])
+                )
             bits = (m @ R.T >= 0).astype(np.int64)  # batch × nbits
-            weights = np.left_shift(np.int64(1), np.arange(nbits, dtype=np.int64))
+            weights = np.left_shift(np.int64(1), np.arange(_HYPER_NBITS, dtype=np.int64))
             yield pd.DataFrame(
-                {"id": pdf[id_col].to_numpy(dtype=np.int64), "sig": bits @ weights}
+                {"id": pdf["vec_id"].to_numpy(dtype=np.int64), "sig": bits @ weights}
             )
 
     signed = corpus.mapInPandas(sigs, "id long, sig long").repartition(F.col("id"))
@@ -424,7 +402,7 @@ def hyperplane_lsh_pairs(
                         .bitwiseAND(F.lit(mask).cast("long"))
                         .alias("chunk"),
                     )
-                    for b in range(bands)
+                    for b in range(_HYPER_BANDS)
                 ]
             )
         ).alias("bk"),
@@ -437,9 +415,9 @@ def hyperplane_lsh_pairs(
         .dropDuplicates(["id_a", "id_b"])
     )
     vecs = corpus.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        norm(F.col(vec_col)).alias("nrm"),
+        F.col("vec_id").alias("id"),
+        F.col("embedding").alias("v"),
+        norm(F.col("embedding")).alias("nrm"),
     )
     pairs = cands.join(
         vecs.select(F.col("id").alias("id_a"), F.col("v").alias("va"), F.col("nrm").alias("na")),
@@ -471,11 +449,7 @@ def l2_normalize(vec: Column) -> Column:
     ).otherwise(F.transform(vec, lambda x: x.cast("double")))
 
 
-def quantize_embeddings(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def quantize_embeddings(df: DataFrame) -> DataFrame:
     """Symmetric int8 quantization per vector: q = floor(x·127/max|x| + ½).
 
     The storage-compression step of an embedding pipeline (4× smaller than
@@ -489,8 +463,8 @@ def quantize_embeddings(
     # staged projections: each non-cheap intermediate (_v, _scale, q) is a
     # real column before reuse — inline subtrees re-evaluate per reference
     base = df.select(
-        F.col(id_col),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),
+        F.col("vec_id"),
+        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("_v"),
     ).withColumn(
         "_maxabs", F.array_max(F.transform("_v", lambda x: F.abs(x)))
     ).withColumn(
@@ -514,19 +488,14 @@ def quantize_embeddings(
         )
     )
     return quant.select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.round("_scale", 6).alias("scale"),
         "q",
         F.round(dq_err, 6).alias("max_err"),
     )
 
 
-def embedding_neardup_pairs(
-    corpus: DataFrame,
-    threshold: float = 0.99,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def embedding_neardup_pairs(corpus: DataFrame, threshold: float = 0.99) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (doc_a < doc_b, cos ≥ threshold).
 
     Exact, with LOSSLESS candidate pruning: for unit vectors
@@ -553,13 +522,13 @@ def embedding_neardup_pairs(
     import math
 
     eps = math.sqrt(max(2.0 - 2.0 * threshold, 1e-12)) * (1.0 + 1e-6)
-    nv = norm(F.col(vec_col))
+    nv = norm(F.col("embedding"))
     p0 = F.coalesce(
-        F.try_divide(F.element_at(F.col(vec_col), 1), nv), F.lit(0.0)
+        F.try_divide(F.element_at(F.col("embedding"), 1), nv), F.lit(0.0)
     )
-    base = fan_out(corpus.select(id_col, vec_col)).select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_v"),
+    base = fan_out(corpus.select("vec_id", "embedding")).select(
+        F.col("vec_id").alias("_id"),
+        F.col("embedding").alias("_v"),
         nv.alias("_n"),
         F.floor(p0 / F.lit(eps)).alias("_b0"),
     )
@@ -597,7 +566,12 @@ def embedding_neardup_pairs(
 # ---------------------------------------------------------------------------
 
 
-def pq_train_codebooks(sample, m: int = 8, ksub: int = 16, iters: int = 10):
+#: Product-quantization shape of :func:`cosine_topk_pq`: subspaces per
+#: vector and centroids per subspace.
+_PQ_M, _PQ_KSUB = 8, 16
+
+
+def pq_train_codebooks(sample):
     """Deterministic per-subspace Lloyd k-means over a training sample.
 
     ``sample`` is an (n × dim) float64 array of L2-normalized vectors;
@@ -607,6 +581,7 @@ def pq_train_codebooks(sample, m: int = 8, ksub: int = 16, iters: int = 10):
     """
     import numpy as np
 
+    m, ksub = _PQ_M, _PQ_KSUB
     n, dim = sample.shape
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
@@ -620,7 +595,7 @@ def pq_train_codebooks(sample, m: int = 8, ksub: int = 16, iters: int = 10):
         cent = uniq[:ksub] if len(uniq) >= ksub else np.vstack(
             [uniq, np.repeat(uniq[-1:], ksub - len(uniq), axis=0)]
         )
-        for _ in range(iters):
+        for _ in range(10):
             d = ((sub[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
             assign = d.argmin(axis=1)
             for c in range(ksub):
@@ -635,12 +610,7 @@ def cosine_topk_pq(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    m: int = 8,
-    ksub: int = 16,
-    sample_size: int = 2048,
     rerank: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k cosine neighbors via product quantization + ADC.
 
@@ -675,15 +645,15 @@ def cosine_topk_pq(
     import numpy as np
     import pandas as pd
 
-    qrows = queries.select(id_col, vec_col).collect()  # driver-small by contract
+    qrows = queries.select("vec_id", "embedding").collect()  # driver-small by contract
     if not qrows:
         return corpus.sparkSession.createDataFrame(
             [], "query_id long, neighbor_id long, score double, rank int"
         )
-    # deterministic bounded sample: smallest `sample_size` ids (stable under
+    # deterministic bounded sample: smallest 2048 ids (stable under
     # partitioning; PQ training only needs a representative sample)
     srows = (
-        corpus.select(id_col, vec_col).orderBy(id_col).limit(sample_size).collect()
+        corpus.select("vec_id", "embedding").orderBy("vec_id").limit(2048).collect()
     )
     if not srows:  # empty corpus: empty result, like the exact paths
         return corpus.sparkSession.createDataFrame(
@@ -692,15 +662,15 @@ def cosine_topk_pq(
     sm = np.array([list(r[1]) for r in srows], dtype=np.float64)
     sn = np.linalg.norm(sm, axis=1)
     sm = sm / np.where(sn == 0.0, 1.0, sn)[:, None]
-    books = pq_train_codebooks(sm, m=m, ksub=ksub)
+    books = pq_train_codebooks(sm)
 
     qids_l = np.array([r[0] for r in qrows], dtype=np.int64)
     qm_l = np.array([list(r[1]) for r in qrows], dtype=np.float64)
     qn_l = np.linalg.norm(qm_l, axis=1)
     qm_l = qm_l / np.where(qn_l == 0.0, 1.0, qn_l)[:, None]
-    dsub = qm_l.shape[1] // m
+    dsub = qm_l.shape[1] // _PQ_M
     # LUT[q, j, c] = <q_j, centroid_jc>  → nq × m × ksub
-    lut_l = np.einsum("qjd,jcd->qjc", qm_l.reshape(len(qids_l), m, dsub), books)
+    lut_l = np.einsum("qjd,jcd->qjc", qm_l.reshape(len(qids_l), _PQ_M, dsub), books)
     bq = corpus.sparkSession.sparkContext.broadcast((qids_l, qm_l, lut_l, books))
 
     def part_topk(batches):
@@ -709,19 +679,19 @@ def cosine_topk_pq(
         for pdf in batches:
             if not len(pdf):
                 continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            mtx = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+            mtx = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
             nrm = np.linalg.norm(mtx, axis=1)
             mtx = mtx / np.where(nrm == 0.0, 1.0, nrm)[:, None]
-            sub = mtx.reshape(len(ids), m, dsub)
+            sub = mtx.reshape(len(ids), _PQ_M, dsub)
             # encode: nearest centroid per subspace (batch × m)
-            codes = np.empty((len(ids), m), dtype=np.int64)
-            for j in range(m):
+            codes = np.empty((len(ids), _PQ_M), dtype=np.int64)
+            for j in range(_PQ_M):
                 d = ((sub[:, j, None, :] - bks[None, j]) ** 2).sum(axis=2)
                 codes[:, j] = d.argmin(axis=1)
             # ADC: score[b, q] = sum_j LUT[q, j, codes[b, j]]
             scores = np.zeros((len(ids), nq))
-            for j in range(m):
+            for j in range(_PQ_M):
                 scores += lut[:, j, :][:, codes[:, j]].T  # batch × nq
             if rerank:
                 # exact re-rank of the per-batch ADC shortlist: quantization
@@ -772,19 +742,13 @@ def cosine_topk_pq(
     )
 
 
-def rrf_fuse(
-    rankings: dict[str, DataFrame],
-    id_col: str = "doc_id",
-    rank_col: str = "rank",
-    k0: int = 60,
-    topk: int = 20,
-) -> DataFrame:
+def rrf_fuse(rankings: dict[str, DataFrame], topk: int = 20) -> DataFrame:
     """Reciprocal-rank fusion (Cormack, Clarke & Büttcher 2009): combine
     ranked lists with score Σ 1/(k0 + rank), the standard way to merge a
     lexical (BM25) and a dense (ANN) retriever without score calibration —
     ranks, not raw scores, are the only thing the two systems share.
 
-    ``rankings`` maps a label to a ranked frame (id_col, rank_col); each
+    ``rankings`` maps a label to a ranked frame (doc_id, rank); each
     contributes a ``rank_<label>`` column (NULL when that retriever did
     not surface the id — contributing 0 to the fused score). k0=60 is the
     paper's constant.
@@ -795,16 +759,16 @@ def rrf_fuse(
     """
     fused = None
     for label, df in rankings.items():
-        part = df.select(F.col(id_col), F.col(rank_col).alias(f"rank_{label}"))
-        fused = part if fused is None else fused.join(part, id_col, "full_outer")
+        part = df.select(F.col("doc_id"), F.col("rank").alias(f"rank_{label}"))
+        fused = part if fused is None else fused.join(part, "doc_id", "full_outer")
     score = None
     for label in rankings:
         c = F.coalesce(
-            F.lit(1.0) / (F.lit(float(k0)) + F.col(f"rank_{label}")), F.lit(0.0)
+            F.lit(1.0) / (F.lit(60.0) + F.col(f"rank_{label}")), F.lit(0.0)
         )
         score = c if score is None else score + c
     return (
         fused.withColumn("rrf_score", F.round(score, 6))
-        .orderBy(F.desc("rrf_score"), F.asc(id_col))
+        .orderBy(F.desc("rrf_score"), F.asc("doc_id"))
         .limit(topk)
     )

@@ -26,7 +26,6 @@ def hll_daily_sketches(
     df: DataFrame,
     time_col: str = "ts",
     value_col: str = "user_id",
-    lgk: int = 12,
 ) -> DataFrame:
     """One HLL sketch per day: (day, n_exact-free estimate, sketch binary).
 
@@ -35,7 +34,7 @@ def hll_daily_sketches(
     """
     return (
         df.groupBy(F.to_date(F.col(time_col)).alias("day"))
-        .agg(F.hll_sketch_agg(F.col(value_col), F.lit(lgk)).alias("sketch"))
+        .agg(F.hll_sketch_agg(F.col(value_col), F.lit(12)).alias("sketch"))
         .select(
             "day",
             F.hll_sketch_estimate("sketch").alias("est_distinct"),
@@ -56,7 +55,6 @@ def kll_daily_sketches(
     df: DataFrame,
     time_col: str = "ts",
     value_col: str = "value",
-    k: int = 200,
 ) -> DataFrame:
     """One KLL quantile sketch per day over ``value_col`` — the percentile
     analog of :func:`hll_daily_sketches`: latency/size SLO queries over any
@@ -68,7 +66,7 @@ def kll_daily_sketches(
     return (
         df.groupBy(F.to_date(F.col(time_col)).alias("day"))
         .agg(
-            F.kll_sketch_agg_double(F.col(value_col).cast("double"), F.lit(k)).alias(
+            F.kll_sketch_agg_double(F.col(value_col).cast("double"), F.lit(200)).alias(
                 "sketch"
             )
         )
@@ -107,19 +105,12 @@ def kll_merge_quantiles(daily: DataFrame, probs: list[float]) -> DataFrame:
     return merged.select(*cols)
 
 
-def cms_daily_sketches(
-    df: DataFrame,
-    time_col: str = "ts",
-    value_col: str = "event_type",
-    eps: float = 0.001,
-    confidence: float = 0.99,
-    seed: int = 42,
-    collect_keys: bool = False,
-) -> DataFrame:
-    """One count-min sketch per day over ``value_col`` — the *frequency*
+def cms_daily_sketches(df: DataFrame, collect_keys: bool = False) -> DataFrame:
+    """One count-min sketch per ``ts`` day over ``event_type`` — the *frequency*
     member of the sketch trio (HLL = distinct, KLL = quantiles, CMS =
     per-key counts). Built by Spark's JVM-side ``count_min_sketch``
-    aggregate; the binary is ``d=⌈ln(1/(1−conf))⌉ × w=⌈2/eps⌉`` counters,
+    aggregate (eps 0.001, confidence 0.99, seed 42); the binary is
+    ``d=⌈ln(1/(1−conf))⌉ × w=⌈2/eps⌉`` counters,
     additive under merge, so any date-range frequency query folds daily
     sketches instead of rescanning raw events.
 
@@ -131,13 +122,11 @@ def cms_daily_sketches(
     Only sensible for small key domains (the heavy-hitter use case).
     """
     aggs = [
-        F.expr(
-            f"count_min_sketch({value_col}, {eps}d, {confidence}d, {seed})"
-        ).alias("sketch")
+        F.expr("count_min_sketch(event_type, 0.001d, 0.99d, 42)").alias("sketch")
     ]
     if collect_keys:
-        aggs.append(F.collect_set(value_col).alias("keys"))
-    return df.groupBy(F.to_date(F.col(time_col)).alias("day")).agg(*aggs)
+        aggs.append(F.collect_set("event_type").alias("keys"))
+    return df.groupBy(F.to_date(F.col("ts")).alias("day")).agg(*aggs)
 
 
 def cms_merge(spark, daily: DataFrame):
@@ -189,11 +178,7 @@ def cms_estimate_counts(spark, merged, keys: list) -> DataFrame:
     return local_rows_df(spark, data, "key string, est_cnt long")
 
 
-def kll_window_drift(
-    daily: DataFrame,
-    window_days: int = 7,
-    probs: tuple[float, ...] = (0.5, 0.95),
-) -> DataFrame:
+def kll_window_drift(daily: DataFrame, window_days: int = 7) -> DataFrame:
     """Quantile drift over trailing ``window_days`` windows, composed from
     the daily KLL rollup — the sketch answer to "did this week's latency
     distribution move vs yesterday's week?" at 100 TB: the raw data is
@@ -217,6 +202,7 @@ def kll_window_drift(
     driver oracle (sketch quantiles are approximate); rank-error bounds vs
     exact window quantiles are asserted in tests/test_sketches.py.
     """
+    probs = (0.5, 0.95)
     contrib = daily.select(
         F.col("day").alias("src_day"),
         "sketch",

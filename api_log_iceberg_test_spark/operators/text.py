@@ -225,14 +225,14 @@ def fingerprint(col: Column | str) -> Column:
     return F.md5(F.concat_ws(" ", F.array_sort(F.array_distinct(tokens(col)))))
 
 
-def analyze(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def analyze(df: DataFrame) -> DataFrame:
     """Full text-analysis projection: one narrow pass, all metrics.
 
     The normalized string is materialized once as a column — metric
     expressions reference it instead of re-normalizing (Catalyst keeps a
     non-cheap producer column shared when referenced many times).
     """
-    c = F.col(text_col)
+    c = F.col("text")
     # one normalized-string column; every token metric is a codegen'd
     # regex/length op over it (no interpreted array HOFs in this pass)
     with_toks = df.withColumn("_norm", norm_text(c))
@@ -261,7 +261,7 @@ def analyze(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> Da
     len_ok = F.least(n_tok.cast("double") / F.lit(20.0), F.lit(1.0))
     wordlen_ok = F.when((mtl >= 3.0) & (mtl <= 10.0), F.lit(1.0)).otherwise(F.lit(0.0))
     return with_toks.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_tok.alias("n_tokens"),
         bpe_ish_token_count(c).alias("n_subword_tokens"),
         F.round(mtl, 6).alias("mean_token_len"),
@@ -278,9 +278,7 @@ def analyze(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> Da
     )
 
 
-def repetition_signals(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def repetition_signals(df: DataFrame) -> DataFrame:
     """Gopher-style repetition quality signals, one row per document.
 
     Columns: ``n_tokens``, ``top_unigram_frac`` (count of the most frequent
@@ -297,13 +295,13 @@ def repetition_signals(
     aggregation (both with map-side partial agg) and a doc_id join of
     5 small int columns — no text ever shuffles.
     """
-    nrm_df = df.select(F.col(id_col), norm_text(text_col).alias("_norm"))
+    nrm_df = df.select(F.col("doc_id"), norm_text("text").alias("_norm"))
     toks = F.split(F.col("_norm"), " ")
     n = F.when(F.length("_norm") == 0, F.lit(0)).otherwise(F.size(toks))
     # ALL overlapping bigrams (not distinct) via the word-anchored lookahead
     bigrams = F.regexp_extract_all(F.col("_norm"), F.lit(r"(?:^| )(?=(\S+ \S+))"), 1)
     base = nrm_df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n.cast("long").alias("n_tokens"),
         F.size(F.array_distinct(toks)).alias("_n_distinct"),
         F.size(bigrams).alias("_n_bigrams"),
@@ -311,16 +309,16 @@ def repetition_signals(
     )
     tf = (
         nrm_df.where(F.length("_norm") > 0)
-        .select(F.col(id_col), F.explode(toks).alias("_term"))
-        .groupBy(id_col, "_term")
+        .select(F.col("doc_id"), F.explode(toks).alias("_term"))
+        .groupBy("doc_id", "_term")
         .agg(F.count(F.lit(1)).alias("_cnt"))
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.max("_cnt").alias("_top_cnt"))
     )
     nt = F.col("n_tokens")
     nb = F.col("_n_bigrams")
-    return base.join(tf, id_col, "left").select(
-        F.col(id_col),
+    return base.join(tf, "doc_id", "left").select(
+        F.col("doc_id"),
         nt,
         F.when(
             nt > 0, F.round(F.col("_top_cnt").cast("double") / nt.cast("double"), 6)
@@ -339,11 +337,7 @@ def repetition_signals(
     )
 
 
-def unigram_lm_scores(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def unigram_lm_scores(df: DataFrame) -> DataFrame:
     """Per-document unigram language-model score (CCNet-style LM filter).
 
     Corpus curation pipelines score documents by how "typical" their token
@@ -355,7 +349,7 @@ def unigram_lm_scores(
     rarer vocabulary; both tails are suspect — boilerplate at the low end,
     gibberish at the high end).
 
-    Returns ``(id_col, n_tokens, avg_logprob, ppl_proxy)`` for every doc
+    Returns ``(doc_id, n_tokens, avg_logprob, ppl_proxy)`` for every doc
     with ≥1 token.
 
     Scale: one shuffle of (id, term) builds the vocabulary; the join back
@@ -369,7 +363,7 @@ def unigram_lm_scores(
     # regression (0.67→0.71 s interleaved) — the plain split is too cheap
     # to pay a round-robin exchange for at bench scale; left serial.
     tok = df.select(
-        F.col(id_col), F.explode(tokens(text_col)).alias("term")
+        F.col("doc_id"), F.explode(tokens("text")).alias("term")
     ).filter(F.col("term") != "")
     vocab = tok.groupBy("term").agg(F.count(F.lit(1)).alias("cnt"))
     total = vocab.agg(F.sum("cnt").cast("double").alias("n_total"))
@@ -378,7 +372,7 @@ def unigram_lm_scores(
     return (
         tok.join(vocab, "term")
         .crossJoin(F.broadcast(total))
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_tokens"),
             F.round(avg, 4).alias("avg_logprob"),
@@ -387,12 +381,7 @@ def unigram_lm_scores(
     )
 
 
-def bpe_pair_counts(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    top_k: int = 50,
-) -> DataFrame:
+def bpe_pair_counts(df: DataFrame, top_k: int = 50) -> DataFrame:
     """Adjacent-symbol pair frequencies — the first BPE merge iteration.
 
     Tokenizer training (Sennrich-style BPE) repeatedly merges the most
@@ -410,7 +399,7 @@ def bpe_pair_counts(
     """
     # r15 note: fan_out here measured 0.40→0.53 s (regression) — see
     # unigram_lm_scores; the split-only pass stays serial on narrow scans.
-    tok = df.select(F.explode(tokens(text_col)).alias("word")).filter(
+    tok = df.select(F.explode(tokens("text")).alias("word")).filter(
         F.col("word") != ""
     )
     vocab = tok.groupBy("word").agg(F.count(F.lit(1)).alias("word_cnt"))

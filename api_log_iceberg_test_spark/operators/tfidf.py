@@ -22,20 +22,12 @@ from ..schema import fan_out
 from .text import token_count, tokens
 
 
-def tfidf_top_terms(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    n_docs: int | None = None,
-) -> DataFrame:
-    """Top-k TF-IDF terms per document.
+def tfidf_top_terms(df: DataFrame, k: int = 3) -> DataFrame:
+    """Top-k TF-IDF terms per document of a (doc_id, text) frame.
 
     Output: (doc_id, term, tf, score, rank); deterministic tiebreak on term.
-    Pass ``n_docs`` when the corpus size is already known to skip the
-    count branch (a second, column-pruned scan at 100 TB).
 
-    r15: when ``n_docs`` is not given, N rides the PLAN as a broadcast
+    r15: the corpus size N rides the PLAN as a broadcast
     1-row aggregate instead of a driver-side ``df.count()`` — one Spark
     job instead of two, no action at construction time, and the count
     branch overlaps the tokenize branch instead of serializing before it
@@ -43,22 +35,17 @@ def tfidf_top_terms(
     (df+1)) + 1`` over the same doubles.
     """
     # parallel tokenize pass on narrow scans; no-op on wide ones (r15)
-    docs = fan_out(df.select(F.col(id_col).alias("doc_id"), F.col(text_col)))
+    docs = fan_out(df.select("doc_id", "text"))
     terms = docs.select(
-        "doc_id", F.explode(tokens(text_col)).alias("term")
+        "doc_id", F.explode(tokens("text")).alias("term")
     ).filter(F.col("term") != "")
     tf = terms.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     # tf already holds one row per distinct (doc, term): document frequency
     # is a plain count over it — the previous countDistinct over a SECOND
     # tokenize/explode of the corpus doubled the dominant scan cost
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    if n_docs is None:
-        nd = df.agg(F.count(F.lit(1)).cast("double").alias("_n_docs"))
-        scored = tf.join(F.broadcast(dfreq), "term").join(F.broadcast(nd))
-    else:
-        scored = tf.join(F.broadcast(dfreq), "term").withColumn(
-            "_n_docs", F.lit(float(n_docs))
-        )
+    nd = df.agg(F.count(F.lit(1)).cast("double").alias("_n_docs"))
+    scored = tf.join(F.broadcast(dfreq), "term").join(F.broadcast(nd))
     scored = scored.withColumn(
         "score",
         F.round(
@@ -75,25 +62,18 @@ def tfidf_top_terms(
     )
 
 
-def vocabulary(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    top_k: int = 50,
-) -> DataFrame:
-    """Corpus vocabulary: top-k terms by total count, with document
-    frequency — the tokenizer-training / vocab-building pass of an LLM data
-    pipeline.
+def vocabulary(df: DataFrame, top_k: int = 50) -> DataFrame:
+    """Corpus vocabulary of a (doc_id, text) frame: top-k terms by total
+    count, with document frequency — the tokenizer-training /
+    vocab-building pass of an LLM data pipeline.
 
     Plan: explode → one groupBy(term) computing count + approx-exact df
     (count_distinct) — map-side partial agg makes the shuffle carry one row
     per distinct term per partition, and the result is vocabulary-sized
     (≪ corpus) at any scale. Deterministic tiebreak on the term string.
     """
-    terms = fan_out(
-        df.select(F.col(id_col).alias("doc_id"), F.col(text_col))
-    ).select(
-        "doc_id", F.explode(tokens(text_col)).alias("term")
+    terms = fan_out(df.select("doc_id", "text")).select(
+        "doc_id", F.explode(tokens("text")).alias("term")
     ).filter(F.col("term") != "")
     return (
         terms.groupBy("term")
@@ -106,16 +86,14 @@ def vocabulary(
     )
 
 
-def bm25_topk(
-    df: DataFrame,
-    query_terms: list[str],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 20,
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> DataFrame:
-    """Okapi BM25 retrieval: top-k documents for a bag of query terms.
+#: BM25's term-saturation and length-normalization constants (Lucene's
+#: defaults), shared with the DuckDB oracle of q_bm25_topk.
+_BM25_K1, _BM25_B = 1.2, 0.75
+
+
+def bm25_topk(df: DataFrame, query_terms: list[str], k: int = 20) -> DataFrame:
+    """Okapi BM25 retrieval: top-k (doc_id, text) documents for a bag of
+    query terms, k1 = ``_BM25_K1`` and b = ``_BM25_B``.
 
     The scoring function behind Lucene/Elasticsearch defaults and the
     lexical half of every hybrid (BM25 + dense) retrieval stack:
@@ -137,14 +115,13 @@ def bm25_topk(
     Ties break on doc_id; score is rounded to 6dp for cross-engine hash
     stability.
     """
+    k1, b = _BM25_K1, _BM25_B
     qlits = [t for t in query_terms if t]
     # parallel tokenize pass on narrow scans; no-op on wide ones (r15)
-    docs = fan_out(
-        df.select(F.col(id_col).alias("doc_id"), F.col(text_col))
-    ).select(
+    docs = fan_out(df.select("doc_id", "text")).select(
         "doc_id",
-        F.col(text_col).alias("_text"),
-        token_count(text_col).cast("double").alias("dl"),
+        F.col("text").alias("_text"),
+        token_count("text").cast("double").alias("dl"),
     )
     stats = docs.agg(
         F.avg("dl").alias("avgdl"), F.count(F.lit(1)).cast("double").alias("n_docs")

@@ -163,9 +163,9 @@ def load_table_time_range(
     return _nanos_to_micros(df, ns_cols)
 
 
-def fan_out(df, min_parallelism: int | None = None):
+def fan_out(df):
     """Round-robin repartition ONLY when the scan yields fewer partitions
-    than cores.
+    than cores (``defaultParallelism``).
 
     Compute-heavy narrow projections (regex token metrics, shingling) are
     otherwise bound to the scan's task count — a single-file, single-row-
@@ -177,7 +177,7 @@ def fan_out(df, min_parallelism: int | None = None):
     registered query).
     """
     sc = df.sparkSession.sparkContext
-    target = min_parallelism or sc.defaultParallelism
+    target = sc.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

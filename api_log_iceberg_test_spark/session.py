@@ -27,8 +27,8 @@ from pyspark.sql import SparkSession
 # Local-mode default, sized to the testdata scale: sf0.1 shuffles are at
 # most a few MB, where 8 partitions beat 32 by ~13% on the full bench
 # (per-stage scheduling overhead dominates tiny shuffles even under AQE
-# coalescing; measured 16.3s vs 18.7s). Real clusters size explicitly via
-# cluster_conf() (≈3× total cores) — this constant is never used there.
+# coalescing; measured 16.3s vs 18.7s). Real clusters size it explicitly
+# (≈3× total cores) through ``extra_conf``.
 DEFAULT_SHUFFLE_PARTITIONS = 8
 
 #: Catalog naming from the reference (init-setup.py:27-29): warehouse
@@ -135,41 +135,3 @@ def build_session(
         builder = builder.config(k, v)
 
     return builder.getOrCreate()
-
-
-def cluster_conf(
-    executor_cores: int,
-    num_executors: int,
-    target_partition_mb: int = 128,
-) -> dict[str, str]:
-    """Recommended conf overrides for a real (1000-executor-class) cluster.
-
-    Rationale per knob:
-    - shuffle partitions ≈ 2-3× total cores: enough tasks for AQE to
-      coalesce down (cheap) rather than split up (impossible pre-AQE-skew);
-    - maxPartitionBytes: scan-side partition sizing — 128 MB keeps a
-      partition's decompressed columns within executor memory at wide
-      schemas while amortizing task overhead at 100 TB (≈800k tasks);
-    - adaptive advisory size steers AQE coalescing to the same target;
-    - Kryo + compressed shuffle are strictly better for the log schema
-      (mostly strings/longs).
-
-    Pass to :func:`build_session` as ``extra_conf``.
-    """
-    total_cores = executor_cores * num_executors
-    return {
-        "spark.sql.shuffle.partitions": str(total_cores * 3),
-        "spark.sql.files.maxPartitionBytes": str(target_partition_mb * 1024 * 1024),
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": str(
-            target_partition_mb * 1024 * 1024
-        ),
-        "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
-        "spark.shuffle.compress": "true",
-        "spark.sql.parquet.aggregatePushdown": "true",
-        # runtime bloom-filter semi-join reduction: the selective side of a
-        # shuffle join injects a bloom filter into the probe-side scan —
-        # at 100 TB this prunes fact-table row groups that can't match,
-        # the runtime analog of static partition pruning
-        "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
-        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": "50MB",
-    }

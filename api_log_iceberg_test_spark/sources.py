@@ -74,27 +74,16 @@ def read_jsonl_logs(spark: SparkSession, path: str) -> DataFrame:
     return _parse_json_lines(spark.read.text(path))
 
 
-def read_csv_logs(
-    spark: SparkSession,
-    path: str,
-    header: bool = True,
-    null_value: str | None = r"\N",
-) -> DataFrame:
-    """Batch-read CSV api-log records (explicit schema, no inference).
+def read_csv_logs(spark: SparkSession, path: str) -> DataFrame:
+    """Batch-read headed CSV api-log records (explicit schema, no inference).
 
-    CSV cannot distinguish NULL from empty string natively; ``null_value``
-    is the NULL sentinel (default ``\\N``, the classic mysqldump/Hive
-    convention) — the writer must use the same sentinel for faithful
-    round-trips. Pass ``None`` to fall back to Spark's default (empty
-    field → NULL).
+    CSV cannot distinguish NULL from empty string natively; ``\\N`` (the
+    classic mysqldump/Hive convention) is the NULL sentinel — the writer
+    must use the same sentinel for faithful round-trips.
     """
-    opts = dict(_PARSE_OPTS)
-    if null_value is not None:
-        opts["nullValue"] = null_value
-    lines = spark.read.text(path)
-    if header:
-        # text-scan parsing sees the header as data; drop the exact line
-        lines = lines.where(F.col("value") != ",".join(API_LOG_COLUMNS))
+    opts = {**_PARSE_OPTS, "nullValue": r"\N"}
+    # text-scan parsing sees the header as data; drop the exact line
+    lines = spark.read.text(path).where(F.col("value") != ",".join(API_LOG_COLUMNS))
     parsed = F.from_csv(F.col("value"), _READ_SCHEMA.simpleString(), opts)
     return lines.select(parsed.alias("r")).select("r.*")
 

@@ -13,18 +13,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    num_buckets: int = 8,
-    sort_col: str | None = None,
-) -> None:
-    """Persist a managed table bucketed (and optionally sorted) by key."""
-    w = df.write.mode("overwrite").bucketBy(num_buckets, bucket_col)
-    if sort_col:
-        w = w.sortBy(sort_col)
-    w.saveAsTable(table)
+def write_bucketed(df: DataFrame, table: str, bucket_col: str, num_buckets: int = 8) -> None:
+    """Persist a managed table bucketed by key."""
+    df.write.mode("overwrite").bucketBy(num_buckets, bucket_col).saveAsTable(table)
 
 
 def cojoin_bucketed(spark: SparkSession, left: str, right: str, key_l: str, key_r: str) -> DataFrame:
@@ -38,13 +29,12 @@ def write_training_shards(
     df: DataFrame,
     path: str,
     max_records_per_file: int = 10_000,
-    partition_by: tuple[str, ...] = ("lang",),
     fmt: str = "json",
 ) -> None:
     """Export a curated corpus as size-capped training shards.
 
     Writes ``df`` as ``fmt`` (jsonl via ``json``, or ``parquet``) shard
-    files under ``path``, hive-partitioned by ``partition_by`` and capped
+    files under ``path``, hive-partitioned by ``lang`` and capped
     at ``max_records_per_file`` rows per shard — the layout a training
     loader streams directly (shard = one loader work unit).
 
@@ -53,21 +43,18 @@ def write_training_shards(
     dynamic-partition insert. Pair with a coarse ``repartition`` upstream
     only if the job's task count must be decoupled from the scan.
     """
-    w = df.write.mode("overwrite").option("maxRecordsPerFile", max_records_per_file)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.format(fmt).save(path)
+    df.write.mode("overwrite").option(
+        "maxRecordsPerFile", max_records_per_file
+    ).partitionBy("lang").format(fmt).save(path)
 
 
-def shard_manifest(
-    spark: SparkSession, path: str, fmt: str = "json", token_col: str | None = None
-) -> DataFrame:
-    """Manifest of a shard export: one row per shard file with its row
+def shard_manifest(spark: SparkSession, path: str, token_col: str | None = None) -> DataFrame:
+    """Manifest of a jsonl shard export: one row per shard file with its row
     count (and token sum when ``token_col`` is present) — the index a
     training job uses to plan epochs without listing/scanning blind."""
     from pyspark.sql import functions as F
 
-    df = spark.read.format(fmt).load(path)
+    df = spark.read.format("json").load(path)
     aggs = [F.count(F.lit(1)).alias("n_rows")]
     if token_col is not None:
         aggs.append(F.sum(token_col).cast("long").alias("n_tokens"))

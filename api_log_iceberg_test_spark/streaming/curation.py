@@ -23,26 +23,24 @@ from . import ensure_event_time
 from ..operators import text
 
 
-def quality_columns(text_col: str = "text") -> list[Column]:
+def quality_columns() -> list[Column]:
     """The curation feature set as reusable column expressions."""
     return [
-        text.token_count(text_col).alias("n_tokens"),
-        text.quality_score(text_col).alias("quality"),
-        text.langid(text_col).alias("lang_pred"),
+        text.token_count("text").alias("n_tokens"),
+        text.quality_score("text").alias("quality"),
+        text.langid("text").alias("lang_pred"),
     ]
 
 
-def scored_stream(stream: DataFrame, text_col: str = "text") -> DataFrame:
+def scored_stream(stream: DataFrame) -> DataFrame:
     """Document stream + quality features (stateless projection)."""
-    return stream.select("*", *quality_columns(text_col))
+    return stream.select("*", *quality_columns())
 
 
 def quality_gate(
     stream: DataFrame,
-    text_col: str = "text",
     min_quality: float = 0.5,
     min_tokens: int = 5,
-    langs: list[str] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Split a document stream into (accepted, rejected) flows.
 
@@ -51,10 +49,8 @@ def quality_gate(
     each micro-batch plan). Rejected rows keep their scores so the
     quarantine sink records WHY each doc failed.
     """
-    scored = scored_stream(stream, text_col)
+    scored = scored_stream(stream)
     accept = (F.col("quality") >= min_quality) & (F.col("n_tokens") >= min_tokens)
-    if langs is not None:
-        accept = accept & F.col("lang_pred").isin(langs)
     # NULL text ⇒ NULL predicate: where(p) and where(~p) would BOTH drop the
     # row (three-valued logic) — exactly the silent loss the quarantine
     # split exists to prevent. Coalesce so null-scored docs are quarantined.
@@ -62,14 +58,8 @@ def quality_gate(
     return scored.where(accept), scored.where(~accept)
 
 
-def trending_terms(
-    stream: DataFrame,
-    time_col: str = "ts",
-    text_col: str = "text",
-    window_len: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Per-event-time-window term counts over a document stream — the
+def trending_terms(stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
+    """Per-1-hour-``ts``-window term counts over a document stream — the
     corpus-drift / trending-vocabulary monitor.
 
     Emits ``(window_start, window_end, term, cnt)`` in append mode once the
@@ -85,13 +75,13 @@ def trending_terms(
     """
     from ..operators.text import norm_text
 
-    toks = ensure_event_time(stream, time_col).withWatermark(time_col, watermark).select(
-        F.col(time_col),
-        F.explode(F.split(norm_text(text_col), " ")).alias("term"),
+    toks = ensure_event_time(stream, "ts").withWatermark("ts", watermark).select(
+        F.col("ts"),
+        F.explode(F.split(norm_text("text"), " ")).alias("term"),
     )
     return (
         toks.where(F.col("term") != "")
-        .groupBy(F.window(F.col(time_col), window_len).alias("w"), "term")
+        .groupBy(F.window(F.col("ts"), "1 hour").alias("w"), "term")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .select(
             F.col("w.start").alias("window_start"),

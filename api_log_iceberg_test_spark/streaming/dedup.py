@@ -16,26 +16,18 @@ from __future__ import annotations
 
 from . import ensure_event_time
 
-from collections.abc import Sequence
-
 from pyspark.sql import DataFrame
 
 
-def dedup_stream(
-    stream: DataFrame,
-    key_cols: Sequence[str] = ("requestId",),
-    time_col: str = "time",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Drop redelivered rows by ``key_cols`` arriving within ``watermark``.
+def dedup_stream(stream: DataFrame) -> DataFrame:
+    """Drop redelivered rows by ``requestId`` arriving within a 2-hour
+    watermark on ``time``.
 
     Unlike plain ``dropDuplicates`` on a stream (state grows forever),
     ``dropDuplicatesWithinWatermark`` evicts key state once the watermark
     passes the key's first-seen event time — the correct primitive when
     duplicates are bounded-lateness redeliveries, not arbitrary re-sends.
     """
-    return ensure_event_time(stream, time_col).withWatermark(
-        time_col, watermark
-    ).dropDuplicatesWithinWatermark(
-        list(key_cols)
-    )
+    return ensure_event_time(stream, "time").withWatermark(
+        "time", "2 hours"
+    ).dropDuplicatesWithinWatermark(["requestId"])

@@ -27,11 +27,11 @@ from pyspark.sql import functions as F
 _KEYS = ["bucket_start", "name"]
 
 
-def _batch_partial(batch: DataFrame, time_col: str, key_col: str) -> DataFrame:
+def _batch_partial(batch: DataFrame) -> DataFrame:
     return (
         batch.groupBy(
-            F.date_trunc("hour", F.col(time_col)).alias("bucket_start"),
-            F.col(key_col).alias("name"),
+            F.date_trunc("hour", F.col("time")).alias("bucket_start"),
+            F.col("name"),
         )
         .agg(
             F.count(F.lit(1)).alias("cnt"),
@@ -79,8 +79,6 @@ def apply_rollup_batch(
     batch: DataFrame,
     batch_id: int,
     rollup_dir: str,
-    time_col: str = "time",
-    key_col: str = "name",
 ) -> bool:
     """Merge one micro-batch into the rollup, exactly once.
 
@@ -106,7 +104,7 @@ def apply_rollup_batch(
     if batch_id <= _applied_batch_id(rollup_dir):
         return False  # checkpoint replay of an already-merged batch
 
-    partial = _batch_partial(batch, time_col, key_col)
+    partial = _batch_partial(batch)
     if os.path.exists(rollup_dir):
         existing = spark.read.parquet(rollup_dir)
         merged = merge_rollup(existing, partial)
@@ -125,19 +123,13 @@ def apply_rollup_batch(
     return True
 
 
-def start_incremental_rollup(
-    stream: DataFrame,
-    rollup_dir: str,
-    checkpoint_dir: str,
-    time_col: str = "time",
-    key_col: str = "name",
-):
-    """Maintain an hourly (bucket, name) → (cnt, sum_out) rollup table
-    incrementally from a stream. Returns the StreamingQuery."""
+def start_incremental_rollup(stream: DataFrame, rollup_dir: str, checkpoint_dir: str):
+    """Maintain an hourly (bucket of ``time``, name) → (cnt, sum_out) rollup
+    table incrementally from a stream. Returns the StreamingQuery."""
     spark = stream.sparkSession
 
     def upsert(batch: DataFrame, batch_id: int) -> None:
-        apply_rollup_batch(spark, batch, batch_id, rollup_dir, time_col, key_col)
+        apply_rollup_batch(spark, batch, batch_id, rollup_dir)
 
     return (
         stream.writeStream.foreachBatch(upsert)

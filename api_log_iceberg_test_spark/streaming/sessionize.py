@@ -22,22 +22,19 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-def session_schema(key_col: str = "user_id", key_type: T.DataType | None = None) -> T.StructType:
-    """Output schema with the key column named/typed after the input (a
-    hardcoded long 'user_id' field previously broke any other key at the
-    Arrow boundary — review finding)."""
+def session_schema(key_type: T.DataType) -> T.StructType:
+    """Output schema with the ``user_id`` column typed after the input (a
+    hardcoded long field previously broke a string key at the Arrow
+    boundary — review finding)."""
     return T.StructType(
         [
-            T.StructField(key_col, key_type or T.LongType()),
+            T.StructField("user_id", key_type),
             T.StructField("session_start", T.TimestampType()),
             T.StructField("session_end", T.TimestampType()),
             T.StructField("n_events", T.LongType()),
         ]
     )
 
-
-#: Default-shaped schema kept for callers/tests that import it directly.
-SESSION_SCHEMA = session_schema()
 
 _STATE_SCHEMA = T.StructType(
     [
@@ -48,20 +45,16 @@ _STATE_SCHEMA = T.StructType(
 )
 
 
-def sessionize_stream(
-    events: DataFrame,
-    gap_seconds: int = 1800,
-    key_col: str = "user_id",
-    time_col: str = "ts",
-) -> DataFrame:
-    """Emit closed sessions (user, start, end, n_events) from an event stream.
+def sessionize_stream(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:
+    """Emit closed sessions (user_id, start, end, n_events) from a
+    (user_id, ts) event stream.
 
     Sessions close when no event arrives within ``gap_seconds`` of the last
     one (tracked via processing-time state timeout, mirroring the batch
     30-minute-gap semantics).
     """
     gap_us = gap_seconds * 1_000_000
-    out_schema = session_schema(key_col, events.schema[key_col].dataType)
+    out_schema = session_schema(events.schema["user_id"].dataType)
 
     def fn(
         key: tuple[Any, ...],
@@ -74,7 +67,7 @@ def sessionize_stream(
             state.remove()
             yield pd.DataFrame(
                 {
-                    key_col: [user],
+                    "user_id": [user],
                     "session_start": [pd.Timestamp(start_us, unit="us")],
                     "session_end": [pd.Timestamp(end_us, unit="us")],
                     "n_events": [n],
@@ -86,7 +79,7 @@ def sessionize_stream(
         for pdf in batches:
             # dropna: a null timestamp would otherwise become NaT → int64
             # min and fabricate a year-1677 session start
-            ts = pd.to_datetime(pdf[time_col]).dropna()
+            ts = pd.to_datetime(pdf["ts"]).dropna()
             times.extend((ts.astype("int64") // 1000).tolist())  # ns → us
         if not times:
             return
@@ -114,7 +107,7 @@ def sessionize_stream(
         if closed:
             yield pd.DataFrame(
                 {
-                    key_col: [user] * len(closed),
+                    "user_id": [user] * len(closed),
                     "session_start": [pd.Timestamp(s, unit="us") for s, _, _ in closed],
                     "session_end": [pd.Timestamp(e, unit="us") for _, e, _ in closed],
                     "n_events": [c for _, _, c in closed],
@@ -122,7 +115,7 @@ def sessionize_stream(
             )
 
     return (
-        events.groupBy(key_col)
+        events.groupBy("user_id")
         .applyInPandasWithState(
             fn,
             outputStructType=out_schema,

@@ -22,16 +22,19 @@ def interval_join(
     left_time: str,
     right_time: str,
     max_lag: str = "1 hour",
-    watermark: str = "2 hours",
 ) -> DataFrame:
     """Rows of ``left`` matched to ``right`` rows of the same key with
     right_time ∈ [left_time - max_lag, left_time].
 
-    Both inputs may be streaming; each gets a watermark so the state store
-    evicts expired rows.
+    Both inputs may be streaming; each gets a 2-hour watermark so the
+    state store evicts expired rows.
     """
-    l = ensure_event_time(left, left_time).withWatermark(left_time, watermark).alias("l")
-    r = ensure_event_time(right, right_time).withWatermark(right_time, watermark).alias("r")
+    return _interval_join(left, right, key, left_time, right_time, max_lag, "inner")
+
+
+def _interval_join(left, right, key, left_time, right_time, max_lag, how) -> DataFrame:
+    l = ensure_event_time(left, left_time).withWatermark(left_time, "2 hours").alias("l")
+    r = ensure_event_time(right, right_time).withWatermark(right_time, "2 hours").alias("r")
     cond = (
         (F.col(f"l.{key}") == F.col(f"r.{key}"))
         & (F.col(f"r.{right_time}") <= F.col(f"l.{left_time}"))
@@ -40,17 +43,12 @@ def interval_join(
             >= F.col(f"l.{left_time}") - F.expr(f"INTERVAL {max_lag}")
         )
     )
-    return l.join(r, cond, "inner")
+    return l.join(r, cond, how)
 
 
-def enrich_with_dim(
-    stream: DataFrame,
-    dim: DataFrame,
-    key: str,
-    how: str = "left",
-) -> DataFrame:
-    """Stream-static enrichment: join each micro-batch against a (small)
-    static dimension table.
+def enrich_with_dim(stream: DataFrame, dim: DataFrame, key: str) -> DataFrame:
+    """Stream-static enrichment: left-join each micro-batch against a
+    (small) static dimension table.
 
     The static side is broadcast — no stream-side shuffle, no state store
     (stream-static joins are stateless by definition: each micro-batch
@@ -59,7 +57,7 @@ def enrich_with_dim(
     with per-bucket/per-tenant metadata at 100 TB/day without touching
     state.
     """
-    return stream.join(F.broadcast(dim), key, how)
+    return stream.join(F.broadcast(dim), key, "left")
 
 
 def interval_join_outer(
@@ -69,7 +67,6 @@ def interval_join_outer(
     left_time: str,
     right_time: str,
     max_lag: str = "1 hour",
-    watermark: str = "2 hours",
 ) -> DataFrame:
     """Left-OUTER stream-stream interval join: same match condition as
     :func:`interval_join`, but unmatched left rows are also emitted (right
@@ -87,14 +84,4 @@ def interval_join_outer(
     a plain left outer join with identical results, no trailing-emission
     caveat.
     """
-    l = ensure_event_time(left, left_time).withWatermark(left_time, watermark).alias("l")
-    r = ensure_event_time(right, right_time).withWatermark(right_time, watermark).alias("r")
-    cond = (
-        (F.col(f"l.{key}") == F.col(f"r.{key}"))
-        & (F.col(f"r.{right_time}") <= F.col(f"l.{left_time}"))
-        & (
-            F.col(f"r.{right_time}")
-            >= F.col(f"l.{left_time}") - F.expr(f"INTERVAL {max_lag}")
-        )
-    )
-    return l.join(r, cond, "leftOuter")
+    return _interval_join(left, right, key, left_time, right_time, max_lag, "leftOuter")

@@ -39,23 +39,18 @@ def tumbling_counts(
     )
 
 
-def session_window_counts(
-    stream: DataFrame,
-    time_col: str = "ts",
-    key_col: str = "user_id",
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Built-in session windows (gap-merged) — the declarative counterpart
+def session_window_counts(stream: DataFrame, gap: str = "30 minutes") -> DataFrame:
+    """Built-in session windows (gap-merged) of ``user_id`` over ``ts``,
+    2-hour watermark — the declarative counterpart
     of streaming.sessionize (applyInPandasWithState) and the batch
     q_sessionize. Prefer this when per-session logic is pure aggregation;
     drop to the stateful UDF only for custom per-event logic."""
     return (
-        ensure_event_time(stream, time_col).withWatermark(time_col, watermark)
-        .groupBy(F.session_window(F.col(time_col), gap).alias("w"), F.col(key_col))
+        ensure_event_time(stream, "ts").withWatermark("ts", "2 hours")
+        .groupBy(F.session_window(F.col("ts"), gap).alias("w"), F.col("user_id"))
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
-            F.col(key_col),
+            F.col("user_id"),
             F.col("w.start").alias("session_start"),
             F.col("w.end").alias("session_end"),
             "n_events",
@@ -63,19 +58,14 @@ def session_window_counts(
     )
 
 
-def sliding_error_rate(
-    stream: DataFrame,
-    time_col: str = "time",
-    status_col: str = "httpStatusCode",
-    window_len: str = "10 minutes",
-    slide: str = "1 minute",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Sliding-window error ratio — the ops dashboard query."""
-    is_err = (F.col(status_col) >= 400).cast("int")
+def sliding_error_rate(stream: DataFrame) -> DataFrame:
+    """Sliding-window error ratio (``httpStatusCode`` ≥ 400) over 10-minute
+    ``time`` windows sliding by 1 minute, 30-minute watermark — the ops
+    dashboard query."""
+    is_err = (F.col("httpStatusCode") >= 400).cast("int")
     return (
-        ensure_event_time(stream, time_col).withWatermark(time_col, watermark)
-        .groupBy(F.window(F.col(time_col), window_len, slide).alias("w"))
+        ensure_event_time(stream, "time").withWatermark("time", "30 minutes")
+        .groupBy(F.window(F.col("time"), "10 minutes", "1 minute").alias("w"))
         .agg(
             F.count(F.lit(1)).alias("n_requests"),
             F.sum(is_err).alias("n_errors"),

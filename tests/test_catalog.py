@@ -6,6 +6,8 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
+
 import __spark_entry__ as entrymod
 from api_log_iceberg_test_spark.queries import ORACLE, QUERIES
 
@@ -31,3 +33,15 @@ def test_driver_contract_reorders_the_catalog_only():
     window = list(qs)[: entrymod._WINDOW_SIZE]
     assert list(qs)[entrymod._WINDOW_SIZE :] == [n for n in QUERIES if n not in window]
     assert entrymod.oracle_sql() == ORACLE
+
+
+def test_driver_day_collects_fail_past_their_bound(spark, sf_dir, monkeypatch):
+    """The per-day driver collects of q_cms_event_counts and
+    q_maintenance_audit stop at ``_MAX_COLLECTED_DAYS`` and raise an error
+    naming it instead of collecting an unbounded row count."""
+    from api_log_iceberg_test_spark.operators import registry
+
+    monkeypatch.setattr(registry, "_MAX_COLLECTED_DAYS", 1)
+    for query in (registry.q_cms_event_counts, registry.q_maintenance_audit):
+        with pytest.raises(RuntimeError, match="_MAX_COLLECTED_DAYS=1"):
+            query(spark, sf_dir)

@@ -70,13 +70,17 @@ def test_minhash_recall_vs_exact(spark, sf_dir):
 
 def test_jaccard_blocking_cap_drops_hot_key(spark):
     """A stopword-only shingle shared corpus-wide is the classic blocking hot
-    key (s docs → s² candidates). With the cap, pairs found ONLY through the
-    hot key disappear; pairs sharing a rarer blocking key survive."""
+    key (s docs → s² candidates). With the cap, pairs found ONLY through a
+    hot key disappear; pairs sharing a rarer blocking key survive. Both
+    Jaccard tiers take the same cap: the blocked tier on its smallest
+    shingles, MinHash on its band buckets."""
     # 12 filler docs all lead with the stopword shingle "a a a", making its
     # bucket hot. Docs 100/101 are near-dups whose 3 smallest blocking keys
     # include a RARE shared shingle; docs 200/201 are near-dups whose ONLY
     # shared blocking key is the hot "a a a" (their other smallest shingles
-    # diverge on m*/z* middles before the shared s* tail).
+    # diverge on m*/z* middles before the shared s* tail). Docs 300-305
+    # copy filler doc 0: 7 identical docs fill every one of their band
+    # buckets and blocking keys past the cap.
     boiler = [(i, f"a a a filler{i} unique{i} tokens{i} here{i}") for i in range(12)]
     rare = [
         (100, "a a a zebra quokka wombat xylophone yak"),
@@ -86,23 +90,31 @@ def test_jaccard_blocking_cap_drops_hot_key(spark):
         (200, "a a a m1 m2 s1 s2 s3 s4 s5 s6 s7"),
         (201, "a a a z1 z2 s1 s2 s3 s4 s5 s6 s7"),
     ]
-    df = spark.createDataFrame(boiler + rare + hot_only, ["doc_id", "text"])
-    uncapped = {
-        (r["doc_a"], r["doc_b"])
-        for r in dedup.ngram_jaccard_pairs(df, threshold=0.3).collect()
+    copies = [(300 + i, boiler[0][1]) for i in range(6)]
+    df = spark.createDataFrame(boiler + rare + hot_only + copies, ["doc_id", "text"])
+    runs = {
+        "ngram": (
+            dedup.ngram_jaccard_pairs(df, threshold=0.3),
+            dedup.ngram_jaccard_pairs(df, threshold=0.3, max_bucket_size=5),
+        ),
+        "minhash": (
+            dedup.minhash_lsh_pairs(df, threshold=0.3),
+            dedup.minhash_lsh_pairs(df, threshold=0.3, max_bucket_size=5),
+        ),
     }
-    capped = {
-        (r["doc_a"], r["doc_b"])
-        for r in dedup.ngram_jaccard_pairs(
-            df, threshold=0.3, max_bucket_size=5
-        ).collect()
-    }
-    assert (100, 101) in uncapped and (200, 201) in uncapped
-    assert capped < uncapped
-    # hot "a a a" bucket (16 docs > cap 5) dropped: the hot-key-only pair is
-    # lost (graceful recall degradation), the rare-key pair survives
-    assert (100, 101) in capped
-    assert (200, 201) not in capped
+    for tier, frames in runs.items():
+        uncapped, capped = (
+            {(r["doc_a"], r["doc_b"]) for r in f.collect()} for f in frames
+        )
+        assert (100, 101) in uncapped and (0, 300) in uncapped, tier
+        assert capped < uncapped, tier
+        # the 7-copy buckets are dropped; the rare-key pair survives
+        assert (100, 101) in capped, tier
+        assert (0, 300) not in capped, tier
+        if tier == "ngram":
+            # hot "a a a" blocking key (22 docs > cap 5) dropped: the
+            # hot-key-only pair is lost (graceful recall degradation)
+            assert (200, 201) in uncapped and (200, 201) not in capped
 
 
 def test_connected_components_transitive(spark):
@@ -352,13 +364,14 @@ def test_lsh_param_sweep_recall_matches_lsh_pairs(spark, sf_dir):
     same parameters: same candidate-capture behavior, so the sweep's
     captured count equals the number of truth pairs the production LSH
     path finds at threshold (both use the identical permutation family and
-    band hashing). Full-corpus opt-in (sample_fraction=None) so the
-    comparison against the unsampled production LSH path is exact."""
+    band hashing). The full corpus (sample_fraction=1.0) so the
+    comparison against the unsampled production LSH path is exact; the
+    sweep's truth is the exhaustive tier."""
     docs = load_table(spark, sf_dir, "documents")
     row8 = {
         r["bands"]: r
         for r in dedup.lsh_param_sweep(
-            docs, threshold=0.5, sample_fraction=None
+            docs, threshold=0.5, sample_fraction=1.0
         ).collect()
     }[8]
     lsh_pairs = {
@@ -369,7 +382,7 @@ def test_lsh_param_sweep_recall_matches_lsh_pairs(spark, sf_dir):
     }
     truth = {
         (r["doc_a"], r["doc_b"])
-        for r in dedup.ngram_jaccard_pairs(docs, threshold=0.5).collect()
+        for r in dedup.exhaustive_jaccard_pairs(docs, threshold=0.5).collect()
     }
     assert row8["n_captured"] == len(lsh_pairs & truth)
 
@@ -489,7 +502,7 @@ def test_lsh_param_sweep_emits_all_configs_without_candidates(spark):
     rows = {
         r["bands"]: r
         for r in dedup.lsh_param_sweep(
-            docs, threshold=0.5, sample_fraction=None
+            docs, threshold=0.5, sample_fraction=1.0
         ).collect()
     }
     assert sorted(rows) == [4, 8, 16, 32], f"missing config rows: {sorted(rows)}"

@@ -393,7 +393,7 @@ def test_lpa_job_count_pinned(spark):
 
 def test_pagerank_job_count_pinned(spark, monkeypatch):
     """The distributed pagerank(k=5) launches at most 17 Spark jobs: the |V|
-    count, the out-weight join and dst exchange under the edge cache, one
+    count, the out-weight window and dst exchange under the edge cache, one
     broadcast per looked-up rank vector, the src-only distinct and the
     round-4 and round-5 checkpoints. A per-round exchange over the edges
     or a re-introduced node cache adds jobs and fails here."""

@@ -42,6 +42,23 @@ def test_zorder_three_dims_and_bounds(spark):
         layout.zorder_value(["x", "y"], bits=32)
 
 
+def test_zorder_validate_rejects_out_of_range_inputs(spark):
+    """validate=True keeps in-range values unchanged and turns an ordinal
+    outside [0, 2**bits) into an executor-side error instead of an alias."""
+    bits = 4
+    inside = spark.createDataFrame(
+        [(a, b) for a in (0, 1, 9, 15) for b in (0, 6, 15)], ["a", "b"]
+    )
+    checked = layout.zorder_value(["a", "b"], bits=bits, validate=True)
+    plain = layout.zorder_value(["a", "b"], bits=bits)
+    rows = inside.select(checked.alias("v"), plain.alias("p")).collect()
+    assert len(rows) == 12 and all(r["v"] == r["p"] for r in rows)
+    for a, b in [(16, 0), (0, -1)]:
+        bad = spark.createDataFrame([(a, b)], ["a", "b"]).select(checked)
+        with pytest.raises(Exception, match=r"outside \[0, 2\*\*4\)"):
+            bad.collect()
+
+
 def test_cluster_by_zorder_sorts_partitions(spark):
     df = spark.range(4096).select(
         (F.col("id") % 64).alias("a"), (F.col("id") * 7 % 64).alias("b")

@@ -1,7 +1,7 @@
 """Checks on the code base and the measurement tools rather than on query
-answers: duplicate definitions, package-relative imports, unused operator
-functions, bench.py's basket totals and tools/ab.py's renamed-package
-loader."""
+answers: duplicate definitions, package-relative imports, unused package
+functions and parameters, bench.py's basket totals and tools/ab.py's
+renamed-package loader."""
 
 from __future__ import annotations
 
@@ -77,29 +77,92 @@ def _name_uses(tree):
                 yield name
 
 
-def test_every_public_operator_function_is_used():
-    """A public top-level function in operators/*.py that nothing in the
-    package, tests/, tools/, bench.py or __spark_entry__.py names is dead
-    code: it drifts from the code that runs while looking maintained."""
-    sources = [
-        *PACKAGE.rglob("*.py"),
-        *(ROOT / "tests").rglob("*.py"),
-        *(ROOT / "tools").rglob("*.py"),
-        ROOT / "bench.py",
-        ROOT / "__spark_entry__.py",
-    ]
+#: Every source that may call a package function.
+_CALLER_SOURCES = [
+    *PACKAGE.rglob("*.py"),
+    *(ROOT / "tests").rglob("*.py"),
+    *(ROOT / "tools").rglob("*.py"),
+    *(ROOT / "perfbench").rglob("*.py"),
+    ROOT / "bench.py",
+    ROOT / "__spark_entry__.py",
+]
+
+
+def _public_functions():
+    for path in sorted(PACKAGE.rglob("*.py")):
+        for node in ast.parse(path.read_text()).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                if not node.name.startswith("_"):
+                    yield path.relative_to(ROOT), node
+
+
+def test_every_public_package_function_is_used():
+    """A public top-level function of the package that no caller source
+    names is dead code: it drifts from the code that runs while looking
+    maintained."""
     used = set()
-    for path in sources:
+    for path in _CALLER_SOURCES:
         used.update(_name_uses(ast.parse(path.read_text())))
     unused = [
-        f"{path.name}: {node.name}"
-        for path in sorted((PACKAGE / "operators").glob("*.py"))
-        for node in ast.parse(path.read_text()).body
-        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
-        and not node.name.startswith("_")
-        and node.name not in used
+        f"{rel}: {node.name}"
+        for rel, node in _public_functions()
+        if node.name not in used
     ]
     assert not unused, unused
+
+
+#: Defaulted parameters no caller passes, kept on purpose: build_session's
+#: Iceberg catalog settings are deployment configuration, set by whoever
+#: runs the engine against a real warehouse rather than by code in this
+#: repository.
+_UNPASSED_PARAMETER_ALLOWLIST = {
+    "build_session(iceberg_catalog)",
+    "build_session(iceberg_warehouse)",
+    "build_session(iceberg_rest_uri)",
+}
+
+
+def _passed_arguments():
+    """Function name → what its calls pass: keyword names, positional
+    indexes, and ``*``/``**`` for splatted arguments (which may pass any)."""
+    passed = collections.defaultdict(set)
+    for path in _CALLER_SOURCES:
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            if name is None:
+                continue
+            for i, arg in enumerate(node.args):
+                passed[name].add("*" if isinstance(arg, ast.Starred) else i)
+            passed[name].update(k.arg or "**" for k in node.keywords)
+    return passed
+
+
+def test_every_defaulted_parameter_has_a_caller():
+    """A defaulted parameter of a public package function that no caller
+    passes, by keyword or by position, is an option nobody uses: its
+    default is the only value that ever runs, and any branch for another
+    value is untested code. Write the value inline instead."""
+    passed = _passed_arguments()
+    unpassed = []
+    for rel, node in _public_functions():
+        a = node.args
+        positional = a.posonlyargs + a.args
+        first = len(positional) - len(a.defaults)
+        params = [(arg.arg, first + i) for i, arg in enumerate(positional[first:])]
+        params += [
+            (arg.arg, None)
+            for arg, d in zip(a.kwonlyargs, a.kw_defaults)
+            if d is not None
+        ]
+        for name, index in params:
+            ways = {name, "**"} | ({index, "*"} if index is not None else set())
+            label = f"{node.name}({name})"
+            if not ways & passed[node.name] and label not in _UNPASSED_PARAMETER_ALLOWLIST:
+                unpassed.append(f"{rel}: {label}")
+    assert not unpassed, f"{len(unpassed)} unpassed: {unpassed}"
 
 
 def test_bench_basket_totals_reproduce_committed_run():

@@ -40,8 +40,21 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from api_log_iceberg_test_spark.operators.dedup import _MERSENNE31, minhash_ab
+from api_log_iceberg_test_spark.operators.dedup import (
+    _BANDS,
+    _MERSENNE31,
+    _NUM_PERM,
+    _SEED,
+    _SIMHASH_SEED,
+    _SWEEP_GRID,
+    minhash_ab,
+)
 from api_log_iceberg_test_spark.operators.registry import _SHINGLES, _TOKENS
+from api_log_iceberg_test_spark.operators.similarity import (
+    _HYPER_BANDS,
+    _HYPER_NBITS,
+    _HYPER_SEED,
+)
 from tools.spark_xxh64 import (
     spark_xxhash64_int_str,
     spark_xxhash64_long,
@@ -50,7 +63,7 @@ from tools.spark_xxh64 import (
 )
 
 _P = _MERSENNE31
-_NUM_PERM, _BANDS, _SEED, _THRESHOLD = 32, 8, 7, 0.5
+_THRESHOLD = 0.5
 _ROWS_PER_BAND = _NUM_PERM // _BANDS
 
 
@@ -59,9 +72,9 @@ def _register_udfs(con) -> None:
     from duckdb.typing import BIGINT, INTEGER, UBIGINT, VARCHAR
 
     def _xxh64_simhash_u(t: str) -> int:
-        # unsigned reinterpretation of Spark's xxhash64(t, lit(11)) —
+        # unsigned reinterpretation of Spark's xxhash64(t, lit(_SIMHASH_SEED)) —
         # keeps every downstream shift/mask in UBIGINT (logical) space
-        return spark_xxhash64_str_int(t, 11) & ((1 << 64) - 1)
+        return spark_xxhash64_str_int(t, _SIMHASH_SEED) & ((1 << 64) - 1)
 
     for name, fn, args, ret in [
         ("spark_xxh64_str", spark_xxhash64_str, [VARCHAR], BIGINT),
@@ -181,9 +194,8 @@ def _simhash_sql() -> str:
     """
 
 
-#: q_lsh_param_sweep registered parameters (dedup.lsh_param_sweep
-#: defaults at threshold 0.5, sample_fraction 0.5)
-_SWEEP_GRID = (4, 8, 16, 32)
+#: q_lsh_param_sweep's sample cut (sample_fraction 0.5; its threshold is
+#: _THRESHOLD)
 _SWEEP_SAMPLE_CUT = int(0.5 * 1_000_003)
 
 
@@ -366,7 +378,7 @@ def ann_ivf_oracle(con):
     return con.execute(_IVF_SQL).fetchdf()
 
 
-_HYPER_NBITS, _HYPER_BANDS, _HYPER_SEED, _HYPER_THRESHOLD = 48, 8, 13, 0.42
+_HYPER_THRESHOLD = 0.42
 _HYPER_CHUNK = _HYPER_NBITS // _HYPER_BANDS  # 6 bits → mask 63
 
 
