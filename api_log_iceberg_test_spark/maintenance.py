@@ -34,6 +34,8 @@ import uuid
 
 from pyspark.sql import SparkSession
 
+from .schema import read_parquet
+
 
 def rewrite_data_files(spark: SparkSession, table: str, where: str | None = None) -> None:
     """Iceberg small-file compaction via the stock procedure, to 512 MiB files."""
@@ -178,8 +180,14 @@ def read_compacted_table(spark: SparkSession, path: str):
     Reading through the un-resolved symlink instead would re-resolve per
     file open and rug-pull the scan — the failure mode the concurrency
     test provokes.
+
+    The schema comes from the footer Spark wrote into the version's first
+    data file (:func:`~.schema.read_parquet`), and the partition columns
+    (``_day``) from the version's dir names, so opening the table starts
+    no Spark job. Spark still lists the version root: handing it the file
+    list instead costs a parallel listing job past 32 files.
     """
-    return spark.read.parquet(os.path.realpath(path))
+    return read_parquet(spark, os.path.realpath(path))
 
 
 def compact_parquet_table(
@@ -199,7 +207,9 @@ def compact_parquet_table(
     version and coalesced to ceil(bytes/target) files written into the
     same place in the new version (``<new_version>/<partition_subdir>``,
     or the whole version), and :func:`publish_version` swaps the table
-    symlink. A reader pinned at open time (:func:`read_compacted_table`)
+    symlink. The scope is read with the schema from its first data
+    file's footer (:func:`~.schema.read_parquet`), so the rewrite is its
+    only Spark job. A reader pinned at open time (:func:`read_compacted_table`)
     sees the OLD version or the NEW version, never a gap — proven under
     a concurrent reader/compactor loop in tests/test_storage.py — and
     whole-root reads never see a version dir or symlink inside the table.
@@ -229,7 +239,7 @@ def compact_parquet_table(
     files = live_files(path)
     size = sum(os.path.getsize(src) for src, rel in files if rel.startswith(sub))
     n_files = max(1, -(-size // target_file_size_bytes))
-    df = spark.read.parquet(os.path.join(os.path.realpath(path), sub))
+    df = read_parquet(spark, os.path.join(os.path.realpath(path), sub))
     carried = [(src, rel) for src, rel in files if not rel.startswith(sub)]
     new_version = build_version(path, carried)
     df.coalesce(n_files).write.mode("overwrite").parquet(os.path.join(new_version, sub))

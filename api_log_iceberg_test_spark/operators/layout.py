@@ -170,8 +170,10 @@ def range_boundaries(df: DataFrame, order_col: str) -> list:
     sess = df.sparkSession
     # the conf value is not always an integer (some platforms set e.g.
     # "auto") — fall back to the context's parallelism, then a fixed
-    # default, instead of an opaque ValueError (ADVICE r13)
-    raw = sess.conf.get("spark.sql.shuffle.partitions", None)
+    # default, instead of an opaque ValueError (ADVICE r13). No default
+    # argument: get(key, None) returns None for a key the session never
+    # set, where get(key) returns Spark's own default ("200")
+    raw = sess.conf.get("spark.sql.shuffle.partitions")
     try:
         k = int(raw)
     except (TypeError, ValueError):

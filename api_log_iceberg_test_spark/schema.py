@@ -70,32 +70,70 @@ TESTDATA_TABLES = [
 ]
 
 
-def _nanos_timestamp_columns(path: str) -> tuple[str, ...]:
-    """Column names stored as parquet TIMESTAMP(NANOS) in `path`.
+#: Footer key under which Spark stores the row schema of a file it wrote,
+#: as StructType JSON.
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _first_data_file(path: str) -> str | None:
+    """``path`` if it is a file, else the first ``*.parquet`` of a sorted
+    top-down walk under it that Spark's file index would also read (no
+    ``_``/``.`` name, no hidden dir that is not a ``k=v`` partition);
+    None when there is none (an empty dir, a glob, a remote URI)."""
+    import os
+
+    if os.path.isfile(path):
+        return path
+    for dirpath, dirnames, filenames in os.walk(path):
+        dirnames[:] = sorted(
+            d for d in dirnames
+            if not d.startswith(".") and not (d.startswith("_") and "=" not in d)
+        )
+        for name in sorted(filenames):
+            if name.endswith(".parquet") and not name.startswith(("_", ".")):
+                return os.path.join(dirpath, name)
+    return None
+
+
+def _footer(path: str):
+    """(Spark's StructType from the footer of ``path``'s first data file,
+    or None when Spark did not write it; the names of its parquet
+    TIMESTAMP(NANOS) columns). One driver-side footer read, O(1) in the
+    data size.
 
     Spark 4 can't map nanos to TimestampType; with
     ``spark.sql.legacy.parquet.nanosAsLong=true`` they surface as LongType
-    (ns since epoch) and we convert to microsecond timestamps on read. One
-    driver-side footer read per path — O(1) regardless of data size."""
-    import glob
-    import os
+    (ns since epoch) and :func:`load_table` converts them to microsecond
+    timestamps."""
+    import json
 
     import pyarrow.parquet as pq
 
-    # Spark writes a table as a directory of part files; the footer of any
-    # one part carries the schema. pq.read_schema only accepts a file.
-    if os.path.isdir(path):
-        parts = sorted(glob.glob(os.path.join(path, "*.parquet")))
-        if not parts:
-            return ()
-        path = parts[0]
-    schema = pq.read_schema(path)
-    out = []
-    for field in schema:
-        t = field.type
-        if str(t).startswith("timestamp[ns"):
-            out.append(field.name)
-    return tuple(out)
+    first = _first_data_file(path)
+    if first is None:
+        return None, ()
+    footer = pq.read_schema(first)
+    meta = (footer.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    schema = T.StructType.fromJson(json.loads(meta)) if meta else None
+    nanos = tuple(f.name for f in footer if str(f.type).startswith("timestamp[ns"))
+    return schema, nanos
+
+
+def _scan(spark, path: str, schema):
+    """``spark.read.parquet(path)``, with ``schema`` when there is one:
+    Spark then skips its one-task schema-inference job. It still lists
+    ``path`` and infers partition columns (``_day=…`` dirs) from it."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
+
+
+def read_parquet(spark, path: str):
+    """A DataFrame over the parquet table at ``path``, with the schema
+    taken from the footer Spark wrote into its first data file, so that
+    opening the table launches no Spark job (a table format keeps this
+    schema in its metadata; a plain parquet dir keeps it in every
+    footer). A table Spark did not write is read with inference."""
+    return _scan(spark, path, _footer(path)[0])
 
 
 def _file_signature(path: str) -> tuple | None:
@@ -212,18 +250,19 @@ def local_rows_df(spark, rows, schema):
     return spark.createDataFrame(rows, schema)
 
 
-#: path → (file signature, Spark read schema, nanos column names) —
-#: metadata only, never data. spark.read.parquet() runs a one-task
-#: schema-inference job at DataFrame CONSTRUCTION time; a 6-table join
-#: query paid six such jobs (~0.3-0.5 s of pure scheduling at bench scale,
-#: and six driver round-trips on a real cluster) before any computation
-#: started. Passing the cached StructType via .schema(...) skips inference,
-#: and the footer read for nanos columns is skipped with it. An entry is
+#: path → (file signature, Spark read schema, nanos column names) for
+#: tables whose footer holds no Spark schema (the pandas-written testdata)
+#: — metadata only, never data. spark.read.parquet() without a schema runs
+#: a one-task schema-inference job at DataFrame CONSTRUCTION time; a
+#: 6-table join query paid six such jobs (~0.3-0.5 s of pure scheduling at
+#: bench scale, and six driver round-trips on a real cluster) before any
+#: computation started. Passing the cached StructType via .schema(...)
+#: skips inference, and the footer read is skipped with it. An entry is
 #: used only while the path's signature (_file_signature) is unchanged, so
 #: a rewritten file or part file is re-inferred; a path without a signature
 #: is never cached. The cached schema is exactly what inference returned,
-#: so plans are byte-identical (guide §1.2: remove redundant passes — here,
-#: redundant metadata jobs).
+#: so plans are byte-identical. A Spark-written table needs no entry: its
+#: footer schema is what inference would read.
 _table_meta: dict[str, tuple] = {}
 
 
@@ -242,16 +281,13 @@ def _read_parquet(spark, path: str):
     hit = _table_meta.get(path)
     if sig is not None and hit is not None and hit[0] == sig:
         return spark.read.schema(hit[1]).parquet(path), hit[2]
-    df = spark.read.parquet(path)
+    spark_schema, nanos = _footer(path)
+    df = _scan(spark, path, spark_schema)
     # INT96 timestamps also read as timestamp[ns] in the pyarrow footer,
     # but Spark maps them to TimestampType directly: only the columns the
     # scan surfaces as long are nanos
-    ns_cols = tuple(
-        c
-        for c in _nanos_timestamp_columns(path)
-        if df.schema[c].dataType.typeName() == "long"
-    )
-    if sig is not None:
+    ns_cols = tuple(c for c in nanos if df.schema[c].dataType.typeName() == "long")
+    if sig is not None and spark_schema is None:
         _table_meta[path] = (sig, df.schema, ns_cols)
     return df, ns_cols
 

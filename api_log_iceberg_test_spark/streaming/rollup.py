@@ -23,6 +23,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..schema import read_parquet
+
 #: additive rollup schema: one row per (bucket_start, name)
 _KEYS = ["bucket_start", "name"]
 
@@ -106,7 +108,7 @@ def apply_rollup_batch(
 
     partial = _batch_partial(batch)
     if os.path.exists(rollup_dir):
-        existing = spark.read.parquet(rollup_dir)
+        existing = read_parquet(spark, rollup_dir)
         merged = merge_rollup(existing, partial)
     else:
         merged = partial
@@ -141,7 +143,7 @@ def start_incremental_rollup(stream: DataFrame, rollup_dir: str, checkpoint_dir:
 
 def read_rollup(spark: SparkSession, rollup_dir: str) -> DataFrame:
     """Read the rollup with derived (non-additive) metrics."""
-    r = spark.read.parquet(rollup_dir)
+    r = read_parquet(spark, rollup_dir)
     return r.select(
         *_KEYS,
         "cnt",

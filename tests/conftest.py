@@ -27,3 +27,17 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", SF0001)
+
+
+def construction_jobs(spark, group, build, *args, **kwargs):
+    """Spark jobs launched, in job group ``group``, while ``build(*args,
+    **kwargs)`` runs (constructs a DataFrame, or writes a table)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        build(*args, **kwargs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status tracker learns of jobs from the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))

@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from api_log_iceberg_test_spark.operators import graph
+from tests.conftest import construction_jobs
 
 
 def _edges(spark, rows):
@@ -357,18 +358,6 @@ def _cache_is_empty(spark):
     return spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
-def _construction_jobs(spark, group, build, *args, **kwargs):
-    """Spark jobs launched, in job group ``group``, while ``build(*args,
-    **kwargs)`` constructs its DataFrame."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        build(*args, **kwargs)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _range_graph(spark):
     """120 edges over 42 nodes from ``spark.range``, so the planner knows
     the graph's size, as it does for a file-backed input, and broadcasts
@@ -387,7 +376,7 @@ def test_lpa_job_count_pinned(spark):
     the round-3 checkpoint. A re-introduced exchange over the edges, label
     join or cache adds jobs and fails here."""
     e = _range_graph(spark)
-    assert _construction_jobs(spark, "lpa", graph.label_propagation, e, k=3) <= 8
+    assert construction_jobs(spark, "lpa", graph.label_propagation, e, k=3) <= 8
     assert _cache_is_empty(spark)
 
 
@@ -399,7 +388,7 @@ def test_pagerank_job_count_pinned(spark, monkeypatch):
     or a re-introduced node cache adds jobs and fails here."""
     monkeypatch.setattr(graph, "_PAGERANK_DRIVER_NODE_LIMIT", 0)
     e = _range_graph(spark)
-    assert _construction_jobs(spark, "pagerank", graph.pagerank, e, k=5) <= 17
+    assert construction_jobs(spark, "pagerank", graph.pagerank, e, k=5) <= 17
     assert _cache_is_empty(spark)
 
 

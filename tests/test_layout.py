@@ -344,3 +344,22 @@ def test_bucket_ordinal_tree_matches_linear_count(spark):
         for r in out:
             want = 0 if r["k"] is None else sum(1 for c in cuts if r["k"] >= c)
             assert r["b"] == want, (m, r["k"], r["b"], want)
+
+
+def test_range_boundaries_reads_spark_default_partitions(spark):
+    """A session that never set spark.sql.shuffle.partitions samples for
+    Spark's default of 200 buckets, without a non-integer warning: the
+    conf read must fall back to Spark's default, not to None."""
+    import warnings
+
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    spark.conf.unset(key)
+    try:
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            cuts = layout.range_boundaries(spark.range(1000), "id")
+    finally:
+        spark.conf.set(key, saved)
+    assert not [w for w in caught if "range_boundaries" in str(w.message)]
+    assert len(cuts) == 199

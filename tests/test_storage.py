@@ -334,3 +334,93 @@ def test_load_table_rereads_rewritten_part_file(spark, tmp_path):
     rows = after.orderBy("a").collect()
     assert [r.c for r in rows] == [0.5, 1.5, 2.5]
     assert rows[0].ts == dt.datetime(2024, 1, 2, 3, 4, 5)
+
+
+def _committed_api_table(spark, tmp_path) -> str:
+    """A staged-ingest api-log table after one commit_staged: the root is
+    a symlink to a version of ``_day=…`` partition dirs."""
+    from api_log_iceberg_test_spark.generator import generate_api_logs
+    from api_log_iceberg_test_spark.ingest import IngestConfig, commit_staged, start_staged_ingest
+    from api_log_iceberg_test_spark.schema import API_LOG_SCHEMA
+
+    src, tgt = str(tmp_path / "src"), str(tmp_path / "table" / "api")
+    generate_api_logs(spark, 300, seed=3, span_days=2, num_partitions=2).write.parquet(src)
+    stream = spark.readStream.schema(API_LOG_SCHEMA).parquet(src)
+    config = IngestConfig(flush_count=100, checkpoint_dir=str(tmp_path / "ckpt"))
+    start_staged_ingest(stream, tgt, config, available_now=True).awaitTermination(120)
+    assert commit_staged(tgt) == 1
+    return tgt
+
+
+def _first_day(tgt: str) -> str:
+    import os
+
+    return sorted(d for d in os.listdir(os.path.realpath(tgt)) if d.startswith("_day="))[0]
+
+
+def test_read_compacted_table_starts_no_job(spark, tmp_path):
+    """Opening a committed table takes its schema from the footer Spark
+    wrote, so it launches no schema-inference job."""
+    from api_log_iceberg_test_spark.maintenance import read_compacted_table
+    from tests.conftest import construction_jobs
+
+    tgt = _committed_api_table(spark, tmp_path)
+    assert construction_jobs(spark, "open-table", read_compacted_table, spark, tgt) == 0
+
+
+def test_partition_compaction_starts_one_job(spark, tmp_path):
+    """A partition compaction's only Spark job is its rewrite: the scope
+    read takes its schema from the footer."""
+    from api_log_iceberg_test_spark.maintenance import compact_parquet_table, read_compacted_table
+    from tests.conftest import construction_jobs
+
+    tgt = _committed_api_table(spark, tmp_path)
+    day = _first_day(tgt)
+    jobs = construction_jobs(
+        spark, "compact-day", compact_parquet_table, spark, tgt, partition_subdir=day
+    )
+    assert jobs == 1
+    assert read_compacted_table(spark, tgt).count() == 300
+
+
+def test_footer_schema_read_equals_inferred_read(spark, tmp_path):
+    """read_parquet gives the schema and rows that spark.read.parquet
+    infers, on every table shape the package reads: a committed version
+    with ``_day`` partition dirs, the same table after a partition and
+    after a whole-table compaction (``_day`` becomes a data column), a
+    rollup dir, and a pyarrow-written dir without Spark's footer schema
+    (the inferring fallback)."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from api_log_iceberg_test_spark.generator import generate_api_logs
+    from api_log_iceberg_test_spark.maintenance import compact_parquet_table
+    from api_log_iceberg_test_spark.schema import _footer, read_parquet
+    from api_log_iceberg_test_spark.streaming.rollup import apply_rollup_batch
+
+    def same(path: str) -> None:
+        got, want = read_parquet(spark, path), spark.read.parquet(path)
+        assert got.schema == want.schema, path
+        assert got.count() == want.count() > 0, path
+        assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty(), path
+
+    tgt = _committed_api_table(spark, tmp_path)
+    same(os.path.realpath(tgt))
+    assert read_parquet(spark, os.path.realpath(tgt)).schema["_day"].dataType.typeName() == "date"
+    compact_parquet_table(spark, tgt, partition_subdir=_first_day(tgt))
+    same(os.path.realpath(tgt))
+    compact_parquet_table(spark, tgt)
+    assert "_day" in _footer(os.path.realpath(tgt))[0].names
+    same(os.path.realpath(tgt))
+
+    rollup = str(tmp_path / "rollup")
+    apply_rollup_batch(spark, generate_api_logs(spark, 200, seed=4), 0, rollup)
+    same(rollup)
+
+    plain = tmp_path / "plain"
+    plain.mkdir()
+    pq.write_table(pa.table({"a": [1, 2, 3], "b": ["x", "y", None]}), plain / "part-0.parquet")
+    assert _footer(str(plain))[0] is None
+    same(str(plain))

@@ -59,6 +59,39 @@ def test_package_imports_itself_only_relatively():
     assert not absolute, absolute
 
 
+def _infers_parquet_schema(node) -> bool:
+    """Whether ``node`` is a ``<x>.read[.<option>(…)…].parquet(…)`` call
+    with no ``.schema(…)`` in the reader chain: Spark then starts a
+    schema-inference job to open the table."""
+    if not (isinstance(node, ast.Call) and getattr(node.func, "attr", None) == "parquet"):
+        return False
+    chain, part = [], node.func.value
+    while isinstance(part, (ast.Call, ast.Attribute)):
+        if isinstance(part, ast.Call):
+            part = part.func
+        elif part.attr == "read":
+            return "schema" not in chain
+        else:
+            chain.append(part.attr)
+            part = part.value
+    return False
+
+
+def test_only_schema_module_reads_parquet_without_a_schema():
+    """Package code opens parquet tables through schema.read_parquet or
+    load_table, which take the schema from the file footer or a cache; a
+    bare ``.read.parquet(`` elsewhere starts one schema-inference job per
+    open."""
+    inferring = [
+        f"{rel}:{node.lineno}"
+        for rel, tree in _modules()
+        if rel != (PACKAGE / "schema.py").relative_to(ROOT)
+        for node in ast.walk(tree)
+        if _infers_parquet_schema(node)
+    ]
+    assert not inferring, inferring
+
+
 def _name_uses(tree):
     """Names a module uses: names, attribute reads and imported names.
     A top-level function's uses of its own name (recursion) do not count."""
