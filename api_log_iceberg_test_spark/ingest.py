@@ -26,7 +26,8 @@ is the same code with ``use_iceberg_table`` set.
 Config knobs mirror the reference env vars (docker-compose.yaml:31-36):
 ``IngestConfig.flush_count`` ↔ PARQUET_FLUSH_COUNT,
 ``IngestConfig.flush_interval`` ↔ PARQUET_FLUSH_INTERVAL, and the
-staged mode's ``StagedCommitter(interval=...)`` ↔ ICEBERG_COMMIT_INTERVAL.
+staged mode's ``StagedCommitter(interval=<seconds>)`` ↔
+ICEBERG_COMMIT_INTERVAL (the reference's "3m" is ``interval=180.0``).
 Parquet targets are always partitioned by a ``_day`` column derived from
 ``time`` (the plain-Parquet stand-in for Iceberg's hidden ``days(time)``).
 
@@ -36,10 +37,12 @@ then a scheduled atomic publish) — is reproduced by the staged mode
 (r10, closing the SURVEY §2.1 S5/S6 staging gap at the parquet level):
 
 - :func:`start_staged_ingest` flushes each micro-batch to
-  ``<target>__staging/batch-<run>-<epoch>/`` on the FLUSH cadence; the batch
-  directory's ``_SUCCESS`` file is the index-marker analogue (a flushed
-  batch is commit-eligible iff it exists), and checkpoint + per-epoch
-  overwrite make replayed flushes idempotent;
+  ``<target>__staging/batch-<run>-<epoch>/`` on the FLUSH cadence, where
+  ``<run>`` is a prefix of the streaming query's id, which Spark keeps in
+  the checkpoint; the batch directory's ``_SUCCESS`` file is the
+  index-marker analogue (a flushed batch is commit-eligible iff it
+  exists), and checkpoint + per-epoch overwrite make replayed flushes
+  idempotent;
 - :func:`commit_staged` runs on the COMMIT cadence (or from
   :class:`StagedCommitter`): it builds a new table VERSION with
   ``maintenance.build_version`` — hardlinks of the current version's
@@ -58,6 +61,13 @@ micro-batch = one atomic visible commit, strictly lower latency for the
 same durability — SURVEY §7); the staged mode exists for cadence-fidelity
 with the reference and for deployments that want fewer, larger commit
 points than flushes.
+
+Upgrading from a version that named staged batches after a
+``_staged_ingest_id`` file in the checkpoint: stop the ingest query and
+run :func:`commit_staged` to drain staging first. A batch staged under
+the old id and replayed after the upgrade is staged again under the
+query id, which the old batch's published key does not match, so its
+rows would be published twice.
 """
 
 from __future__ import annotations
@@ -68,13 +78,11 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
-#: Run ids are fixed-width lowercase hex. The sidecar writer, the sidecar
-#: validator, the staged-batch directory pattern and the committed-key
-#: manifest regex ALL derive from this one constant — a format drift can
-#: break replay dedup only by failing loudly here, never by silently
-#: producing keys the manifest regex cannot match (ADVICE r11).
+#: Run ids are fixed-width lowercase hex: a prefix of the streaming
+#: query's id (:func:`start_staged_ingest`). The staged-batch directory
+#: pattern and the committed-key manifest regex both derive from this one
+#: constant, so a run id always yields keys the manifest regex matches.
 _RUN_ID_HEX_LEN = 8
-_RUN_ID_RE = re.compile(rf"[0-9a-f]{{{_RUN_ID_HEX_LEN}}}")
 #: Commit-eligible staging dirs: "batch-<run>-<epoch>". Anything else
 #: under the staging root (a stray "batch-tmp", a bare "batch-7", an
 #: operator's scratch dir) is IGNORED by commit_staged rather than
@@ -157,123 +165,8 @@ def start_ingest(
     return writer.format("parquet").option("path", target).start()
 
 
-#: Spark trigger units → seconds. Bare abbreviations are keyed directly
-#: ("ms" must not lose its trailing s to plural-stripping; ADVICE r10).
-_INTERVAL_UNITS = {
-    "microsecond": 1e-6,
-    "us": 1e-6,
-    "millisecond": 1e-3,
-    "ms": 1e-3,
-    "second": 1.0,
-    "sec": 1.0,
-    "s": 1.0,
-    "minute": 60.0,
-    "min": 60.0,
-    "m": 60.0,
-    "hour": 3600.0,
-    "h": 3600.0,
-    "day": 86400.0,
-    "d": 86400.0,
-    "week": 604800.0,
-    "w": 604800.0,
-}
-
-
-def interval_seconds(interval: str) -> float:
-    """'180 seconds' / '3 minutes' / '500 milliseconds' / '45' → seconds.
-
-    Accepts every interval string Spark's ProcessingTime trigger does
-    (so a ``flush_interval`` that ``start_staged_ingest`` accepted can
-    always be reused as a :class:`StagedCommitter` interval); unknown
-    units raise a ValueError naming the supported set instead of the
-    bare KeyError the pre-r11 three-unit map produced (ADVICE r10).
-    """
-    parts = interval.strip().split()
-    value = float(parts[0])
-    raw = parts[1].lower() if len(parts) > 1 else "second"
-    unit = raw if raw in _INTERVAL_UNITS else raw.rstrip("s")
-    if unit not in _INTERVAL_UNITS:
-        raise ValueError(
-            f"unsupported interval unit {raw!r} in {interval!r}; "
-            f"supported: {sorted(_INTERVAL_UNITS)}"
-        )
-    return value * _INTERVAL_UNITS[unit]
-
-
 def staging_dir(target: str) -> str:
     return target.rstrip("/") + "__staging"
-
-
-def _ingest_run_id(checkpoint: str) -> str:
-    """Stable per-CHECKPOINT identity for staged-batch naming.
-
-    Spark epoch ids are only unique within one checkpoint lineage: a
-    fresh checkpoint against an existing target restarts epochs at 0, so
-    an epoch-only dedup key would classify the new run's batches as
-    replays of the old run's and silently drop genuinely new data
-    (review r11). The id is persisted as a sidecar next to Spark's own
-    checkpoint metadata: a restart from the SAME checkpoint (true
-    replays) reuses it, a fresh checkpoint mints a new one. Written
-    before the query starts, so it exists before any flush can.
-
-    Concurrency: the id is written to a private tmp file first and then
-    installed under the sidecar name with ``os.link``, which fails with
-    EEXIST if the name already exists — exactly one creator can ever
-    succeed, the name never exists without its complete content (an
-    O_EXCL create would expose an empty file between create and write),
-    and everyone (including the winner) re-reads the installed file, so
-    concurrent first-starts on one checkpoint always agree. The pre-r12
-    check-then-rename dance was NOT atomic on POSIX: ``os.rename``
-    silently replaces an existing destination, so two racing
-    first-starts could each install-and-use a different id, defeating
-    replay dedup (ADVICE r11). A sidecar whose content does not match
-    the expected format (hand-restored checkpoint, torn write) raises
-    instead of silently minting keys the replay-dedup manifest regex
-    can never match (ADVICE r11)."""
-    import glob
-    import os
-    import uuid
-
-    os.makedirs(checkpoint, exist_ok=True)
-    sidecar = os.path.join(checkpoint, "_staged_ingest_id")
-    # sweep tmp files orphaned by a process that died between the tmp
-    # write and the finally-unlink — a crash-looping starter would
-    # otherwise accumulate them forever (ADVICE r12). Safe: tmp names are
-    # private per-process UUIDs, so nothing live ever matches another
-    # process's name, and a concurrent starter losing its OWN tmp to this
-    # sweep merely retries the ENOENT-safe unlink below.
-    for stale in glob.glob(f"{sidecar}.*.tmp"):
-        try:
-            os.unlink(stale)
-        except OSError:  # pragma: no cover — racing sweepers
-            pass
-    while not os.path.exists(sidecar):
-        tmp = f"{sidecar}.{uuid.uuid4().hex}.tmp"
-        with open(tmp, "w") as f:
-            f.write(uuid.uuid4().hex[:_RUN_ID_HEX_LEN])
-        try:
-            os.link(tmp, sidecar)  # EEXIST → a concurrent creator won
-        except FileExistsError:
-            pass
-        except FileNotFoundError:  # pragma: no cover — a concurrent
-            continue  # starter's sweep took our tmp: mint a new one
-        finally:
-            try:
-                os.unlink(tmp)
-            except FileNotFoundError:  # pragma: no cover — swept
-                pass
-    with open(sidecar) as f:
-        run_id = f.read().strip()
-    if not _RUN_ID_RE.fullmatch(run_id):
-        raise ValueError(
-            f"corrupt staged-ingest id sidecar {sidecar!r}: {run_id!r} is not "
-            f"{_RUN_ID_HEX_LEN} lowercase hex chars. Batches staged under a "
-            "non-conforming id would never match the replay-dedup manifest and "
-            "a replay would duplicate rows. Remove the sidecar to mint a fresh "
-            "run id (reconcile any batches already staged under the bad id "
-            "first)."
-        )
-    return run_id
 
 
 def start_staged_ingest(
@@ -302,10 +195,12 @@ def start_staged_ingest(
     config = config or IngestConfig()
     df = _with_day(stream_df)
     stage_root = staging_dir(target)
-    checkpoint = config.checkpoint_for(target)
-    run_id = _ingest_run_id(checkpoint)
 
     def flush(batch_df: DataFrame, epoch_id: int) -> None:
+        # the query id Spark keeps in the checkpoint: the same on a restart
+        # from it, new for a fresh checkpoint
+        query_id = batch_df.sparkSession.sparkContext.getLocalProperty("sql.streaming.queryId")
+        run_id = query_id.replace("-", "")[:_RUN_ID_HEX_LEN]
         w = batch_df.write.mode("overwrite").option(
             "maxRecordsPerFile", config.flush_count
         )
@@ -317,7 +212,7 @@ def start_staged_ingest(
 
     writer = (
         df.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
+        .option("checkpointLocation", config.checkpoint_for(target))
         .foreachBatch(flush)
     )
     if available_now:
@@ -351,8 +246,8 @@ def commit_staged(target: str, retain_seconds: float = 60.0) -> int:
     only unique within one checkpoint lineage, so a FRESH checkpoint
     against an existing target restarts at epoch 0 and an epoch-only
     key would silently drop its genuinely new batches as "replays"
-    (review r11); the per-checkpoint run id from
-    :func:`_ingest_run_id` disambiguates. The keys live only in file
+    (review r11); the run id, a prefix of the streaming query id that
+    the checkpoint keeps, disambiguates. The keys live only in file
     names: a compaction rewrites the files of the partitions it
     compacts under new names, so a batch replayed after its partitions
     were compacted is published again.
@@ -425,17 +320,14 @@ class StagedCommitter:
     def __init__(
         self,
         target: str,
-        interval: str | float = "180 seconds",
+        interval: float = 180.0,
         retain_seconds: float = 60.0,
     ) -> None:
         import threading
 
         self.target = target
         self.retain_seconds = retain_seconds
-        self._interval = (
-            float(interval) if isinstance(interval, (int, float))
-            else interval_seconds(interval)
-        )
+        self._interval = interval
         self._stop = threading.Event()
         self.commits = 0
         self.failures = 0

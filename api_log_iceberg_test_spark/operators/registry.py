@@ -6599,7 +6599,7 @@ def q_maintenance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     END-TO-END: the query REPLAYS the reference's dual-cadence shape
     against a private scratch table — events split into ≤6 day-range
     batches (flush cadence), staged via the real ``batch-<run>-<epoch>``
-    layout under the real run-id sidecar, and published two batches per
+    layout under one fresh run id, and published two batches per
     ``commit_staged`` tick (commit cadence) through the atomic
     symlink-swap commit — then audits each published VERSION the way an
     Iceberg user reads ``.snapshots``/``.files``: per-commit file census
@@ -6634,6 +6634,7 @@ def q_maintenance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
     import tempfile
+    import uuid
 
     from .. import ingest
     from ..maintenance import read_compacted_table
@@ -6657,7 +6658,7 @@ def q_maintenance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         target = os.path.join(root, "t")
         stage = ingest.staging_dir(target)
-        run_id = ingest._ingest_run_id(os.path.join(root, "ckpt"))
+        run_id = uuid.uuid4().hex[: ingest._RUN_ID_HEX_LEN]
         # r15 (guide §1.2/§2.4): ONE partitioned write replaces the per-
         # batch loop of |groups| filtered full scans, each funneled through
         # a repartition(1) single task — the same bytes now leave in one

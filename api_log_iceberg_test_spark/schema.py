@@ -95,28 +95,73 @@ def _first_data_file(path: str) -> str | None:
     return None
 
 
-def _footer(path: str):
-    """(Spark's StructType from the footer of ``path``'s first data file,
-    or None when Spark did not write it; the names of its parquet
-    TIMESTAMP(NANOS) columns). One driver-side footer read, O(1) in the
-    data size.
+def _maps_exactly(at) -> bool:
+    """Whether ``from_arrow_type(at, prefer_timestamp_ntz=True)`` is the
+    type Spark's inference reads for a parquet column pyarrow reads as
+    ``at``. False for what the two map differently: unsigned ints
+    (widened by Spark), nanosecond timestamps (int64 under
+    ``nanosAsLong``), durations (plain int64 to Spark) and every type
+    no test compares."""
+    import pyarrow.types as pat
 
-    Spark 4 can't map nanos to TimestampType; with
-    ``spark.sql.legacy.parquet.nanosAsLong=true`` they surface as LongType
-    (ns since epoch) and :func:`load_table` converts them to microsecond
-    timestamps."""
+    if pat.is_dictionary(at):
+        return _maps_exactly(at.value_type)
+    if pat.is_struct(at) or pat.is_list(at) or pat.is_large_list(at) or pat.is_map(at):
+        return all(_maps_exactly(at.field(i).type) for i in range(at.num_fields))
+    if pat.is_timestamp(at):
+        return at.unit != "ns"
+    return any(
+        is_type(at)
+        for is_type in (
+            pat.is_boolean, pat.is_signed_integer, pat.is_float32, pat.is_float64,
+            pat.is_decimal128, pat.is_string, pat.is_large_string, pat.is_binary,
+            pat.is_large_binary, pat.is_date32,
+        )
+    )
+
+
+def _footer(path: str):
+    """(Spark's read schema of ``path``, from the footer of its first data
+    file, or None when the footer has no exact mapping; the names of its
+    top-level parquet TIMESTAMP(NANOS) columns). One driver-side footer
+    read, O(1) in the data size.
+
+    A file Spark wrote carries its schema under ``_SPARK_SCHEMA_KEY``. Any
+    other file maps to the schema Spark's inference reads from the same
+    footer: naive timestamps are TimestampNTZType, INT96 ones
+    TimestampType, and top-level nanos are LongType — Spark 4 can't map
+    nanos to a timestamp; with ``spark.sql.legacy.parquet.nanosAsLong=true``
+    they surface as ns since epoch and :func:`load_table` converts them to
+    microsecond timestamps. Nanos or INT96 below the top level, and every
+    type :func:`_maps_exactly` rejects, leave the schema to inference."""
     import json
 
     import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_type
 
     first = _first_data_file(path)
     if first is None:
         return None, ()
-    footer = pq.read_schema(first)
+    footer = pq.read_metadata(first)
     meta = (footer.metadata or {}).get(_SPARK_SCHEMA_KEY)
-    schema = T.StructType.fromJson(json.loads(meta)) if meta else None
-    nanos = tuple(f.name for f in footer if str(f.type).startswith("timestamp[ns"))
-    return schema, nanos
+    if meta:
+        return T.StructType.fromJson(json.loads(meta)), ()
+    leaves = map(footer.schema.column, range(len(footer.schema)))
+    int96 = {c.path for c in leaves if c.physical_type == "INT96"}
+    fields, nanos, exact = [], [], True
+    for f in footer.schema.to_arrow_schema():
+        if f.name in int96:
+            dtype = T.TimestampType()
+        elif str(f.type).startswith("timestamp[ns"):
+            dtype = T.LongType()
+            nanos.append(f.name)
+        elif _maps_exactly(f.type) and not any(p.startswith(f.name + ".") for p in int96):
+            dtype = from_arrow_type(f.type, prefer_timestamp_ntz=True)
+        else:
+            exact = False
+            continue
+        fields.append(T.StructField(f.name, dtype))
+    return (T.StructType(fields) if exact else None), tuple(nanos)
 
 
 def _scan(spark, path: str, schema):
@@ -129,34 +174,11 @@ def _scan(spark, path: str, schema):
 
 def read_parquet(spark, path: str):
     """A DataFrame over the parquet table at ``path``, with the schema
-    taken from the footer Spark wrote into its first data file, so that
-    opening the table launches no Spark job (a table format keeps this
-    schema in its metadata; a plain parquet dir keeps it in every
-    footer). A table Spark did not write is read with inference."""
+    taken from the footer of its first data file, so that opening the
+    table launches no Spark job (a table format keeps this schema in its
+    metadata; a plain parquet dir keeps it in every footer). A footer
+    with no exact mapping is read with inference."""
     return _scan(spark, path, _footer(path)[0])
-
-
-def _file_signature(path: str) -> tuple | None:
-    """What a rewrite of ``path`` changes: a file's (mtime_ns, size); for a
-    directory, the (relative name, mtime_ns, size) of every file under it
-    (an in-place part-file rewrite leaves the directory's own stat alone).
-    None when the path can't be listed (a glob, a remote URI)."""
-    import os
-
-    try:
-        if not os.path.isdir(path):
-            st = os.stat(path)
-            return (st.st_mtime_ns, st.st_size)
-        sig = []
-        for dirpath, dirnames, filenames in os.walk(path):
-            dirnames.sort()
-            for name in sorted(filenames):
-                full = os.path.join(dirpath, name)
-                st = os.stat(full)
-                sig.append((os.path.relpath(full, path), st.st_mtime_ns, st.st_size))
-        return tuple(sig)
-    except OSError:
-        return None
 
 
 def load_table_time_range(
@@ -250,22 +272,6 @@ def local_rows_df(spark, rows, schema):
     return spark.createDataFrame(rows, schema)
 
 
-#: path → (file signature, Spark read schema, nanos column names) for
-#: tables whose footer holds no Spark schema (the pandas-written testdata)
-#: — metadata only, never data. spark.read.parquet() without a schema runs
-#: a one-task schema-inference job at DataFrame CONSTRUCTION time; a
-#: 6-table join query paid six such jobs (~0.3-0.5 s of pure scheduling at
-#: bench scale, and six driver round-trips on a real cluster) before any
-#: computation started. Passing the cached StructType via .schema(...)
-#: skips inference, and the footer read is skipped with it. An entry is
-#: used only while the path's signature (_file_signature) is unchanged, so
-#: a rewritten file or part file is re-inferred; a path without a signature
-#: is never cached. The cached schema is exactly what inference returned,
-#: so plans are byte-identical. A Spark-written table needs no entry: its
-#: footer schema is what inference would read.
-_table_meta: dict[str, tuple] = {}
-
-
 def _read_parquet(spark, path: str):
     """(DataFrame over ``path``, the TIMESTAMP(NANOS) columns it surfaces
     as int64 nanoseconds).
@@ -277,19 +283,8 @@ def _read_parquet(spark, path: str):
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    sig = _file_signature(path)
-    hit = _table_meta.get(path)
-    if sig is not None and hit is not None and hit[0] == sig:
-        return spark.read.schema(hit[1]).parquet(path), hit[2]
-    spark_schema, nanos = _footer(path)
-    df = _scan(spark, path, spark_schema)
-    # INT96 timestamps also read as timestamp[ns] in the pyarrow footer,
-    # but Spark maps them to TimestampType directly: only the columns the
-    # scan surfaces as long are nanos
-    ns_cols = tuple(c for c in nanos if df.schema[c].dataType.typeName() == "long")
-    if sig is not None and spark_schema is None:
-        _table_meta[path] = (sig, df.schema, ns_cols)
-    return df, ns_cols
+    schema, ns_cols = _footer(path)
+    return _scan(spark, path, schema), ns_cols
 
 
 def load_table(spark, sf_dir: str, name: str):

@@ -12,8 +12,8 @@ key), so the merge join broadcasts it against the rollup table; with an
 Iceberg sink this becomes ``MERGE INTO`` with copy-on-write handled by the
 table format. The parquet fallback here rewrites only the rollup table
 (bucket-count-sized, not data-sized). Exactly-once comes from the
-streaming checkpoint + a batch-id high-watermark stored with the rollup,
-which turns checkpoint-replayed micro-batches into no-ops.
+streaming checkpoint + a per-query batch-id high-watermark stored with the
+rollup, which turns checkpoint-replayed micro-batches into no-ops.
 """
 
 from __future__ import annotations
@@ -62,16 +62,23 @@ def merge_rollup(existing: DataFrame, partial: DataFrame) -> DataFrame:
     )
 
 
-#: sidecar recording the highest micro-batch id merged into the rollup.
-#: Leading underscore → Spark's file index treats it as hidden (like
-#: _SUCCESS), so parquet reads of the directory ignore it.
+#: sidecar recording "<query id> <batch id>" of the last micro-batch
+#: merged into the rollup. Leading underscore → Spark's file index treats
+#: it as hidden (like _SUCCESS), so parquet reads of the directory ignore it.
 _BATCH_MARKER = "_last_batch_id"
 
 
-def _applied_batch_id(rollup_dir: str) -> int:
+def _applied_batch_id(rollup_dir: str, query_id: str | None) -> int:
+    """The last batch id of query ``query_id`` merged into the rollup; -1
+    when the marker is another query's, so a fresh checkpoint's batches,
+    which restart at 0, are merged. A bare batch id (a marker from before
+    it carried the query id) counts as the current query's."""
     try:
         with open(os.path.join(rollup_dir, _BATCH_MARKER)) as f:
-            return int(f.read().strip())
+            *marker_query, batch_id = f.read().split()
+        if marker_query and marker_query[0] != str(query_id):
+            return -1
+        return int(batch_id)
     except (FileNotFoundError, ValueError):
         return -1
 
@@ -85,9 +92,11 @@ def apply_rollup_batch(
     """Merge one micro-batch into the rollup, exactly once.
 
     Idempotent under checkpoint replay: the rollup carries a high-watermark
-    sidecar (``_last_batch_id``); a batch id at or below it was already
-    merged before the crash, so the replay is skipped instead of
-    double-counting. Returns whether the batch was applied.
+    sidecar (``_last_batch_id``) with the id of the streaming query that
+    wrote it (Spark keeps it in the checkpoint; None outside a stream); a
+    batch of the same query at or below it was already merged before the
+    crash, so the replay is skipped instead of double-counting. Returns
+    whether the batch was applied.
 
     The swap is rename-old → rename-new (never delete-then-rename), so no
     crash point loses the table: if a crash lands between the renames, the
@@ -103,7 +112,8 @@ def apply_rollup_batch(
     if not os.path.exists(rollup_dir) and os.path.exists(old):
         os.rename(old, rollup_dir)
 
-    if batch_id <= _applied_batch_id(rollup_dir):
+    query_id = spark.sparkContext.getLocalProperty("sql.streaming.queryId")
+    if batch_id <= _applied_batch_id(rollup_dir, query_id):
         return False  # checkpoint replay of an already-merged batch
 
     partial = _batch_partial(batch)
@@ -115,7 +125,7 @@ def apply_rollup_batch(
     tmp = rollup_dir + ".tmp"
     merged.write.mode("overwrite").parquet(tmp)
     with open(os.path.join(tmp, _BATCH_MARKER), "w") as f:
-        f.write(str(batch_id))
+        f.write(f"{query_id} {batch_id}")
     if os.path.exists(old):
         shutil.rmtree(old)
     if os.path.exists(rollup_dir):

@@ -315,42 +315,6 @@ def test_staged_committer_survives_transient_failure(tmp_path, monkeypatch):
     assert committer.last_error is None  # cleared by the first success
 
 
-def test_run_id_sidecar_exclusive_and_validated(tmp_path):
-    """ADVICE r11: the run-id sidecar must be created with an exclusive
-    primitive (the old check-then-rename let two concurrent first-starts
-    each install a different id — os.rename replaces an existing
-    destination on POSIX), and a corrupt sidecar must raise, not mint
-    keys the replay-dedup manifest regex can never match."""
-    import re
-    import threading
-    from concurrent.futures import ThreadPoolExecutor
-
-    import pytest
-
-    from api_log_iceberg_test_spark.ingest import _RUN_ID_HEX_LEN, _ingest_run_id
-
-    ckpt = str(tmp_path / "ckpt")
-    barrier = threading.Barrier(8)
-
-    def race(_):
-        barrier.wait()
-        return _ingest_run_id(ckpt)
-
-    with ThreadPoolExecutor(max_workers=8) as pool:
-        ids = list(pool.map(race, range(8)))
-    assert len(set(ids)) == 1, f"racing starters disagreed on run id: {set(ids)}"
-    assert re.fullmatch(rf"[0-9a-f]{{{_RUN_ID_HEX_LEN}}}", ids[0])
-    # restart re-reads the same id
-    assert _ingest_run_id(ckpt) == ids[0]
-
-    bad = str(tmp_path / "ckpt_bad")
-    os.makedirs(bad)
-    with open(os.path.join(bad, "_staged_ingest_id"), "w") as f:
-        f.write("NOT-HEX!")
-    with pytest.raises(ValueError, match="sidecar"):
-        _ingest_run_id(bad)
-
-
 def test_commit_staged_skips_stray_batch_dirs(spark, tmp_path):
     """ADVICE r11: a non-conforming dir under staging (e.g. 'batch-tmp'
     with a _SUCCESS) must be ignored, not wedge the committer tick with
@@ -578,58 +542,39 @@ def test_staged_mid_epoch_crash_restart_real_replay(spark, tmp_path):
     assert not [d for d in os.listdir(stage) if d.startswith("batch-")]
 
 
-def test_interval_seconds_units():
-    """ADVICE r10: every Spark-trigger-accepted unit parses (the pre-r11
-    map raised KeyError on '500 milliseconds'); unknown units raise a
-    descriptive ValueError, not a bare KeyError."""
-    import pytest
+def test_staged_run_id_is_spark_query_id(spark, tmp_path):
+    """Staged batch dirs are named with the streaming query id's hex
+    prefix: a restart from the same checkpoint keeps it (Spark keeps the
+    id in the checkpoint), a fresh checkpoint gets a new one."""
+    from api_log_iceberg_test_spark.ingest import (
+        _RUN_ID_HEX_LEN,
+        commit_staged,
+        start_staged_ingest,
+    )
+    from api_log_iceberg_test_spark.ingest import staging_dir as _staging
 
-    from api_log_iceberg_test_spark.ingest import interval_seconds
+    src, tgt = str(tmp_path / "src"), str(tmp_path / "table")
+    stage = _staging(tgt)
 
-    assert interval_seconds("500 milliseconds") == 0.5
-    assert interval_seconds("250 ms") == 0.25
-    assert interval_seconds("3 min") == 180.0
-    assert interval_seconds("2 minutes") == 120.0
-    assert interval_seconds("1 hour") == 3600.0
-    assert interval_seconds("45") == 45.0
-    # review r11: day/week/microsecond are also Spark-valid trigger units
-    assert interval_seconds("100 microseconds") == 100 * 1e-6
-    assert interval_seconds("1 day") == 86400.0
-    assert interval_seconds("2 weeks") == 1209600.0
-    with pytest.raises(ValueError, match="supported"):
-        interval_seconds("3 fortnights")
+    def run(seed: int, ckpt: str) -> tuple[str, set[str]]:
+        generate_api_logs(spark, 100, seed=seed).write.mode("append").parquet(src)
+        q = start_staged_ingest(
+            spark.readStream.schema(API_LOG_SCHEMA).parquet(src),
+            tgt,
+            IngestConfig(flush_count=100, checkpoint_dir=str(tmp_path / ckpt)),
+            available_now=True,
+        )
+        q.awaitTermination(120)
+        runs = {d.split("-")[1] for d in os.listdir(stage) if d.startswith("batch-")}
+        assert commit_staged(tgt) >= 1
+        return q.id.replace("-", "")[:_RUN_ID_HEX_LEN], runs
 
-
-def test_ingest_run_id_sweeps_orphaned_tmp_files(tmp_path):
-    """ADVICE r12: a process dying between the tmp write and the
-    finally-unlink leaks `_staged_ingest_id.<uuid>.tmp` files; a
-    crash-looping starter accumulates them forever. _ingest_run_id now
-    glob-sweeps stale tmps at entry — and the installed sidecar id must
-    survive the sweep unchanged."""
-    import re
-
-    from api_log_iceberg_test_spark.ingest import _RUN_ID_HEX_LEN, _ingest_run_id
-
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(ckpt)
-    orphans = [
-        os.path.join(ckpt, f"_staged_ingest_id.{h}.tmp")
-        for h in ("a" * 32, "b" * 32, "c" * 32)
-    ]
-    for p in orphans:
-        with open(p, "w") as f:
-            f.write("deadbeef")
-    rid = _ingest_run_id(ckpt)
-    assert re.fullmatch(rf"[0-9a-f]{{{_RUN_ID_HEX_LEN}}}", rid)
-    leftover = [p for p in os.listdir(ckpt) if p.endswith(".tmp")]
-    assert not leftover, f"stale tmp files survived the sweep: {leftover}"
-    # the sweep never disturbs an installed id: same id on re-entry, even
-    # with fresh orphans lying around
-    with open(orphans[0], "w") as f:
-        f.write("deadbeef")
-    assert _ingest_run_id(ckpt) == rid
-    assert not [p for p in os.listdir(ckpt) if p.endswith(".tmp")]
-
+    first, runs = run(71, "ckpt1")
+    assert runs == {first}
+    restarted, runs = run(72, "ckpt1")
+    assert restarted == first and runs == {first}
+    fresh, runs = run(73, "ckpt2")
+    assert fresh != first and runs == {fresh}
 
 
 def test_maintenance_audit_query_end_to_end(spark, sf_dir):

@@ -161,6 +161,27 @@ def test_rollup_batch_replay_is_noop(spark, tmp_path):
     shutil.rmtree(rollup)
 
 
+def test_rollup_fresh_checkpoint_batches_are_merged(spark, tmp_path):
+    """A stream on a fresh checkpoint restarts its batch ids at 0; the
+    rollup's high-watermark belongs to the previous query, so those
+    batches are merged, not skipped as replays."""
+    from api_log_iceberg_test_spark.streaming.rollup import (
+        read_rollup,
+        start_incremental_rollup,
+    )
+
+    rollup = str(tmp_path / "rollup")
+    for i, n in enumerate((300, 200)):
+        src = str(tmp_path / f"src{i}")
+        generate_api_logs(spark, n, seed=61 + i, span_days=1).write.parquet(src)
+        start_incremental_rollup(
+            spark.readStream.schema(API_LOG_SCHEMA).parquet(src),
+            rollup,
+            str(tmp_path / f"ckpt{i}"),
+        ).awaitTermination(120)
+    assert sum(r["cnt"] for r in read_rollup(spark, rollup).collect()) == 500
+
+
 def test_transform_with_state_cumulative(spark, tmp_path):
     """transformWithStateInPandas: cumulative per-user stats equal the
     batch aggregate, including across a checkpoint restart with new data

@@ -92,6 +92,39 @@ def test_only_schema_module_reads_parquet_without_a_schema():
     assert not inferring, inferring
 
 
+#: Module-level mutable caches kept on purpose: range_boundaries' cut
+#: points only steer task balance, never output, so a stale entry can't
+#: change an answer; sessions are held weakly.
+_MODULE_CACHE_ALLOWLIST = {"api_log_iceberg_test_spark/operators/layout.py: _BOUNDS_MEMO_BY_SESSION"}
+
+
+def _is_empty_mapping(node) -> bool:
+    """Whether ``node`` is ``{}`` or a no-argument ``dict()``,
+    ``OrderedDict()`` or ``WeakKeyDictionary()`` call."""
+    if isinstance(node, ast.Dict):
+        return not node.keys
+    if isinstance(node, ast.Call) and not node.args and not node.keywords:
+        f = node.func
+        name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+        return name in {"dict", "OrderedDict", "WeakKeyDictionary"}
+    return False
+
+
+def test_no_module_level_mutable_cache():
+    """An empty mapping bound to a module-level name is process-global
+    state that outlives the data it describes: a path → metadata cache
+    serves a stale answer once the file changes. Metadata comes from the
+    file footer or the Spark checkpoint instead."""
+    caches = []
+    for rel, tree in _modules():
+        for node in tree.body:
+            if isinstance(node, (ast.Assign, ast.AnnAssign)) and _is_empty_mapping(node.value):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                caches += [f"{rel}: {t.id}" for t in targets if isinstance(t, ast.Name)]
+    caches = [c for c in caches if c not in _MODULE_CACHE_ALLOWLIST]
+    assert not caches, caches
+
+
 def _name_uses(tree):
     """Names a module uses: names, attribute reads and imported names.
     A top-level function's uses of its own name (recursion) do not count."""
